@@ -387,9 +387,8 @@ def _q_extract_spans(spark, sf_dir):
     manifest-statistics-only while the deleted branches are real
     scans of a 100 TB table. Chunking a merely-large doc (20k spans
     folds in ~0.2 s in one task) measured as a net loss, hence the
-    same straggler-only 50k threshold as the sections query (the
-    function default, 4096, would mis-route the planted 20k-span
-    sf0.1 doc onto the chunk machinery). The skew path itself
+    straggler-only config.SKEW_SPAN_THRESHOLD default, shared with
+    the sections query and extract_job. The skew path itself
     (extract_spans_split_rows) is pinned equal to this route by the
     forced-threshold tests; its array-collecting sibling
     extract_spans_split is what the bench scaling job drives. The
@@ -400,8 +399,7 @@ def _q_extract_spans(spark, sf_dir):
 
     geom = _geom(spark, sf_dir)
     hf = header_footer(geom)
-    return extract_spans_auto(_docs_in(spark, sf_dir), hf,
-                              skew_threshold=50_000)
+    return extract_spans_auto(_docs_in(spark, sf_dir), hf)
 
 
 def _q_extract_spans_sql(spark, sf_dir):
@@ -424,15 +422,14 @@ def _q_extract_sections(spark, sf_dir):
 
     geom = _geom(spark, sf_dir)
     hf = header_footer(geom)
-    # threshold targets genuine stragglers (docs whose sequential fold
-    # time rivals a whole partition, ~50k+ spans); round-3 A/B showed
-    # chunking a 20k-span doc LOSES ~1 s to the chunk machinery, and
-    # the auto route drops the split subtree's fixed cost entirely
-    # when the corpus max is below threshold. The chunked branch
-    # is equality-pinned by tests at a forced low threshold.
-    out = extract_sections_auto(_docs_in(spark, sf_dir), hf,
-                                skew_threshold=50_000,
-                                spans_per_chunk=1024)
+    # the default threshold targets genuine stragglers (docs whose
+    # sequential fold time rivals a whole partition); round-3 A/B
+    # showed chunking a 20k-span doc LOSES ~1 s to the chunk
+    # machinery, and the auto route drops the split subtree's fixed
+    # cost entirely when the corpus max is below threshold. The
+    # chunked branch is equality-pinned by tests at a forced low
+    # threshold.
+    out = extract_sections_auto(_docs_in(spark, sf_dir), hf)
     return out.select(
         "doc_id", "status", F.posexplode("sections").alias("section_id", "sec")
     ).select(

@@ -9,7 +9,7 @@ Usage:
         --geom   <spans_geom path, optional: header/footer source> \
         --output <extracted spans table path> \
         --metrics <lineage metrics table path> \
-        [--resume] [--skew-threshold 5000] [--spans-per-chunk 1024]
+        [--resume] [--skew-threshold N] [--spans-per-chunk 1024]
 
     # OR bytes-in: raw PDF/JSON payload files, no pre-decoded table —
     # geometry AND span documents come from one binaryFile decode pass
@@ -25,7 +25,9 @@ Usage:
 
 Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
  - salted repartition on xxhash64(doc_id) before the Arrow fold
- - skew splitter for documents above --skew-threshold spans
+ - skew splitter for documents above --skew-threshold spans (default
+   config.SKEW_SPAN_THRESHOLD): a max-span-count probe picks
+   extract_documents_split when a doc crosses it, else the plain fold
  - per-partition lineage rows (partition_id, doc_count, bytes_in,
    spans_out, wall_ms) committed to --metrics under the SAME snapshot
    id as the data (multi-table commit; a crash between the two
@@ -50,6 +52,8 @@ if REPO not in sys.path:  # not needed when shipped via --py-files
     sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
+
+from pdfspark.config import SKEW_SPAN_THRESHOLD  # noqa: E402
 
 
 def _prepare_output(spark, args, frame):
@@ -258,7 +262,8 @@ def main(argv=None) -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--skew-threshold", type=int, default=5000)
+    ap.add_argument("--skew-threshold", type=int,
+                    default=SKEW_SPAN_THRESHOLD)
     ap.add_argument("--spans-per-chunk", type=int, default=1024)
     ap.add_argument(
         "--format", choices=("parquet", "json"), default="parquet",
@@ -407,28 +412,13 @@ def main(argv=None) -> int:
 
     # probe-routed skew splitter (same shape as extract_spans_auto):
     # the plain salted fold unless a doc crosses --skew-threshold
+    # both routes return EXTRACT_FULL, lineage columns included (the
+    # split route's big docs carry a NULL wall_ms)
     mx = _max_span_count(docs)
     if mx > args.skew_threshold:
         full = extract_documents_split(
             docs, hf, skew_threshold=args.skew_threshold,
             spans_per_chunk=args.spans_per_chunk,
-        )
-        # the chunk-parallel path has no per-doc fold timings (one
-        # doc's fold spans many tasks); lineage degrades to
-        # output-derived sizes with a null wall_ms, attributed to the
-        # output partition
-        full = (
-            full.withColumn("spans_out", F.size("spans").cast("long"))
-            .withColumn(
-                "bytes_in",
-                F.aggregate(
-                    "spans", F.lit(0).cast("long"),
-                    lambda a, s: a
-                    + F.length(F.coalesce(s["text"], F.lit(""))),
-                ),
-            )
-            .withColumn("partition_id", F.spark_partition_id())
-            .withColumn("wall_ms", F.lit(None).cast("double"))
         )
     else:
         full = extract_documents(docs, hf)

@@ -29,8 +29,13 @@ PAGE_H = 792.0
 PATTERNS_TO_STRIP = [r"\\u20ac", r"\\n", "€"]
 
 # Skew splitter: documents whose span count exceeds this are chunked
-# page-wise before the extraction UDF and reassembled afterwards.
-SKEW_SPAN_THRESHOLD = 4096
+# before the extraction UDF and reassembled afterwards. The one value
+# every route, extract_job's --skew-threshold and the driver use. It
+# targets true stragglers only: a 20k-span doc folds in ~0.2 s in one
+# task, and routing the planted 20k-span sf0.1 doc onto the chunk
+# machinery at 4096 measured 4.16 s for ep1_extract_spans against
+# 2.94 s on the sequential fold (BASELINE.md, round 3).
+SKEW_SPAN_THRESHOLD = 50_000
 
 
 @dataclass(frozen=True)

@@ -68,7 +68,7 @@ class SectionState:
     on every in-place rewrite; re.error results cached too — the
     reference raises deterministically per heading), and the per-label
     attachment transitions of element_processors.py:114-179. Shared by
-    fold_document and replay_sections so the chunked skew path cannot
+    fold_document and replay_boundaries so the chunked skew path cannot
     drift from the sequential fold.
 
     Memoization note: between heading rewrites the headings list is
@@ -172,10 +172,10 @@ def fold_document(
     With ``collect_events=True`` the result also carries the ordered
     classification event list — 'W' wipes, and 'H'/'A'/'F'/'P' rows
     that reference their emitted span by OFFSET (the span already
-    carries the content; events stay metadata-sized) — which
-    replay_sections consumes: the chunk-parallel skew path runs THIS
-    (regex-heavy) part per chunk and replays only the lightweight
-    attachment sequentially. ``skip_sections=True`` skips the
+    carries the content; events stay metadata-sized) — which the
+    chunk-parallel skew path consumes: it runs THIS (regex-heavy) part
+    per chunk and replays only the boundary events sequentially
+    (replay_boundaries). ``skip_sections=True`` skips the
     attachment state machine entirely (chunk folds discard their
     chunk-local sections anyway; span labels never depend on it).
     """
@@ -306,10 +306,6 @@ def fold_document(
     )
 
 
-REPLAY_LABEL = {"H": "heading", "A": "appendix", "F": "figure_caption",
-                "P": "paragraph"}
-
-
 def replay_boundaries(bounds, toc_lines, needed_ords,
                       cfg: ExtractConfig = ExtractConfig()):
     """The irreducibly-sequential core of the segment-parallel sections
@@ -402,38 +398,3 @@ def replay_boundaries(bounds, toc_lines, needed_ords,
     headings = [s["heading"] for s in sections]
     return headings, targets, appends
 
-
-def replay_sections(events, span_texts, toc_lines,
-                    cfg: ExtractConfig = ExtractConfig()):
-    """Rebuild the sections side-output from an ordered classification
-    event stream (fold_document(collect_events=True) / the chunked
-    skew path). Events are metadata-sized — ('W', -1) wipes and
-    (label, span_offset) references into ``span_texts`` (the already-
-    reassembled output spans), so the document text is never shipped
-    twice. Runs ONLY the attachment state machine — all regex
-    classification already happened, in parallel, when the events
-    were produced (first_line/line_count are cheap derivations of the
-    referenced content) — so this sequential pass is pointer-chasing
-    over the shared SectionState and is identical to the sequential
-    fold by construction (same class, pinned by tests)."""
-    state = SectionState(toc_lines, cfg)
-    current_header: str | None = ""
-    for code, span_off in events:
-        if code == "W":
-            current_header = None
-            continue
-        content = span_texts[span_off]
-        if content:
-            lines = content.split("\n")
-            first_line = P.RE_EXTRA_SPACE.sub(" ", lines[0])
-            line_count = len(lines)
-        else:
-            first_line, line_count = "", 0
-        try:
-            current_header = state.apply(
-                REPLAY_LABEL[code], content, first_line, line_count,
-                current_header,
-            )
-        except re.error:
-            pass  # rollback, exactly like the fold
-    return state.sections

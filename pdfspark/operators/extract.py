@@ -4,12 +4,14 @@
 with explicit salted repartition on xxhash64(doc_id); emits spans +
 sections + per-doc lineage columns.
 
-``extract_spans_split`` — the skew path: documents whose span count
-exceeds a threshold are split into page chunks, folded in parallel,
-and reassembled in order. Correct because the output *span labels*
-depend only on each span's own text (branch selection is pure regex
-on the first line, see fold.py) — only the sections side-output is
-order-stateful, and that is kept on the sequential path.
+Skew routes (``*_split``, picked by the ``*_auto`` probes and by
+extract_job): docs above ``skew_threshold`` spans (default
+config.SKEW_SPAN_THRESHOLD) are chunk-folded in parallel and
+reassembled — safe because span labels depend only on each span's own
+text (see fold.py) — and their order-stateful sections are rebuilt by
+a segment-parallel replay. ``extract_documents_split`` gives the full
+extract_documents output; the others give spans, span rows or
+sections only.
 
 ``lineage_table``      — per-partition metrics rows (partition_id,
 doc_count, bytes_in, spans_out, wall_ms) per the north rule.
@@ -118,86 +120,15 @@ def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
     return run
 
 
-def _arrow_schema(spark_schema: T.StructType):
-    """Declared StructType -> the pyarrow schema Spark expects from a
-    mapInArrow function (names and types must match exactly)."""
-    import pyarrow as pa
-
-    def conv(dt):
-        if isinstance(dt, T.StringType):
-            return pa.string()
-        if isinstance(dt, T.IntegerType):
-            return pa.int32()
-        if isinstance(dt, T.LongType):
-            return pa.int64()
-        if isinstance(dt, T.DoubleType):
-            return pa.float64()
-        if isinstance(dt, T.ArrayType):
-            return pa.list_(conv(dt.elementType))
-        if isinstance(dt, T.StructType):
-            return pa.struct([(f.name, conv(f.dataType))
-                              for f in dt.fields])
-        raise TypeError(f"unmapped type {dt}")
-
-    return pa.schema([(f.name, conv(f.dataType))
-                      for f in spark_schema.fields])
-
-
-def _fold_batches_arrow(cfg: ExtractConfig, spans_only: bool = False):
-    """Arrow-native twin of _fold_batches for mapInArrow — kept as a
-    MEASURED NEGATIVE RESULT, not the production path. A zero-compute
-    mapInPandas passthrough costs 2.3x a mapInArrow one (6.1 s vs
-    2.7 s at local[8], K=48), which suggested deleting the pandas
-    layer; but the REAL fold interleaved A/B (same session, min-of-3,
-    full scaling job) came out pandas 8.9 s vs arrow 11.2 s. The
-    passthrough's win is pure zero-copy IPC; once the fold must
-    materialize every span as a Python dict anyway, `to_pylist()` +
-    `pa.array(list-of-dicts)` rebuild costs MORE than pyspark's tuned
-    pandas conversion paths. Production stays on _fold_batches; this
-    twin is parity-pinned (test_fold_arrow_twin_matches_pandas) so
-    the A/B can be rerun against future pyarrow versions in one
-    line."""
-    schema = EXTRACT_SPANS_ONLY if spans_only else EXTRACT_FULL
-
-    def run(batches):
-        import pyarrow as pa
-
-        from pyspark import TaskContext
-
-        pa_schema = _arrow_schema(schema)
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for b in batches:
-            names = b.schema.names
-            doc_ids = b.column(names.index("doc_id")).to_pylist()
-            spans_col = b.column(names.index("spans")).to_pylist()
-            headers = b.column(names.index("header")).to_pylist()
-            footers = b.column(names.index("footer")).to_pylist()
-            cols: dict[str, list] = {f.name: [] for f in schema.fields}
-            for doc_id, spans, header, footer in zip(
-                    doc_ids, spans_col, headers, footers):
-                t0 = time.perf_counter()
-                spans = spans if spans is not None else []
-                res = fold_document(spans, header or "", footer or "",
-                                    cfg, skip_sections=spans_only)
-                cols["doc_id"].append(doc_id)
-                cols["status"].append(res["status"])
-                cols["spans"].append(res["out_spans"])
-                cols["spans_in"].append(res["spans_in"])
-                cols["spans_out"].append(res["spans_out"])
-                cols["bytes_in"].append(
-                    sum(len(s["text"] or "") for s in spans))
-                cols["partition_id"].append(pid)
-                cols["wall_ms"].append(
-                    (time.perf_counter() - t0) * 1000.0)
-                if not spans_only:
-                    cols["sections"].append(res["sections"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=pa_schema.field(i).type)
-                 for i, f in enumerate(schema.fields)],
-                schema=pa_schema,
-            )
-
-    return run
+def _fold_salted(df: DataFrame, cfg: ExtractConfig, spans_only: bool = False,
+                 num_partitions: int | None = None) -> DataFrame:
+    """Salted repartition on xxhash64(doc_id), then the per-doc fold —
+    the one fold stage every route runs for its ordinary docs."""
+    parts = [num_partitions] if num_partitions else []
+    return df.repartition(*parts, F.xxhash64("doc_id")).mapInPandas(
+        _fold_batches(cfg, spans_only=spans_only),
+        EXTRACT_SPANS_ONLY if spans_only else EXTRACT_FULL,
+    )
 
 
 def extract_documents(
@@ -213,12 +144,8 @@ def extract_documents(
     df = _with_hf(documents_in, header_footer_df)
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # hash-repartition on doc_id: uniform unless one doc is huge (that
-    # case goes through extract_spans_split)
-    df = df.repartition(n, F.xxhash64("doc_id"))
-    return df.mapInPandas(
-        _fold_batches(cfg, spans_only=spans_only),
-        EXTRACT_SPANS_ONLY if spans_only else EXTRACT_FULL,
-    )
+    # case goes through the skew split routes)
+    return _fold_salted(df, cfg, spans_only=spans_only, num_partitions=n)
 
 
 def chunk_exploded_spans(exploded: DataFrame, cfg: ExtractConfig,
@@ -294,30 +221,6 @@ def _explode_span_rows(folded: DataFrame) -> DataFrame:
             F.col("s.kind").alias("kind"),
             F.col("s.text").alias("text"),
             F.col("s.media_ref").alias("media_ref"),
-        )
-    )
-
-
-def _toc_lines(big: DataFrame) -> DataFrame:
-    """Per-doc ordered TOC line texts of the skew-path big docs — the
-    replay's section-skeleton input, shared by both full-output skew
-    paths (a change to TOC collection semantics must hit both)."""
-    return (
-        # (offset, array-pos) composite sort — the fold collects TOC
-        # lines AFTER its stable offset sort (fold.py:182,194), so the
-        # skeleton order must follow offsets, not array positions
-        big.select("doc_id", F.posexplode("spans").alias("_ap", "s"))
-        .withColumn("pos", F.col("s.offset"))
-        .filter(F.col("s.kind") == "TOC")
-        .groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "_ap", "s"))),
-                # NULL-text TOC spans coerce to '' exactly like the
-                # sequential fold (fold.py `s['text'] or ''`) — a bare
-                # None would crash clean_toc_line's re.sub in replay
-                lambda x: F.coalesce(x["s"]["text"], F.lit("")),
-            ).alias("toc_lines")
         )
     )
 
@@ -418,51 +321,13 @@ def _fold_big_chunks(big: DataFrame, cfg: ExtractConfig,
     )
 
 
-def extract_spans_split(
-    documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
-    skew_threshold: int = SKEW_SPAN_THRESHOLD,
-    spans_per_chunk: int = 1024,
-) -> DataFrame:
-    """Span-sequence output (doc_id, spans) with skew splitting.
-
-    Big docs: explode spans, apply the front-matter skip via a per-doc
-    cutoff position, chunk by `floor(pos / spans_per_chunk)`, fold each
-    chunk independently, reassemble ordered and renumber offsets.
-
-    No per-doc global window anywhere in the pre-split (a 10M-span doc
-    must not serialize into one task before it is even split):
-
-    * the front-matter skip needs only the position of the PageStart
-      that opens page `start_page` — computed from the PageStart rows
-      alone (#pages per doc, a tiny aggregation), then joined back;
-    * chunk ids need NO page alignment: after the cutoff the chunk
-      folds run with start_page=0, PageStart markers are pure
-      pass-throughs, and every output span label depends only on its
-      own text (see fold.py) — so a chunk boundary mid-page is safe.
-      For sections on the skew path see extract_documents_split; for
-      the nested-array-free row shape see extract_spans_split_rows.
-    """
-    small, big, bad = _split_inputs(documents_in, header_footer_df,
-                                    skew_threshold)
-    empty_spans = F.array().cast(T.ArrayType(SPAN)).alias("spans")
-    big_bad = bad.select("doc_id", empty_spans)
-
-    small_out = (
-        small.repartition(F.xxhash64("doc_id"))
-        .mapInPandas(_fold_batches(cfg, spans_only=True),
-                     EXTRACT_SPANS_ONLY)
-        .select("doc_id", "spans")
-    )
-
-    folded = _fold_big_chunks(big, cfg, spans_per_chunk)
-    if cfg.start_page > 0:
-        # the `missing` anti-join below probes folded a second time;
-        # without materialization the whole Python chunk-fold subtree
-        # (the dominant stage) re-executes for the probe
-        folded = folded.persist()
-    big_out = (
+def _assemble_big_spans(folded: DataFrame) -> DataFrame:
+    """Chunk-folded big docs -> (doc_id, spans): chunks concatenated in
+    chunk order, output offsets renumbered densely. The big-doc branch
+    of extract_spans_split, shared with extract_documents_split. A doc
+    with no chunk rows (the start_page cutoff removed every span) has
+    no row here."""
+    return (
         folded.groupBy("doc_id")
         .agg(
             F.flatten(
@@ -487,6 +352,49 @@ def extract_spans_split(
             ).alias("spans"),
         )
     )
+
+
+def extract_spans_split(
+    documents_in: DataFrame,
+    header_footer_df: DataFrame | None = None,
+    cfg: ExtractConfig = ExtractConfig(),
+    skew_threshold: int = SKEW_SPAN_THRESHOLD,
+    spans_per_chunk: int = 1024,
+) -> DataFrame:
+    """Span-sequence output (doc_id, spans) with skew splitting.
+
+    Big docs: explode spans, apply the front-matter skip via a per-doc
+    cutoff position, chunk by `floor(pos / spans_per_chunk)`, fold each
+    chunk independently, reassemble ordered and renumber offsets.
+
+    No per-doc global window anywhere in the pre-split (a 10M-span doc
+    must not serialize into one task before it is even split):
+
+    * the front-matter skip needs only the position of the PageStart
+      that opens page `start_page` — computed from the PageStart rows
+      alone (#pages per doc, a tiny aggregation), then joined back;
+    * chunk ids need NO page alignment: after the cutoff the chunk
+      folds run with start_page=0, PageStart markers are pure
+      pass-throughs, and every output span label depends only on its
+      own text (see fold.py) — so a chunk boundary mid-page is safe.
+      For sections on the skew path see extract_sections_split; for
+      the nested-array-free row shape see extract_spans_split_rows.
+    """
+    small, big, bad = _split_inputs(documents_in, header_footer_df,
+                                    skew_threshold)
+    empty_spans = F.array().cast(T.ArrayType(SPAN)).alias("spans")
+    big_bad = bad.select("doc_id", empty_spans)
+
+    small_out = _fold_salted(small, cfg, spans_only=True).select(
+        "doc_id", "spans")
+
+    folded = _fold_big_chunks(big, cfg, spans_per_chunk)
+    if cfg.start_page > 0:
+        # the `missing` anti-join below probes folded a second time;
+        # without materialization the whole Python chunk-fold subtree
+        # (the dominant stage) re-executes for the probe
+        folded = folded.persist()
+    big_out = _assemble_big_spans(folded)
     out = small_out.unionByName(big_out).unionByName(big_bad)
     if cfg.start_page > 0:
         # only the front-matter cutoff can remove EVERY span of a big
@@ -503,7 +411,8 @@ def extract_spans_split(
 
 
 # metadata-sized: a code plus the CHUNK-LOCAL offset of the referenced
-# output span (-1 for wipes); the replay rebases offsets per chunk
+# output span (-1 for wipes); the sections enrichment rebases offsets
+# per chunk
 EVENT = T.StructType(
     [
         T.StructField("code", T.StringType()),
@@ -519,151 +428,6 @@ CHUNKED_FULL = T.StructType(
         T.StructField("events", T.ArrayType(EVENT)),
     ]
 )
-
-DOC_OUT = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("spans", T.ArrayType(SPAN)),
-        T.StructField("sections", T.ArrayType(SECTION_STRUCT)),
-    ]
-)
-
-
-def extract_documents_split(
-    documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
-    skew_threshold: int = SKEW_SPAN_THRESHOLD,
-    spans_per_chunk: int = 1024,
-) -> DataFrame:
-    """FULL skew-safe extraction: spans AND the order-stateful sections
-    side-output, with pathological documents chunk-parallelized.
-
-    The fold splits into two halves (see fold.SectionState):
-
-    * the regex-heavy classification (matcher, section/appendix/figure
-      patterns, cleanup) is text-local — chunk folds run it in
-      parallel and emit, besides their output spans, an ordered
-      METADATA-SIZED event stream ('W' wipes and label events that
-      reference their emitted span by chunk-local offset — the
-      document text is never shipped twice);
-    * the attachment state machine (current-header thread, first-match
-      -wins lookups, in-place heading rewrites) is irreducibly
-      sequential — replay_sections runs it per doc over the
-      chunk-ordered event stream (offsets rebased by per-chunk span
-      counts), through the SAME SectionState class the sequential
-      fold uses, so equality holds by construction (pinned by tests).
-
-    Amdahl's split: the replay is pointer-chasing over pre-classified
-    events (~an order of magnitude lighter than the full fold), so a
-    10M-span pathology parallelizes everything except that thin tail.
-
-    Output: (doc_id, status, spans, sections) — same contract as
-    extract_documents. NOTE the nested per-doc (spans, sections) row
-    is itself the bottleneck at extreme pathology (measured at 1M
-    spans: most wall time is fat-row materialization on ANY path that
-    emits it); at that scale consume the pair
-    extract_spans_split_rows + extract_sections_split instead, which
-    keep everything row-shaped (22 s + 47 s vs ~80 s sequential /
-    161 s for this nested variant at 1M spans).
-    """
-    small, big, bad = _split_inputs(documents_in, header_footer_df,
-                                    skew_threshold)
-    big_bad = bad.select(
-        "doc_id",
-        F.lit("quarantined").alias("status"),
-        F.array().cast(T.ArrayType(SPAN)).alias("spans"),
-        F.array().cast(T.ArrayType(SECTION_STRUCT)).alias("sections"),
-    )
-
-    small_out = (
-        small.repartition(F.xxhash64("doc_id"))
-        .mapInPandas(_fold_batches(cfg), EXTRACT_FULL)
-        .select("doc_id", "status", "spans", "sections")
-    )
-
-    toc = _toc_lines(big)
-    folded = _fold_big_chunks(big, cfg, spans_per_chunk,
-                              collect_events=True)
-    assembled = (
-        folded.groupBy("doc_id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("chunk", "spans"))),
-                    lambda x: x["spans"],
-                )
-            ).alias("raw"),
-            # events stay grouped per chunk with the chunk's span count
-            # so the replay can rebase chunk-local span offsets
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        "chunk",
-                        F.size("spans").alias("n"),
-                        "events",
-                    )
-                )
-            ).alias("ev_chunks"),
-        )
-        .select(
-            "doc_id",
-            F.transform(
-                "raw",
-                lambda s, i: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    i.cast("int").alias("offset"),
-                ),
-            ).alias("spans"),
-            "ev_chunks",
-        )
-        .join(toc, "doc_id", "left")
-    )
-
-    def run_replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdfspark.fold import replay_sections
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                span_texts = [s["text"] for s in r.spans]
-                events = []
-                base = 0
-                for ch in r.ev_chunks:  # already chunk-sorted
-                    for e in ch["events"]:
-                        off = e["off"]
-                        events.append(
-                            (e["code"], off + base if off >= 0 else -1)
-                        )
-                    base += ch["n"]
-                toc_lines = list(r.toc_lines) if r.toc_lines is not None else []
-                sections = replay_sections(events, span_texts, toc_lines, cfg)
-                rows.append(dict(doc_id=r.doc_id, status="ok",
-                                 spans=list(r.spans), sections=sections))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "status", "spans", "sections"]
-            )
-
-    big_out = assembled.mapInPandas(run_replay, DOC_OUT)
-    out = small_out.unionByName(big_out).unionByName(big_bad)
-    if cfg.start_page > 0:
-        # big docs with zero surviving chunks (cutoff removed every
-        # span: no TOC, too few pages) emit the same empty 'ok' row the
-        # sequential fold produces; only possible under start_page>0
-        missing = big.select("doc_id").join(
-            folded.select("doc_id").distinct(), "doc_id", "left_anti"
-        ).select(
-            "doc_id",
-            F.lit("ok").alias("status"),
-            F.array().cast(T.ArrayType(SPAN)).alias("spans"),
-            F.array().cast(T.ArrayType(SECTION_STRUCT)).alias("sections"),
-        )
-        out = out.unionByName(missing)
-    return out
-
 
 # enriched event rows: 'E' = segment-governed P/F event, 'B' = H/A
 # boundary (with its regex work precomputed in the parallel chunk
@@ -705,15 +469,13 @@ _PHASEA_OUT = T.StructType(
 )
 
 
-def extract_sections_split(
-    documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
-    skew_threshold: int = SKEW_SPAN_THRESHOLD,
-    spans_per_chunk: int = 1024,
-) -> DataFrame:
-    """Sections-only skew path with a SEGMENT-PARALLEL replay: no task
-    anywhere touches a whole pathological document.
+def _big_doc_sections(big: DataFrame, folded: DataFrame,
+                      cfg: ExtractConfig, spans_per_chunk: int) -> DataFrame:
+    """Sections of the chunk-folded big docs (``folded`` from
+    _fold_big_chunks(collect_events=True)) by a SEGMENT-PARALLEL
+    replay: no task anywhere touches a whole pathological document.
+    The big-doc branch of extract_sections_split, shared with
+    extract_documents_split.
 
     The attachment state machine's state (current_header + skeleton)
     changes only at H/A/W boundary events; between boundaries every
@@ -745,24 +507,26 @@ def extract_sections_split(
     SectionState) and pinned by the forced-threshold tests. Amdahl
     residue: O(#headings) per doc instead of O(#events).
 
-    Output: (doc_id, status, sections).
+    Returns (doc_id, sections) for the big docs with a non-empty
+    section skeleton; callers left-join it from ``big`` and coalesce
+    the rest to empty sections.
     """
-    small, big, bad = _split_inputs(documents_in, header_footer_df,
-                                    skew_threshold)
-    bad_out = bad.select(
-        "doc_id",
-        F.lit("quarantined").alias("status"),
-        F.array().cast(T.ArrayType(SECTION_STRUCT)).alias("sections"),
+    toc = (
+        # per-doc TOC line texts (the skeleton), in the fold's (offset,
+        # array-pos) stable sort order (fold.py:182,194)
+        big.select("doc_id", F.posexplode("spans").alias("_ap", "s"))
+        .withColumn("pos", F.col("s.offset"))
+        .filter(F.col("s.kind") == "TOC")
+        .groupBy("doc_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "_ap", "s"))),
+                # NULL-text TOC spans coerce to '' like the sequential
+                # fold (fold.py `s['text'] or ''`)
+                lambda x: F.coalesce(x["s"]["text"], F.lit("")),
+            ).alias("toc_lines")
+        )
     )
-    small_out = (
-        small.repartition(F.xxhash64("doc_id"))
-        .mapInPandas(_fold_batches(cfg), EXTRACT_FULL)
-        .select("doc_id", "status", "sections")
-    )
-
-    toc = _toc_lines(big)
-    folded = _fold_big_chunks(big, cfg, spans_per_chunk,
-                              collect_events=True)
 
     def enrich(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pdfspark.functions import patterns as PP
@@ -1015,23 +779,104 @@ def extract_sections_split(
             ).alias("sections")
         )
     )
-    big_out = (
-        big.select("doc_id")
-        .join(secs, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.lit("ok").alias("status"),
-            F.coalesce(
-                F.col("sections"),
-                F.array().cast(T.ArrayType(SECTION_STRUCT)),
-            ).alias("sections"),
-        )
-    )
-    # NOTE: no `missing` re-add here (unlike the spans paths): big_out
-    # left-joins from `big` itself, so a big doc whose spans were all
-    # removed by the start_page cutoff already gets its one
+    return secs
+
+
+def extract_sections_split(
+    documents_in: DataFrame,
+    header_footer_df: DataFrame | None = None,
+    cfg: ExtractConfig = ExtractConfig(),
+    skew_threshold: int = SKEW_SPAN_THRESHOLD,
+    spans_per_chunk: int = 1024,
+) -> DataFrame:
+    """Sections-only skew path: docs above ``skew_threshold`` spans go
+    through the chunk folds and the segment-parallel replay of
+    _big_doc_sections; the rest through the ordinary fold.
+
+    Output: (doc_id, status, sections).
+    """
+    small, big, bad = _split_inputs(documents_in, header_footer_df,
+                                    skew_threshold)
+    folded = _fold_big_chunks(big, cfg, spans_per_chunk,
+                              collect_events=True)
+    # NOTE: no `missing` re-add here (unlike extract_spans_split):
+    # big_out left-joins from `big` itself, so a big doc whose spans
+    # were all removed by the start_page cutoff already gets its one
     # ('ok', empty sections) row — a second union would duplicate it
-    return small_out.unionByName(big_out).unionByName(bad_out)
+    big_out = (
+        big.select("doc_id", F.lit("ok").alias("status"))
+        .join(_big_doc_sections(big, folded, cfg, spans_per_chunk),
+              "doc_id", "left")
+        .unionByName(bad.select("doc_id", F.lit("quarantined")
+                                .alias("status")),
+                     allowMissingColumns=True)
+        .select("doc_id", "status", F.coalesce(
+            "sections", F.array().cast(T.ArrayType(SECTION_STRUCT))
+        ).alias("sections"))
+    )
+    return _fold_salted(small, cfg).select(
+        "doc_id", "status", "sections").unionByName(big_out)
+
+
+def extract_documents_split(
+    documents_in: DataFrame,
+    header_footer_df: DataFrame | None = None,
+    cfg: ExtractConfig = ExtractConfig(),
+    skew_threshold: int = SKEW_SPAN_THRESHOLD,
+    spans_per_chunk: int = 1024,
+) -> DataFrame:
+    """extract_documents' output (EXTRACT_FULL) with the docs above
+    ``skew_threshold`` spans chunk-folded once and fed to the span
+    reassembly and sections replay the other skew paths share. Each
+    big doc is one row left-joined from ``big``, so one the start_page
+    cutoff emptied comes out 'ok' and empty, like the sequential fold.
+    Its lineage is input-derived like the fold's; wall_ms is NULL
+    (its fold spans many tasks) and partition_id the output's. At 1M
+    spans the nested row itself dominates on any path that builds it;
+    consumers that can take rows use extract_spans_split_rows and
+    extract_sections_split instead."""
+    small, big, bad = _split_inputs(documents_in, header_footer_df,
+                                    skew_threshold)
+
+    def input_lineage(df, status):
+        return df.select(
+            "doc_id",
+            F.lit(status).alias("status"),
+            F.size("spans").cast("long").alias("spans_in"),
+            F.aggregate(
+                "spans", F.lit(0).cast("long"),
+                lambda a, s: a + F.length(F.coalesce(s["text"], F.lit(""))),
+            ).alias("bytes_in"),
+        )
+
+    # two consumers (span reassembly, sections enrichment): persist so
+    # the Python chunk fold runs once
+    folded = _fold_big_chunks(big, cfg, spans_per_chunk,
+                              collect_events=True).persist()
+    rows = (
+        input_lineage(big, "ok")
+        .join(_big_doc_sections(big, folded, cfg, spans_per_chunk),
+              "doc_id", "left")
+        .join(_assemble_big_spans(folded), "doc_id", "left")
+        # DecodeError big docs are never chunk-folded: quarantined whole
+        .unionByName(input_lineage(bad, "quarantined"),
+                     allowMissingColumns=True)
+    )
+    spans = F.coalesce("spans", F.array().cast(T.ArrayType(SPAN)))
+    big_out = rows.select(
+        "doc_id",
+        "status",
+        spans.alias("spans"),
+        F.coalesce(
+            "sections", F.array().cast(T.ArrayType(SECTION_STRUCT))
+        ).alias("sections"),
+        "spans_in",
+        F.size(spans).cast("long").alias("spans_out"),
+        "bytes_in",
+        F.spark_partition_id().alias("partition_id"),
+        F.lit(None).cast("double").alias("wall_ms"),
+    )
+    return _fold_salted(small, cfg).unionByName(big_out)
 
 
 def extract_sections_auto(
@@ -1124,11 +969,7 @@ def extract_spans_split_rows(
     # big+bad docs: quarantined, no span rows at all (exploded shape
     # has no empty-doc rows by definition)
 
-    small_out = _explode_span_rows(
-        small.repartition(F.xxhash64("doc_id"))
-        .mapInPandas(_fold_batches(cfg, spans_only=True),
-                     EXTRACT_SPANS_ONLY)
-    )
+    small_out = _explode_span_rows(_fold_salted(small, cfg, spans_only=True))
 
     folded = _fold_big_chunks(big, cfg, spans_per_chunk)
     rows = folded.select(

@@ -310,6 +310,34 @@ def test_skew_big_doc_fewer_pages_than_start_page(spark):
     assert [t.asDict() for t in got[0].spans] == \
         [t.asDict() for t in want[0].spans]
 
+    # full-output split route: the same doc plus a TOC-less twin whose
+    # spans the cutoff removes entirely (no chunk rows at all) — each
+    # must come out as exactly ONE row (no duplicate from the big-doc
+    # join plus a re-add, none missing), equal to the sequential fold
+    from pdfspark.operators.extract import extract_documents_split
+
+    notoc = [s for s in spans if s["kind"] != "TOC"]
+    df2 = spark.createDataFrame(
+        [("fewpages-00000", spans), ("fewpages-notoc", notoc)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+
+    def full(r):
+        return (r.status, [t.asDict() for t in r.spans],
+                [t.asDict() for t in r.sections], r.spans_in,
+                r.spans_out, r.bytes_in)
+
+    got2 = extract_documents_split(df2, None, cfg, skew_threshold=500,
+                                   spans_per_chunk=200).collect()
+    assert sorted(r.doc_id for r in got2) == ["fewpages-00000",
+                                              "fewpages-notoc"]
+    want2 = {r.doc_id: full(r)
+             for r in extract_documents(df2, None, cfg).collect()}
+    for r in got2:
+        assert full(r) == want2[r.doc_id], r.doc_id
+    assert want2["fewpages-notoc"][1] == []
+
 
 def test_skew_big_doc_with_decode_error_is_quarantined(spark):
     """A doc ABOVE the skew threshold that contains a DecodeError span
@@ -440,10 +468,10 @@ def test_relational_spans_equal_fold_on_unicode_doc(spark):
                          ids=["default", "sp3"])
 def test_full_split_extraction_equals_sequential(spark, documents_in,
                                                  spans_geom, cfg):
-    """extract_documents_split (chunk-parallel classification + event
-    replay) must equal extract_documents on status, spans AND the
-    order-stateful sections side-output — the skew path is now
-    feature-complete."""
+    """extract_documents_split (chunk-parallel classification, span
+    reassembly + segment-parallel sections replay) must equal
+    extract_documents on status, spans, the order-stateful sections
+    side-output AND the input-derived lineage counts."""
     from pdfspark.operators.extract import extract_documents_split
 
     hf_df = all_doc_headers_footers(spans_geom)
@@ -451,16 +479,19 @@ def test_full_split_extraction_equals_sequential(spark, documents_in,
                                     skew_threshold=500, spans_per_chunk=200)
     seq = extract_documents(documents_in, hf_df, cfg)
     ks = {r.doc_id: (r.status, [t.asDict() for t in r.spans],
-                     [t.asDict() for t in r.sections])
+                     [t.asDict() for t in r.sections],
+                     (r.spans_in, r.spans_out, r.bytes_in))
           for r in split.collect()}
     ku = {r.doc_id: (r.status, [t.asDict() for t in r.spans],
-                     [t.asDict() for t in r.sections])
+                     [t.asDict() for t in r.sections],
+                     (r.spans_in, r.spans_out, r.bytes_in))
           for r in seq.collect()}
     assert set(ks) == set(ku)
     for d in ku:
         assert ks[d][0] == ku[d][0], d
         assert ks[d][1] == ku[d][1], d
         assert ks[d][2] == ku[d][2], d
+        assert ks[d][3] == ku[d][3], d  # input-derived lineage
     # the skew doc actually exercised the chunked branch
     assert ks["skew-00000"][2] == ku["skew-00000"][2]
 
@@ -512,34 +543,6 @@ def test_sections_split_rows_equals_sequential(spark, documents_in,
     assert got == want
 
 
-def test_fold_arrow_twin_matches_pandas(spark, fixture_dir):
-    """The mapInArrow fold twin (kept as a measured negative result —
-    see _fold_batches_arrow docstring) must stay row-identical to the
-    production pandas fold, so the A/B can be rerun any time."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pdfspark.operators import extract as X
-
-    docs = spark.read.parquet(
-        os.path.join(fixture_dir, "documents_in.parquet"))
-    base = X._with_hf(docs, None).repartition(F.xxhash64("doc_id"))
-    cfg = X.ExtractConfig()
-    pd_rows = sorted(
-        (r.doc_id, r.status, [tuple(s) for s in r.spans])
-        for r in base.mapInPandas(
-            X._fold_batches(cfg, spans_only=True),
-            X.EXTRACT_SPANS_ONLY).collect())
-    ar_rows = sorted(
-        (r.doc_id, r.status, [tuple(s) for s in r.spans])
-        for r in base.mapInArrow(
-            X._fold_batches_arrow(cfg, spans_only=True),
-            X.EXTRACT_SPANS_ONLY).collect())
-    assert pd_rows == ar_rows
-    assert pd_rows
-
-
 def test_split_path_null_spans_and_null_toc_text_parity(spark):
     """Two ANSI NULL edges the skew path used to diverge on: a doc
     with spans=NULL (size(NULL) is NULL -> fell out of all three
@@ -586,13 +589,12 @@ def test_skew_route_equality_out_of_order_spans_array(spark):
 
     from pdfspark.config import ExtractConfig
     from pdfspark.operators.extract import (
-        SKEW_SPAN_THRESHOLD,
         extract_documents,
         extract_spans_split,
     )
 
     rng = random.Random(99)
-    n = SKEW_SPAN_THRESHOLD + 200
+    n = 4096 + 200
     spans = [dict(kind="TOC", text="Introduction", media_ref=None,
                   offset=0)]
     spans += [dict(kind="PageStart", text=None, media_ref=None, offset=1)]
@@ -610,13 +612,14 @@ def test_skew_route_equality_out_of_order_spans_array(spark):
     )
     cfg = ExtractConfig()
     seq = extract_documents(df, None, cfg, spans_only=True).collect()
-    par = extract_spans_split(df, None, cfg).collect()
+    par = extract_spans_split(df, None, cfg, skew_threshold=4096).collect()
     assert len(seq) == len(par) == 1
     assert [t.asDict() for t in seq[0].spans] == \
            [t.asDict() for t in par[0].spans]
     # start_page front-matter cutoff must follow offset order too
     cfg2 = ExtractConfig(start_page=1)
     seq2 = extract_documents(df, None, cfg2, spans_only=True).collect()
-    par2 = extract_spans_split(df, None, cfg2).collect()
+    par2 = extract_spans_split(df, None, cfg2,
+                               skew_threshold=4096).collect()
     assert [t.asDict() for t in seq2[0].spans] == \
            [t.asDict() for t in par2[0].spans]

@@ -72,12 +72,18 @@ def test_job_metrics_rows(spark, job_paths):
         committed_snapshots(job_paths["output"])
 
 
+def _lineage_sums(spark, metrics):
+    m = _read_out(spark, metrics)
+    return m.groupBy().sum("doc_count", "bytes_in", "spans_out").first()
+
+
 def test_job_skew_flag_routes_split_path(spark, job_paths, tmp_path):
     """--skew-threshold below the corpus max must engage the
     chunk-split path (the flags were once parsed but unused) and still
-    write every doc once, with metrics doc counts intact (wall_ms is
-    null on the split path — per-doc fold time is not attributable
-    across chunk tasks)."""
+    write every doc once. Its lineage must reconcile with the default
+    route's over the same input: bytes_in is input-derived on both, and
+    only the big (chunk-folded) docs carry a NULL wall_ms — per-doc fold
+    time is not attributable across chunk tasks."""
     out = str(tmp_path / "skew_out")
     metrics = str(tmp_path / "skew_metrics")
     rc = main([
@@ -90,8 +96,52 @@ def test_job_skew_flag_routes_split_path(spark, job_paths, tmp_path):
     o = _read_out(spark, out)
     assert o.count() == docs.count()
     assert o.select("doc_id").distinct().count() == docs.count()
-    m = _read_out(spark, metrics)
-    assert m.groupBy().sum("doc_count").collect()[0][0] == docs.count()
+    split = _lineage_sums(spark, metrics)
+    assert split[0] == docs.count()
+
+    # the same input through the default threshold (the plain fold)
+    base_metrics = str(tmp_path / "base_metrics")
+    rc = main([
+        "--input", job_paths["input"], "--geom", job_paths["geom"],
+        "--output", str(tmp_path / "base_out"), "--metrics", base_metrics,
+    ])
+    assert rc == 0
+    assert tuple(split) == tuple(_lineage_sums(spark, base_metrics))
+    # the fixture has docs at or under 5 spans: their fold wall time
+    # survives on the split route
+    assert _read_out(spark, metrics).filter("wall_ms IS NOT NULL").count() \
+        > 0
+
+
+def test_job_routes_call_wrapped_names(spark, job_paths, tmp_path,
+                                       monkeypatch):
+    """The job must look its route functions up on the extract module
+    at call time: the traced benchmark (perfbench/layers.py) wraps
+    extract_documents_split and extract_documents by name and would
+    silently lose its route attribution otherwise."""
+    import pdfspark.operators.extract as X
+
+    calls = []
+
+    def counting(name):
+        fn = getattr(X, name)
+
+        def wrapper(*a, **kw):
+            calls.append(name)
+            return fn(*a, **kw)
+
+        monkeypatch.setattr(X, name, wrapper)
+
+    counting("extract_documents_split")
+    counting("extract_documents")
+    for i, extra in enumerate((["--skew-threshold", "5"], [])):
+        del calls[:]
+        assert main([
+            "--input", job_paths["input"],
+            "--output", str(tmp_path / f"route{i}"),
+        ] + extra) == 0
+        assert calls == (["extract_documents_split"] if extra
+                         else ["extract_documents"])
 
 
 def test_job_crash_between_data_and_metrics_manifest_heals(
