@@ -29,8 +29,9 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
    config.SKEW_SPAN_THRESHOLD): a max-span-count probe picks
    extract_documents_split when a doc crosses it, else the plain fold
  - per-partition lineage rows (partition_id, doc_count, bytes_in,
-   spans_out, wall_ms) committed to --metrics under the SAME snapshot
-   id as the data (multi-table commit; a crash between the two
+   spans_out, wall_ms; the split route's big docs share one row with
+   NULL partition_id and wall_ms) committed to --metrics under the
+   SAME snapshot id as the data (multi-table commit; a crash between the two
    manifest publishes is healed by reconcile_aux at the next start,
    so committed documents can never lose their lineage rows)
  - every append is a manifest-committed snapshot
@@ -413,12 +414,13 @@ def main(argv=None) -> int:
     # probe-routed skew splitter (same shape as extract_spans_auto):
     # the plain salted fold unless a doc crosses --skew-threshold
     # both routes return EXTRACT_FULL, lineage columns included (the
-    # split route's big docs carry a NULL wall_ms)
+    # split route's big docs carry a NULL wall_ms and partition_id)
+    split_cache: list = []
     mx = _max_span_count(docs)
     if mx > args.skew_threshold:
         full = extract_documents_split(
             docs, hf, skew_threshold=args.skew_threshold,
-            spans_per_chunk=args.spans_per_chunk,
+            spans_per_chunk=args.spans_per_chunk, persisted=split_cache,
         )
     else:
         full = extract_documents(docs, hf)
@@ -426,6 +428,10 @@ def main(argv=None) -> int:
     # feeds the metrics aggregation (no second fold)
     full.persist()
     n = full.count()
+    # full is materialised: the split route's cached intermediates are
+    # never read again (a loaded cache is kept when its inputs drop)
+    for df in split_cache:
+        df.unpersist()
     out = full.select("doc_id", "status", "spans", "sections")
     aux = [(lineage_table(full), args.metrics)] if args.metrics else None
     if args.buckets > 0:

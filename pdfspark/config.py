@@ -34,7 +34,10 @@ PATTERNS_TO_STRIP = [r"\\u20ac", r"\\n", "€"]
 # targets true stragglers only: a 20k-span doc folds in ~0.2 s in one
 # task, and routing the planted 20k-span sf0.1 doc onto the chunk
 # machinery at 4096 measured 4.16 s for ep1_extract_spans against
-# 2.94 s on the sequential fold (BASELINE.md, round 3).
+# 2.94 s on the sequential fold (BASELINE.md, round 3). That crossover
+# is for the row-shaped driver paths: for extract_job's nested output
+# the plain fold beat both chunked routes up to 1M spans (BASELINE.md,
+# "Job route A/B").
 SKEW_SPAN_THRESHOLD = 50_000
 
 

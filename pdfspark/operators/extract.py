@@ -470,7 +470,8 @@ _PHASEA_OUT = T.StructType(
 
 
 def _big_doc_sections(big: DataFrame, folded: DataFrame,
-                      cfg: ExtractConfig, spans_per_chunk: int) -> DataFrame:
+                      cfg: ExtractConfig, spans_per_chunk: int,
+                      persisted: list) -> DataFrame:
     """Sections of the chunk-folded big docs (``folded`` from
     _fold_big_chunks(collect_events=True)) by a SEGMENT-PARALLEL
     replay: no task anywhere touches a whole pathological document.
@@ -509,7 +510,7 @@ def _big_doc_sections(big: DataFrame, folded: DataFrame,
 
     Returns (doc_id, sections) for the big docs with a non-empty
     section skeleton; callers left-join it from ``big`` and coalesce
-    the rest to empty sections.
+    the rest to empty sections. The frames it caches go to ``persisted``.
     """
     toc = (
         # per-doc TOC line texts (the skeleton), in the fold's (offset,
@@ -709,6 +710,7 @@ def _big_doc_sections(big: DataFrame, folded: DataFrame,
     pa = phase_a_in.groupBy("doc_id").applyInPandas(
         phase_a, _PHASEA_OUT
     ).persist()
+    persisted += [enriched, events, pa]
 
     targets = pa.filter(F.col("kind") == "T").select(
         "doc_id", "ord", "tp", "tf"
@@ -805,7 +807,7 @@ def extract_sections_split(
     # ('ok', empty sections) row — a second union would duplicate it
     big_out = (
         big.select("doc_id", F.lit("ok").alias("status"))
-        .join(_big_doc_sections(big, folded, cfg, spans_per_chunk),
+        .join(_big_doc_sections(big, folded, cfg, spans_per_chunk, []),
               "doc_id", "left")
         .unionByName(bad.select("doc_id", F.lit("quarantined")
                                 .alias("status")),
@@ -824,17 +826,20 @@ def extract_documents_split(
     cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
+    persisted: list | None = None,
 ) -> DataFrame:
     """extract_documents' output (EXTRACT_FULL) with the docs above
     ``skew_threshold`` spans chunk-folded once and fed to the span
     reassembly and sections replay the other skew paths share. Each
     big doc is one row left-joined from ``big``, so one the start_page
     cutoff emptied comes out 'ok' and empty, like the sequential fold.
-    Its lineage is input-derived like the fold's; wall_ms is NULL
-    (its fold spans many tasks) and partition_id the output's. At 1M
-    spans the nested row itself dominates on any path that builds it;
-    consumers that can take rows use extract_spans_split_rows and
-    extract_sections_split instead."""
+    Its lineage is input-derived like the fold's; wall_ms and
+    partition_id are NULL (no one task folds it). At 1M spans the
+    nested row itself dominates on any path that builds it; consumers
+    that can take rows use extract_spans_split_rows and
+    extract_sections_split instead. The cached big-doc intermediates
+    are appended to ``persisted`` for the caller to unpersist once the
+    result is materialised."""
     small, big, bad = _split_inputs(documents_in, header_footer_df,
                                     skew_threshold)
 
@@ -853,9 +858,12 @@ def extract_documents_split(
     # the Python chunk fold runs once
     folded = _fold_big_chunks(big, cfg, spans_per_chunk,
                               collect_events=True).persist()
+    persisted = [] if persisted is None else persisted
+    persisted.append(folded)
     rows = (
         input_lineage(big, "ok")
-        .join(_big_doc_sections(big, folded, cfg, spans_per_chunk),
+        .join(_big_doc_sections(big, folded, cfg, spans_per_chunk,
+                                persisted),
               "doc_id", "left")
         .join(_assemble_big_spans(folded), "doc_id", "left")
         # DecodeError big docs are never chunk-folded: quarantined whole
@@ -873,7 +881,7 @@ def extract_documents_split(
         "spans_in",
         F.size(spans).cast("long").alias("spans_out"),
         "bytes_in",
-        F.spark_partition_id().alias("partition_id"),
+        F.lit(None).cast("int").alias("partition_id"),
         F.lit(None).cast("double").alias("wall_ms"),
     )
     return _fold_salted(small, cfg).unionByName(big_out)

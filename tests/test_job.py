@@ -77,21 +77,29 @@ def _lineage_sums(spark, metrics):
     return m.groupBy().sum("doc_count", "bytes_in", "spans_out").first()
 
 
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_job_skew_flag_routes_split_path(spark, job_paths, tmp_path):
     """--skew-threshold below the corpus max must engage the
     chunk-split path (the flags were once parsed but unused) and still
     write every doc once. Its lineage must reconcile with the default
     route's over the same input: bytes_in is input-derived on both, and
     only the big (chunk-folded) docs carry a NULL wall_ms — per-doc fold
-    time is not attributable across chunk tasks."""
+    time is not attributable across chunk tasks — and a NULL
+    partition_id, so no lineage row mixes them with a fold partition.
+    Neither route may leave a cached frame behind."""
     out = str(tmp_path / "skew_out")
     metrics = str(tmp_path / "skew_metrics")
+    cached_before = _persistent_rdds(spark)
     rc = main([
         "--input", job_paths["input"], "--geom", job_paths["geom"],
         "--output", out, "--metrics", metrics,
         "--skew-threshold", "5", "--spans-per-chunk", "4",
     ])
     assert rc == 0
+    assert _persistent_rdds(spark) <= cached_before
     docs = spark.read.parquet(job_paths["input"])
     o = _read_out(spark, out)
     assert o.count() == docs.count()
@@ -106,11 +114,18 @@ def test_job_skew_flag_routes_split_path(spark, job_paths, tmp_path):
         "--output", str(tmp_path / "base_out"), "--metrics", base_metrics,
     ])
     assert rc == 0
+    assert _persistent_rdds(spark) <= cached_before
     assert tuple(split) == tuple(_lineage_sums(spark, base_metrics))
     # the fixture has docs at or under 5 spans: their fold wall time
-    # survives on the split route
-    assert _read_out(spark, metrics).filter("wall_ms IS NOT NULL").count() \
-        > 0
+    # survives on the split route, one row per fold partition; the big
+    # docs share the one NULL-partition row
+    m = _read_out(spark, metrics)
+    assert m.filter("wall_ms IS NOT NULL").count() > 0
+    assert m.filter(
+        "(partition_id IS NULL) != (wall_ms IS NULL)").count() == 0
+    big = m.filter("partition_id IS NULL").collect()
+    assert len(big) == 1
+    assert big[0].doc_count == docs.filter("size(spans) > 5").count() > 0
 
 
 def test_job_routes_call_wrapped_names(spark, job_paths, tmp_path,
