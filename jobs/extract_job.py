@@ -245,12 +245,12 @@ def main(argv=None) -> int:
     ap.add_argument(
         "--payloads", default=None,
         help="RAW byte-payload directory (PDF/JSON files) instead of "
-             "--input: one binaryFile scan feeds decode_payloads_geom, "
-             "header/footer boilerplate is derived from the decoded "
-             "geometry, and the span documents are reassembled from "
-             "the same frame — the bytes-in -> extraction-out path, "
-             "no pre-decoded table required. Quarantined payloads "
-             "emit no rows (they have no decodable spans).")
+             "--input: one binaryFile scan feeds one decode pass whose "
+             "row per payload is the fold input; header/footer "
+             "boilerplate is derived from the same rows' geometry — the "
+             "bytes-in -> extraction-out path, no pre-decoded table "
+             "required. A payload that fails decode commits one "
+             "status='quarantined' row, as in --stream-payloads.")
     ap.add_argument(
         "--html", default=None,
         help="directory of .html pages instead of --input/--payloads: "
@@ -375,33 +375,22 @@ def main(argv=None) -> int:
 
     if args.payloads:
         from pdfspark.sources.binary_decode import (
-            decode_payloads_geom,
+            decode_docs,
+            fold_input,
+            geom_rows,
             read_payloads,
         )
 
-        # ONE decode pass: the exploded geometry frame feeds BOTH the
-        # header/footer derivation and the reassembled span documents
-        # (checkpointed so the byte decode runs once, not per consumer)
-        geom = decode_payloads_geom(
+        # ONE decode pass, checkpointed so the byte decode runs once:
+        # its row per payload is the fold input as it stands, and its
+        # exploded geometry feeds the header/footer derivation
+        decoded = decode_docs(
             read_payloads(spark, args.payloads)
         ).localCheckpoint(eager=False)
-        docs = (
-            geom.groupBy("doc_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(
-                        F.col("offset").alias("o"),
-                        F.struct(
-                            F.col("kind"), F.col("text"),
-                            F.col("media_ref"), F.col("offset"),
-                        ).alias("s"),
-                    ))),
-                    lambda x: x["s"],
-                ).alias("spans")
-            )
-        )
+        docs = fold_input(decoded)
         hf = header_footer(
-            spark.read.parquet(args.geom) if args.geom else geom)
+            spark.read.parquet(args.geom) if args.geom
+            else geom_rows(decoded))
     else:
         docs = spark.read.parquet(args.input)
         hf = header_footer(spark.read.parquet(args.geom)) \

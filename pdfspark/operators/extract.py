@@ -92,6 +92,7 @@ def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
             rows = []
             for r in pdf.itertuples(index=False):
                 t0 = time.perf_counter()
+                given = getattr(r, "bytes_in", None)
                 spans = [
                     dict(kind=s["kind"], text=s["text"],
                          media_ref=s["media_ref"], offset=s["offset"])
@@ -106,7 +107,10 @@ def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
                     spans=res["out_spans"],
                     spans_in=res["spans_in"],
                     spans_out=res["spans_out"],
-                    bytes_in=sum(len(s["text"] or "") for s in spans),
+                    # an input bytes_in (a quarantined payload's size,
+                    # binary_decode.fold_input) overrides the text count
+                    bytes_in=(sum(len(s["text"] or "") for s in spans)
+                              if pd.isna(given) else int(given)),
                     partition_id=pid,
                     wall_ms=wall,
                 )

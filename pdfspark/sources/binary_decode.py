@@ -7,6 +7,12 @@ pandas/Arrow batches that decode whole documents — one input row per
 byte payload, one output row per document, decode errors quarantined
 as rows (status='decode_error') instead of killing the stage (F4).
 
+One decode loop, several views: ``decode_docs`` is the only
+mapInPandas over payload bytes; ``decode_payloads`` (spans narrowed to
+SPAN), ``geom_rows`` / ``decode_payloads_geom`` (SPANS_GEOM layout
+rows) and ``fold_input`` (the batch and stream fold input) are
+projections of its row per payload.
+
 Payload formats: real `%PDF` byte streams go through the stdlib mini
 codec (pdfspark.sources.pdf_mini), which since round 5 also tracks
 text state (Td/TD/Tm/T*/TL) and emits per-show geometry — so the
@@ -30,15 +36,24 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdfspark.schema import SPAN, SPANS_GEOM
+
+_GEOM_KEYS = ("page_id", "x0", "y0", "x1", "y1")
+
+# a decoded span: the SPAN contract plus the page and bounding box
+SPAN_GEOM = T.StructType(SPAN.fields + [
+    T.StructField(k, T.IntegerType() if k == "page_id" else T.DoubleType())
+    for k in _GEOM_KEYS
+])
 
 DECODED = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
         T.StructField("status", T.StringType()),
-        T.StructField("spans", T.ArrayType(SPAN)),
+        T.StructField("spans", T.ArrayType(SPAN_GEOM)),
         T.StructField("bytes_len", T.LongType()),
         T.StructField("geom_digest", T.StringType()),
     ]
@@ -60,7 +75,7 @@ def geom_digest(spans: list[dict]) -> str:
     """
     # all four coordinates required: a span with partial geometry
     # (x0 set, y0 None — possible through the pluggable-decoder seam)
-    # must not TypeError inside the format string; decode_payloads'
+    # must not TypeError inside the format string; decode_docs'
     # catch-all would silently misreport a decoded doc as
     # status='decode_error'. The mini codec emits all-or-none, so
     # fixture digests are unchanged.
@@ -97,15 +112,16 @@ def _decode_payload(content: bytes) -> dict:
     return dict(doc_id=body["doc_id"], spans=spans)
 
 
-def decode_payloads(bin_df: DataFrame, decoder=None) -> DataFrame:
-    """binaryFile rows -> documents_in rows + quarantine. ``decoder``
-    overrides the payload decoder (bytes -> dict(doc_id, spans)) —
-    the pluggable seam for a real PDF library.
+def decode_docs(bin_df: DataFrame, decoder=None) -> DataFrame:
+    """THE decode stage: binaryFile rows -> one DECODED row per payload
+    (doc_id, status, spans with page_id + x0..y1, bytes_len,
+    geom_digest). ``decoder`` overrides the payload decoder (bytes ->
+    dict(doc_id, spans)) — the pluggable seam for a real PDF library.
 
-    Spans are projected to the narrow SPAN contract (kind, text,
-    media_ref, offset); the geometry a PDF decode carries is
-    summarized into `geom_digest` here (the hash-checked driver
-    column) and surfaced in full by decode_payloads_geom."""
+    The span projection sits inside the try: a decoder returning a
+    malformed span dict (missing key) quarantines its payload as
+    status='decode_error' instead of killing the Spark task. A PDF
+    without an Info /Title falls back to the filename stem as doc_id."""
     decode = decoder or _decode_payload
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -117,7 +133,8 @@ def decode_payloads(bin_df: DataFrame, decoder=None) -> DataFrame:
                     body = decode(bytes(r.content))
                     spans = [
                         dict(kind=s["kind"], text=s["text"],
-                             media_ref=s["media_ref"], offset=s["offset"])
+                             media_ref=s["media_ref"], offset=s["offset"],
+                             **{k: s.get(k) for k in _GEOM_KEYS})
                         for s in body["spans"]
                     ]
                     rows.append(dict(doc_id=body["doc_id"] or stem,
@@ -134,59 +151,64 @@ def decode_payloads(bin_df: DataFrame, decoder=None) -> DataFrame:
     return bin_df.select("path", "length", "content").mapInPandas(run, DECODED)
 
 
+def _narrow(decoded: DataFrame) -> DataFrame:
+    """Spans cut to the SPAN contract (kind, text, media_ref, offset)."""
+    return decoded.withColumn("spans", F.transform(
+        "spans", lambda s: F.struct(*[s[f.name].alias(f.name)
+                                      for f in SPAN.fields])))
+
+
+def decode_payloads(bin_df: DataFrame, decoder=None) -> DataFrame:
+    """binaryFile rows -> documents_in rows + quarantine: decode_docs
+    with the spans narrowed to SPAN. The geometry a PDF decode carries
+    is summarized in `geom_digest` (the hash-checked driver column)
+    and surfaced in full by decode_payloads_geom."""
+    return _narrow(decode_docs(bin_df, decoder))
+
+
+def geom_rows(decoded: DataFrame) -> DataFrame:
+    """decode_docs rows -> SPANS_GEOM layout rows of the 'ok' payloads,
+    the frame the synthetic corpus materializes, so every geometry
+    operator (W1 reading order, F10-F12 margins, A1 header/footer,
+    A4/EP3 tables) runs from raw bytes. Geometry-free spans (TOC
+    prologue, JSON stand-ins) carry NULL coordinates; page_number
+    follows the synthetic convention (synth.py): max(0, page_id - 1)."""
+    pid = F.col("page_id")
+    return (
+        decoded.filter(F.col("status") == "ok")
+        .select("doc_id", F.explode("spans").alias("s"))
+        .select("doc_id", "s.*")
+        .withColumn("page_number",
+                    F.when(pid.isNotNull(), F.greatest(pid - 1, F.lit(0))))
+        .select(*SPANS_GEOM.fieldNames())
+    )
+
+
 def decode_payloads_geom(bin_df: DataFrame, decoder=None) -> DataFrame:
-    """binaryFile rows -> exploded SPANS_GEOM-shaped layout rows —
-    the bytes-in → geometry-out path: raw `%PDF` payloads come out as
-    the same (doc_id, page_id, page_number, kind, text, media_ref,
-    x0..y1, offset) frame the synthetic corpus materializes, so every
-    geometry operator (W1 reading order, F10-F12 margins, A1
-    header/footer, A4/EP3 table reconstruction) runs end-to-end from
-    raw bytes. Geometry-free spans (TOC prologue, JSON stand-ins)
-    carry NULL coordinates; quarantined payloads emit no rows here
-    (decode_payloads is the status-bearing surface).
+    """binaryFile rows -> SPANS_GEOM layout rows (geom_rows over
+    decode_docs) — the bytes-in -> geometry-out path. Quarantined
+    payloads have no rows here; decode_payloads is the status-bearing
+    view of the same decode."""
+    return geom_rows(decode_docs(bin_df, decoder))
 
-    page_number follows the synthetic convention (synth.py):
-    max(0, page_id - 1). Same scale shape as decode_payloads — narrow
-    per-file decode, no shuffle."""
-    decode = decoder or _decode_payload
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SPANS_GEOM.fields]
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                stem = os.path.splitext(os.path.basename(r.path))[0]
-                # the span projection sits INSIDE the try, collected
-                # per file and appended atomically: a pluggable
-                # decoder returning a malformed span dict (missing
-                # key) quarantines the file like decode_payloads does,
-                # instead of killing the Spark task — and never leaves
-                # a half-projected file in the output
-                try:
-                    body = decode(bytes(r.content))
-                    rows_f = []
-                    for s in body["spans"]:
-                        pid = s.get("page_id")
-                        rows_f.append(dict(
-                            # SAME doc_id rule as decode_payloads: a
-                            # PDF without an Info /Title falls back to
-                            # the filename stem — a None here could
-                            # never join the document rows it belongs
-                            # to
-                            doc_id=body["doc_id"] or stem,
-                            page_id=pid,
-                            page_number=None if pid is None
-                            else max(0, pid - 1),
-                            kind=s["kind"], text=s["text"],
-                            media_ref=s["media_ref"],
-                            x0=s.get("x0"), y0=s.get("y0"),
-                            x1=s.get("x1"), y1=s.get("y1"),
-                            offset=s["offset"],
-                        ))
-                except Exception:
-                    continue
-                rows.extend(rows_f)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return bin_df.select("path", "length", "content").mapInPandas(
-        run, SPANS_GEOM)
+def fold_input(decoded: DataFrame) -> DataFrame:
+    """decode_docs rows -> the fold's input (doc_id, spans, bytes_in),
+    one row per payload, for the batch and stream bytes-in modes
+    alike. A payload that failed decode gets the DecodeError marker
+    span, so the fold lands it in the F4 quarantine state
+    (status='quarantined'), and its lineage bytes_in is the payload
+    size (NULL for decoded payloads: the fold counts their span
+    text). A projection only — no exchange above the decode."""
+    ok = F.col("status") == "ok"
+    marker = F.struct(
+        F.lit("DecodeError").alias("kind"),
+        F.lit("corrupt payload").alias("text"),
+        F.lit(None).cast("string").alias("media_ref"),
+        F.lit(0).alias("offset"),
+    )
+    return _narrow(decoded).select(
+        "doc_id",
+        F.when(ok, F.col("spans")).otherwise(F.array(marker)).alias("spans"),
+        F.when(~ok, F.col("bytes_len")).alias("bytes_in"),
+    )

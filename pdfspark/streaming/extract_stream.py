@@ -11,12 +11,14 @@ jobs/extract_job.py's snapshot-resume anti-join, and what a
 continuously-fed 100 TB ingest actually runs (`availableNow` drains
 the backlog and stops; drop the trigger for continuous micro-batches).
 
-All the heavy lifting reuses the batch operators: decode_payloads
-(sources/binary_decode.py) and the _fold_batches mapInPandas fold
-(operators/extract.py) run unchanged on the streaming DataFrame —
-Structured Streaming's incremental planner handles the rest. No
-stateful operator is involved (each document folds independently), so
-there is no watermark and no state store to size.
+All the heavy lifting reuses the batch operators: decode_docs and
+fold_input (sources/binary_decode.py) — the same single decode stage
+and fold input `extract_job --payloads` commits, so a corrupt payload
+is one status='quarantined' row in both modes — and the _fold_batches
+mapInPandas fold (operators/extract.py) run unchanged on each
+micro-batch inside foreachBatch. No stateful operator is involved
+(each document folds independently), so there is no watermark and no
+state store to size.
 """
 
 from __future__ import annotations
@@ -25,8 +27,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from pdfspark.config import ExtractConfig
-from pdfspark.operators.extract import EXTRACT_FULL, _fold_batches
-from pdfspark.sources.binary_decode import decode_payloads
+from pdfspark.operators.extract import _fold_salted, _with_hf, lineage_table
+from pdfspark.sources.binary_decode import decode_docs, fold_input
 
 
 def extract_payload_stream(
@@ -86,19 +88,6 @@ def extract_payload_stream(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     bin_stream = reader.load(payload_dir)
 
-    # a payload that failed decode carries an empty span list; give it
-    # the DecodeError marker span so the fold lands it in the same F4
-    # quarantine state the batch path uses (status='quarantined')
-    err_span = F.array(
-        F.struct(
-            F.lit("DecodeError").alias("kind"),
-            F.lit("corrupt payload").alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("int").alias("offset"),
-        )
-    )
-    from pdfspark.operators.extract import _with_hf, lineage_table
-
     # BOTH modes sink through foreachBatch plain appends. The earlier
     # split — streaming file sink without metrics, foreachBatch with —
     # wrote incompatible layouts to the same out_path: the file sink's
@@ -110,45 +99,15 @@ def extract_payload_stream(
     # via the source checkpoint) — dedupe by doc_id downstream or let
     # the batch job's resume anti-join reconcile.
     #
-    # Decode + fold run INSIDE foreachBatch, on the raw binary batch:
-    # lineage bytes_in must report the PAYLOAD size for quarantined
-    # docs (not len('corrupt payload')), which needs the decoded
-    # frame's bytes_len joined back to the folded rows — as a
-    # streaming-plan self-join that would be a watermark-requiring
-    # stream-stream join; batch-side it is a plain equi-join.
+    # Decode + fold run INSIDE foreachBatch, on the raw binary batch.
+    # fold_input gives each payload its own row (two payloads declaring
+    # one doc_id fold to two rows — dedupe by doc_id downstream) and a
+    # quarantined payload its payload size as lineage bytes_in. The
+    # stream has no geometry side input: _with_hf(df, None) is the
+    # batch fold's own empty-header/footer defaulting seam.
     def sink(batch_df, epoch_id: int) -> None:
-        decoded = decode_payloads(batch_df).localCheckpoint(eager=True)
-        # the stream has no geometry side input: _with_hf(df, None)
-        # is the batch fold's own empty-header/footer defaulting
-        # seam, reused so the two paths cannot drift
-        docs = _with_hf(
-            decoded.withColumn(
-                "spans",
-                F.when(F.col("status") == "ok",
-                       F.col("spans")).otherwise(err_span),
-            ),
-            None,
-        )
-        folded = docs.repartition(F.xxhash64("doc_id")).mapInPandas(
-            _fold_batches(cfg), EXTRACT_FULL
-        )
-        # one row per doc_id on the bytes side: two payload files in a
-        # micro-batch can declare the same doc_id (e.g. two versions
-        # arriving together), and a raw row-level join would fan out
-        # |payloads|^2 rows per colliding doc into the committed output.
-        # Each colliding payload still folds to its own output row
-        # (the documented dedupe-by-doc_id-downstream contract); its
-        # quarantine lineage reports the doc's total payload bytes.
-        folded = folded.join(
-            decoded.groupBy("doc_id").agg(
-                F.sum(F.col("bytes_len").cast("long"))
-                .alias("payload_bytes")),
-            "doc_id",
-        ).withColumn(
-            "bytes_in",
-            F.when(F.col("status") == "quarantined",
-                   F.col("payload_bytes")).otherwise(F.col("bytes_in")),
-        ).drop("payload_bytes")
+        folded = _fold_salted(
+            _with_hf(fold_input(decode_docs(batch_df)), None), cfg)
         write_metrics = metrics_path is not None
         if write_metrics:
             folded.persist()

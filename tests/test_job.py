@@ -423,7 +423,11 @@ def test_job_payloads_bytes_in_extraction_out(spark, tmp_path):
     """--payloads mode: raw %PDF byte files in, committed extraction
     snapshots out — no pre-decoded table anywhere. Header/footer
     derive from the decoded geometry; span sequences must equal
-    decode_tiny_pdf + the sequential fold run by hand."""
+    decode_tiny_pdf + the sequential fold run by hand. A corrupt
+    payload is one quarantined row; --stream-payloads over the same
+    directory commits the same rows, lineage counts every file in both
+    modes, and a --resume rerun commits nothing new."""
+    import collections
     import os as _os
 
     from pdfspark.config import ExtractConfig
@@ -451,12 +455,14 @@ def test_job_payloads_bytes_in_extraction_out(spark, tmp_path):
             fh.write(data)
     with open(_os.path.join(pdir, "broken.pdf"), "wb") as fh:
         fh.write(b"%PDF-1.4\nnot really\n")
-    out = str(tmp_path / "out")
-    rc = main(["--payloads", pdir, "--output", out])
+    out, met = str(tmp_path / "out"), str(tmp_path / "met")
+    rc = main(["--payloads", pdir, "--output", out, "--metrics", met])
     assert rc == 0
-    got = {r.doc_id: [tuple(s) for s in r.spans]
-           for r in _read_out(spark, out).collect()}
-    assert set(got) == set(payloads)  # broken.pdf emits no rows
+    rows = _read_out(spark, out).collect()
+    got = {r.doc_id: [tuple(s) for s in r.spans] for r in rows}
+    assert len(rows) == len(got) == len(payloads) + 1
+    assert [r.status for r in rows if r.doc_id == "broken"] == [
+        "quarantined"]
     cfg = ExtractConfig()
     for doc_id, raw in payloads.items():
         spans = decode_tiny_pdf(raw)["spans"]
@@ -467,6 +473,29 @@ def test_job_payloads_bytes_in_extraction_out(spark, tmp_path):
         assert got[doc_id] == [
             (s["kind"], s["text"], s["media_ref"], s["offset"])
             for s in res["out_spans"]], doc_id
+
+    # the stream commits the same rows from the same decode stage
+    s_out, s_met = str(tmp_path / "s_out"), str(tmp_path / "s_met")
+    rc = main(["--stream-payloads", pdir, "--checkpoint",
+               str(tmp_path / "ck"), "--output", s_out, "--metrics", s_met])
+    assert rc == 0
+
+    def multiset(table):
+        return collections.Counter(
+            (r.doc_id, r.status, tuple(tuple(s) for s in r.spans))
+            for r in _read_out(spark, table).collect())
+
+    assert multiset(s_out) == multiset(out)
+    for table in (met, s_met):
+        assert _read_out(spark, table).groupBy().sum(
+            "doc_count").first()[0] == len(payloads) + 1, table
+
+    # exactly-once: the quarantined payload is committed too, so a
+    # resume run has nothing left to write
+    rc = main(["--payloads", pdir, "--output", out, "--metrics", met,
+               "--resume"])
+    assert rc == 0
+    assert _read_out(spark, out).count() == len(rows)
 
 
 def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):

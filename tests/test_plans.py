@@ -160,3 +160,28 @@ def test_exchange_counts_bounded(plans):
     unknown = [n for n in plans if n not in MAX_EXCHANGES
                and not isinstance(plans[n], str)]
     assert not unknown, f"new queries missing an exchange ceiling: {unknown}"
+
+
+def test_bytes_in_fold_input_is_the_decode_row(spark):
+    """The frame batch --payloads and the stream hand to the fold is
+    the decode stage's row per payload as it stands: no Exchange and
+    exactly one Python map above the binaryFile scan, so a regroup
+    shuffle between decode and fold cannot come back unnoticed."""
+    import glob
+
+    from pdfspark.sources.binary_decode import (
+        decode_docs,
+        fold_input,
+        read_payloads,
+    )
+    from tools.explain_audit import plan_summary
+
+    src = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "fixtures", "*", "payloads")
+    df = fold_input(decode_docs(read_payloads(spark, src)))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    s = plan_summary(plan)
+    assert (s["exch"], s["pyarrow"]) == (0, 1), plan
+    assert "EvalPython" not in plan and "MapInArrow" not in plan, plan
+    assert plan.index("MapInPandas") < plan.index("binaryFile"), plan
+    assert df.count() == len(glob.glob(os.path.join(src, "*")))

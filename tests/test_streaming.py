@@ -399,36 +399,49 @@ def test_dedup_streams_null_text_single_keeper(spark, tmp_path):
     assert {r.doc_id for r in rows} == {10, 20, 40}
 
 
+def _stream_and_batch(spark, pdir, tmp_path):
+    """Yield (mode, committed rows, lineage rows) for the stream drain
+    and for batch extract_job --payloads over one payload directory:
+    both run the same decode stage and fold input."""
+    from jobs.extract_job import main
+    from pdfspark.sinks.snapshot import read_committed
+    from pdfspark.streaming.extract_stream import extract_payload_stream
+
+    out, met = str(tmp_path / "out"), str(tmp_path / "met")
+    extract_payload_stream(spark, pdir, out, str(tmp_path / "cp"),
+                           metrics_path=met)
+    yield ("stream", spark.read.parquet(out).collect(),
+           spark.read.parquet(met).collect())
+    out, met = str(tmp_path / "b_out"), str(tmp_path / "b_met")
+    assert main(["--payloads", pdir, "--output", out, "--metrics", met]) == 0
+    yield ("batch", read_committed(spark, out).collect(),
+           read_committed(spark, met).collect())
+
+
 def test_stream_lineage_bytes_in_reports_payload_size(spark, tmp_path):
     """A quarantined payload's lineage bytes_in must be the PAYLOAD
     size, not len('corrupt payload') — before the fix a 50 MB corrupt
     file under-reported ingest bytes by its full size exactly when a
-    bad-input burst hits the dashboards."""
-    from pdfspark.streaming.extract_stream import extract_payload_stream
-
+    bad-input burst hits the dashboards. Same rule in batch
+    --payloads."""
     pdir = str(tmp_path / "payloads")
     os.makedirs(pdir)
     big_garbage = b"\xff\x00GARBAGE" * 4096  # 32 KiB, undecodable
     with open(os.path.join(pdir, "bad.bin"), "wb") as fh:
         fh.write(big_garbage)
-    out = str(tmp_path / "out")
-    met = str(tmp_path / "met")
-    extract_payload_stream(spark, pdir, out, str(tmp_path / "cp"),
-                           metrics_path=met)
-    (row,) = spark.read.parquet(out).collect()
-    assert row.status == "quarantined"
-    total = sum(r.bytes_in for r in spark.read.parquet(met).collect())
-    assert total == len(big_garbage)
+    for mode, rows, lineage in _stream_and_batch(spark, pdir, tmp_path):
+        (row,) = rows
+        assert row.status == "quarantined", mode
+        assert sum(r.bytes_in for r in lineage) == len(big_garbage), mode
 
 
 def test_stream_same_doc_id_two_payloads_no_fanout(spark, tmp_path):
     """Two payload files in ONE micro-batch declaring the same doc_id
     (two versions arriving together) must commit one output row per
     payload — the lineage bytes join used to be row-level on doc_id,
-    fanning |payloads|^2 rows per colliding doc into the sink."""
+    fanning |payloads|^2 rows per colliding doc into the sink. Batch
+    --payloads folds each payload to its own row too."""
     import json
-
-    from pdfspark.streaming.extract_stream import extract_payload_stream
 
     pdir = str(tmp_path / "payloads")
     os.makedirs(pdir)
@@ -438,13 +451,9 @@ def test_stream_same_doc_id_two_payloads_no_fanout(spark, tmp_path):
     for n in ("v1.bin", "v2.bin"):
         with open(os.path.join(pdir, n), "w") as fh:
             json.dump(body, fh)
-    out = str(tmp_path / "out")
-    met = str(tmp_path / "met")
-    extract_payload_stream(spark, pdir, out, str(tmp_path / "cp"),
-                           metrics_path=met)
-    rows = spark.read.parquet(out).collect()
-    assert len(rows) == 2            # one per payload, NOT 4
-    assert {r.doc_id for r in rows} == {"same-doc"}
+    for mode, rows, _lineage in _stream_and_batch(spark, pdir, tmp_path):
+        assert len(rows) == 2, mode      # one per payload, NOT 4 or 1
+        assert {r.doc_id for r in rows} == {"same-doc"}, mode
 
 
 def test_sessionize_stream_null_value_matches_batch(spark, tmp_path):
