@@ -388,7 +388,7 @@ def _q_extract_spans(spark, sf_dir):
     scans of a 100 TB table. Chunking a merely-large doc (20k spans
     folds in ~0.2 s in one task) measured as a net loss, hence the
     straggler-only config.SKEW_SPAN_THRESHOLD default, shared with
-    the sections query and extract_job. The skew path itself
+    the sections query. The skew path itself
     (extract_spans_split_rows) is pinned equal to this route by the
     forced-threshold tests; its array-collecting sibling
     extract_spans_split is what the bench scaling job drives. The

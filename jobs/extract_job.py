@@ -9,7 +9,7 @@ Usage:
         --geom   <spans_geom path, optional: header/footer source> \
         --output <extracted spans table path> \
         --metrics <lineage metrics table path> \
-        [--resume] [--skew-threshold N] [--spans-per-chunk 1024]
+        [--resume]
 
     # OR bytes-in: raw PDF/JSON payload files, no pre-decoded table —
     # geometry AND span documents come from one binaryFile decode pass
@@ -24,13 +24,13 @@ Usage:
         --output <blocks table path> [--metrics ...] [--resume]
 
 Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
- - salted repartition on xxhash64(doc_id) before the Arrow fold
- - skew splitter for documents above --skew-threshold spans (default
-   config.SKEW_SPAN_THRESHOLD): a max-span-count probe picks
-   extract_documents_split when a doc crosses it, else the plain fold
+ - salted repartition on xxhash64(doc_id) before the Arrow fold, one
+   route for every document: each folds into one ordered row in one
+   task (no skew split — the one nested output row dominates, so
+   chunking a big doc lost to the plain fold up to 1M spans;
+   BASELINE.md, "Job route A/B")
  - per-partition lineage rows (partition_id, doc_count, bytes_in,
-   spans_out, wall_ms; the split route's big docs share one row with
-   NULL partition_id and wall_ms) committed to --metrics under the
+   spans_out, wall_ms) committed to --metrics under the
    SAME snapshot id as the data (multi-table commit; a crash between the two
    manifest publishes is healed by reconcile_aux at the next start,
    so committed documents can never lose their lineage rows)
@@ -53,8 +53,6 @@ if REPO not in sys.path:  # not needed when shipped via --py-files
     sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
-
-from pdfspark.config import SKEW_SPAN_THRESHOLD  # noqa: E402
 
 
 def _prepare_output(spark, args, frame):
@@ -263,9 +261,6 @@ def main(argv=None) -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--skew-threshold", type=int,
-                    default=SKEW_SPAN_THRESHOLD)
-    ap.add_argument("--spans-per-chunk", type=int, default=1024)
     ap.add_argument(
         "--format", choices=("parquet", "json"), default="parquet",
         help="output format: parquet (Iceberg-append analogue, default) "
@@ -325,12 +320,7 @@ def main(argv=None) -> int:
         spark = build_session()
 
     from pdfspark.operators.boilerplate import header_footer
-    from pdfspark.operators.extract import (
-        _max_span_count,
-        extract_documents,
-        extract_documents_split,
-        lineage_table,
-    )
+    from pdfspark.operators.extract import extract_documents, lineage_table
 
     # truthiness, not `is not None`: an empty-string input (unset env
     # var in a deployment script) must be a usage error here, not a
@@ -400,27 +390,11 @@ def main(argv=None) -> int:
 
     docs = _prepare_output(spark, args, docs)
 
-    # probe-routed skew splitter (same shape as extract_spans_auto):
-    # the plain salted fold unless a doc crosses --skew-threshold
-    # both routes return EXTRACT_FULL, lineage columns included (the
-    # split route's big docs carry a NULL wall_ms and partition_id)
-    split_cache: list = []
-    mx = _max_span_count(docs)
-    if mx > args.skew_threshold:
-        full = extract_documents_split(
-            docs, hf, skew_threshold=args.skew_threshold,
-            spans_per_chunk=args.spans_per_chunk, persisted=split_cache,
-        )
-    else:
-        full = extract_documents(docs, hf)
+    full = extract_documents(docs, hf)
     # persist once: spans + sections feed the output, the same pass
     # feeds the metrics aggregation (no second fold)
     full.persist()
     n = full.count()
-    # full is materialised: the split route's cached intermediates are
-    # never read again (a loaded cache is kept when its inputs drop)
-    for df in split_cache:
-        df.unpersist()
     out = full.select("doc_id", "status", "spans", "sections")
     aux = [(lineage_table(full), args.metrics)] if args.metrics else None
     if args.buckets > 0:

@@ -4,14 +4,15 @@
 with explicit salted repartition on xxhash64(doc_id); emits spans +
 sections + per-doc lineage columns.
 
-Skew routes (``*_split``, picked by the ``*_auto`` probes and by
-extract_job): docs above ``skew_threshold`` spans (default
-config.SKEW_SPAN_THRESHOLD) are chunk-folded in parallel and
-reassembled — safe because span labels depend only on each span's own
-text (see fold.py) — and their order-stateful sections are rebuilt by
-a segment-parallel replay. ``extract_documents_split`` gives the full
-extract_documents output; the others give spans, span rows or
-sections only.
+Skew routes (``*_split``, picked by the ``*_auto`` probes): docs above
+``skew_threshold`` spans (default config.SKEW_SPAN_THRESHOLD) are
+chunk-folded in parallel and reassembled — safe because span labels
+depend only on each span's own text (see fold.py) — and their
+order-stateful sections are rebuilt by a segment-parallel replay. They
+give spans, span rows or sections only. ``extract_documents_split``
+gives the full extract_documents output but has no caller: extract_job
+folds every doc with ``extract_documents``, which beat it up to 1M
+spans.
 
 ``lineage_table``      — per-partition metrics rows (partition_id,
 doc_count, bytes_in, spans_out, wall_ms) per the north rule.
@@ -834,9 +835,13 @@ def extract_documents_split(
 ) -> DataFrame:
     """extract_documents' output (EXTRACT_FULL) with the docs above
     ``skew_threshold`` spans chunk-folded once and fed to the span
-    reassembly and sections replay the other skew paths share. Each
-    big doc is one row left-joined from ``big``, so one the start_page
-    cutoff emptied comes out 'ok' and empty, like the sequential fold.
+    reassembly and sections replay the other skew paths share. No
+    product code calls it: extract_job's plain fold beat it at every
+    size up to 1M spans (BASELINE.md, "Job route A/B"). It is kept only
+    because the traced benchmark wraps it by name, and goes with that
+    wrap. Each big doc is one row left-joined from ``big``, so one the
+    start_page cutoff emptied comes out 'ok' and empty, like the
+    sequential fold.
     Its lineage is input-derived like the fold's; wall_ms and
     partition_id are NULL (no one task folds it). At 1M spans the
     nested row itself dominates on any path that builds it; consumers

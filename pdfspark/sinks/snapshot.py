@@ -458,7 +458,7 @@ def compact_snapshots(
     hb_stop = _start_lock_heartbeat(lock, lock_ttl_s)
     try:
         return _compact_locked(spark, output, fmt, n_files, protocol,
-                               min_snapshots, partition_by)
+                               min_snapshots, partition_by, lock, token)
     finally:
         hb_stop.set()
         _release_maintenance_lock(lock, token)
@@ -524,21 +524,27 @@ def _start_lock_heartbeat(path: str, ttl_s: float):
     return stop
 
 
+def _owns_maintenance_lock(path: str, token: str) -> bool:
+    try:
+        with open(path, encoding="utf-8") as fh:
+            return fh.read().strip() == token
+    except OSError:
+        return False
+
+
 def _release_maintenance_lock(path: str, token: str) -> None:
     """Remove the lock only if WE still own it (token match): after a
     TTL takeover the file belongs to someone else, and a blind remove
     would strip the new holder's mutual exclusion."""
-    try:
-        with open(path, encoding="utf-8") as fh:
-            if fh.read().strip() != token:
-                return
-        os.remove(path)
-    except OSError:
-        pass
+    if _owns_maintenance_lock(path, token):
+        try:
+            os.remove(path)
+        except OSError:
+            pass
 
 
 def _compact_locked(spark, output, fmt, n_files, protocol,
-                    min_snapshots, partition_by) -> str | None:
+                    min_snapshots, partition_by, lock, token) -> str | None:
     _cleanup_superseded(output)
     snaps = committed_snapshots(output)
     if len(snaps) < min_snapshots:
@@ -563,6 +569,14 @@ def _compact_locked(spark, output, fmt, n_files, protocol,
                             fmt, partition_by=partition_by, rename=rename)
     if files is None:  # inputs were committed-but-empty
         return None
+    # fence: a compactor paused past the TTL may have lost the lock to
+    # a second one rewriting the same inputs; publishing now would make
+    # every row read twice. The staged dir stays unmanifested debris
+    # for gc_orphans.
+    if not _owns_maintenance_lock(lock, token):
+        raise RuntimeError(
+            f"maintenance lock on {output} was taken over during the "
+            "rewrite; compacted snapshot not published")
     _publish(output, snap, files,
              supersedes=sorted(set(snaps) | inherited))  # <- commit point
     _cleanup_superseded(output)

@@ -72,68 +72,71 @@ def test_job_metrics_rows(spark, job_paths):
         committed_snapshots(job_paths["output"])
 
 
-def _lineage_sums(spark, metrics):
-    m = _read_out(spark, metrics)
-    return m.groupBy().sum("doc_count", "bytes_in", "spans_out").first()
-
-
 def _persistent_rdds(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def test_job_skew_flag_routes_split_path(spark, job_paths, tmp_path):
-    """--skew-threshold below the corpus max must engage the
-    chunk-split path (the flags were once parsed but unused) and still
-    write every doc once. Its lineage must reconcile with the default
-    route's over the same input: bytes_in is input-derived on both, and
-    only the big (chunk-folded) docs carry a NULL wall_ms — per-doc fold
-    time is not attributable across chunk tasks — and a NULL
-    partition_id, so no lineage row mixes them with a fold partition.
-    Neither route may leave a cached frame behind."""
+def test_job_big_doc_folds_with_lineage(spark, job_paths, tmp_path):
+    """A doc above config.SKEW_SPAN_THRESHOLD spans takes the same
+    fold as every other doc: the job commits one row per doc equal to
+    extract_documents over the same input, every lineage row carries a
+    real partition_id and wall_ms, and no cached frame is left behind.
+    The removed skew-routing options are usage errors."""
+    import random
+
+    from pdfspark.config import SKEW_SPAN_THRESHOLD
+    from pdfspark.operators.boilerplate import header_footer
+    from pdfspark.operators.extract import extract_documents
+    from pdfspark.synth import DocBuilder, gen_skew
+
+    docs = spark.read.parquet(job_paths["input"])
+    b = DocBuilder("giant-00000")
+    gen_skew(b, random.Random("42|giant"), SKEW_SPAN_THRESHOLD + 1000)
+    b.finish()
+    spans = [dict(kind=s["kind"], text=s["text"], media_ref=s["media_ref"],
+                  offset=s["offset"]) for s in b.spans]
+    assert len(spans) > SKEW_SPAN_THRESHOLD
+    inp = str(tmp_path / "skew_in.parquet")
+    docs.unionByName(spark.createDataFrame([(b.doc_id, spans)], docs.schema)
+                     ).write.parquet(inp)
+    n_docs = docs.count() + 1
+
     out = str(tmp_path / "skew_out")
     metrics = str(tmp_path / "skew_metrics")
     cached_before = _persistent_rdds(spark)
-    rc = main([
-        "--input", job_paths["input"], "--geom", job_paths["geom"],
+    assert main([
+        "--input", inp, "--geom", job_paths["geom"],
         "--output", out, "--metrics", metrics,
-        "--skew-threshold", "5", "--spans-per-chunk", "4",
-    ])
-    assert rc == 0
+    ]) == 0
     assert _persistent_rdds(spark) <= cached_before
-    docs = spark.read.parquet(job_paths["input"])
-    o = _read_out(spark, out)
-    assert o.count() == docs.count()
-    assert o.select("doc_id").distinct().count() == docs.count()
-    split = _lineage_sums(spark, metrics)
-    assert split[0] == docs.count()
 
-    # the same input through the default threshold (the plain fold)
-    base_metrics = str(tmp_path / "base_metrics")
-    rc = main([
-        "--input", job_paths["input"], "--geom", job_paths["geom"],
-        "--output", str(tmp_path / "base_out"), "--metrics", base_metrics,
-    ])
-    assert rc == 0
-    assert _persistent_rdds(spark) <= cached_before
-    assert tuple(split) == tuple(_lineage_sums(spark, base_metrics))
-    # the fixture has docs at or under 5 spans: their fold wall time
-    # survives on the split route, one row per fold partition; the big
-    # docs share the one NULL-partition row
+    cols = ("doc_id", "status", "spans", "sections")
+    rows = _read_out(spark, out).select(*cols).collect()
+    got = {r.doc_id: r for r in rows}
+    assert len(rows) == len(got) == n_docs
+    want = extract_documents(
+        spark.read.parquet(inp),
+        header_footer(spark.read.parquet(job_paths["geom"])),
+    ).filter(f"doc_id = '{b.doc_id}'").select(*cols).first()
+    assert got[b.doc_id] == want
+    assert len(want.spans) > 0
+
     m = _read_out(spark, metrics)
-    assert m.filter("wall_ms IS NOT NULL").count() > 0
-    assert m.filter(
-        "(partition_id IS NULL) != (wall_ms IS NULL)").count() == 0
-    big = m.filter("partition_id IS NULL").collect()
-    assert len(big) == 1
-    assert big[0].doc_count == docs.filter("size(spans) > 5").count() > 0
+    assert m.filter("partition_id IS NULL OR wall_ms IS NULL").count() == 0
+    assert m.groupBy().sum("doc_count").first()[0] == n_docs
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", inp, "--output", str(tmp_path / "x"),
+              "--skew-threshold", "5"])
+    assert exc.value.code == 2
 
 
-def test_job_routes_call_wrapped_names(spark, job_paths, tmp_path,
-                                       monkeypatch):
-    """The job must look its route functions up on the extract module
-    at call time: the traced benchmark (perfbench/layers.py) wraps
-    extract_documents_split and extract_documents by name and would
-    silently lose its route attribution otherwise."""
+def test_job_routes_call_wrapped_names(spark, job_paths, fixture_dir,
+                                       tmp_path, monkeypatch):
+    """The job must look extract_documents up on the extract module at
+    call time: the traced benchmark (perfbench/layers.py) wraps it by
+    name for its fold-route attribution. Both batch modes fold every
+    doc through it, with no skew probe or split route."""
     import pdfspark.operators.extract as X
 
     calls = []
@@ -147,16 +150,15 @@ def test_job_routes_call_wrapped_names(spark, job_paths, tmp_path,
 
         monkeypatch.setattr(X, name, wrapper)
 
-    counting("extract_documents_split")
-    counting("extract_documents")
-    for i, extra in enumerate((["--skew-threshold", "5"], [])):
+    for name in ("extract_documents", "_max_span_count",
+                 "extract_documents_split"):
+        counting(name)
+    for mode, src in (("--input", job_paths["input"]),
+                      ("--payloads", os.path.join(fixture_dir, "payloads"))):
         del calls[:]
-        assert main([
-            "--input", job_paths["input"],
-            "--output", str(tmp_path / f"route{i}"),
-        ] + extra) == 0
-        assert calls == (["extract_documents_split"] if extra
-                         else ["extract_documents"])
+        assert main([mode, src, "--output",
+                     str(tmp_path / mode.strip("-"))]) == 0
+        assert calls == ["extract_documents"], mode
 
 
 def test_job_crash_between_data_and_metrics_manifest_heals(
@@ -716,6 +718,40 @@ def test_compact_crash_before_publish_changes_nothing(spark, tmp_path,
     snap = S.compact_snapshots(spark, out)
     assert S.committed_snapshots(out) == [snap]
     assert sorted(S.read_committed(spark, out).collect()) == before
+
+
+def test_compact_lock_takeover_blocks_publish(spark, tmp_path,
+                                             monkeypatch):
+    """A compactor that loses its lock mid-rewrite (paused past the
+    TTL, another compactor took over) must not publish: readers still
+    see exactly the original snapshots, and the new holder's lock
+    stays in place."""
+    import pdfspark.sinks.snapshot as S
+
+    out = str(tmp_path / "tbl")
+    for i in range(3):
+        S.commit_append(
+            spark.createDataFrame([(f"d{i}", i)], "doc_id string, v int"),
+            out)
+    before = sorted(S.read_committed(spark, out).collect())
+    snaps_before = S.committed_snapshots(out)
+    lock = os.path.join(out, S.MANIFEST_DIR, ".maintenance.lock")
+    real_stage = S._stage_snapshot
+
+    def stage_then_taken_over(*a, **kw):
+        files = real_stage(*a, **kw)
+        with open(lock, "w", encoding="utf-8") as fh:
+            fh.write("foreign-token")
+        return files
+
+    monkeypatch.setattr(S, "_stage_snapshot", stage_then_taken_over)
+    with pytest.raises(RuntimeError, match="taken over"):
+        S.compact_snapshots(spark, out)
+
+    assert S.committed_snapshots(out) == snaps_before
+    assert sorted(S.read_committed(spark, out).collect()) == before
+    with open(lock, encoding="utf-8") as fh:
+        assert fh.read() == "foreign-token"
 
 
 def test_compact_crash_mid_cleanup_heals(spark, tmp_path, monkeypatch):
