@@ -12,7 +12,7 @@ Usage:
         [--resume]
 
     # OR bytes-in: raw PDF/JSON payload files, no pre-decoded table —
-    # geometry AND span documents come from one binaryFile decode pass
+    # each payload is decoded and folded in one Python stage
     spark-submit --py-files pdfspark.zip jobs/extract_job.py \
         --payloads <dir of .pdf/.bin byte payloads> \
         --output <extracted spans table path> [--metrics ...]
@@ -24,11 +24,11 @@ Usage:
         --output <blocks table path> [--metrics ...] [--resume]
 
 Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
- - salted repartition on xxhash64(doc_id) before the Arrow fold, one
-   route for every document: each folds into one ordered row in one
-   task (no skew split — the one nested output row dominates, so
-   chunking a big doc lost to the plain fold up to 1M spans;
-   BASELINE.md, "Job route A/B")
+ - one route for every document, folded into one ordered row in one
+   task: --input after a salted repartition on xxhash64(doc_id),
+   --payloads inside its scan task with no shuffle (no skew split — the
+   one nested output row dominates, so chunking a big doc lost to the
+   plain fold up to 1M spans; BASELINE.md, "Job route A/B")
  - per-partition lineage rows (partition_id, doc_count, bytes_in,
    spans_out, wall_ms) committed to --metrics under the
    SAME snapshot id as the data (multi-table commit; a crash between the two
@@ -243,11 +243,10 @@ def main(argv=None) -> int:
     ap.add_argument(
         "--payloads", default=None,
         help="RAW byte-payload directory (PDF/JSON files) instead of "
-             "--input: one binaryFile scan feeds one decode pass whose "
-             "row per payload is the fold input; header/footer "
-             "boilerplate is derived from the same rows' geometry — the "
-             "bytes-in -> extraction-out path, no pre-decoded table "
-             "required. A payload that fails decode commits one "
+             "--input: one binaryFile scan feeds one Python stage that "
+             "decodes and folds each payload — the bytes-in -> "
+             "extraction-out path, no pre-decoded table required. "
+             "A payload that fails decode commits one "
              "status='quarantined' row, as in --stream-payloads.")
     ap.add_argument(
         "--html", default=None,
@@ -364,33 +363,25 @@ def main(argv=None) -> int:
         return _run_html_mode(spark, args)
 
     if args.payloads:
+        if args.geom:
+            ap.error("--geom applies to --input only")
         from pdfspark.sources.binary_decode import (
-            decode_docs,
-            fold_input,
-            geom_rows,
+            extract_payloads,
             read_payloads,
         )
 
-        # ONE decode pass, checkpointed so the byte decode runs once:
-        # its row per payload is the fold input as it stands, and its
-        # exploded geometry feeds the header/footer derivation
-        decoded = decode_docs(
-            read_payloads(spark, args.payloads)
-        ).localCheckpoint(eager=False)
-        docs = fold_input(decoded)
-        hf = header_footer(
-            spark.read.parquet(args.geom) if args.geom
-            else geom_rows(decoded))
+        # doc_ids exist only after decode: --resume filters folded rows
+        full = _prepare_output(spark, args, extract_payloads(
+            read_payloads(spark, args.payloads)))
     else:
-        docs = spark.read.parquet(args.input)
         hf = header_footer(spark.read.parquet(args.geom)) \
             if args.geom else None
+        full = extract_documents(
+            _prepare_output(spark, args, spark.read.parquet(args.input)),
+            hf)
 
     from pdfspark.sinks.snapshot import commit_append
 
-    docs = _prepare_output(spark, args, docs)
-
-    full = extract_documents(docs, hf)
     # persist once: spans + sections feed the output, the same pass
     # feeds the metrics aggregation (no second fold)
     full.persist()

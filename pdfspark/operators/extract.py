@@ -108,8 +108,8 @@ def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
                     spans=res["out_spans"],
                     spans_in=res["spans_in"],
                     spans_out=res["spans_out"],
-                    # an input bytes_in (a quarantined payload's size,
-                    # binary_decode.fold_input) overrides the text count
+                    # a given bytes_in (a quarantined payload's size, from
+                    # binary_decode.extract_payloads) overrides the count
                     bytes_in=(sum(len(s["text"] or "") for s in spans)
                               if pd.isna(given) else int(given)),
                     partition_id=pid,

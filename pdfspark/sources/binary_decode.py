@@ -7,11 +7,11 @@ pandas/Arrow batches that decode whole documents — one input row per
 byte payload, one output row per document, decode errors quarantined
 as rows (status='decode_error') instead of killing the stage (F4).
 
-One decode loop, several views: ``decode_docs`` is the only
-mapInPandas over payload bytes; ``decode_payloads`` (spans narrowed to
-SPAN), ``geom_rows`` / ``decode_payloads_geom`` (SPANS_GEOM layout
-rows) and ``fold_input`` (the batch and stream fold input) are
-projections of its row per payload.
+One decode loop, several views: ``_decode_batches`` is the only loop
+over payload bytes. ``decode_docs`` (with its projections
+``decode_payloads``, ``geom_rows`` / ``decode_payloads_geom``) runs it
+alone; ``extract_payloads``, the batch and stream bytes-in extraction,
+runs it and the fold in one mapInPandas task.
 
 Payload formats: real `%PDF` byte streams go through the stdlib mini
 codec (pdfspark.sources.pdf_mini), which since round 5 also tracks
@@ -23,8 +23,8 @@ span payloads. The single seam to swap for pdfminer is
 ``_decode_payload``.
 
 Scale shape: binaryFile splits per file; decode is embarrassingly
-parallel per payload; no shuffle at all until downstream operators
-repartition by doc_id.
+parallel per payload; no shuffle (``extract_payloads`` coalesces the
+scan so one Python task serves many payloads).
 """
 
 from __future__ import annotations
@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pdfspark.config import ExtractConfig
+from pdfspark.operators.extract import EXTRACT_FULL, _fold_batches
 from pdfspark.schema import SPAN, SPANS_GEOM
 
 _GEOM_KEYS = ("page_id", "x0", "y0", "x1", "y1")
@@ -112,17 +114,15 @@ def _decode_payload(content: bytes) -> dict:
     return dict(doc_id=body["doc_id"], spans=spans)
 
 
-def decode_docs(bin_df: DataFrame, decoder=None) -> DataFrame:
-    """THE decode stage: binaryFile rows -> one DECODED row per payload
-    (doc_id, status, spans with page_id + x0..y1, bytes_len,
-    geom_digest). ``decoder`` overrides the payload decoder (bytes ->
-    dict(doc_id, spans)) — the pluggable seam for a real PDF library.
+def _decode_batches(decode):
+    """The decode kernel: binaryFile batches -> one DECODED row per
+    payload (doc_id, status, spans with page_id + x0..y1, bytes_len,
+    geom_digest); ``decode`` maps bytes -> dict(doc_id, spans).
 
     The span projection sits inside the try: a decoder returning a
     malformed span dict (missing key) quarantines its payload as
     status='decode_error' instead of killing the Spark task. A PDF
     without an Info /Title falls back to the filename stem as doc_id."""
-    decode = decoder or _decode_payload
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -148,7 +148,42 @@ def decode_docs(bin_df: DataFrame, decoder=None) -> DataFrame:
                                      geom_digest=""))
             yield pd.DataFrame(rows, columns=[f.name for f in DECODED.fields])
 
-    return bin_df.select("path", "length", "content").mapInPandas(run, DECODED)
+    return run
+
+
+def decode_docs(bin_df: DataFrame, decoder=None) -> DataFrame:
+    """THE decode stage: binaryFile rows -> one DECODED row per payload
+    (see _decode_batches). ``decoder`` overrides the payload decoder —
+    the pluggable seam for a real PDF library."""
+    return bin_df.select("path", "length", "content").mapInPandas(
+        _decode_batches(decoder or _decode_payload), DECODED)
+
+
+def extract_payloads(bin_df: DataFrame,
+                     cfg: ExtractConfig = ExtractConfig()) -> DataFrame:
+    """binaryFile rows -> EXTRACT_FULL rows, one per payload, in ONE
+    Python stage: the decode kernel feeds the fold kernel
+    (operators/extract.py) in the same task, over the scan coalesced
+    (narrow) to the default parallelism. A payload that failed decode
+    folds the DecodeError marker span (status='quarantined') with its
+    size as lineage bytes_in; decoded payloads get NULL (the fold
+    counts their span text). Header and footer are empty: the job's
+    config (broken_hf_strip) never reads them."""
+    decode, fold = _decode_batches(_decode_payload), _fold_batches(cfg)
+    marker = [dict(kind="DecodeError", text="corrupt payload",
+                   media_ref=None, offset=0)]
+
+    def fold_rows(decoded: Iterator[pd.DataFrame]):
+        for pdf in decoded:
+            ok = pdf["status"] == "ok"
+            yield pdf.assign(
+                spans=[s if good else marker
+                       for s, good in zip(pdf["spans"], ok)],
+                bytes_in=pdf["bytes_len"].where(~ok), header="", footer="")
+
+    n = bin_df.sparkSession.sparkContext.defaultParallelism
+    return bin_df.select("path", "length", "content").coalesce(n).mapInPandas(
+        lambda it: fold(fold_rows(decode(it))), EXTRACT_FULL)
 
 
 def _narrow(decoded: DataFrame) -> DataFrame:
@@ -190,25 +225,3 @@ def decode_payloads_geom(bin_df: DataFrame, decoder=None) -> DataFrame:
     payloads have no rows here; decode_payloads is the status-bearing
     view of the same decode."""
     return geom_rows(decode_docs(bin_df, decoder))
-
-
-def fold_input(decoded: DataFrame) -> DataFrame:
-    """decode_docs rows -> the fold's input (doc_id, spans, bytes_in),
-    one row per payload, for the batch and stream bytes-in modes
-    alike. A payload that failed decode gets the DecodeError marker
-    span, so the fold lands it in the F4 quarantine state
-    (status='quarantined'), and its lineage bytes_in is the payload
-    size (NULL for decoded payloads: the fold counts their span
-    text). A projection only — no exchange above the decode."""
-    ok = F.col("status") == "ok"
-    marker = F.struct(
-        F.lit("DecodeError").alias("kind"),
-        F.lit("corrupt payload").alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(0).alias("offset"),
-    )
-    return _narrow(decoded).select(
-        "doc_id",
-        F.when(ok, F.col("spans")).otherwise(F.array(marker)).alias("spans"),
-        F.when(~ok, F.col("bytes_len")).alias("bytes_in"),
-    )

@@ -1,8 +1,8 @@
 """Streaming extraction ingest (north-rule resumability, streaming
 form): payload files arriving in a directory are decoded and folded
-continuously — binaryFile file-source stream -> Arrow decode
-(quarantine on corrupt bytes) -> salted exact fold -> append parquet
-sink with a checkpoint.
+continuously — binaryFile file-source stream -> one Arrow stage that
+decodes (quarantine on corrupt bytes) and exactly folds each payload
+-> append parquet sink with a checkpoint.
 
 The file source's checkpoint gives exactly-once per input FILE: a
 restart (same checkpoint dir) skips every payload already committed
@@ -11,11 +11,9 @@ jobs/extract_job.py's snapshot-resume anti-join, and what a
 continuously-fed 100 TB ingest actually runs (`availableNow` drains
 the backlog and stops; drop the trigger for continuous micro-batches).
 
-All the heavy lifting reuses the batch operators: decode_docs and
-fold_input (sources/binary_decode.py) — the same single decode stage
-and fold input `extract_job --payloads` commits, so a corrupt payload
-is one status='quarantined' row in both modes — and the _fold_batches
-mapInPandas fold (operators/extract.py) run unchanged on each
+All the heavy lifting is `extract_job --payloads`' own decode-and-fold
+stage (sources/binary_decode.py extract_payloads, so a corrupt payload
+is one status='quarantined' row in both modes), run unchanged on each
 micro-batch inside foreachBatch. No stateful operator is involved
 (each document folds independently), so there is no watermark and no
 state store to size.
@@ -27,8 +25,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from pdfspark.config import ExtractConfig
-from pdfspark.operators.extract import _fold_salted, _with_hf, lineage_table
-from pdfspark.sources.binary_decode import decode_docs, fold_input
+from pdfspark.operators.extract import lineage_table
+from pdfspark.sources.binary_decode import extract_payloads
 
 
 def extract_payload_stream(
@@ -99,15 +97,11 @@ def extract_payload_stream(
     # via the source checkpoint) — dedupe by doc_id downstream or let
     # the batch job's resume anti-join reconcile.
     #
-    # Decode + fold run INSIDE foreachBatch, on the raw binary batch.
-    # fold_input gives each payload its own row (two payloads declaring
-    # one doc_id fold to two rows — dedupe by doc_id downstream) and a
-    # quarantined payload its payload size as lineage bytes_in. The
-    # stream has no geometry side input: _with_hf(df, None) is the
-    # batch fold's own empty-header/footer defaulting seam.
+    # Decode + fold run INSIDE foreachBatch, on the raw binary batch:
+    # each payload folds to its own row (two payloads declaring one
+    # doc_id fold to two rows — dedupe by doc_id downstream).
     def sink(batch_df, epoch_id: int) -> None:
-        folded = _fold_salted(
-            _with_hf(fold_input(decode_docs(batch_df)), None), cfg)
+        folded = extract_payloads(batch_df, cfg)
         write_metrics = metrics_path is not None
         if write_metrics:
             folded.persist()

@@ -133,32 +133,37 @@ def test_job_big_doc_folds_with_lineage(spark, job_paths, tmp_path):
 
 def test_job_routes_call_wrapped_names(spark, job_paths, fixture_dir,
                                        tmp_path, monkeypatch):
-    """The job must look extract_documents up on the extract module at
-    call time: the traced benchmark (perfbench/layers.py) wraps it by
-    name for its fold-route attribution. Both batch modes fold every
-    doc through it, with no skew probe or split route."""
+    """The job must look its fold entry points up on their modules at
+    call time: the traced benchmark (perfbench/layers.py) wraps
+    extract_documents by name for its fold-route attribution. --input
+    folds every doc through extract_documents and --payloads through
+    binary_decode.extract_payloads, with no skew probe or split route."""
     import pdfspark.operators.extract as X
+    import pdfspark.sources.binary_decode as B
 
     calls = []
 
-    def counting(name):
-        fn = getattr(X, name)
+    def counting(mod, name):
+        fn = getattr(mod, name)
 
         def wrapper(*a, **kw):
             calls.append(name)
             return fn(*a, **kw)
 
-        monkeypatch.setattr(X, name, wrapper)
+        monkeypatch.setattr(mod, name, wrapper)
 
     for name in ("extract_documents", "_max_span_count",
                  "extract_documents_split"):
-        counting(name)
-    for mode, src in (("--input", job_paths["input"]),
-                      ("--payloads", os.path.join(fixture_dir, "payloads"))):
+        counting(X, name)
+    counting(B, "extract_payloads")
+    for mode, src, want in (
+            ("--input", job_paths["input"], "extract_documents"),
+            ("--payloads", os.path.join(fixture_dir, "payloads"),
+             "extract_payloads")):
         del calls[:]
         assert main([mode, src, "--output",
                      str(tmp_path / mode.strip("-"))]) == 0
-        assert calls == ["extract_documents"], mode
+        assert calls == [want], mode
 
 
 def test_job_crash_between_data_and_metrics_manifest_heals(
@@ -423,12 +428,12 @@ def test_gc_orphans_reclaims_crash_debris(spark, job_paths, tmp_path):
 
 def test_job_payloads_bytes_in_extraction_out(spark, tmp_path):
     """--payloads mode: raw %PDF byte files in, committed extraction
-    snapshots out — no pre-decoded table anywhere. Header/footer
-    derive from the decoded geometry; span sequences must equal
-    decode_tiny_pdf + the sequential fold run by hand. A corrupt
-    payload is one quarantined row; --stream-payloads over the same
-    directory commits the same rows, lineage counts every file in both
-    modes, and a --resume rerun commits nothing new."""
+    snapshots out — no pre-decoded table anywhere. Span sequences
+    must equal decode_tiny_pdf + the sequential fold run by hand. A
+    corrupt payload is one quarantined row; --stream-payloads over the
+    same directory commits the same rows, lineage counts every file in
+    both modes, a --resume rerun commits no rows and no lineage, and
+    --geom is rejected."""
     import collections
     import os as _os
 
@@ -498,6 +503,80 @@ def test_job_payloads_bytes_in_extraction_out(spark, tmp_path):
                "--resume"])
     assert rc == 0
     assert _read_out(spark, out).count() == len(rows)
+    # the skipped docs append no lineage either
+    assert _read_out(spark, met).groupBy().sum(
+        "doc_count").first()[0] == len(payloads) + 1
+
+    # the job never reads --geom in bytes-in mode: a usage error, not a
+    # silent no-op
+    with pytest.raises(SystemExit) as exc:
+        main(["--payloads", pdir, "--geom", pdir,
+              "--output", str(tmp_path / "g")])
+    assert exc.value.code == 2
+
+
+def test_extract_payloads_matches_the_kernels(spark, tmp_path):
+    """extract_payloads (decode and fold in one Python stage) against
+    the Spark-free kernels: every decoded payload's fold row equals
+    fold_document over its narrowed decode run by hand, and a corrupt
+    payload is one quarantined row whose lineage bytes_in is its file
+    size."""
+    import json
+    import os as _os
+
+    from pdfspark.config import ExtractConfig
+    from pdfspark.fold import fold_document
+    from pdfspark.operators.extract import lineage_table
+    from pdfspark.sources.binary_decode import (
+        _decode_payload,
+        extract_payloads,
+        read_payloads,
+    )
+    from pdfspark.sources.pdf_mini import build_layout_pdf, build_tiny_pdf
+
+    pdir = str(tmp_path / "payloads")
+    _os.makedirs(pdir)
+    payloads = {
+        "pdf-k1": build_tiny_pdf(
+            "pdf-k1", [["1. Intro", "Body text."], ["2. More", "Tail."]]),
+        "pdf-k2": build_layout_pdf(
+            "pdf-k2", [[("Table 1 Results", 72, 720),
+                        ("a", 72, 700), ("b", 200, 700)]]),
+    }
+    for i in range(3):
+        payloads[f"json-k{i}"] = json.dumps(dict(
+            doc_id=f"json-k{i}",
+            spans=[dict(kind="TextBox", text=f"{i + 1}. Heading",
+                        media_ref=None, offset=0),
+                   dict(kind="TextBox", text="Some body.",
+                        media_ref=None, offset=1)])).encode("utf-8")
+    for name, data in payloads.items():
+        with open(_os.path.join(pdir, f"{name}.bin"), "wb") as fh:
+            fh.write(data)
+    corrupt = b"%PDF-1.4\nnot really\n"
+    with open(_os.path.join(pdir, "broken.bin"), "wb") as fh:
+        fh.write(corrupt)
+
+    full = extract_payloads(read_payloads(spark, pdir))
+    rows = {r.doc_id: r for r in full.collect()}
+    assert len(rows) == len(payloads) + 1
+    cfg = ExtractConfig()
+    for doc_id, raw in payloads.items():
+        res = fold_document(
+            [dict(kind=s["kind"], text=s["text"],
+                  media_ref=s["media_ref"], offset=s["offset"])
+             for s in _decode_payload(raw)["spans"]], "", "", cfg)
+        r = rows[doc_id]
+        assert r.status == res["status"], doc_id
+        assert [s.asDict() for s in r.spans] == res["out_spans"], doc_id
+        assert ([s.asDict() for s in r.sections]
+                == res["sections"]), doc_id
+        assert (r.spans_in, r.spans_out) == (
+            res["spans_in"], res["spans_out"]), doc_id
+    bad = rows["broken"]
+    assert (bad.status, bad.bytes_in) == ("quarantined", len(corrupt))
+    assert lineage_table(full).groupBy().sum(
+        "doc_count").first()[0] == len(payloads) + 1
 
 
 def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):

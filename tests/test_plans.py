@@ -162,26 +162,27 @@ def test_exchange_counts_bounded(plans):
     assert not unknown, f"new queries missing an exchange ceiling: {unknown}"
 
 
-def test_bytes_in_fold_input_is_the_decode_row(spark):
-    """The frame batch --payloads and the stream hand to the fold is
-    the decode stage's row per payload as it stands: no Exchange and
-    exactly one Python map above the binaryFile scan, so a regroup
-    shuffle between decode and fold cannot come back unnoticed."""
+def test_bytes_in_is_one_python_stage(spark):
+    """Batch --payloads and the stream decode and fold each payload in
+    one Python stage: no Exchange and exactly one MapInPandas above the
+    binaryFile scan, coalesced (narrow) to at most the default
+    parallelism, one row per payload file."""
     import glob
 
     from pdfspark.sources.binary_decode import (
-        decode_docs,
-        fold_input,
+        extract_payloads,
         read_payloads,
     )
     from tools.explain_audit import plan_summary
 
     src = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "fixtures", "*", "payloads")
-    df = fold_input(decode_docs(read_payloads(spark, src)))
+    df = extract_payloads(read_payloads(spark, src))
     plan = df._jdf.queryExecution().executedPlan().toString()
     s = plan_summary(plan)
     assert (s["exch"], s["pyarrow"]) == (0, 1), plan
     assert "EvalPython" not in plan and "MapInArrow" not in plan, plan
     assert plan.index("MapInPandas") < plan.index("binaryFile"), plan
+    assert (df.rdd.getNumPartitions()
+            <= spark.sparkContext.defaultParallelism)
     assert df.count() == len(glob.glob(os.path.join(src, "*")))
