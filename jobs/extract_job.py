@@ -40,6 +40,11 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
    snapshots only, so a crash mid-write can neither duplicate nor lose
    documents (exactly-once per doc_id) — swap the sink module for
    format("iceberg") on a cluster with the runtime catalog configured
+ - data files are sized by the data, not by the fold's task count:
+   the commit rebalances the output rows (per bucket under --buckets)
+   and AQE packs them toward spark.sql.adaptive.advisoryPartitionSizeInBytes,
+   so a small append writes one file (one per bucket= directory)
+   and a large one writes files of about the advisory size
 """
 
 from __future__ import annotations
@@ -93,10 +98,9 @@ def _run_html_mode(spark, args) -> int:
     """--html: directory of .html pages -> main-content block rows
     (boilerplate strip + DOM heuristics), with the SAME snapshot
     commit, --resume exactly-once, crash-reconcile and lineage
-    machinery as the span fold. The op is narrow (one binaryFile scan
-    -> mapInPandas), so block rows inherit the scan's partitions and
-    the lineage partition ids line up between the page and block
-    aggregations without any extra exchange."""
+    machinery as the span fold. Lineage rows are keyed by the page
+    scan's partition ids; each page's committed rows (its blocks, or
+    its zero-block sentinel) count under its own page's id."""
     from pyspark.sql import functions as F
 
     from pdfspark.operators.html_main import main_content_blocks
@@ -166,18 +170,21 @@ def _run_html_mode(spark, args) -> int:
     n_blocks = blocks.count()
     aux = None
     if args.metrics:
-        pm = pages.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(
-            F.count("*").cast("long").alias("doc_count"),
-            F.sum("bytes_in").cast("long").alias("bytes_in"),
-        )
-        bm = blocks.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(F.count("*").cast("long").alias("spans_out"))
+        # count each page's committed rows (blocks or its sentinel)
+        # under THAT page's partition id: the sentinel rows come out of
+        # a join, so their own partition ids name no page partition
+        per_page = blocks.groupBy("doc_id").agg(
+            F.count("*").cast("long").alias("spans_out"))
         metrics = (
-            pm.join(bm, "partition_id", "left")
-            .na.fill({"spans_out": 0})
+            pages.select("doc_id", "bytes_in",
+                         F.spark_partition_id().alias("partition_id"))
+            .join(per_page, "doc_id", "left")
+            .groupBy("partition_id")
+            .agg(
+                F.count("*").cast("long").alias("doc_count"),
+                F.sum("bytes_in").cast("long").alias("bytes_in"),
+                F.sum("spans_out").cast("long").alias("spans_out"),
+            )
             .withColumn("wall_ms", F.lit(None).cast("double"))
         )
         aux = [(metrics, args.metrics)]

@@ -38,6 +38,19 @@ must only ever be read via ``read_committed`` — a plain
 ``spark.read.parquet(output)`` would double-count orphans (and, under
 the rename protocol, read uncommitted data).
 
+File sizing: ``commit_append`` rebalances the data frame before its
+write (Spark's ``REBALANCE`` hint, by the partition column when there
+is one), the analogue of Iceberg's write distribution mode. AQE then
+packs the shuffle's slivers into partitions of about
+``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (bounded below by
+``coalescePartitions.minPartitionSize``) and splits oversized ones, so
+one append writes files sized by its bytes — one file for a small
+commit, one per ``bucket=`` directory for a small bucketed commit —
+rather than one per upstream task. Two writes are not rebalanced: the
+lineage aux frames come out of a ``groupBy`` that already yields one
+file, so a rebalance would only add a stage; and compaction asks for
+an explicit file count (``coalesce(n_files)``), which it keeps.
+
 On a real cluster, swap this module for ``format("iceberg")`` with a
 catalog — the job's call sites are the only coupling.
 """
@@ -175,6 +188,11 @@ def commit_append(
     ``protocol`` — "rename" (default) or "manifest-only" (see module
     docstring; pick the latter for stores without atomic rename).
 
+    ``df`` is rebalanced before the write (by ``partition_by`` when
+    set), so its data files take their size from the AQE advisory
+    partition size, not from ``df``'s partitioning; the ``aux`` frames
+    are written as they come (see the module docstring).
+
     ``aux`` — side tables (e.g. the lineage metrics) committed under
     the SAME snapshot id, analogous to an Iceberg multi-table commit.
     Ordering closes every crash window:
@@ -216,7 +234,9 @@ def commit_append(
             # re-appending would double them.
             return snap_id
     snap = snap_id or f"snap-{time.time_ns()}-{uuid.uuid4().hex[:8]}"
-    files = _stage_snapshot(df, output, snap, fmt, partition_by,
+    rebalanced = (df.hint("rebalance", partition_by) if partition_by
+                  else df.hint("rebalance"))
+    files = _stage_snapshot(rebalanced, output, snap, fmt, partition_by,
                             rename=rename)
     if files is None:
         return None

@@ -63,9 +63,11 @@ def extract_payload_stream(
     appending twice (the idempotent-foreachBatch pattern). Lineage
     commits as an aux table under the same id; a crash between the two
     publishes is healed by reconcile_aux at the next start. Read the
-    table via read_committed (never plain spark.read.parquet), and run
-    ``extract_job --compact`` periodically — per-micro-batch snapshots
-    are exactly the small-files debt compaction exists for. Output and
+    table via read_committed (never plain spark.read.parquet). Each
+    epoch's commit writes files sized by the AQE advisory partition
+    size (one file for a small epoch), not one per task, but every
+    epoch is still its own snapshot and manifest: run ``extract_job
+    --compact`` periodically to bound their count. Output and
     checkpoint must be wiped together (the contract the file-source
     checkpoint already imposes)."""
     reader = (

@@ -579,6 +579,70 @@ def test_extract_payloads_matches_the_kernels(spark, tmp_path):
         "doc_count").first()[0] == len(payloads) + 1
 
 
+def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
+    """Appends write files sized by the data, not one per fold task:
+    the fixture payloads through --payloads and through one
+    --stream-payloads epoch each commit exactly one data file and one
+    lineage file per snapshot, holding the rows extract_payloads
+    yields; --input --buckets 4 commits at most one data file per
+    bucket= directory, and --compact keeps that layout."""
+    import collections
+
+    from pyspark.sql import functions as F
+
+    from pdfspark.sinks.snapshot import _list_data_files, detect_partition_col
+    from pdfspark.sources.binary_decode import extract_payloads, read_payloads
+
+    def snapshot_files(table):
+        return [_list_data_files(os.path.join(table, s), table)
+                for s in committed_snapshots(table)]
+
+    def multiset(rows):
+        return collections.Counter(
+            (r.doc_id, r.status, tuple(tuple(s) for s in r.spans))
+            for r in rows)
+
+    pdir = os.path.join(fixture_dir, "payloads")
+    want = multiset(extract_payloads(read_payloads(spark, pdir)).collect())
+    for mode, argv in (
+            ("payloads", ["--payloads", pdir]),
+            ("stream", ["--stream-payloads", pdir,
+                        "--checkpoint", str(tmp_path / "ck")])):
+        out, met = str(tmp_path / f"{mode}_out"), str(tmp_path / f"{mode}_met")
+        assert main(argv + ["--output", out, "--metrics", met]) == 0
+        for table in (out, met):
+            files = snapshot_files(table)
+            assert [len(f) for f in files] == [1], (mode, table, files)
+        assert multiset(_read_out(spark, out).collect()) == want, mode
+
+    def files_per_bucket(table):
+        counts = collections.Counter()
+        for files in snapshot_files(table):
+            for f in files:
+                (bucket,) = [p for p in f.split(os.sep)
+                             if p.startswith("bucket=")]
+                counts[(f.split(os.sep)[0], bucket)] += 1
+        return counts
+
+    docs = spark.read.parquet(os.path.join(fixture_dir,
+                                           "documents_in.parquet"))
+    out = str(tmp_path / "bucketed")
+    for half in range(2):
+        p = str(tmp_path / f"half{half}")
+        docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == half) \
+            .write.parquet(p)
+        assert main(["--input", p, "--output", out, "--buckets", "4"]) == 0
+    assert len(committed_snapshots(out)) == 2
+    assert max(files_per_bucket(out).values()) == 1
+    assert detect_partition_col(out) == "bucket"
+
+    assert main(["--compact", "--output", out]) == 0
+    assert len(committed_snapshots(out)) == 1
+    assert detect_partition_col(out) == "bucket"
+    assert max(files_per_bucket(out).values()) == 1
+    assert _read_out(spark, out).count() == docs.count()
+
+
 def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):
     """--html mode: a directory of .html pages in, snapshot-committed
     classified block rows out, doc_id = filename stem. Block verdicts
@@ -675,8 +739,12 @@ def test_job_html_mode_quarantine_and_zero_block_resume(spark, tmp_path):
             == (-1, "_empty", 0, False)
     assert all(r.bucket is not None for r in rows)
 
-    m1_docs = sum(r.doc_count for r in _read_out(spark, met).collect())
+    m1 = _read_out(spark, met).collect()
+    m1_docs = sum(r.doc_count for r in m1)
     assert m1_docs == 3
+    # lineage counts every committed row, the sentinels included: a
+    # sentinel counts under its own page's partition id
+    assert sum(r.spans_out for r in m1) == len(rows)
 
     # resume with nothing new: no re-scan, no metrics double count
     rc = main(["--html", hdir, "--output", out, "--metrics", met,
@@ -727,8 +795,9 @@ def test_manifest_torn_write_guard_and_tmp_gc(spark, job_paths, tmp_path):
 def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path,
                                                       protocol):
     """Compaction (the rewrite_data_files analogue): N append
-    snapshots collapse into one snapshot / n_files files, rows and
-    values bit-identical, inputs reclaimed, later appends untouched."""
+    snapshots collapse into one snapshot of exactly n_files files (the
+    append path's rebalance must not resize it), rows and values
+    bit-identical, inputs reclaimed, later appends untouched."""
     import glob
 
     from pdfspark.sinks.snapshot import (
@@ -738,23 +807,28 @@ def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path,
         read_committed,
     )
 
-    out = str(tmp_path / "tbl")
-    for i in range(4):
-        commit_append(
-            spark.createDataFrame([(f"d{i}{j}", i * 10 + j)
-                                   for j in range(5)], "doc_id string, v int"),
-            out, protocol=protocol)
-    before = sorted(read_committed(spark, out).collect())
-    assert len(committed_snapshots(out)) == 4
-    n_files_before = len(glob.glob(f"{out}/**/*.parquet", recursive=True))
+    for n_files in (1, 2):
+        out = str(tmp_path / f"tbl{n_files}")
+        for i in range(4):
+            commit_append(
+                spark.createDataFrame([(f"d{i}{j}", i * 10 + j)
+                                       for j in range(5)],
+                                      "doc_id string, v int"),
+                out, protocol=protocol)
+        before = sorted(read_committed(spark, out).collect())
+        assert len(committed_snapshots(out)) == 4
+        n_files_before = len(glob.glob(f"{out}/**/*.parquet",
+                                       recursive=True))
 
-    snap = compact_snapshots(spark, out, n_files=1, protocol=protocol)
-    assert snap is not None
-    assert committed_snapshots(out) == [snap]
-    assert sorted(read_committed(spark, out).collect()) == before
-    n_files_after = len(glob.glob(f"{out}/**/*.parquet", recursive=True))
-    assert n_files_after < n_files_before
-    assert n_files_after <= 2  # 1 data file (+possible _SUCCESS exclusion)
+        snap = compact_snapshots(spark, out, n_files=n_files,
+                                 protocol=protocol)
+        assert snap is not None
+        assert committed_snapshots(out) == [snap]
+        assert sorted(read_committed(spark, out).collect()) == before
+        n_files_after = len(glob.glob(f"{out}/**/*.parquet",
+                                      recursive=True))
+        assert n_files_after < n_files_before
+        assert n_files_after == n_files, n_files
 
     # idempotent: a second run finds < min_snapshots inputs
     assert compact_snapshots(spark, out, protocol=protocol) is None
