@@ -42,9 +42,12 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
    format("iceberg") on a cluster with the runtime catalog configured
  - data files are sized by the data, not by the fold's task count:
    the commit rebalances the output rows (per bucket under --buckets)
-   and AQE packs them toward spark.sql.adaptive.advisoryPartitionSizeInBytes,
-   so a small append writes one file (one per bucket= directory)
-   and a large one writes files of about the advisory size
+   and AQE coalesces them to files of max(minPartitionSize,
+   min(advisoryPartitionSizeInBytes, commit bytes / defaultParallelism)),
+   so a small append writes one file (one per bucket= directory), a
+   mid-sized flat append about one per core (the fold's own count),
+   and only an append above defaultParallelism x the advisory size
+   writes files of about the advisory size
 """
 
 from __future__ import annotations

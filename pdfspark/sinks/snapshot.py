@@ -41,12 +41,23 @@ the rename protocol, read uncommitted data).
 File sizing: ``commit_append`` rebalances the data frame before its
 write (Spark's ``REBALANCE`` hint, by the partition column when there
 is one), the analogue of Iceberg's write distribution mode. AQE then
-packs the shuffle's slivers into partitions of about
-``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (bounded below by
-``coalescePartitions.minPartitionSize``) and splits oversized ones, so
-one append writes files sized by its bytes — one file for a small
-commit, one per ``bucket=`` directory for a small bucketed commit —
-rather than one per upstream task. Two writes are not rebalanced: the
+coalesces the shuffle into partitions of a target size of
+max(``coalescePartitions.minPartitionSize``,
+min(``advisoryPartitionSizeInBytes``, commit bytes / defaultParallelism))
+— the session keeps Spark's default
+``coalescePartitions.parallelismFirst=true``, which holds one partition
+per core while the data allows it — and splits partitions over the
+advisory size. "Commit bytes" is the rebalance's shuffle size. So an
+unpartitioned append writes one file below ``minPartitionSize``
+(1 MB), about one per ``minPartitionSize`` up to defaultParallelism x
+``minPartitionSize``, about one per core from there up to
+defaultParallelism x the advisory size (64 MB) — as many as the fold's
+own tasks give, so there the rebalance saves no file and only costs
+its shuffle — and files of about the advisory size above that. A
+``--buckets`` append hashes each bucket to one partition, so it writes
+one file per ``bucket=`` directory until a bucket passes the advisory
+size, against up to one per fold task per directory without the
+rebalance. Two writes are not rebalanced: the
 lineage aux frames come out of a ``groupBy`` that already yields one
 file, so a rebalance would only add a stage; and compaction asks for
 an explicit file count (``coalesce(n_files)``), which it keeps.
@@ -189,9 +200,14 @@ def commit_append(
     docstring; pick the latter for stores without atomic rename).
 
     ``df`` is rebalanced before the write (by ``partition_by`` when
-    set), so its data files take their size from the AQE advisory
-    partition size, not from ``df``'s partitioning; the ``aux`` frames
-    are written as they come (see the module docstring).
+    set), so its data files take their size from AQE's coalesce
+    target, max(minPartitionSize, min(advisory size, commit bytes /
+    defaultParallelism)), not from ``df``'s partitioning: a small
+    commit writes one file (one per partition directory), a mid-sized
+    unpartitioned one about one per core, and only a commit above
+    defaultParallelism x the advisory size writes advisory-sized
+    files. The ``aux`` frames are written as they come (see the module
+    docstring).
 
     ``aux`` — side tables (e.g. the lineage metrics) committed under
     the SAME snapshot id, analogous to an Iceberg multi-table commit.

@@ -64,8 +64,9 @@ def extract_payload_stream(
     commits as an aux table under the same id; a crash between the two
     publishes is healed by reconcile_aux at the next start. Read the
     table via read_committed (never plain spark.read.parquet). Each
-    epoch's commit writes files sized by the AQE advisory partition
-    size (one file for a small epoch), not one per task, but every
+    epoch's commit rebalances its rows, so a small epoch writes one
+    file rather than one per task (commit_append gives the sizing
+    rule; a large epoch still writes about one per core), but every
     epoch is still its own snapshot and manifest: run ``extract_job
     --compact`` periodically to bound their count. Output and
     checkpoint must be wiped together (the contract the file-source
