@@ -48,6 +48,7 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
    mid-sized flat append about one per core (the fold's own count),
    and only an append above defaultParallelism x the advisory size
    writes files of about the advisory size
+ - every committed parquet file is zstd, Iceberg's default codec
 """
 
 from __future__ import annotations
@@ -170,7 +171,6 @@ def _run_html_mode(spark, args) -> int:
     blocks = blocks.unionByName(
         sentinel.select(*[f.name for f in blocks.schema.fields])
     ).persist()
-    n_blocks = blocks.count()
     aux = None
     if args.metrics:
         # count each page's committed rows (blocks or its sentinel)
@@ -197,15 +197,15 @@ def _run_html_mode(spark, args) -> int:
         blocks_out = blocks.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(args.buckets))
         )
-        commit_append(blocks_out, args.output, fmt=args.format,
-                      partition_by="bucket", aux=aux,
-                      protocol=args.commit_protocol)
+        snap = commit_append(blocks_out, args.output, fmt=args.format,
+                             partition_by="bucket", aux=aux,
+                             protocol=args.commit_protocol)
     else:
-        commit_append(blocks, args.output, fmt=args.format, aux=aux,
-                      protocol=args.commit_protocol)
+        snap = commit_append(blocks, args.output, fmt=args.format,
+                             aux=aux, protocol=args.commit_protocol)
     pages.unpersist()
     blocks.unpersist()
-    print(f"extract_job: wrote {n_blocks} blocks to {args.output}")
+    print(f"extract_job: wrote snapshot {snap} to {args.output}")
     return 0
 
 
@@ -392,24 +392,23 @@ def main(argv=None) -> int:
 
     from pdfspark.sinks.snapshot import commit_append
 
-    # persist once: spans + sections feed the output, the same pass
-    # feeds the metrics aggregation (no second fold)
+    # persist once: the data write materialises the fold, and the
+    # metrics aggregation reads the cache (no second fold)
     full.persist()
-    n = full.count()
     out = full.select("doc_id", "status", "spans", "sections")
     aux = [(lineage_table(full), args.metrics)] if args.metrics else None
     if args.buckets > 0:
         out = out.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(args.buckets))
         )
-        commit_append(out, args.output, fmt=args.format,
-                      partition_by="bucket", aux=aux,
-                      protocol=args.commit_protocol)
+        snap = commit_append(out, args.output, fmt=args.format,
+                             partition_by="bucket", aux=aux,
+                             protocol=args.commit_protocol)
     else:
-        commit_append(out, args.output, fmt=args.format, aux=aux,
-                      protocol=args.commit_protocol)
+        snap = commit_append(out, args.output, fmt=args.format, aux=aux,
+                             protocol=args.commit_protocol)
     full.unpersist()
-    print(f"extract_job: wrote {n} documents to {args.output}")
+    print(f"extract_job: wrote snapshot {snap} to {args.output}")
     return 0
 
 

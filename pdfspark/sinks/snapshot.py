@@ -62,6 +62,19 @@ lineage aux frames come out of a ``groupBy`` that already yields one
 file, so a rebalance would only add a stage; and compaction asks for
 an explicit file count (``coalesce(n_files)``), which it keeps.
 
+Codec: every parquet file the sink writes — data, aux and compaction
+output — is zstd (``PARQUET_CODEC``), Iceberg's default
+``write.parquet.compression-codec`` since 1.4, in place of Spark's
+snappy. It is a constant of the sink, like the manifest layout, with
+no option to change it; ``fmt="json"`` data is written as Spark writes
+it. Readers need no setting: parquet records the codec per column
+chunk, so a table that mixes snappy snapshots committed before this
+codec with zstd ones reads as one, and ``compact_snapshots`` rewrites
+the old ones to zstd. The saving is in the data pages (the text
+columns shrink by about 30%); the parquet footer is not compressed,
+so a small commit of a few KB gains little, and a 1.7 KB lineage
+file grows by about 50-70 bytes.
+
 On a real cluster, swap this module for ``format("iceberg")`` with a
 catalog — the job's call sites are the only coupling.
 """
@@ -77,6 +90,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_DIR = "_manifests"
 STAGING_DIR = "_staging"
+# every parquet file a commit or compaction writes (module docstring)
+PARQUET_CODEC = "zstd"
 
 
 def _publish(output: str, snap: str, files: list[str] | None = None,
@@ -164,6 +179,8 @@ def _stage_snapshot(
     be read back."""
     staging = os.path.join(output, STAGING_DIR, snap)
     w = df.write.mode("overwrite").format(fmt)
+    if fmt == "parquet":
+        w = w.option("compression", PARQUET_CODEC)
     if partition_by:
         w = w.partitionBy(partition_by)
     w.save(staging)
@@ -207,7 +224,8 @@ def commit_append(
     unpartitioned one about one per core, and only a commit above
     defaultParallelism x the advisory size writes advisory-sized
     files. The ``aux`` frames are written as they come (see the module
-    docstring).
+    docstring). Every parquet file of the commit, ``aux`` included, is
+    zstd-compressed (``PARQUET_CODEC``).
 
     ``aux`` — side tables (e.g. the lineage metrics) committed under
     the SAME snapshot id, analogous to an Iceberg multi-table commit.

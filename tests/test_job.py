@@ -21,6 +21,19 @@ def _read_out(spark, output, fmt="parquet"):
     return df
 
 
+def _parquet_codecs(paths):
+    """The set of codecs over every column chunk of ``paths``."""
+    import pyarrow.parquet as pq
+
+    codecs = set()
+    for p in paths:
+        md = pq.ParquetFile(p).metadata
+        codecs.update(md.row_group(g).column(c).compression
+                      for g in range(md.num_row_groups)
+                      for c in range(md.num_columns))
+    return codecs
+
+
 @pytest.fixture(scope="module")
 def job_paths(spark, fixture_dir, tmp_path_factory):
     d = tmp_path_factory.mktemp("extract_job")
@@ -585,7 +598,8 @@ def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
     --stream-payloads epoch each commit exactly one data file and one
     lineage file per snapshot, holding the rows extract_payloads
     yields; --input --buckets 4 commits at most one data file per
-    bucket= directory, and --compact keeps that layout."""
+    bucket= directory, and --compact keeps that layout. Every data and
+    lineage file the commits and the compaction write is zstd."""
     import collections
 
     from pyspark.sql import functions as F
@@ -596,6 +610,11 @@ def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
     def snapshot_files(table):
         return [_list_data_files(os.path.join(table, s), table)
                 for s in committed_snapshots(table)]
+
+    def codecs(table):
+        return _parquet_codecs(os.path.join(table, f)
+                               for files in snapshot_files(table)
+                               for f in files)
 
     def multiset(rows):
         return collections.Counter(
@@ -613,6 +632,7 @@ def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
         for table in (out, met):
             files = snapshot_files(table)
             assert [len(f) for f in files] == [1], (mode, table, files)
+            assert codecs(table) == {"ZSTD"}, (mode, table)
         assert multiset(_read_out(spark, out).collect()) == want, mode
 
     def files_per_bucket(table):
@@ -626,21 +646,24 @@ def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
 
     docs = spark.read.parquet(os.path.join(fixture_dir,
                                            "documents_in.parquet"))
-    out = str(tmp_path / "bucketed")
+    out, met = str(tmp_path / "bucketed"), str(tmp_path / "bucketed_met")
     for half in range(2):
         p = str(tmp_path / f"half{half}")
         docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == half) \
             .write.parquet(p)
-        assert main(["--input", p, "--output", out, "--buckets", "4"]) == 0
+        assert main(["--input", p, "--output", out, "--metrics", met,
+                     "--buckets", "4"]) == 0
     assert len(committed_snapshots(out)) == 2
     assert max(files_per_bucket(out).values()) == 1
     assert detect_partition_col(out) == "bucket"
+    assert codecs(out) == codecs(met) == {"ZSTD"}
 
-    assert main(["--compact", "--output", out]) == 0
-    assert len(committed_snapshots(out)) == 1
+    assert main(["--compact", "--output", out, "--metrics", met]) == 0
+    assert len(committed_snapshots(out)) == len(committed_snapshots(met)) == 1
     assert detect_partition_col(out) == "bucket"
     assert max(files_per_bucket(out).values()) == 1
     assert _read_out(spark, out).count() == docs.count()
+    assert codecs(out) == codecs(met) == {"ZSTD"}
 
 
 def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):
@@ -797,38 +820,58 @@ def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path,
     """Compaction (the rewrite_data_files analogue): N append
     snapshots collapse into one snapshot of exactly n_files files (the
     append path's rebalance must not resize it), rows and values
-    bit-identical, inputs reclaimed, later appends untouched."""
+    bit-identical, inputs reclaimed, later appends untouched. One
+    input is a snappy snapshot, as committed before the sink wrote
+    zstd: the mixed table reads as one, and compaction rewrites it
+    to zstd."""
     import glob
 
     from pdfspark.sinks.snapshot import (
+        STAGING_DIR,
+        _list_data_files,
+        _publish,
         commit_append,
         committed_snapshots,
         compact_snapshots,
         read_committed,
     )
 
+    schema = "doc_id string, v int"
     for n_files in (1, 2):
         out = str(tmp_path / f"tbl{n_files}")
+        rows = []
         for i in range(4):
-            commit_append(
-                spark.createDataFrame([(f"d{i}{j}", i * 10 + j)
-                                       for j in range(5)],
-                                      "doc_id string, v int"),
-                out, protocol=protocol)
+            batch = [(f"d{i}{j}", i * 10 + j) for j in range(5)]
+            rows += batch
+            commit_append(spark.createDataFrame(batch, schema), out,
+                          protocol=protocol)
+        # hand-published in this protocol's layout: rename = a
+        # <snap> dir and a bare manifest, manifest-only = staged files
+        # listed in the manifest
+        old = "snap-0-snappy"
+        rel = old if protocol == "rename" else os.path.join(STAGING_DIR,
+                                                            old)
+        batch = [(f"s{j}", 100 + j) for j in range(5)]
+        rows += batch
+        spark.createDataFrame(batch, schema).write \
+            .option("compression", "snappy").parquet(os.path.join(out, rel))
+        _publish(out, old, [] if protocol == "rename"
+                 else _list_data_files(os.path.join(out, rel), out))
         before = sorted(read_committed(spark, out).collect())
-        assert len(committed_snapshots(out)) == 4
-        n_files_before = len(glob.glob(f"{out}/**/*.parquet",
-                                       recursive=True))
+        assert [tuple(r) for r in before] == sorted(rows)
+        assert len(committed_snapshots(out)) == 5
+        files_before = glob.glob(f"{out}/**/*.parquet", recursive=True)
+        assert _parquet_codecs(files_before) == {"SNAPPY", "ZSTD"}
 
         snap = compact_snapshots(spark, out, n_files=n_files,
                                  protocol=protocol)
         assert snap is not None
         assert committed_snapshots(out) == [snap]
         assert sorted(read_committed(spark, out).collect()) == before
-        n_files_after = len(glob.glob(f"{out}/**/*.parquet",
-                                      recursive=True))
-        assert n_files_after < n_files_before
-        assert n_files_after == n_files, n_files
+        files_after = glob.glob(f"{out}/**/*.parquet", recursive=True)
+        assert len(files_after) < len(files_before)
+        assert len(files_after) == n_files, n_files
+        assert _parquet_codecs(files_after) == {"ZSTD"}
 
     # idempotent: a second run finds < min_snapshots inputs
     assert compact_snapshots(spark, out, protocol=protocol) is None
