@@ -827,13 +827,14 @@ def _q_binary_decode(spark, sf_dir):
 
 def _q_stream_extract(spark, sf_dir):
     """Streaming extraction ingest: binaryFile stream -> decode ->
-    fold -> parquet sink with checkpoint (availableNow drain), read
-    back and exploded. Quarantined payloads surface as a single
+    fold -> snapshot sink with checkpoint (availableNow drain), read
+    back through read_committed and exploded. Quarantined payloads surface as a single
     __quarantined__ row each."""
     import hashlib
     import shutil
     import tempfile
 
+    from pdfspark.sinks.snapshot import read_committed
     from pdfspark.streaming.extract_stream import extract_payload_stream
 
     # per-(sf_dir, pid) scratch location, wiped at entry and removed
@@ -856,7 +857,7 @@ def _q_stream_extract(spark, sf_dir):
     extract_payload_stream(
         spark, os.path.join(_fixture_dir(sf_dir), "payloads"), out, cp
     )
-    df = spark.read.parquet(out)
+    df = read_committed(spark, out)
     ok = df.filter(F.col("status") == "ok").select(
         "doc_id", F.explode("spans").alias("s")
     ).select(

@@ -23,6 +23,17 @@ Usage:
         --html <dir of .html pages> \
         --output <blocks table path> [--metrics ...] [--resume]
 
+    # OR streaming ingest: drain payload files arriving in a directory,
+    # one exactly-once snapshot per micro-batch (checkpointed)
+    spark-submit --py-files pdfspark.zip jobs/extract_job.py \
+        --stream-payloads <arrivals dir> --checkpoint <dir> \
+        --output <extracted spans table path> [--metrics ...]
+
+    # OR maintenance: rewrite --output's (and --metrics') committed
+    # snapshots into one N-file snapshot per table
+    spark-submit --py-files pdfspark.zip jobs/extract_job.py \
+        --compact [N] --output <table path> [--metrics ...]
+
 Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
  - one route for every document, folded into one ordered row in one
    task: --input after a salted repartition on xxhash64(doc_id),
@@ -32,9 +43,10 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
  - per-partition lineage rows (partition_id, doc_count, bytes_in,
    spans_out, wall_ms) committed to --metrics under the
    SAME snapshot id as the data (multi-table commit; a crash between the two
-   manifest publishes is healed by reconcile_aux at the next start,
+   manifest publishes is healed by the sink's recover at the next start,
    so committed documents can never lose their lineage rows)
- - every append is a manifest-committed snapshot
+ - every write — batch append, stream epoch, --compact rewrite — is a
+   manifest-committed snapshot through one protocol
    (pdfspark/sinks/snapshot.py: staging write -> atomic rename ->
    manifest marker); --resume anti-joins against doc_ids in MANIFESTED
    snapshots only, so a crash mid-write can neither duplicate nor lose
@@ -65,29 +77,14 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 
 def _prepare_output(spark, args, frame):
-    """The shared crash-recovery preamble every mode runs before its
-    write: republish metrics manifests a prior run left uncommitted
-    (reconcile_aux), reclaim unmanifested crash debris (gc_orphans),
-    and under --resume anti-join the input against doc_ids in
-    MANIFESTED snapshots only. One copy — the protocol's ordering is
-    load-bearing and must not drift between modes."""
-    from pdfspark.sinks.snapshot import (
-        gc_orphans,
-        read_committed,
-        reconcile_aux,
-    )
+    """The preamble every batch mode runs before its write: the sink's
+    crash recovery (``snapshot.recover``), then under --resume an
+    anti-join of the input against doc_ids in MANIFESTED snapshots
+    only."""
     from pdfspark.operators.extract import resume_filter
+    from pdfspark.sinks.snapshot import read_committed, recover
 
-    if args.metrics:
-        # a prior run may have died between the data commit and the
-        # metrics commit — republish those metrics manifests first
-        reconcile_aux(args.output, [args.metrics])
-    # reclaim unmanifested crash debris (never visible to resume, but
-    # it would otherwise accumulate disk forever); the grace period
-    # protects any concurrent writer's in-flight commit
-    for tgt in [args.output] + ([args.metrics] if args.metrics else []):
-        if os.path.isdir(tgt):
-            gc_orphans(tgt)
+    recover(args.output, [args.metrics])
     if args.resume:
         # only MANIFESTED snapshots count as committed: a crash that
         # left partial data (staging or an unmanifested snapshot dir)
@@ -108,7 +105,6 @@ def _run_html_mode(spark, args) -> int:
     from pyspark.sql import functions as F
 
     from pdfspark.operators.html_main import main_content_blocks
-    from pdfspark.sinks.snapshot import commit_append
 
     pages = (
         spark.read.format("binaryFile")
@@ -191,56 +187,58 @@ def _run_html_mode(spark, args) -> int:
             .withColumn("wall_ms", F.lit(None).cast("double"))
         )
         aux = [(metrics, args.metrics)]
-    if args.buckets > 0:
-        # same bucket transform as the span path — the flag must not
-        # silently no-op in one mode
-        blocks_out = blocks.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(args.buckets))
-        )
-        snap = commit_append(blocks_out, args.output, fmt=args.format,
-                             partition_by="bucket", aux=aux,
-                             protocol=args.commit_protocol)
-    else:
-        snap = commit_append(blocks, args.output, fmt=args.format,
-                             aux=aux, protocol=args.commit_protocol)
+    _commit(args, blocks, aux)
     pages.unpersist()
     blocks.unpersist()
-    print(f"extract_job: wrote snapshot {snap} to {args.output}")
     return 0
 
 
+def _commit(args, out, aux) -> None:
+    """Commit ``out`` (with the ``aux`` lineage frames) as one snapshot
+    of --output, partitioned by pmod(xxhash64(doc_id), N) under
+    --buckets — the one bucket transform of every batch mode, so the
+    flag cannot silently no-op in one of them."""
+    from pyspark.sql import functions as F
+
+    from pdfspark.sinks.snapshot import commit_append
+
+    part = None
+    if args.buckets > 0:
+        out = out.withColumn(
+            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(args.buckets)))
+        part = "bucket"
+    snap = commit_append(out, args.output, fmt=args.format,
+                         partition_by=part, aux=aux)
+    print(f"extract_job: wrote snapshot {snap} to {args.output}")
+
+
 def _run_compact_mode(spark, args) -> int:
-    """--compact: the table-maintenance entry point. Heal any aux
-    commit the last writer left half-done (reconcile_aux), reclaim
-    crash debris (gc_orphans), then rewrite committed snapshots into
-    one ``args.compact``-file snapshot per table — data first, then
-    metrics. Prints one JSON line per table; exit 0 either way
-    (nothing-to-compact is success, like an empty resume)."""
+    """--compact: the table-maintenance entry point. Run the sink's
+    crash recovery (``snapshot.recover``), then rewrite committed
+    snapshots into one ``args.compact``-file snapshot per table —
+    data first, then metrics. Prints one JSON line per table; exit 0
+    either way (nothing-to-compact is success, like an empty
+    resume)."""
     import json
 
     from pdfspark.sinks.snapshot import (
         compact_snapshots,
         detect_partition_col,
-        gc_orphans,
-        reconcile_aux,
+        recover,
     )
 
-    if args.metrics:
-        reconcile_aux(args.output, [args.metrics])
+    recover(args.output, [args.metrics])
     targets = [(args.output, args.format)]
     if args.metrics:
         targets.append((args.metrics, "parquet"))
     for tgt, fmt in targets:
-        if os.path.isdir(tgt):
-            gc_orphans(tgt)
         # the layout is a property of the TABLE, not of this
         # invocation: discover it from the snapshot dirs rather than
         # trusting the operator to re-pass --buckets (omitting it
         # would silently flatten the bucket layout on rewrite)
-        part = detect_partition_col(tgt) if os.path.isdir(tgt) else None
-        snap = compact_snapshots(
-            spark, tgt, fmt=fmt, n_files=args.compact,
-            protocol=args.commit_protocol, partition_by=part)
+        part = detect_partition_col(tgt)
+        snap = compact_snapshots(spark, tgt, fmt=fmt, n_files=args.compact,
+                                 partition_by=part)
         print(json.dumps({"table": tgt, "compacted": snap,
                           "partition_by": part}))
     return 0
@@ -275,14 +273,6 @@ def main(argv=None) -> int:
         help="output format: parquet (Iceberg-append analogue, default) "
              "or json lines (the reference's S9/S10 JSON sinks, "
              "file_util.py:58-146)",
-    )
-    ap.add_argument(
-        "--commit-protocol", choices=("rename", "manifest-only"),
-        default="rename",
-        help="snapshot commit protocol: rename (atomic dir rename, "
-             "default) or manifest-only (no directory rename; the "
-             "manifest lists data files — for object stores like raw "
-             "S3 whose only atomic primitive is a single-object PUT)",
     )
     ap.add_argument(
         "--stream-payloads", default=None, metavar="DIR",
@@ -350,24 +340,19 @@ def main(argv=None) -> int:
         if args.format != "parquet":
             ap.error("--stream-payloads writes parquet snapshots only")
         if args.buckets > 0 or args.resume:
-            # no silent no-ops: bucketed streaming layout is not
-            # plumbed, and resume IS the checkpoint's job here
+            # no silent no-ops: resume IS the checkpoint's job here,
+            # and the stream commits no partition layout
             ap.error("--buckets/--resume do not apply to "
-                     "--stream-payloads (the checkpoint provides "
-                     "resume; bucket the table via --compact + "
-                     "sinks/bucketed instead)")
+                     "--stream-payloads: the checkpoint provides "
+                     "resume, and stream tables are unpartitioned")
         from pdfspark.streaming.extract_stream import extract_payload_stream
 
         extract_payload_stream(
             spark, args.stream_payloads, args.output, args.checkpoint,
             max_files_per_trigger=args.max_files_per_trigger,
             metrics_path=args.metrics,
-            snapshot_output=True,
-            commit_protocol=args.commit_protocol,
         )
         return 0
-
-    from pyspark.sql import functions as F
 
     if args.html:
         return _run_html_mode(spark, args)
@@ -390,25 +375,12 @@ def main(argv=None) -> int:
             _prepare_output(spark, args, spark.read.parquet(args.input)),
             hf)
 
-    from pdfspark.sinks.snapshot import commit_append
-
     # persist once: the data write materialises the fold, and the
     # metrics aggregation reads the cache (no second fold)
     full.persist()
-    out = full.select("doc_id", "status", "spans", "sections")
     aux = [(lineage_table(full), args.metrics)] if args.metrics else None
-    if args.buckets > 0:
-        out = out.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(args.buckets))
-        )
-        snap = commit_append(out, args.output, fmt=args.format,
-                             partition_by="bucket", aux=aux,
-                             protocol=args.commit_protocol)
-    else:
-        snap = commit_append(out, args.output, fmt=args.format, aux=aux,
-                             protocol=args.commit_protocol)
+    _commit(args, full.select("doc_id", "status", "spans", "sections"), aux)
     full.unpersist()
-    print(f"extract_job: wrote snapshot {snap} to {args.output}")
     return 0
 
 

@@ -4,39 +4,32 @@ snapshot commit (S9; ref append sinks src/utilities/file_util.py:58-146).
 Plain ``mode("append")`` parquet has a torn-write window: a crash mid-
 write leaves partial part-files that a resume anti-join then treats as
 committed, losing the unfinished documents forever. Iceberg closes
-this with snapshot manifests; this module reproduces that protocol in
-two variants:
-
-``protocol="rename"`` (default, any rename-atomic filesystem):
+this with snapshot manifests; this module reproduces that protocol on
+any filesystem whose directory rename is atomic, with one layout:
 
     <output>/
         _staging/<snap>/...    in-flight write (never read)
         <snap>/...             data, atomically renamed from staging
         _manifests/<snap>.manifest   commit marker, written LAST
 
-``protocol="manifest-only"`` (object stores without atomic directory
-rename — raw S3): the data stays where it was written, under
-``_staging/<snap>/``, and the manifest itself lists the data file
-paths. The only atomic primitive used is the single-object manifest
-publish (an S3 PUT is atomic per object); ``os.rename`` of a
-directory is never called.
-
-Either way, commit = write data -> publish manifest LAST. Readers
-(and resume) list ONLY manifested snapshots, so every possible crash
-point is safe:
+Commit = write data under _staging -> rename it into place -> publish
+the manifest LAST. Readers (and resume) list ONLY manifested
+snapshots, so every possible crash point is safe:
 
     * during the data write: garbage stays under _staging;
-    * after the data is in place, before the manifest: invisible to
-      readers, re-emitted by resume;
+    * after the rename, before the manifest: invisible to readers,
+      re-emitted by resume;
     * after the manifest: fully committed, resume skips its doc_ids.
 
 Crashed runs leave orphans (unmanifested snapshot/staging dirs) that
-resume never reads but also never reclaims; ``gc_orphans`` deletes
-them at job start, with a grace period so a concurrently-committing
-writer's in-flight snapshot is never swept. Consequently ``output``
-must only ever be read via ``read_committed`` — a plain
-``spark.read.parquet(output)`` would double-count orphans (and, under
-the rename protocol, read uncommitted data).
+resume never reads but also never reclaims. ``recover`` is the one
+crash-recovery call every writer makes before it touches a table: it
+heals a half-published multi-table commit (``reconcile_aux``), then
+deletes the orphans (``gc_orphans``), with a grace period so a
+concurrently-committing writer's in-flight snapshot is never swept.
+Consequently ``output`` must only ever be read via ``read_committed``
+— a plain ``spark.read.parquet(output)`` would read uncommitted data
+and double-count orphans.
 
 File sizing: ``commit_append`` rebalances the data frame before its
 write (Spark's ``REBALANCE`` hint, by the partition column when there
@@ -76,7 +69,9 @@ so a small commit of a few KB gains little, and a 1.7 KB lineage
 file grows by about 50-70 bytes.
 
 On a real cluster, swap this module for ``format("iceberg")`` with a
-catalog — the job's call sites are the only coupling.
+catalog — the job's call sites are the only coupling. That is also
+the route for object stores without an atomic directory rename (raw
+S3): Iceberg's catalog commit needs none.
 """
 
 from __future__ import annotations
@@ -94,13 +89,12 @@ STAGING_DIR = "_staging"
 PARQUET_CODEC = "zstd"
 
 
-def _publish(output: str, snap: str, files: list[str] | None = None,
+def _publish(output: str, snap: str,
              supersedes: list[str] | None = None) -> None:
     """Atomic commit marker: the LAST step of a commit. Line 1 is the
-    snapshot id; any further lines are output-relative data file paths
-    (the manifest-only protocol) or ``#supersedes <snap>`` directives
-    (compaction: the named snapshots are replaced by this one and
-    ignored by readers from this publish on). Separated out so
+    snapshot id; any further lines are ``#supersedes <snap>``
+    directives (compaction: the named snapshots are replaced by this
+    one and ignored by readers from this publish on). Separated out so
     crash-injection tests can fail a commit after its data write."""
     mdir = os.path.join(output, MANIFEST_DIR)
     os.makedirs(mdir, exist_ok=True)
@@ -109,11 +103,9 @@ def _publish(output: str, snap: str, files: list[str] | None = None,
         fh.write(snap + "\n")
         for s in supersedes or []:
             fh.write(f"#supersedes {s}\n")
-        for f in files or []:
-            fh.write(f + "\n")
         # durability before visibility: without the fsync a power
         # loss after os.replace can surface an EMPTY or torn
-        # manifest — a "committed" snapshot whose file list is gone,
+        # manifest — a "committed" snapshot with no snapshot id,
         # the one crash shape the protocol docs promise cannot happen
         fh.flush()
         os.fsync(fh.fileno())
@@ -128,15 +120,16 @@ def _publish(output: str, snap: str, files: list[str] | None = None,
 
 
 def _manifest_files(output: str, snap: str) -> list[str]:
-    """Data file list recorded in a manifest ([] = rename protocol:
-    the data lives under <output>/<snap>)."""
+    """The torn-write check every read makes before it trusts a
+    manifest; returns the manifest's data-file lines, which this sink
+    never writes ([]: the data is the renamed <output>/<snap>)."""
     p = os.path.join(output, MANIFEST_DIR, f"{snap}.manifest")
     with open(p, encoding="utf-8") as fh:
         lines = fh.read().splitlines()
     # torn-write guard (belt to _publish's fsync braces): line 1 must
     # echo the snapshot id, else the manifest is corrupt — refuse to
-    # read it as an empty (rename-protocol) list, which would point
-    # the reader at a snapshot directory that never existed
+    # read it, which would point the reader at a snapshot directory
+    # whose commit never completed
     if not lines or lines[0] != snap:
         raise ValueError(f"corrupt manifest for snapshot {snap} "
                          f"under {output}")
@@ -154,29 +147,25 @@ def _manifest_supersedes(output: str, snap: str) -> list[str]:
 
 
 def _list_data_files(base: str, relative_to: str) -> list[str]:
-    """The protocol's single definition of 'data file': every
-    non-hidden, non-marker file under ``base``, as paths relative to
-    ``relative_to``. Shared by the commit path (_stage_snapshot) and
-    the crash-recovery path (reconcile_aux) so the two can never
-    drift on what a manifest lists."""
+    """The sink's single definition of 'data file': every non-hidden,
+    non-marker file under ``base`` (not _SUCCESS, not .crc), as paths
+    relative to ``relative_to``."""
     return sorted(
         os.path.relpath(os.path.join(d, fn), relative_to)
         for d, _sub, fns in os.walk(base)
         for fn in fns
-        if fn and not fn.startswith(("_", "."))
+        if not fn.startswith(("_", "."))
     )
 
 
 def _stage_snapshot(
     df: DataFrame, output: str, snap: str, fmt: str,
-    partition_by: str | None = None, rename: bool = True,
-) -> list[str] | None:
-    """Write ``df`` under _staging/<snap> and either atomically rename
-    into place (rename protocol; returns []) or leave it staged and
-    return the output-relative data file list for the manifest
-    (manifest-only protocol). Returns None (and cleans up) when the
-    write produced no data files — a file-less parquet snapshot cannot
-    be read back."""
+    partition_by: str | None = None,
+) -> bool:
+    """Write ``df`` under _staging/<snap> and atomically rename it to
+    <output>/<snap>. Returns False (and cleans up) when the write
+    produced no data files — a file-less parquet snapshot cannot be
+    read back."""
     staging = os.path.join(output, STAGING_DIR, snap)
     w = df.write.mode("overwrite").format(fmt)
     if fmt == "parquet":
@@ -184,37 +173,30 @@ def _stage_snapshot(
     if partition_by:
         w = w.partitionBy(partition_by)
     w.save(staging)
-    files = _list_data_files(staging, output)
-    if not files:
+    if not _list_data_files(staging, output):
         shutil.rmtree(staging, ignore_errors=True)
-        return None
-    if rename:
-        dest = os.path.join(output, snap)
-        if os.path.isdir(dest):
-            # only reachable with a DETERMINISTIC snap id: a prior
-            # attempt crashed between this rename and its manifest
-            # publish. The leftover is unmanifested (the caller checks
-            # before staging), so replacing it loses nothing.
-            shutil.rmtree(dest)
-        os.rename(staging, dest)
-        return []
-    return files
+        return False
+    dest = os.path.join(output, snap)
+    if os.path.isdir(dest):
+        # only reachable with a DETERMINISTIC snap id: a prior
+        # attempt crashed between this rename and its manifest
+        # publish. The leftover is unmanifested (the caller checks
+        # before staging), so replacing it loses nothing.
+        shutil.rmtree(dest)
+    os.rename(staging, dest)
+    return True
 
 
 def commit_append(
     df: DataFrame, output: str, fmt: str = "parquet",
     partition_by: str | None = None,
     aux: list[tuple[DataFrame, str]] | None = None,
-    protocol: str = "rename",
     snap_id: str | None = None,
 ) -> str | None:
     """Append ``df`` to ``output`` as one atomically-committed
     snapshot; returns the snapshot id, or None for an empty ``df``
     (a resume run with nothing left to do commits nothing, like an
     Iceberg empty-append fast path).
-
-    ``protocol`` — "rename" (default) or "manifest-only" (see module
-    docstring; pick the latter for stores without atomic rename).
 
     ``df`` is rebalanced before the write (by ``partition_by`` when
     set), so its data files take their size from AQE's coalesce
@@ -231,8 +213,8 @@ def commit_append(
     the SAME snapshot id, analogous to an Iceberg multi-table commit.
     Ordering closes every crash window:
 
-        1. stage the data snapshot (+ rename, rename protocol only)
-        2. stage each aux snapshot likewise          (unmanifested)
+        1. stage + rename the data snapshot
+        2. stage + rename each aux snapshot          (unmanifested)
         3. publish the DATA manifest                 <- commit point
         4. publish each aux manifest
 
@@ -248,9 +230,6 @@ def commit_append(
     a no-op returning the id — a crash-replayed micro-batch commits
     exactly once. The default random id keeps batch appends
     collision-free."""
-    if protocol not in ("rename", "manifest-only"):
-        raise ValueError(f"unknown snapshot protocol: {protocol!r}")
-    rename = protocol == "rename"
     if snap_id is not None:
         if not snap_id.startswith("snap-"):
             # gc_orphans/GC only recognize the snap- prefix; an alien
@@ -270,33 +249,44 @@ def commit_append(
     snap = snap_id or f"snap-{time.time_ns()}-{uuid.uuid4().hex[:8]}"
     rebalanced = (df.hint("rebalance", partition_by) if partition_by
                   else df.hint("rebalance"))
-    files = _stage_snapshot(rebalanced, output, snap, fmt, partition_by,
-                            rename=rename)
-    if files is None:
+    if not _stage_snapshot(rebalanced, output, snap, fmt, partition_by):
         return None
-    aux_staged = []
-    for aux_df, aux_output in aux or []:
-        af = _stage_snapshot(aux_df, aux_output, snap, "parquet",
-                             rename=rename)
-        if af is not None:
-            aux_staged.append((aux_output, af))
-    _publish(output, snap, files)
-    for aux_output, af in aux_staged:
-        _publish(aux_output, snap, af)
+    aux_staged = [aux_output for aux_df, aux_output in aux or []
+                  if _stage_snapshot(aux_df, aux_output, snap, "parquet")]
+    _publish(output, snap)
+    for aux_output in aux_staged:
+        _publish(aux_output, snap)
     return snap
+
+
+def recover(output: str, aux_outputs: list[str | None]) -> None:
+    """The crash-recovery call every writer makes before it reads or
+    writes ``output``: republish the aux manifests a prior run left
+    unpublished (``reconcile_aux``), then reclaim the unmanifested
+    crash debris of each existing table (``gc_orphans``). In that
+    order: an aux snapshot waiting for its marker is itself
+    unmanifested, and a sweep first would delete the lineage of a
+    committed snapshot. ``None`` entries (an optional aux table the
+    caller was not given) are skipped."""
+    aux_outputs = [a for a in aux_outputs if a]
+    if aux_outputs:
+        reconcile_aux(output, aux_outputs)
+    for tgt in [output, *aux_outputs]:
+        if os.path.isdir(tgt):
+            gc_orphans(tgt)
 
 
 def reconcile_aux(output: str, aux_outputs: list[str]) -> int:
     """Close the commit protocol's last crash window: for every
-    manifested DATA snapshot whose aux snapshot data exists but whose
+    manifested DATA snapshot whose aux snapshot dir exists but whose
     aux manifest is missing (died between steps 3 and 4 of
-    ``commit_append``), publish the aux manifest. Run at job start
-    before reading any aux table. Returns the number published.
+    ``commit_append``), publish the aux manifest. ``recover`` runs it
+    before any aux table is read. Returns the number published.
 
     Keys on _known_snapshot_ids, not just live manifests: a
     compaction of the DATA table between the crash and this heal
     replaced the per-snapshot manifest with a #supersedes record, but
-    the staged aux data still deserves its marker — iterating only
+    the renamed aux data still deserves its marker — iterating only
     live ids would strand it until gc_orphans deletes the lineage of
     a committed snapshot forever."""
     n = 0
@@ -306,31 +296,22 @@ def reconcile_aux(output: str, aux_outputs: list[str]) -> int:
                 os.path.join(aux_output, MANIFEST_DIR, f"{snap}.manifest")
             ):
                 continue
-            renamed = os.path.join(aux_output, snap)
-            staged = os.path.join(aux_output, STAGING_DIR, snap)
-            if os.path.isdir(renamed):
+            if os.path.isdir(os.path.join(aux_output, snap)):
                 _publish(aux_output, snap)
                 n += 1
-            elif os.path.isdir(staged):
-                files = _list_data_files(staged, aux_output)
-                if files:
-                    _publish(aux_output, snap, files)
-                    n += 1
     return n
 
 
 def gc_orphans(output: str, grace_s: float = 3600.0) -> int:
-    """Reclaim crash debris: unmanifested snapshot dirs (rename
-    protocol, died between rename and publish) and unmanifested
-    staging entries (either protocol, died mid-write). Returns the
-    number of directories removed.
+    """Reclaim crash debris: unmanifested snapshot dirs (died between
+    rename and publish) and staging entries (died mid-write). Returns
+    the number of directories removed.
 
     ``grace_s`` — minimum age (mtime) before an orphan is swept, so a
     concurrent writer's snapshot that is between its data write and
-    its manifest publish is never deleted. Run at job start (the
-    extract job does, alongside ``reconcile_aux``); orphans are
-    invisible to ``read_committed``/resume either way — GC only
-    reclaims the disk."""
+    its manifest publish is never deleted. ``recover`` runs it at
+    every writer's start; orphans are invisible to
+    ``read_committed``/resume either way — GC only reclaims the disk."""
     committed = set(committed_snapshots(output))
     now = time.time()
     n = 0
@@ -356,8 +337,6 @@ def gc_orphans(output: str, grace_s: float = 3600.0) -> int:
         return removed
 
     n += sweep(output)
-    # manifest-only committed snapshots keep their data under
-    # _staging/<snap> forever — `committed` excludes them from sweep
     n += sweep(os.path.join(output, STAGING_DIR))
     # a crash inside _publish (between opening .{snap}.tmp and the
     # os.replace) leaves a hidden tmp manifest no other path ever
@@ -430,10 +409,7 @@ def read_committed(
     spark: SparkSession, output: str, fmt: str = "parquet"
 ) -> DataFrame | None:
     """Union of all manifested snapshots, or None when nothing has
-    committed yet (partial/staging data is never visible). Handles
-    both protocols per snapshot: a manifest with a file list is read
-    by explicit paths (basePath keeps partition-column inference);
-    an empty list means the renamed <output>/<snap> directory."""
+    committed yet (partial/staging data is never visible)."""
     snaps = committed_snapshots(output)
     if not snaps:
         return None
@@ -459,23 +435,17 @@ def _union_snapshots(dfs: list[DataFrame]) -> DataFrame:
 
 def _read_snapshot(spark: SparkSession, output: str, snap: str,
                    fmt: str = "parquet") -> DataFrame:
-    """One manifested snapshot as a DataFrame (either protocol)."""
-    files = _manifest_files(output, snap)
-    if files:
-        base = os.path.join(output, STAGING_DIR, snap)
-        return (
-            spark.read.format(fmt)
-            .option("basePath", base)
-            .load([os.path.join(output, f) for f in files])
-        )
+    """One manifested snapshot as a DataFrame: its renamed
+    <output>/<snap> directory, read once the manifest passes its
+    torn-write check."""
+    _manifest_files(output, snap)
     return spark.read.format(fmt).load(os.path.join(output, snap))
 
 
 def compact_snapshots(
     spark: SparkSession, output: str, fmt: str = "parquet",
-    n_files: int = 1, protocol: str = "rename",
-    min_snapshots: int = 2, partition_by: str | None = None,
-    lock_ttl_s: float = 3600.0,
+    n_files: int = 1, min_snapshots: int = 2,
+    partition_by: str | None = None, lock_ttl_s: float = 3600.0,
 ) -> str | None:
     """Small-files maintenance: rewrite every committed snapshot into
     ONE new snapshot of ``n_files`` files and atomically supersede the
@@ -502,17 +472,12 @@ def compact_snapshots(
     enforces the single-maintenance-writer rule on any filesystem
     with atomic create — a second compactor raises instead of
     corrupting, and a crashed holder's stale lock is taken over after
-    ``lock_ttl_s``. (On a raw object store without atomic create,
-    serialize maintenance from one scheduler instead.)"""
-    if protocol not in ("rename", "manifest-only"):
-        # validate BEFORE the lock and before _cleanup_superseded's
-        # side effects — a bad argument must not mutate the table
-        raise ValueError(f"unknown snapshot protocol: {protocol!r}")
+    ``lock_ttl_s``."""
     lock, token = _acquire_maintenance_lock(output, lock_ttl_s)
     hb_stop = _start_lock_heartbeat(lock, lock_ttl_s)
     try:
-        return _compact_locked(spark, output, fmt, n_files, protocol,
-                               min_snapshots, partition_by, lock, token)
+        return _compact_locked(spark, output, fmt, n_files, min_snapshots,
+                               partition_by, lock, token)
     finally:
         hb_stop.set()
         _release_maintenance_lock(lock, token)
@@ -597,15 +562,14 @@ def _release_maintenance_lock(path: str, token: str) -> None:
             pass
 
 
-def _compact_locked(spark, output, fmt, n_files, protocol,
-                    min_snapshots, partition_by, lock, token) -> str | None:
+def _compact_locked(spark, output, fmt, n_files, min_snapshots,
+                    partition_by, lock, token) -> str | None:
     _cleanup_superseded(output)
     snaps = committed_snapshots(output)
     if len(snaps) < min_snapshots:
         return None
     df = _union_snapshots(
         [_read_snapshot(spark, output, s, fmt) for s in snaps])
-    rename = protocol == "rename"  # validated by compact_snapshots
     snap = f"snap-{time.time_ns()}-{uuid.uuid4().hex[:8]}"
     # carry the inputs' OWN #supersedes ids forward (transitively):
     # the compacted manifest becomes the single record of every id
@@ -619,19 +583,19 @@ def _compact_locked(spark, output, fmt, n_files, protocol,
             pass
     # partition_by preserves a bucketed table's directory layout
     # (n_files then applies per partition dir)
-    files = _stage_snapshot(df.coalesce(max(1, n_files)), output, snap,
-                            fmt, partition_by=partition_by, rename=rename)
-    if files is None:  # inputs were committed-but-empty
+    if not _stage_snapshot(df.coalesce(max(1, n_files)), output, snap,
+                           fmt, partition_by=partition_by):
+        # inputs were committed-but-empty
         return None
     # fence: a compactor paused past the TTL may have lost the lock to
     # a second one rewriting the same inputs; publishing now would make
-    # every row read twice. The staged dir stays unmanifested debris
+    # every row read twice. The renamed dir stays unmanifested debris
     # for gc_orphans.
     if not _owns_maintenance_lock(lock, token):
         raise RuntimeError(
             f"maintenance lock on {output} was taken over during the "
             "rewrite; compacted snapshot not published")
-    _publish(output, snap, files,
+    _publish(output, snap,
              supersedes=sorted(set(snaps) | inherited))  # <- commit point
     _cleanup_superseded(output)
     return snap
@@ -647,9 +611,7 @@ def detect_partition_col(output: str) -> str | None:
     like that needs a human."""
     cols: set[str | None] = set()
     for s in committed_snapshots(output):
-        base = (os.path.join(output, s) if os.path.isdir(
-            os.path.join(output, s))
-            else os.path.join(output, STAGING_DIR, s))
+        base = os.path.join(output, s)
         if not os.path.isdir(base):
             continue
         part_dirs = sorted(
@@ -679,10 +641,9 @@ def _cleanup_superseded(output: str) -> int:
         if os.path.isfile(mpath):
             os.remove(mpath)
             removed = True
-        for p in (os.path.join(output, s),
-                  os.path.join(output, STAGING_DIR, s)):
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-                removed = True
+        p = os.path.join(output, s)
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+            removed = True
         n += removed
     return n

@@ -192,11 +192,11 @@ def test_job_crash_between_data_and_metrics_manifest_heals(
     real_publish = S._publish
     calls = []
 
-    def dying_publish(output, snap, files=None):
+    def dying_publish(output, snap, **kw):
         calls.append(output)
         if len(calls) == 2:  # data manifest published; die on metrics
             raise RuntimeError("simulated crash before metrics manifest")
-        real_publish(output, snap, files)
+        real_publish(output, snap, **kw)
 
     monkeypatch.setattr(S, "_publish", dying_publish)
     with pytest.raises(RuntimeError):
@@ -283,7 +283,7 @@ def test_job_crash_before_manifest_neither_loses_nor_duplicates(
     out = str(tmp_path / "crash_out")
     real_publish = S._publish
 
-    def dying_publish(output, snap, files=None):
+    def dying_publish(output, snap, **kw):
         raise RuntimeError("simulated crash before manifest publish")
 
     monkeypatch.setattr(S, "_publish", dying_publish)
@@ -332,90 +332,15 @@ def test_job_crash_mid_staging_is_invisible(spark, job_paths, tmp_path):
     assert _read_out(spark, out).count() == docs.count()
 
 
-def test_manifest_only_protocol_never_renames(spark, job_paths, tmp_path,
-                                              monkeypatch):
-    """The manifest-only commit must run end-to-end on a store that
-    forbids directory rename (raw-S3 semantics): os.rename raises for
-    directories, yet the job commits, resumes exactly-once, and the
-    metrics land — and a kill before the manifest publish is invisible."""
-    import pdfspark.sinks.snapshot as S
-
-    out = str(tmp_path / "mo_out")
-    metrics = str(tmp_path / "mo_metrics")
-    real_rename = os.rename
-
-    def no_dir_rename(src, dst, *a, **kw):
-        if os.path.isdir(src):
-            raise OSError("directory rename forbidden (object store)")
-        return real_rename(src, dst, *a, **kw)
-
-    monkeypatch.setattr(os, "rename", no_dir_rename)
-
-    # crash AFTER the data write, BEFORE the manifest publish
-    real_publish = S._publish
-
-    def dying_publish(output, snap, files=None):
-        raise RuntimeError("simulated crash before manifest publish")
-
-    monkeypatch.setattr(S, "_publish", dying_publish)
-    with pytest.raises(RuntimeError):
-        main([
-            "--input", job_paths["input"], "--geom", job_paths["geom"],
-            "--output", out, "--metrics", metrics,
-            "--commit-protocol", "manifest-only",
-        ])
-    assert committed_snapshots(out) == []
-    assert read_committed(spark, out) is None
-
-    # healthy rerun with --resume: exactly once, no rename ever called
-    monkeypatch.setattr(S, "_publish", real_publish)
-    rc = main([
-        "--input", job_paths["input"], "--geom", job_paths["geom"],
-        "--output", out, "--metrics", metrics, "--resume",
-        "--commit-protocol", "manifest-only",
-    ])
-    assert rc == 0
-    docs = spark.read.parquet(job_paths["input"])
-    committed = _read_out(spark, out)
-    assert committed.count() == docs.count()
-    assert committed.select("doc_id").distinct().count() == docs.count()
-    m = _read_out(spark, metrics)
-    assert m.groupBy().sum("doc_count").collect()[0][0] == docs.count()
-    # no renamed snapshot dirs exist; the data lives under _staging
-    assert not any(e.startswith("snap-") for e in os.listdir(out))
-
-
-def test_manifest_only_partitioned_roundtrip(spark, job_paths, tmp_path):
-    """Bucket-partitioned output under manifest-only: explicit-path
-    reads must still infer the partition column (basePath)."""
-    out = str(tmp_path / "mo_bucket_out")
-    rc = main([
-        "--input", job_paths["input"], "--geom", job_paths["geom"],
-        "--output", out, "--buckets", "4",
-        "--commit-protocol", "manifest-only",
-    ])
-    assert rc == 0
-    df = _read_out(spark, out)
-    assert "bucket" in df.columns
-    assert df.select("bucket").distinct().count() > 1
-    docs = spark.read.parquet(job_paths["input"])
-    assert df.count() == docs.count()
-
-
 def test_gc_orphans_reclaims_crash_debris(spark, job_paths, tmp_path):
     """Unmanifested snapshot/staging dirs past the grace period are
-    swept; committed data (both protocols) is untouched."""
+    swept; committed data is untouched."""
     from pdfspark.sinks.snapshot import gc_orphans
 
     out = str(tmp_path / "gc_out")
     rc = main([
         "--input", job_paths["input"], "--geom", job_paths["geom"],
         "--output", out,
-    ])
-    assert rc == 0
-    rc = main([
-        "--input", job_paths["input"], "--geom", job_paths["geom"],
-        "--output", out, "--commit-protocol", "manifest-only",
     ])
     assert rc == 0
     before = _read_out(spark, out).count()
@@ -434,8 +359,7 @@ def test_gc_orphans_reclaims_crash_debris(spark, job_paths, tmp_path):
     assert not os.path.isdir(os.path.join(out, "snap-000-orphan"))
     assert not os.path.isdir(os.path.join(out, "_staging",
                                           "snap-001-dead"))
-    # committed snapshots (rename-protocol dir + manifest-only staging
-    # data) survive and still read back identically
+    # the committed snapshot survives and still reads back identically
     assert _read_out(spark, out).count() == before
 
 
@@ -780,10 +704,10 @@ def test_job_html_mode_quarantine_and_zero_block_resume(spark, tmp_path):
 
 def test_manifest_torn_write_guard_and_tmp_gc(spark, job_paths, tmp_path):
     """A power loss can surface an empty/truncated manifest (before
-    the fsync fix) — reading one must raise loudly, never parse as an
-    empty rename-protocol list pointing at a snapshot dir that does
-    not exist. gc_orphans must also sweep the hidden .tmp manifest a
-    crash inside _publish leaves behind."""
+    the fsync fix) — reading one must raise loudly, never pass as the
+    manifest of a snapshot dir whose commit never completed.
+    gc_orphans must also sweep the hidden .tmp manifest a crash inside
+    _publish leaves behind."""
     import os as _os
     import time as _time
 
@@ -814,9 +738,7 @@ def test_manifest_torn_write_guard_and_tmp_gc(spark, job_paths, tmp_path):
     assert not _os.path.exists(tmp) and n >= 1
 
 
-@pytest.mark.parametrize("protocol", ["rename", "manifest-only"])
-def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path,
-                                                      protocol):
+def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path):
     """Compaction (the rewrite_data_files analogue): N append
     snapshots collapse into one snapshot of exactly n_files files (the
     append path's rebalance must not resize it), rows and values
@@ -827,8 +749,6 @@ def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path,
     import glob
 
     from pdfspark.sinks.snapshot import (
-        STAGING_DIR,
-        _list_data_files,
         _publish,
         commit_append,
         committed_snapshots,
@@ -843,28 +763,22 @@ def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path,
         for i in range(4):
             batch = [(f"d{i}{j}", i * 10 + j) for j in range(5)]
             rows += batch
-            commit_append(spark.createDataFrame(batch, schema), out,
-                          protocol=protocol)
-        # hand-published in this protocol's layout: rename = a
-        # <snap> dir and a bare manifest, manifest-only = staged files
-        # listed in the manifest
+            commit_append(spark.createDataFrame(batch, schema), out)
+        # hand-published in the sink's layout: a <snap> dir and a bare
+        # manifest
         old = "snap-0-snappy"
-        rel = old if protocol == "rename" else os.path.join(STAGING_DIR,
-                                                            old)
         batch = [(f"s{j}", 100 + j) for j in range(5)]
         rows += batch
         spark.createDataFrame(batch, schema).write \
-            .option("compression", "snappy").parquet(os.path.join(out, rel))
-        _publish(out, old, [] if protocol == "rename"
-                 else _list_data_files(os.path.join(out, rel), out))
+            .option("compression", "snappy").parquet(os.path.join(out, old))
+        _publish(out, old)
         before = sorted(read_committed(spark, out).collect())
         assert [tuple(r) for r in before] == sorted(rows)
         assert len(committed_snapshots(out)) == 5
         files_before = glob.glob(f"{out}/**/*.parquet", recursive=True)
         assert _parquet_codecs(files_before) == {"SNAPPY", "ZSTD"}
 
-        snap = compact_snapshots(spark, out, n_files=n_files,
-                                 protocol=protocol)
+        snap = compact_snapshots(spark, out, n_files=n_files)
         assert snap is not None
         assert committed_snapshots(out) == [snap]
         assert sorted(read_committed(spark, out).collect()) == before
@@ -874,12 +788,12 @@ def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path,
         assert _parquet_codecs(files_after) == {"ZSTD"}
 
     # idempotent: a second run finds < min_snapshots inputs
-    assert compact_snapshots(spark, out, protocol=protocol) is None
+    assert compact_snapshots(spark, out) is None
 
     # appends after compaction coexist with the compacted snapshot
     commit_append(
         spark.createDataFrame([("late", 99)], "doc_id string, v int"),
-        out, protocol=protocol)
+        out)
     got = sorted(read_committed(spark, out).collect())
     assert len(got) == len(before) + 1
 
@@ -1104,8 +1018,6 @@ def test_detect_partition_col(spark, tmp_path):
                                "doc_id string, bucket int")
     commit_append(df, flat)
     commit_append(df, part, partition_by="bucket")
-    commit_append(df, part, partition_by="bucket",
-                  protocol="manifest-only")
     assert detect_partition_col(flat) is None
     assert detect_partition_col(part) == "bucket"
     assert detect_partition_col(str(tmp_path / "missing")) is None
@@ -1141,7 +1053,7 @@ def test_compact_preserves_schema_evolution(spark, tmp_path):
     assert after == got
 
 
-def test_compaction_maintenance_lock(spark, tmp_path):
+def test_compaction_maintenance_lock(spark, tmp_path, monkeypatch):
     """Single-maintenance-writer enforcement: a fresh lock makes a
     second compactor raise; a stale lock (crashed holder) is taken
     over; the lock is released on success AND on failure."""
@@ -1165,15 +1077,24 @@ def test_compaction_maintenance_lock(spark, tmp_path):
     snap = S.compact_snapshots(spark, out)
     assert snap is not None and not os.path.exists(lock)
 
-    # failure inside the locked section still releases the lock
+    # a failure INSIDE the locked section (the rewrite's data write
+    # dies) still releases the lock, and changes nothing
     S.commit_append(
-        spark.createDataFrame([("x", 9)], "doc_id string, v int")
-        .limit(0).unionByName(
-            spark.createDataFrame([("x", 9)], "doc_id string, v int")),
-        out)
-    with pytest.raises(ValueError, match="unknown snapshot protocol"):
-        S.compact_snapshots(spark, out, protocol="bogus")
+        spark.createDataFrame([("x", 9)], "doc_id string, v int"), out)
+    snaps_before = S.committed_snapshots(out)
+    rows_before = sorted(S.read_committed(spark, out).collect())
+
+    def dying_stage(*a, **kw):
+        assert os.path.exists(lock)  # really inside the locked section
+        raise RuntimeError("simulated crash during the compaction write")
+
+    monkeypatch.setattr(S, "_stage_snapshot", dying_stage)
+    with pytest.raises(RuntimeError, match="compaction write"):
+        S.compact_snapshots(spark, out)
+    monkeypatch.undo()
     assert not os.path.exists(lock)
+    assert S.committed_snapshots(out) == snaps_before
+    assert sorted(S.read_committed(spark, out).collect()) == rows_before
     assert S.compact_snapshots(spark, out) is not None
 
 
@@ -1304,7 +1225,8 @@ def test_job_html_mode_rejects_stem_collisions(spark, tmp_path):
 
 def test_job_stream_payloads_flag_guards(tmp_path):
     """No silent no-ops on the stream surface: empty input string,
-    --buckets and --resume are usage errors."""
+    --buckets and --resume are usage errors, and the removed
+    --commit-protocol flag is rejected."""
     import pytest as _pytest
 
     out = str(tmp_path / "out")
@@ -1318,6 +1240,10 @@ def test_job_stream_payloads_flag_guards(tmp_path):
     with _pytest.raises(SystemExit):
         main(["--stream-payloads", str(tmp_path), "--checkpoint", cp,
               "--output", out, "--resume"])
+    # the single commit protocol has no flag left to pick it
+    with _pytest.raises(SystemExit):
+        main(["--stream-payloads", str(tmp_path), "--checkpoint", cp,
+              "--output", out, "--commit-protocol", "rename"])
 
 
 def test_snapshot_table_random_op_sequences_preserve_rows(spark, tmp_path):

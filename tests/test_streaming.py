@@ -94,13 +94,14 @@ def test_windowed_stream_equals_batch_groupby(spark):
 def test_extract_payload_stream_matches_batch_and_resumes(spark, fixture_dir,
                                                           tmp_path):
     """Streaming ingest: (1) draining a payload backlog produces the
-    same folded spans as the batch path; (2) a restart with the same
-    checkpoint processes ONLY newly arrived files (exactly-once per
-    file)."""
+    same folded spans as the batch path, committed as manifested
+    snapshots by default; (2) a restart with the same checkpoint
+    processes ONLY newly arrived files (exactly-once per file)."""
     import shutil
 
     from pdfspark.config import ExtractConfig
     from pdfspark.fold import fold_document
+    from pdfspark.sinks.snapshot import committed_snapshots, read_committed
     from pdfspark.sources.binary_decode import (
         decode_payloads,
         read_payloads,
@@ -118,8 +119,9 @@ def test_extract_payload_stream_matches_batch_and_resumes(spark, fixture_dir,
     out = str(tmp_path / "out")
     cp = str(tmp_path / "cp")
     extract_payload_stream(spark, pdir, out, cp)
+    assert committed_snapshots(out)  # the default output is snapshots
     got1 = {r.doc_id: (r.status, [t.asDict() for t in r.spans])
-            for r in spark.read.parquet(out).collect()}
+            for r in read_committed(spark, out).collect()}
     assert len(got1) == len(first)
 
     # batch equivalence on the same payloads
@@ -136,14 +138,15 @@ def test_extract_payload_stream_matches_batch_and_resumes(spark, fixture_dir,
     for n in held_back:
         shutil.copy(os.path.join(src, n), pdir)
     extract_payload_stream(spark, pdir, out, cp)
-    got2 = spark.read.parquet(out)
+    got2 = read_committed(spark, out)
     assert got2.count() == len(names)          # no reprocessing of old files
     assert got2.select("doc_id").distinct().count() == len(names)
 
 
 def test_extract_payload_stream_metrics(spark, fixture_dir, tmp_path):
-    """foreachBatch variant: the streaming ingest appends per-batch
-    lineage rows whose totals reconcile with the written documents."""
+    """With metrics: the streaming ingest commits per-batch lineage
+    rows whose totals reconcile with the written documents."""
+    from pdfspark.sinks.snapshot import read_committed
     from pdfspark.streaming.extract_stream import extract_payload_stream
 
     src = os.path.join(fixture_dir, "payloads")
@@ -152,8 +155,8 @@ def test_extract_payload_stream_metrics(spark, fixture_dir, tmp_path):
     metrics = str(tmp_path / "metrics")
     extract_payload_stream(spark, src, out, cp, metrics_path=metrics,
                            max_files_per_trigger=4)
-    docs = spark.read.parquet(out)
-    m = spark.read.parquet(metrics)
+    docs = read_committed(spark, out)
+    m = read_committed(spark, metrics)
     n_files = len(os.listdir(src))
     assert docs.count() == n_files
     assert m.groupBy().sum("doc_count").collect()[0][0] == n_files
@@ -224,6 +227,7 @@ def test_extract_payload_stream_mode_switch_single_layout(
     first, making later plain appends invisible to batch reads)."""
     import shutil
 
+    from pdfspark.sinks.snapshot import read_committed
     from pdfspark.streaming.extract_stream import extract_payload_stream
 
     src = os.path.join(fixture_dir, "payloads")
@@ -241,10 +245,10 @@ def test_extract_payload_stream_mode_switch_single_layout(
     metrics = str(tmp_path / "metrics")
     extract_payload_stream(spark, pdir, out, cp,            # with metrics
                            metrics_path=metrics)
-    got = spark.read.parquet(out)
+    got = read_committed(spark, out)
     assert got.count() == len(names)                # nothing hidden
     assert got.select("doc_id").distinct().count() == len(names)
-    m = spark.read.parquet(metrics)
+    m = read_committed(spark, metrics)
     assert m.groupBy().sum("doc_count").collect()[0][0] == len(later)
 
 
@@ -410,8 +414,8 @@ def _stream_and_batch(spark, pdir, tmp_path):
     out, met = str(tmp_path / "out"), str(tmp_path / "met")
     extract_payload_stream(spark, pdir, out, str(tmp_path / "cp"),
                            metrics_path=met)
-    yield ("stream", spark.read.parquet(out).collect(),
-           spark.read.parquet(met).collect())
+    yield ("stream", read_committed(spark, out).collect(),
+           read_committed(spark, met).collect())
     out, met = str(tmp_path / "b_out"), str(tmp_path / "b_met")
     assert main(["--payloads", pdir, "--output", out, "--metrics", met]) == 0
     yield ("batch", read_committed(spark, out).collect(),
@@ -486,7 +490,7 @@ def test_sessionize_stream_null_value_matches_batch(spark, tmp_path):
 
 def test_extract_stream_snapshot_output_exactly_once_and_compacts(
         spark, fixture_dir, tmp_path, monkeypatch):
-    """snapshot_output=True: (1) every micro-batch commits one
+    """Snapshot output: (1) every micro-batch commits one
     manifested snapshot with lineage as its aux; (2) a crash-replayed
     batch no-ops on its deterministic snap id instead of doubling
     rows; (3) compaction then folds the per-batch snapshots into one
@@ -507,7 +511,7 @@ def test_extract_stream_snapshot_output_exactly_once_and_compacts(
     out = str(tmp_path / "out")
     met = str(tmp_path / "met")
     cp = str(tmp_path / "cp")
-    kw = dict(metrics_path=met, snapshot_output=True,
+    kw = dict(metrics_path=met,
               max_files_per_trigger=max(1, len(wave1) // 2))
     extract_payload_stream(spark, pdir, out, cp, **kw)
     snaps1 = S.committed_snapshots(out)
@@ -569,7 +573,7 @@ def test_extract_stream_ingests_raw_pdf_arrivals(spark, tmp_path):
         fh.write(b"%PDF-1.4\ngarbage only\n%%EOF\n")
 
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-    extract_payload_stream(spark, pdir, out, cp, snapshot_output=True)
+    extract_payload_stream(spark, pdir, out, cp)
     rows = {r.doc_id: r for r in S.read_committed(spark, out).collect()}
     assert rows["doc-a"].status == "ok"
     texts = [s.text for s in rows["doc-a"].spans]
