@@ -6,7 +6,8 @@ Usage:
     zip -r pdfspark.zip pdfspark
     spark-submit --py-files pdfspark.zip jobs/extract_job.py \
         --input  <documents_in parquet/iceberg path> \
-        --geom   <spans_geom path, optional: header/footer source> \
+        --geom   <spans_geom path, optional: header/footer source, \
+                  not read under the default config> \
         --output <extracted spans table path> \
         --metrics <lineage metrics table path> \
         [--resume]
@@ -61,6 +62,11 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
    and only an append above defaultParallelism x the advisory size
    writes files of about the advisory size
  - every committed parquet file is zstd, Iceberg's default codec
+ - --geom's header/footer strings feed only the substring strip
+   (ExtractConfig(broken_hf_strip=False)); the job folds under the
+   reference-quirk default, which never reads them, so it builds no
+   header/footer frame: no geometry scan, aggregation or join runs.
+   The path's schema is still read, so a missing --geom fails as before
 """
 
 from __future__ import annotations
@@ -264,7 +270,12 @@ def main(argv=None) -> int:
              "classified block rows; doc_id = file name stem. Same "
              "snapshot commit + --resume exactly-once semantics; "
              "--metrics records per-partition lineage rows.")
-    ap.add_argument("--geom", default=None)
+    ap.add_argument(
+        "--geom", default=None,
+        help="spans_geom parquet, --input only: the per-doc "
+             "header/footer source of the substring strip. The job's "
+             "reference-quirk config (broken_hf_strip) does not read "
+             "it; the path must still exist.")
     ap.add_argument("--output", required=True)
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--resume", action="store_true")
@@ -318,6 +329,7 @@ def main(argv=None) -> int:
     else:
         spark = build_session()
 
+    from pdfspark.config import ExtractConfig
     from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.extract import extract_documents, lineage_table
 
@@ -369,11 +381,15 @@ def main(argv=None) -> int:
         full = _prepare_output(spark, args, extract_payloads(
             read_payloads(spark, args.payloads)))
     else:
-        hf = header_footer(spark.read.parquet(args.geom)) \
-            if args.geom else None
+        cfg = ExtractConfig()
+        # reading the schema fails fast on a missing path; the
+        # header/footer frame is built only for a config that reads it
+        geom = spark.read.parquet(args.geom) if args.geom else None
+        hf = header_footer(geom) \
+            if geom is not None and not cfg.broken_hf_strip else None
         full = extract_documents(
             _prepare_output(spark, args, spark.read.parquet(args.input)),
-            hf)
+            hf, cfg)
 
     # persist once: the data write materialises the fold, and the
     # metrics aggregation reads the cache (no second fold)

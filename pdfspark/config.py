@@ -60,7 +60,11 @@ class ExtractConfig:
     # header/footer strip tests dict-key membership (only literal
     # 'header'/'footer' texts stripped, src/processors/
     # element_processors.py:69 with the dict from pdf_extractor.py:363);
-    # False applies the intended substring strip.
+    # False applies the intended substring strip. Only the substring
+    # strip reads the per-doc header/footer strings, so under True the
+    # extraction routes never join the header/footer frame
+    # (operators/extract.py::_with_hf) and jobs/extract_job never
+    # builds it.
     broken_hf_strip: bool = True
     top_margin: float = TOP_MARGIN
     bottom_margin: float = BOTTOM_MARGIN

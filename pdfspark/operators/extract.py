@@ -68,8 +68,17 @@ EXTRACT_SPANS_ONLY = T.StructType(
 )
 
 
-def _with_hf(documents_in: DataFrame, header_footer_df: DataFrame | None):
-    if header_footer_df is None:
+def _with_hf(documents_in: DataFrame, header_footer_df: DataFrame | None,
+             cfg: ExtractConfig):
+    """The fold's input with per-doc ``header``/``footer`` strings —
+    the one place that decides whether the fold gets a header/footer
+    side input. Only the substring strip (``broken_hf_strip=False``)
+    reads the strings, so only then is ``header_footer_df`` joined on;
+    under the reference quirk (the default) the columns are empty
+    literals and the header/footer plan is never executed: the fold is
+    a Python UDF, so Spark could not prune that geometry scan,
+    aggregation and join itself."""
+    if header_footer_df is None or cfg.broken_hf_strip:
         return documents_in.withColumn("header", F.lit("")).withColumn(
             "footer", F.lit("")
         )
@@ -144,9 +153,12 @@ def extract_documents(
     spans_only: bool = False,
 ) -> DataFrame:
     """Sequential-per-doc exact fold; salted repartition first.
+    ``header_footer_df`` (doc_id, header, footer) is joined on only
+    when ``cfg`` reads it (``broken_hf_strip=False``; see _with_hf),
+    so under the default config it may be passed and is never run.
     ``spans_only`` drops the sections side-output at the fold (see
     _fold_batches) — for consumers that never read it."""
-    df = _with_hf(documents_in, header_footer_df)
+    df = _with_hf(documents_in, header_footer_df, cfg)
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # hash-repartition on doc_id: uniform unless one doc is huge (that
     # case goes through the skew split routes)
@@ -230,7 +242,7 @@ def _explode_span_rows(folded: DataFrame) -> DataFrame:
     )
 
 
-def _split_inputs(documents_in, header_footer_df, skew_threshold):
+def _split_inputs(documents_in, header_footer_df, cfg, skew_threshold):
     """(small, big, big_bad) partition of the input by size and the
     DecodeError quarantine marker. A pathologically large doc can
     still carry a DecodeError: the sequential fold quarantines the
@@ -245,7 +257,7 @@ def _split_inputs(documents_in, header_footer_df, skew_threshold):
     extract_sections_auto becomes a manifest-statistics lookup.
     Persisting the flagged frame instead would pin the whole fat
     table in executor memory — wrong trade at that scale."""
-    df = _with_hf(documents_in, header_footer_df)
+    df = _with_hf(documents_in, header_footer_df, cfg)
     # size(NULL) is NULL under ANSI: without the coalesce a NULL-spans
     # doc falls out of ALL THREE branches and silently vanishes from
     # the split path, while the sequential fold emits status='empty'
@@ -385,7 +397,7 @@ def extract_spans_split(
       For sections on the skew path see extract_sections_split; for
       the nested-array-free row shape see extract_spans_split_rows.
     """
-    small, big, bad = _split_inputs(documents_in, header_footer_df,
+    small, big, bad = _split_inputs(documents_in, header_footer_df, cfg,
                                     skew_threshold)
     empty_spans = F.array().cast(T.ArrayType(SPAN)).alias("spans")
     big_bad = bad.select("doc_id", empty_spans)
@@ -802,7 +814,7 @@ def extract_sections_split(
 
     Output: (doc_id, status, sections).
     """
-    small, big, bad = _split_inputs(documents_in, header_footer_df,
+    small, big, bad = _split_inputs(documents_in, header_footer_df, cfg,
                                     skew_threshold)
     folded = _fold_big_chunks(big, cfg, spans_per_chunk,
                               collect_events=True)
@@ -849,7 +861,7 @@ def extract_documents_split(
     extract_sections_split instead. The cached big-doc intermediates
     are appended to ``persisted`` for the caller to unpersist once the
     result is materialised."""
-    small, big, bad = _split_inputs(documents_in, header_footer_df,
+    small, big, bad = _split_inputs(documents_in, header_footer_df, cfg,
                                     skew_threshold)
 
     def input_lineage(df, status):
@@ -981,7 +993,7 @@ def extract_spans_split_rows(
     anyway (the driver contract's nested arrays are re-exploded by
     every consumer).
     """
-    small, big, _bad = _split_inputs(documents_in, header_footer_df,
+    small, big, _bad = _split_inputs(documents_in, header_footer_df, cfg,
                                      skew_threshold)
     # big+bad docs: quarantined, no span rows at all (exploded shape
     # has no empty-doc rows by definition)

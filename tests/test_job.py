@@ -179,6 +179,43 @@ def test_job_routes_call_wrapped_names(spark, job_paths, fixture_dir,
         assert calls == [want], mode
 
 
+def test_job_geom_builds_no_header_footer_under_default_config(
+        spark, job_paths, tmp_path, monkeypatch):
+    """The job's config (the reference quirk, broken_hf_strip) never
+    reads header/footer strings, so --input --geom must not build the
+    header/footer frame, and it commits the same rows as a run without
+    --geom. A missing --geom path still fails."""
+    from pyspark.errors import AnalysisException
+
+    import pdfspark.operators.boilerplate as BP
+
+    calls = []
+    real = BP.header_footer
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(BP, "header_footer", counting)
+    cols = ("doc_id", "status", "spans", "sections")
+    rows = {}
+    for name, geom in (("geom", ["--geom", job_paths["geom"]]),
+                       ("nogeom", [])):
+        out = str(tmp_path / name)
+        assert main(["--input", job_paths["input"], *geom,
+                     "--output", out]) == 0
+        rows[name] = sorted(_read_out(spark, out).select(*cols).collect())
+    assert calls == []
+    assert rows["geom"] == rows["nogeom"]
+    assert len(rows["geom"]) == spark.read.parquet(job_paths["input"]).count()
+
+    with pytest.raises(AnalysisException):
+        main(["--input", job_paths["input"],
+              "--geom", str(tmp_path / "no_such_geom"),
+              "--output", str(tmp_path / "missing")])
+    assert not committed_snapshots(str(tmp_path / "missing"))
+
+
 def test_job_crash_between_data_and_metrics_manifest_heals(
         spark, job_paths, tmp_path, monkeypatch):
     """Kill between the data manifest publish and the metrics manifest

@@ -53,11 +53,11 @@ SMJ_ALLOWED = {
 # first move is a selective scan (kind=..., page ranges, margins).
 PUSHDOWN_REQUIRED = {
     "x11_f3_cleanup", "s34_page_scans", "w1_reading_order",
-    "j4_toc_skeleton", "ep1_extract_spans", "ep1_extract_sections",
-    "ep1_extract_spans_sql", "a1_header_footer", "f10_f12_margins",
-    "j7_tabular_pairs", "j6_keyword_hits", "ep3_tables_sql",
-    "j3_tables_merged", "j1_heading_lookup", "j2_table_titles",
-    "a5_table_stats", "x1_w3_classify_flags", "a8_sections",
+    "j4_toc_skeleton", "ep1_extract_spans_sql", "a1_header_footer",
+    "f10_f12_margins", "j7_tabular_pairs", "j6_keyword_hits",
+    "ep3_tables_sql", "j3_tables_merged", "j1_heading_lookup",
+    "j2_table_titles", "a5_table_stats", "x1_w3_classify_flags",
+    "a8_sections",
 }
 
 # Exchange-count ceilings per query (today's audited values; lower is
@@ -82,12 +82,15 @@ MAX_EXCHANGES = {
     "m4_audio_chunks": 0, "x11_f3_cleanup": 0, "s1_binary_decode": 0,
     "s34_page_scans": 0, "s13_embeddings_upsert": 1, "s6_lines_source": 0,
     "s7_json_source": 0, "x19_html_tables": 0, "s15_collated_tables": 1,
-    "s1_stream_extract": 0, "ep1_extract_spans": 5,
-    "ep1_extract_spans_sql": 3, "ep1_extract_sections": 5,
+    # ep1 spans/sections and lineage 5 -> 1: the default config never
+    # reads header/footer, so the fold joins no header/footer frame and
+    # its salted repartition is the one exchange
+    "s1_stream_extract": 0, "ep1_extract_spans": 1,
+    "ep1_extract_spans_sql": 3, "ep1_extract_sections": 1,
     # w1 1 -> 2 (round 5): the dual-variant row unions the ref window
     # (one exchange) with the XY-cut applyInPandas grouping (one
     # exchange on the same (doc_id, page_id) keys)
-    "lineage_metrics": 5, "w1_reading_order": 2, "a1_header_footer": 5,
+    "lineage_metrics": 1, "w1_reading_order": 2, "a1_header_footer": 5,
     "f10_f12_margins": 4, "a5_table_stats": 5, "ep3_tables_sql": 5,
     "ep3_tables_doc_scope": 6, "j3_tables_merged": 14,
     "ep3_tables_exact": 5, "j2_table_titles": 14, "j4_toc_skeleton": 1,
@@ -148,6 +151,24 @@ def test_filter_pushdown_reaches_scans(plans):
         and plans[n]["pushed"] == 0
     }
     assert not bad, f"pushdown missing at the scan: {bad}"
+
+
+# Span-fold queries under the default config (broken_hf_strip): the
+# fold never reads the header/footer strings, so its plan must not scan
+# the geometry table that header_footer() aggregates.
+NO_GEOM_SCAN = {"ep1_extract_spans", "ep1_extract_sections",
+                "lineage_metrics"}
+
+
+def test_default_span_fold_scans_no_geometry(plans):
+    bad = {
+        n: plans[n] for n in NO_GEOM_SCAN
+        if isinstance(plans[n], str)
+        or "spans_geom.parquet" in plans[n]["scans"]
+        or "documents_in.parquet" not in plans[n]["scans"]
+        or plans[n]["bhj"] != 0
+    }
+    assert not bad, f"header/footer side input still planned: {bad}"
 
 
 def test_exchange_counts_bounded(plans):

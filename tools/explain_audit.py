@@ -14,6 +14,7 @@ waiting for an ad-hoc run of this tool.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -22,7 +23,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SKIP = {"s8_stream_windowed", "s8_stream_sessionize"}
 
 
+# a file scan's location, e.g. "Location: InMemoryFileIndex(1 paths)
+# [file:/data/spans_geom.parquet]"; Spark elides long path lists
+_LOCATION = re.compile(r"Location: \w+\(\d+ paths?\)\[([^\]]*)\]")
+
+
 def plan_summary(plan: str) -> dict:
+    """Counts of the plan's joins, exchanges, Python stages and scans
+    with pushed filters, plus ``scans``: the sorted file names (last
+    path component) of every location the plan scans."""
     return {
         "bhj": plan.count("BroadcastHashJoin"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
@@ -35,6 +44,11 @@ def plan_summary(plan: str) -> dict:
             for ln in plan.splitlines()
             if "PushedFilters" in ln and "PushedFilters: []" not in ln
         ),
+        "scans": sorted({
+            os.path.basename(path.rstrip("/"))
+            for paths in _LOCATION.findall(plan)
+            for path in paths.split(", ") if path
+        }),
     }
 
 
