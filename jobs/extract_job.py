@@ -329,8 +329,6 @@ def main(argv=None) -> int:
     else:
         spark = build_session()
 
-    from pdfspark.config import ExtractConfig
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.extract import extract_documents, lineage_table
 
     # truthiness, not `is not None`: an empty-string input (unset env
@@ -381,15 +379,13 @@ def main(argv=None) -> int:
         full = _prepare_output(spark, args, extract_payloads(
             read_payloads(spark, args.payloads)))
     else:
-        cfg = ExtractConfig()
-        # reading the schema fails fast on a missing path; the
-        # header/footer frame is built only for a config that reads it
-        geom = spark.read.parquet(args.geom) if args.geom else None
-        hf = header_footer(geom) \
-            if geom is not None and not cfg.broken_hf_strip else None
+        if args.geom:
+            # the default config never reads header/footer strings, so
+            # nothing is built from --geom; reading its schema still
+            # fails fast on a missing path
+            spark.read.parquet(args.geom)
         full = extract_documents(
-            _prepare_output(spark, args, spark.read.parquet(args.input)),
-            hf, cfg)
+            _prepare_output(spark, args, spark.read.parquet(args.input)))
 
     # persist once: the data write materialises the fold, and the
     # metrics aggregation reads the cache (no second fold)

@@ -64,62 +64,50 @@ def test_fold_matches_oracle_all_fixture_docs(spark, spans_geom, cfg):
 
 
 def test_spark_extract_matches_fold(spark, documents_in, spans_geom):
-    cfg = ExtractConfig()
-    hf_df = all_doc_headers_footers(spans_geom)
-    out = extract_documents(documents_in, hf_df, cfg)
-    got = {r.doc_id: (r.status, [t.asDict() for t in r.spans])
-           for r in out.collect()}
-    hf = _hf_strings(spark, spans_geom)
-    for doc_id, spans in _docs().items():
-        sp = [dict(kind=s["kind"], text=s["text"], media_ref=s["media_ref"],
-                   offset=s["offset"]) for s in spans]
-        h, f = hf.get(doc_id, ("", ""))
-        want = fold_document(sp, h, f, cfg)
-        assert got[doc_id][0] == want["status"]
-        assert got[doc_id][1] == want["out_spans"], doc_id
-
-
-def test_substring_hf_strip_joins_and_matches_fold(spark, documents_in,
-                                                   spans_geom):
-    """Under broken_hf_strip=False the fold reads each doc's
-    header/footer strings: the plain fold and the skew route (forced
-    onto the chunk fold for the skew doc) must still join the
-    header/footer frame and equal fold_document run with those
-    strings — the default config's skipped side input must not leak
-    into the substring strip."""
+    """The plain fold and the skew route (forced onto the chunk fold
+    for the skew doc) equal fold_document run with each doc's
+    header/footer strings, under the default reference quirk and under
+    the substring strip (broken_hf_strip=False). Only the substring
+    strip reads the strings, so only its plans scan and join the
+    header/footer frame: the default's skipped side input must not
+    leak into it."""
     from tools.explain_audit import plan_summary
 
-    cfg = ExtractConfig(broken_hf_strip=False)
     hf_df = all_doc_headers_footers(spans_geom)
     hf = _hf_strings(spark, spans_geom)
-    want, n_stripped = {}, 0
-    for doc_id, spans in _docs().items():
-        sp = [dict(kind=s["kind"], text=s["text"], media_ref=s["media_ref"],
-                   offset=s["offset"]) for s in spans]
-        res = fold_document(sp, *hf.get(doc_id, ("", "")), cfg)
-        want[doc_id] = (res["status"], res["out_spans"])
-        n_stripped += res["out_spans"] != fold_document(
-            sp, "", "", cfg)["out_spans"]
-    assert n_stripped > 0, "no fixture doc exercises the substring strip"
+    for cfg in (ExtractConfig(), ExtractConfig(broken_hf_strip=False)):
+        want, n_stripped = {}, 0
+        for doc_id, spans in _docs().items():
+            sp = [dict(kind=s["kind"], text=s["text"],
+                       media_ref=s["media_ref"], offset=s["offset"])
+                  for s in spans]
+            res = fold_document(sp, *hf.get(doc_id, ("", "")), cfg)
+            want[doc_id] = (res["status"], res["out_spans"])
+            n_stripped += res["out_spans"] != fold_document(
+                sp, "", "", cfg)["out_spans"]
+        reads_hf = not cfg.broken_hf_strip
+        assert (n_stripped > 0) == reads_hf, (cfg, n_stripped)
 
-    routes = {
-        "extract_documents": extract_documents(documents_in, hf_df, cfg),
-        "extract_spans_split": extract_spans_split(
-            documents_in, hf_df, cfg=cfg, skew_threshold=500,
-            spans_per_chunk=200),
-    }
-    for name, out in routes.items():
-        s = plan_summary(out._jdf.queryExecution().executedPlan().toString())
-        assert "spans_geom.parquet" in s["scans"], (name, s)
-        assert s["bhj"] + s["smj"] > 0, (name, s)
-        rows = out.collect()
-        got = {r.doc_id: [t.asDict() for t in r.spans] for r in rows}
-        assert set(got) == set(want), name
-        for doc_id, (status, spans) in want.items():
-            assert got[doc_id] == spans, (name, doc_id)
-        if "status" in out.columns:
-            assert {r.doc_id: r.status for r in rows} == {
-                d: w[0] for d, w in want.items()}, name
+        routes = {
+            "extract_documents": extract_documents(documents_in, hf_df, cfg),
+            "extract_spans_split": extract_spans_split(
+                documents_in, hf_df, cfg=cfg, skew_threshold=500,
+                spans_per_chunk=200),
+        }
+        for name, out in routes.items():
+            s = plan_summary(
+                out._jdf.queryExecution().executedPlan().toString())
+            assert ("spans_geom.parquet" in s["scans"]) == reads_hf, (
+                name, cfg, s)
+            assert (s["bhj"] + s["smj"] > 0) == reads_hf, (name, cfg, s)
+            rows = out.collect()
+            got = {r.doc_id: [t.asDict() for t in r.spans] for r in rows}
+            assert set(got) == set(want), (name, cfg)
+            for doc_id, (status, spans) in want.items():
+                assert got[doc_id] == spans, (name, cfg, doc_id)
+            if "status" in out.columns:
+                assert {r.doc_id: r.status for r in rows} == {
+                    d: w[0] for d, w in want.items()}, (name, cfg)
 
 
 def test_partitioning_determinism(spark, documents_in, spans_geom):
