@@ -71,7 +71,6 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: span-ize the sf0.001 documents table, union with the
     layout fixtures, run boilerplate-strip -> classify -> section
     fill-down -> section assembly; returns the sections table."""
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.classify import (
         classify_spans,
         explode_documents,
@@ -87,11 +86,8 @@ def entry(spark: SparkSession) -> DataFrame:
     fixture_docs = _docs_in(spark, sf_dir)
     all_docs = spanized.unionByName(fixture_docs)
 
-    geom = _geom(spark, sf_dir)
-    hf = header_footer(geom)
-
     spans = explode_documents(all_docs)
-    spans = strip_boilerplate(spans, hf)
+    spans = strip_boilerplate(spans, _geom(spark, sf_dir))
     classified = with_current_section(classify_spans(spans))
     return sections_assembled(classified).select(
         "doc_id",
@@ -220,12 +216,9 @@ def _q_embeddings_upsert(spark, sf_dir):
 
 
 def _tables_sql(spark, sf_dir):
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.tables import extract_tables_sql
 
-    geom = _geom(spark, sf_dir)
-    hf = header_footer(geom)
-    return extract_tables_sql(geom, hf)
+    return extract_tables_sql(_geom(spark, sf_dir))
 
 
 def _q_tables_sql(spark, sf_dir):
@@ -244,12 +237,9 @@ def _q_tables_doc_scope(spark, sf_dir):
     """EP3 doc-scope variant (ref textboxes_to_tabular_json fed the
     whole doc stream): continued titles do NOT open a table; their
     rows continue the current one across pages."""
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.tables import extract_tables_sql
 
-    geom = _geom(spark, sf_dir)
-    hf = header_footer(geom)
-    t = extract_tables_sql(geom, hf, scope="doc")
+    t = extract_tables_sql(_geom(spark, sf_dir), scope="doc")
     return t.select(
         "doc_id",
         "page_id",
@@ -279,12 +269,9 @@ def _q_tables_exact(spark, sf_dir):
     output (the oracle_tables_exact.parquet sidecar synth writes at
     fixture-gen time), so schema/column changes here must be mirrored
     in that sidecar."""
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.tables import extract_tables_exact
 
-    geom = _geom(spark, sf_dir)
-    hf = header_footer(geom)
-    t = extract_tables_exact(geom, hf)
+    t = extract_tables_exact(_geom(spark, sf_dir))
     return t.select(
         "doc_id", "page_id", "table_id", "title", "row_id",
         F.array_join("cells", "|").alias("cells"),
@@ -310,7 +297,6 @@ def _q_toc_skeleton(spark, sf_dir):
 
 
 def _classified(spark, sf_dir):
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.classify import (
         classify_spans,
         explode_documents,
@@ -318,10 +304,8 @@ def _classified(spark, sf_dir):
         with_current_section,
     )
 
-    geom = _geom(spark, sf_dir)
-    hf = header_footer(geom)
     spans = explode_documents(_docs_in(spark, sf_dir))
-    spans = strip_boilerplate(spans, hf)
+    spans = strip_boilerplate(spans, _geom(spark, sf_dir))
     return with_current_section(classify_spans(spans))
 
 
@@ -393,13 +377,12 @@ def _q_extract_spans(spark, sf_dir):
     forced-threshold tests; its array-collecting sibling
     extract_spans_split is what the bench scaling job drives. The
     DuckDB oracle replicates the quirk-mode semantics relationally
-    (labels are state-free, see pdfspark/fold.py)."""
-    from pdfspark.operators.boilerplate import header_footer
+    (labels are state-free, see pdfspark/fold.py). The geometry frame
+    goes in as the header/footer source; the default config never
+    reads the strings, so the plan scans no geometry."""
     from pdfspark.operators.extract import extract_spans_auto
 
-    geom = _geom(spark, sf_dir)
-    hf = header_footer(geom)
-    return extract_spans_auto(_docs_in(spark, sf_dir), hf)
+    return extract_spans_auto(_docs_in(spark, sf_dir), _geom(spark, sf_dir))
 
 
 def _q_extract_spans_sql(spark, sf_dir):
@@ -416,12 +399,11 @@ def _q_extract_sections(spark, sf_dir):
     event replay; this query never reads spans, so the nested
     (spans, sections) row is never built) — oracle = materialized
     output of the independent reference transliteration; parity is
-    additionally pytest-gated (tests/test_extract_parity)."""
-    from pdfspark.operators.boilerplate import header_footer
+    additionally pytest-gated (tests/test_extract_parity). As in
+    ep1_extract_spans, the geometry frame is passed but not scanned
+    under the default config."""
     from pdfspark.operators.extract import extract_sections_auto
 
-    geom = _geom(spark, sf_dir)
-    hf = header_footer(geom)
     # the default threshold targets genuine stragglers (docs whose
     # sequential fold time rivals a whole partition); round-3 A/B
     # showed chunking a 20k-span doc LOSES ~1 s to the chunk
@@ -429,7 +411,7 @@ def _q_extract_sections(spark, sf_dir):
     # cost entirely when the corpus max is below threshold. The
     # chunked branch is equality-pinned by tests at a forced low
     # threshold.
-    out = extract_sections_auto(_docs_in(spark, sf_dir), hf)
+    out = extract_sections_auto(_docs_in(spark, sf_dir), _geom(spark, sf_dir))
     return out.select(
         "doc_id", "status", F.posexplode("sections").alias("section_id", "sec")
     ).select(
@@ -446,15 +428,15 @@ def _q_lineage(spark, sf_dir):
     bytes_in) — the deterministic foundation the per-partition metrics
     table (extract.lineage_table, exercised by jobs/extract_job and its
     pytest) rolls up from. Fully SQL-oracled: spans_in/bytes_in from
-    the input span arrays, spans_out from the extract-spans oracle."""
-    from pdfspark.operators.boilerplate import header_footer
+    the input span arrays, spans_out from the extract-spans oracle.
+    Like ep1_extract_spans, it passes the geometry frame, which the
+    default config never scans."""
     from pdfspark.operators.extract import extract_documents
 
-    geom = _geom(spark, sf_dir)
-    hf = header_footer(geom)
     # spans_only: this query reads five scalar columns — no reason to
     # run the sections state machine or ship its arrays through Arrow
-    out = extract_documents(_docs_in(spark, sf_dir), hf, spans_only=True)
+    out = extract_documents(_docs_in(spark, sf_dir), _geom(spark, sf_dir),
+                            spans_only=True)
     return out.select(
         "doc_id",
         "status",

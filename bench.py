@@ -96,12 +96,13 @@ REPLICATE = int(os.environ.get("PDFSPARK_BENCH_REPLICATE", "48"))
 
 
 def _scaling_job(spark, sf_dir: str, k: int):
-    """The flagship job on a K-times-replicated input: BOTH inputs
-    (span documents and layout geometry, from which header/footer
-    boilerplate is derived) are replicated with distinct doc_ids, so
-    every stage's work grows with K — same job, bigger input.
+    """The flagship span job on a K-times-replicated span input
+    (distinct doc_ids, same per-doc work), so the fold's work grows
+    with K — same job, bigger input. It runs under the default config,
+    which reads no header/footer strings, so no geometry input is
+    given: the job is the span fold and its skew route alone.
 
-    The BASE inputs are repartitioned to a FIXED 64 slices (same at
+    The BASE input is repartitioned to a FIXED 64 slices (same at
     every level) BEFORE the replicating crossJoin: each sf0.1
     fixture is ONE parquet split, so the crossJoin output — K× the
     bytes — would otherwise be produced by a single task, and the
@@ -110,15 +111,10 @@ def _scaling_job(spark, sf_dir: str, k: int):
     the replication harness, not of the job (a real corpus arrives
     as thousands of splits). Base-first order keeps the one serial
     exchange at 1× data and multiplies across 64 parallel tasks."""
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.extract import extract_spans_split
 
-    geom = E._geom(spark, sf_dir)
-    geom_k = _replicated(spark, geom, k,
-                         [c for c in geom.columns if c != "doc_id"])
-    hf_k = header_footer(geom_k)
     docs_k = _replicated(spark, E._docs_in(spark, sf_dir), k, ["spans"])
-    return extract_spans_split(docs_k, hf_k, skew_threshold=2000,
+    return extract_spans_split(docs_k, skew_threshold=2000,
                                spans_per_chunk=512)
 
 

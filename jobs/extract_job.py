@@ -62,11 +62,11 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
    and only an append above defaultParallelism x the advisory size
    writes files of about the advisory size
  - every committed parquet file is zstd, Iceberg's default codec
- - --geom's header/footer strings feed only the substring strip
-   (ExtractConfig(broken_hf_strip=False)); the job folds under the
-   reference-quirk default, which never reads them, so it builds no
-   header/footer frame: no geometry scan, aggregation or join runs.
-   The path's schema is still read, so a missing --geom fails as before
+ - --geom is passed to the fold as its header/footer source; the fold
+   builds header/footer strings from it only under the substring strip
+   (ExtractConfig(broken_hf_strip=False)). The job folds under the
+   reference-quirk default, so no geometry scan, aggregation or join
+   runs; reading the path still fails fast when it is missing
 """
 
 from __future__ import annotations
@@ -272,10 +272,10 @@ def main(argv=None) -> int:
              "--metrics records per-partition lineage rows.")
     ap.add_argument(
         "--geom", default=None,
-        help="spans_geom parquet, --input only: the per-doc "
-             "header/footer source of the substring strip. The job's "
-             "reference-quirk config (broken_hf_strip) does not read "
-             "it; the path must still exist.")
+        help="spans_geom parquet, --input only: the fold's per-doc "
+             "header/footer source. Under the job's reference-quirk "
+             "config (broken_hf_strip) nothing is built from it; the "
+             "path must still exist.")
     ap.add_argument("--output", required=True)
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--resume", action="store_true")
@@ -379,13 +379,10 @@ def main(argv=None) -> int:
         full = _prepare_output(spark, args, extract_payloads(
             read_payloads(spark, args.payloads)))
     else:
-        if args.geom:
-            # the default config never reads header/footer strings, so
-            # nothing is built from --geom; reading its schema still
-            # fails fast on a missing path
-            spark.read.parquet(args.geom)
+        geom = spark.read.parquet(args.geom) if args.geom else None
         full = extract_documents(
-            _prepare_output(spark, args, spark.read.parquet(args.input)))
+            _prepare_output(spark, args, spark.read.parquet(args.input)),
+            geom)
 
     # persist once: the data write materialises the fold, and the
     # metrics aggregation reads the cache (no second fold)

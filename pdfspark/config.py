@@ -61,12 +61,8 @@ class ExtractConfig:
     # 'header'/'footer' texts stripped, src/processors/
     # element_processors.py:69 with the dict from pdf_extractor.py:363);
     # False applies the intended substring strip. Only the substring
-    # strip reads the per-doc header/footer strings, so under True the
-    # extraction routes never join the header/footer frame
-    # (operators/extract.py::_with_hf) and jobs/extract_job never
-    # builds it.
+    # strip reads the per-doc header/footer strings, so under True no
+    # extraction route builds them from the geometry frame it is given
+    # (operators/extract.py::_with_hf).
     broken_hf_strip: bool = True
-    top_margin: float = TOP_MARGIN
-    bottom_margin: float = BOTTOM_MARGIN
-    y_tolerance: float = Y_TOLERANCE
     patterns_to_strip: tuple = tuple(PATTERNS_TO_STRIP)

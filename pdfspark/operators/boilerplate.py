@@ -4,8 +4,8 @@ Reproduces ``get_header_footer_text`` (ref src/utilities/parse_util.py:
 417-442) exactly, but as one aggregation instead of a second full pass
 over every document:
 
-  * header candidate iff ``page_y1 - y0 <= top_margin``
-  * footer candidate iff not header and ``y0 <= bottom_margin``
+  * header candidate iff ``page_y1 - y0 <= TOP_MARGIN``
+  * footer candidate iff not header and ``y0 <= BOTTOM_MARGIN``
   * per doc, in (page, offset) order, concatenate candidate texts
     (newlines removed) into one string, skipping a text if it is
     already a *substring* of the accumulated string — the reference's
@@ -13,6 +13,9 @@ over every document:
 
 The order-sensitive substring fold is expressed with
 ``aggregate(sort_array(collect_list(...)))`` — all JVM-side.
+``with_header_footer`` is the one place a consumer's doc stream gets
+the strings: consumers pass the geometry frame, never a built
+header/footer frame.
 """
 
 from pyspark.sql import DataFrame
@@ -49,11 +52,7 @@ def with_page_y1(spans_geom: DataFrame) -> DataFrame:
     )
 
 
-def margin_candidates(
-    spans_geom: DataFrame,
-    top_margin: float = TOP_MARGIN,
-    bottom_margin: float = BOTTOM_MARGIN,
-) -> DataFrame:
+def margin_candidates(spans_geom: DataFrame) -> DataFrame:
     """F10/F11 — TextBox spans in the header/footer bands, with the
     newline-stripped comparison text."""
     df = with_page_y1(spans_geom).filter(F.col("kind") == "TextBox")
@@ -65,8 +64,8 @@ def margin_candidates(
         "txt",
         F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), "\n", ""),
     )
-    is_hdr = (F.col("page_y1") - F.col("y0")) <= F.lit(top_margin)
-    is_ftr = (~is_hdr) & (F.col("y0") <= F.lit(bottom_margin))
+    is_hdr = (F.col("page_y1") - F.col("y0")) <= F.lit(TOP_MARGIN)
+    is_ftr = (~is_hdr) & (F.col("y0") <= F.lit(BOTTOM_MARGIN))
     return (
         df.withColumn("is_header", is_hdr)
         .withColumn("is_footer", is_ftr)
@@ -95,13 +94,9 @@ def _dedup_concat(col):
     )
 
 
-def header_footer(
-    spans_geom: DataFrame,
-    top_margin: float = TOP_MARGIN,
-    bottom_margin: float = BOTTOM_MARGIN,
-) -> DataFrame:
+def header_footer(spans_geom: DataFrame) -> DataFrame:
     """Per-doc boilerplate strings: (doc_id, header, footer)."""
-    cands = margin_candidates(spans_geom, top_margin, bottom_margin)
+    cands = margin_candidates(spans_geom)
     agg = cands.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(
@@ -121,25 +116,32 @@ def header_footer(
     )
 
 
-def all_doc_headers_footers(spans_geom: DataFrame, docs: DataFrame | None = None,
-                            **kw) -> DataFrame:
-    """header_footer() left-joined back onto the full doc list so docs
-    with no margin spans get empty strings (reference initializes
-    header/footer to '', parse_util.py:421-425).
-
-    Only needed when the hf table itself is the output (a1). Every
-    extract/tables/classify consumer left-joins hf onto its own doc
-    stream and fillna('')s, which makes this base join redundant
-    there — those call sites use header_footer() directly and save a
-    distinct-aggregate over the geometry table plus a join."""
-    hf = header_footer(spans_geom, **kw)
-    base = (docs if docs is not None else spans_geom.select("doc_id").distinct())
-    return (
-        base.select("doc_id")
-        .distinct()
-        .join(hf, "doc_id", "left")
-        .fillna({"header": "", "footer": ""})
+def with_header_footer(df: DataFrame,
+                       spans_geom: DataFrame | None) -> DataFrame:
+    """``df`` with its doc's ``header``/``footer`` strings — the one
+    place any consumer gets them. They come from ``header_footer`` over
+    ``spans_geom``, left-joined on doc_id, with '' for docs that have
+    no margin spans (the reference initializes both to '',
+    parse_util.py:421-425). ``spans_geom=None`` gives empty literals and
+    plans no geometry scan, aggregation or join: a consumer that does
+    not read the strings (the extraction fold under the reference
+    quirk) passes None."""
+    if spans_geom is None:
+        return df.withColumn("header", F.lit("")).withColumn(
+            "footer", F.lit(""))
+    return df.join(header_footer(spans_geom), "doc_id", "left").fillna(
+        {"header": "", "footer": ""}
     )
+
+
+def all_doc_headers_footers(spans_geom: DataFrame) -> DataFrame:
+    """One (doc_id, header, footer) row per doc of ``spans_geom``,
+    docs with no margin spans included with empty strings — for when
+    the strings themselves are the output (a1). Consumers that strip
+    boilerplate take the geometry frame and call with_header_footer on
+    their own doc stream instead."""
+    return with_header_footer(spans_geom.select("doc_id").distinct(),
+                              spans_geom)
 
 
 def margin_candidates_normalized(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pdfspark.functions import patterns as P
 from pdfspark.functions.text import first_line, line_count, replace_extra_space
+from pdfspark.operators.boilerplate import with_header_footer
 
 
 def explode_documents(documents_in: DataFrame) -> DataFrame:
@@ -26,21 +27,16 @@ def explode_documents(documents_in: DataFrame) -> DataFrame:
 
 
 def strip_boilerplate(
-    spans: DataFrame, header_footer_df: DataFrame | None = None
+    spans: DataFrame, spans_geom: DataFrame | None = None
 ) -> DataFrame:
     """F2 + F3 on an exploded span table (text spans only).
 
     F2 drops a span whose newline-stripped text is a substring of the
-    doc's header/footer string (ref element_processors.py:68-70); F3
-    drops page-number prefixes (ref :73-74, parse_util.py:407-415).
+    doc's header/footer string from ``spans_geom`` (ref
+    element_processors.py:68-70); F3 drops page-number prefixes (ref
+    :73-74, parse_util.py:407-415).
     """
-    df = spans
-    if header_footer_df is not None:
-        df = df.join(header_footer_df, "doc_id", "left").fillna(
-            {"header": "", "footer": ""}
-        )
-    else:
-        df = df.withColumn("header", F.lit("")).withColumn("footer", F.lit(""))
+    df = with_header_footer(spans, spans_geom)
     # Python str.strip() semantics + NULL coercion, matching the fold
     # (fold.py: s["text"].lstrip().rstrip() if not None else '') — see
     # the same pytrim seam in extract.py's relational path: F.trim is

@@ -4,6 +4,10 @@
 with explicit salted repartition on xxhash64(doc_id); emits spans +
 sections + per-doc lineage columns.
 
+Every route takes the optional geometry frame ``spans_geom``; only
+the substring strip (``broken_hf_strip=False``) builds per-doc
+header/footer strings from it (see _with_hf).
+
 Skew routes (``*_split``, picked by the ``*_auto`` probes): docs above
 ``skew_threshold`` spans (default config.SKEW_SPAN_THRESHOLD) are
 chunk-folded in parallel and reassembled — safe because span labels
@@ -33,6 +37,7 @@ from pyspark.sql import types as T
 
 from pdfspark.config import SKEW_SPAN_THRESHOLD, ExtractConfig
 from pdfspark.fold import fold_document
+from pdfspark.operators.boilerplate import with_header_footer
 from pdfspark.schema import SPAN
 
 SECTION_STRUCT = T.StructType(
@@ -68,23 +73,16 @@ EXTRACT_SPANS_ONLY = T.StructType(
 )
 
 
-def _with_hf(documents_in: DataFrame, header_footer_df: DataFrame | None,
-             cfg: ExtractConfig):
-    """The fold's input with per-doc ``header``/``footer`` strings —
-    the one place that decides whether the fold gets a header/footer
-    side input. Only the substring strip (``broken_hf_strip=False``)
-    reads the strings, so only then is ``header_footer_df`` joined on;
-    under the reference quirk (the default) the columns are empty
-    literals and the header/footer plan is never executed: the fold is
-    a Python UDF, so Spark could not prune that geometry scan,
-    aggregation and join itself."""
-    if header_footer_df is None or cfg.broken_hf_strip:
-        return documents_in.withColumn("header", F.lit("")).withColumn(
-            "footer", F.lit("")
-        )
-    return documents_in.join(header_footer_df, "doc_id", "left").fillna(
-        {"header": "", "footer": ""}
-    )
+def _with_hf(documents_in: DataFrame, spans_geom: DataFrame | None,
+             cfg: ExtractConfig) -> DataFrame:
+    """The fold's input with per-doc ``header``/``footer`` strings.
+    Only the substring strip (``broken_hf_strip=False``) reads them, so
+    only then does ``with_header_footer`` get the geometry; under the
+    reference quirk (the default) the columns are empty literals and no
+    header/footer plan exists: the fold is a Python UDF, so Spark could
+    not prune that geometry scan, aggregation and join itself."""
+    return with_header_footer(
+        documents_in, None if cfg.broken_hf_strip else spans_geom)
 
 
 def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
@@ -147,18 +145,18 @@ def _fold_salted(df: DataFrame, cfg: ExtractConfig, spans_only: bool = False,
 
 def extract_documents(
     documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
+    spans_geom: DataFrame | None = None,
     cfg: ExtractConfig = ExtractConfig(),
     num_partitions: int | None = None,
     spans_only: bool = False,
 ) -> DataFrame:
     """Sequential-per-doc exact fold; salted repartition first.
-    ``header_footer_df`` (doc_id, header, footer) is joined on only
-    when ``cfg`` reads it (``broken_hf_strip=False``; see _with_hf),
-    so under the default config it may be passed and is never run.
+    ``spans_geom`` is the geometry the per-doc header/footer strings
+    come from; under the default config they are never read, so no
+    header/footer plan is built from it (see _with_hf).
     ``spans_only`` drops the sections side-output at the fold (see
     _fold_batches) — for consumers that never read it."""
-    df = _with_hf(documents_in, header_footer_df, cfg)
+    df = _with_hf(documents_in, spans_geom, cfg)
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # hash-repartition on doc_id: uniform unless one doc is huge (that
     # case goes through the skew split routes)
@@ -242,7 +240,7 @@ def _explode_span_rows(folded: DataFrame) -> DataFrame:
     )
 
 
-def _split_inputs(documents_in, header_footer_df, cfg, skew_threshold):
+def _split_inputs(documents_in, spans_geom, cfg, skew_threshold):
     """(small, big, big_bad) partition of the input by size and the
     DecodeError quarantine marker. A pathologically large doc can
     still carry a DecodeError: the sequential fold quarantines the
@@ -257,7 +255,7 @@ def _split_inputs(documents_in, header_footer_df, cfg, skew_threshold):
     extract_sections_auto becomes a manifest-statistics lookup.
     Persisting the flagged frame instead would pin the whole fat
     table in executor memory — wrong trade at that scale."""
-    df = _with_hf(documents_in, header_footer_df, cfg)
+    df = _with_hf(documents_in, spans_geom, cfg)
     # size(NULL) is NULL under ANSI: without the coalesce a NULL-spans
     # doc falls out of ALL THREE branches and silently vanishes from
     # the split path, while the sequential fold emits status='empty'
@@ -373,7 +371,7 @@ def _assemble_big_spans(folded: DataFrame) -> DataFrame:
 
 def extract_spans_split(
     documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
+    spans_geom: DataFrame | None = None,
     cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
@@ -397,7 +395,7 @@ def extract_spans_split(
       For sections on the skew path see extract_sections_split; for
       the nested-array-free row shape see extract_spans_split_rows.
     """
-    small, big, bad = _split_inputs(documents_in, header_footer_df, cfg,
+    small, big, bad = _split_inputs(documents_in, spans_geom, cfg,
                                     skew_threshold)
     empty_spans = F.array().cast(T.ArrayType(SPAN)).alias("spans")
     big_bad = bad.select("doc_id", empty_spans)
@@ -803,7 +801,7 @@ def _big_doc_sections(big: DataFrame, folded: DataFrame,
 
 def extract_sections_split(
     documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
+    spans_geom: DataFrame | None = None,
     cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
@@ -814,7 +812,7 @@ def extract_sections_split(
 
     Output: (doc_id, status, sections).
     """
-    small, big, bad = _split_inputs(documents_in, header_footer_df, cfg,
+    small, big, bad = _split_inputs(documents_in, spans_geom, cfg,
                                     skew_threshold)
     folded = _fold_big_chunks(big, cfg, spans_per_chunk,
                               collect_events=True)
@@ -839,7 +837,7 @@ def extract_sections_split(
 
 def extract_documents_split(
     documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
+    spans_geom: DataFrame | None = None,
     cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
@@ -861,7 +859,7 @@ def extract_documents_split(
     extract_sections_split instead. The cached big-doc intermediates
     are appended to ``persisted`` for the caller to unpersist once the
     result is materialised."""
-    small, big, bad = _split_inputs(documents_in, header_footer_df, cfg,
+    small, big, bad = _split_inputs(documents_in, spans_geom, cfg,
                                     skew_threshold)
 
     def input_lineage(df, status):
@@ -910,7 +908,7 @@ def extract_documents_split(
 
 def extract_sections_auto(
     documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
+    spans_geom: DataFrame | None = None,
     cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
@@ -932,16 +930,16 @@ def extract_sections_auto(
     pinned by the forced-threshold tests)."""
     mx = _max_span_count(documents_in)
     if mx <= skew_threshold:
-        return extract_documents(documents_in, header_footer_df, cfg).select(
+        return extract_documents(documents_in, spans_geom, cfg).select(
             "doc_id", "status", "sections"
         )
-    return extract_sections_split(documents_in, header_footer_df, cfg,
+    return extract_sections_split(documents_in, spans_geom, cfg,
                                   skew_threshold, spans_per_chunk)
 
 
 def extract_spans_auto(
     documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
+    spans_geom: DataFrame | None = None,
     cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
@@ -962,18 +960,18 @@ def extract_spans_auto(
     """
     mx = _max_span_count(documents_in)
     if mx > skew_threshold:
-        return extract_spans_split_rows(documents_in, header_footer_df,
+        return extract_spans_split_rows(documents_in, spans_geom,
                                         cfg, skew_threshold,
                                         spans_per_chunk)
     return _explode_span_rows(
-        extract_documents(documents_in, header_footer_df, cfg,
+        extract_documents(documents_in, spans_geom, cfg,
                           spans_only=True)
     )
 
 
 def extract_spans_split_rows(
     documents_in: DataFrame,
-    header_footer_df: DataFrame | None = None,
+    spans_geom: DataFrame | None = None,
     cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
@@ -993,7 +991,7 @@ def extract_spans_split_rows(
     anyway (the driver contract's nested arrays are re-exploded by
     every consumer).
     """
-    small, big, _bad = _split_inputs(documents_in, header_footer_df, cfg,
+    small, big, _bad = _split_inputs(documents_in, spans_geom, cfg,
                                      skew_threshold)
     # big+bad docs: quarantined, no span rows at all (exploded shape
     # has no empty-doc rows by definition)

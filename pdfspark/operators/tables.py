@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from pdfspark.config import Y_TOLERANCE
 from pdfspark.functions import patterns as P
+from pdfspark.operators.boilerplate import with_header_footer
 from pdfspark.operators.reading_order import with_reading_order
 
 TABLE_ROWS_SCHEMA = T.StructType(
@@ -49,8 +50,8 @@ TABLE_ROWS_SCHEMA = T.StructType(
 # exact-parity path
 # ---------------------------------------------------------------------------
 
-def fold_tables_page(textboxes: list[dict], header: str, footer: str,
-                     y_tolerance: float = Y_TOLERANCE) -> list[dict]:
+def fold_tables_page(textboxes: list[dict], header: str,
+                     footer: str) -> list[dict]:
     """Verbatim port of the two-stage reference fold for ONE page.
 
     ``textboxes``: dicts with text/x0/y0/x1/y1, already in reading
@@ -115,7 +116,7 @@ def fold_tables_page(textboxes: list[dict], header: str, footer: str,
         elif current_y is None:
             current_y = tb["y1"]
             current_row.append(tb)
-        elif abs(tb["y1"] - current_y) <= y_tolerance:
+        elif abs(tb["y1"] - current_y) <= Y_TOLERANCE:
             current_row.append(tb)
         else:
             if current_table is not None:
@@ -138,25 +139,19 @@ def fold_tables_page(textboxes: list[dict], header: str, footer: str,
     return out
 
 
-def extract_tables_exact(
-    spans_geom: DataFrame,
-    header_footer_df: DataFrame,
-    y_tolerance: float = Y_TOLERANCE,
-) -> DataFrame:
+def extract_tables_exact(spans_geom: DataFrame) -> DataFrame:
     """Parity path: applyInPandas fold per (doc_id, page_id)."""
     tb = with_reading_order(spans_geom).select(
         "doc_id", "page_id", "text", "x0", "y0", "x1", "y1", "rord"
     )
-    joined = tb.join(header_footer_df, "doc_id", "left").fillna(
-        {"header": "", "footer": ""}
-    )
+    joined = with_header_footer(tb, spans_geom)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("rord")
         header = pdf["header"].iloc[0] or ""
         footer = pdf["footer"].iloc[0] or ""
         boxes = pdf[["text", "x0", "y0", "x1", "y1"]].to_dict("records")
-        rows = fold_tables_page(boxes, header, footer, y_tolerance)
+        rows = fold_tables_page(boxes, header, footer)
         return pd.DataFrame(
             [
                 dict(
@@ -176,12 +171,8 @@ def extract_tables_exact(
 # relational fast path (intended semantics)
 # ---------------------------------------------------------------------------
 
-def extract_tables_sql(
-    spans_geom: DataFrame,
-    header_footer_df: DataFrame,
-    y_tolerance: float = Y_TOLERANCE,
-    scope: str = "page",
-) -> DataFrame:
+def extract_tables_sql(spans_geom: DataFrame,
+                       scope: str = "page") -> DataFrame:
     """Pure-DataFrame table reconstruction.
 
     Intended semantics: a 'Table N' title opens a table; subsequent
@@ -199,10 +190,7 @@ def extract_tables_sql(
     (textboxes_to_tabular_json fed multi-page input).
     """
     per_doc = scope == "doc"
-    tb = with_reading_order(spans_geom)
-    df = tb.join(header_footer_df, "doc_id", "left").fillna(
-        {"header": "", "footer": ""}
-    )
+    df = with_header_footer(with_reading_order(spans_geom), spans_geom)
     clean = F.trim(F.regexp_replace("text", "\n", ""))
     df = df.withColumn("clean", clean).filter(
         (~F.col("header").contains(F.col("clean")))
@@ -259,7 +247,7 @@ def extract_tables_sql(
     new_row = (
         prev_grp.isNull()
         | (prev_grp != F.col("grp"))
-        | (F.abs(F.col("y1") - prev_y1) > F.lit(y_tolerance))
+        | (F.abs(F.col("y1") - prev_y1) > F.lit(Y_TOLERANCE))
     )
     if per_doc:
         new_row = new_row | (F.lag("page_id").over(w_grp) != F.col("page_id"))

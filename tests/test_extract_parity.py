@@ -63,18 +63,28 @@ def test_fold_matches_oracle_all_fixture_docs(spark, spans_geom, cfg):
     assert n_checked >= 60
 
 
-def test_spark_extract_matches_fold(spark, documents_in, spans_geom):
+def test_spark_extract_matches_fold(spark, documents_in, spans_geom,
+                                    monkeypatch):
     """The plain fold and the skew route (forced onto the chunk fold
     for the skew doc) equal fold_document run with each doc's
     header/footer strings, under the default reference quirk and under
-    the substring strip (broken_hf_strip=False). Only the substring
-    strip reads the strings, so only its plans scan and join the
-    header/footer frame: the default's skipped side input must not
-    leak into it."""
+    the substring strip (broken_hf_strip=False). Both routes take the
+    geometry frame; only the substring strip reads the strings, so only
+    its routes build the header/footer frame (counted at
+    boilerplate.header_footer) and scan and join it: the default's
+    skipped side input must not leak into its plans."""
+    import pdfspark.operators.boilerplate as BP
     from tools.explain_audit import plan_summary
 
-    hf_df = all_doc_headers_footers(spans_geom)
     hf = _hf_strings(spark, spans_geom)
+    builds = []
+    real = BP.header_footer
+
+    def counting(*a, **kw):
+        builds.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(BP, "header_footer", counting)
     for cfg in (ExtractConfig(), ExtractConfig(broken_hf_strip=False)):
         want, n_stripped = {}, 0
         for doc_id, spans in _docs().items():
@@ -89,11 +99,14 @@ def test_spark_extract_matches_fold(spark, documents_in, spans_geom):
         assert (n_stripped > 0) == reads_hf, (cfg, n_stripped)
 
         routes = {
-            "extract_documents": extract_documents(documents_in, hf_df, cfg),
+            "extract_documents": extract_documents(documents_in, spans_geom,
+                                                   cfg),
             "extract_spans_split": extract_spans_split(
-                documents_in, hf_df, cfg=cfg, skew_threshold=500,
+                documents_in, spans_geom, cfg=cfg, skew_threshold=500,
                 spans_per_chunk=200),
         }
+        assert (len(builds) > 0) == reads_hf, (cfg, len(builds))
+        del builds[:]
         for name, out in routes.items():
             s = plan_summary(
                 out._jdf.queryExecution().executedPlan().toString())
@@ -111,20 +124,19 @@ def test_spark_extract_matches_fold(spark, documents_in, spans_geom):
 
 
 def test_partitioning_determinism(spark, documents_in, spans_geom):
-    hf_df = all_doc_headers_footers(spans_geom)
-    a = extract_documents(documents_in, hf_df, num_partitions=2)
-    b = extract_documents(documents_in, hf_df, num_partitions=16)
+    a = extract_documents(documents_in, spans_geom, num_partitions=2)
+    b = extract_documents(documents_in, spans_geom, num_partitions=16)
     ka = {(r.doc_id): [t.asDict() for t in r.spans] for r in a.collect()}
     kb = {(r.doc_id): [t.asDict() for t in r.spans] for r in b.collect()}
     assert ka == kb
 
 
 def test_skew_splitter_equality(spark, documents_in, spans_geom):
-    hf_df = all_doc_headers_footers(spans_geom)
     # force the skew path for the 2000-span skew doc
-    split = extract_spans_split(documents_in, hf_df, skew_threshold=500,
+    split = extract_spans_split(documents_in, spans_geom, skew_threshold=500,
                                 spans_per_chunk=200)
-    unsplit = extract_documents(documents_in, hf_df).select("doc_id", "spans")
+    unsplit = extract_documents(documents_in, spans_geom).select(
+        "doc_id", "spans")
     ks = {r.doc_id: [t.asDict() for t in r.spans] for r in split.collect()}
     ku = {r.doc_id: [t.asDict() for t in r.spans] for r in unsplit.collect()}
     assert set(ks) == set(ku)
@@ -134,8 +146,7 @@ def test_skew_splitter_equality(spark, documents_in, spans_geom):
 
 
 def test_lineage_and_resume(spark, documents_in, spans_geom):
-    hf_df = all_doc_headers_footers(spans_geom)
-    full = extract_documents(documents_in, hf_df, num_partitions=4)
+    full = extract_documents(documents_in, spans_geom, num_partitions=4)
     lin = lineage_table(full).collect()
     assert sum(r.doc_count for r in lin) == documents_in.count()
     assert all(r.wall_ms >= 0 for r in lin)
@@ -162,10 +173,9 @@ def test_skew_splitter_equality_with_front_matter_skip(spark, documents_in,
     """The windowless cutoff join must reproduce the sequential fold's
     front-matter skip (start_page=3) on the skew path."""
     cfg = ExtractConfig(start_page=3)
-    hf_df = all_doc_headers_footers(spans_geom)
-    split = extract_spans_split(documents_in, hf_df, cfg=cfg,
+    split = extract_spans_split(documents_in, spans_geom, cfg=cfg,
                                 skew_threshold=500, spans_per_chunk=200)
-    unsplit = extract_documents(documents_in, hf_df, cfg).select(
+    unsplit = extract_documents(documents_in, spans_geom, cfg).select(
         "doc_id", "spans")
     ks = {r.doc_id: [t.asDict() for t in r.spans] for r in split.collect()}
     ku = {r.doc_id: [t.asDict() for t in r.spans] for r in unsplit.collect()}
@@ -214,8 +224,6 @@ def test_sections_auto_routes_equal(spark, documents_in, spans_geom):
     probe picks (high threshold -> sequential, forced low -> split)."""
     from pdfspark.operators.extract import extract_sections_auto
 
-    hf = all_doc_headers_footers(spans_geom)
-
     def key(df):
         rows = df.select("doc_id", "status", "sections").collect()
         return {
@@ -224,10 +232,10 @@ def test_sections_auto_routes_equal(spark, documents_in, spans_geom):
             for r in rows
         }
 
-    hi = key(extract_sections_auto(documents_in, hf,
+    hi = key(extract_sections_auto(documents_in, spans_geom,
                                    skew_threshold=10**9))
-    lo = key(extract_sections_auto(documents_in, hf, skew_threshold=500,
-                                   spans_per_chunk=200))
+    lo = key(extract_sections_auto(documents_in, spans_geom,
+                                   skew_threshold=500, spans_per_chunk=200))
     assert hi == lo
 
 
@@ -237,8 +245,6 @@ def test_spans_auto_routes_equal(spark, documents_in, spans_geom):
     posexplode, forced low -> exploded-rows split path)."""
     from pdfspark.operators.extract import extract_spans_auto
 
-    hf = all_doc_headers_footers(spans_geom)
-
     def key(df):
         rows = df.collect()
         return sorted(
@@ -246,9 +252,10 @@ def test_spans_auto_routes_equal(spark, documents_in, spans_geom):
             for r in rows
         )
 
-    hi = key(extract_spans_auto(documents_in, hf, skew_threshold=10**9))
-    lo = key(extract_spans_auto(documents_in, hf, skew_threshold=500,
-                                spans_per_chunk=200))
+    hi = key(extract_spans_auto(documents_in, spans_geom,
+                                skew_threshold=10**9))
+    lo = key(extract_spans_auto(documents_in, spans_geom,
+                                skew_threshold=500, spans_per_chunk=200))
     assert hi == lo
 
 
@@ -261,21 +268,19 @@ def test_spans_auto_routing_choice(spark, documents_in, spans_geom,
     whole corpus on the chunk machinery."""
     import pdfspark.operators.extract as X
 
-    hf = all_doc_headers_footers(spans_geom)
-
     def boom(*a, **k):
         raise AssertionError("split path engaged")
 
     # no doc crosses: the split path must NOT be touched
     monkeypatch.setattr(X, "extract_spans_split_rows", boom)
-    assert X.extract_spans_auto(documents_in, hf,
+    assert X.extract_spans_auto(documents_in, spans_geom,
                                 skew_threshold=10**9).count() > 0
 
     # a doc crosses: the split path MUST be the route
     sentinel = object()
     monkeypatch.setattr(X, "extract_spans_split_rows",
                         lambda *a, **k: sentinel)
-    assert X.extract_spans_auto(documents_in, hf,
+    assert X.extract_spans_auto(documents_in, spans_geom,
                                 skew_threshold=1) is sentinel
 
 
@@ -427,8 +432,7 @@ def test_relational_spans_equal_fold_default_config(spark, documents_in,
     )
     docs = documents_in.unionByName(pad_doc)
 
-    hf_df = all_doc_headers_footers(spans_geom)
-    fold_out = extract_documents(docs, hf_df).filter(
+    fold_out = extract_documents(docs, spans_geom).filter(
         "status = 'ok'"
     ).select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id", "s.offset", "s.kind", "s.text", "s.media_ref"
@@ -505,10 +509,9 @@ def test_full_split_extraction_equals_sequential(spark, documents_in,
     side-output AND the input-derived lineage counts."""
     from pdfspark.operators.extract import extract_documents_split
 
-    hf_df = all_doc_headers_footers(spans_geom)
-    split = extract_documents_split(documents_in, hf_df, cfg,
+    split = extract_documents_split(documents_in, spans_geom, cfg,
                                     skew_threshold=500, spans_per_chunk=200)
-    seq = extract_documents(documents_in, hf_df, cfg)
+    seq = extract_documents(documents_in, spans_geom, cfg)
     ks = {r.doc_id: (r.status, [t.asDict() for t in r.spans],
                      [t.asDict() for t in r.sections],
                      (r.spans_in, r.spans_out, r.bytes_in))
@@ -536,8 +539,7 @@ def test_exploded_rows_split_equals_sequential(spark, documents_in,
     for-span on the fixture, skew path forced."""
     from pdfspark.operators.extract import extract_spans_split_rows
 
-    hf_df = all_doc_headers_footers(spans_geom)
-    collected = extract_spans_split_rows(documents_in, hf_df, cfg,
+    collected = extract_spans_split_rows(documents_in, spans_geom, cfg,
                                          skew_threshold=500,
                                          spans_per_chunk=200).collect()
     got = {}
@@ -545,7 +547,7 @@ def test_exploded_rows_split_equals_sequential(spark, documents_in,
         got.setdefault(r.doc_id, {})[r.offset] = (r.kind, r.text, r.media_ref)
     # no duplicate (doc_id, offset) rows hiding behind the dict
     assert len(collected) == sum(len(v) for v in got.values())
-    seq = extract_documents(documents_in, hf_df, cfg)
+    seq = extract_documents(documents_in, spans_geom, cfg)
     want = {}
     for r in seq.collect():
         want[r.doc_id] = {s.offset: (s.kind, s.text, s.media_ref)
@@ -564,13 +566,13 @@ def test_sections_split_rows_equals_sequential(spark, documents_in,
     doc-sized arrays) must equal the sequential fold's sections."""
     from pdfspark.operators.extract import extract_sections_split
 
-    hf_df = all_doc_headers_footers(spans_geom)
     got = {r.doc_id: (r.status, [t.asDict() for t in r.sections])
-           for r in extract_sections_split(documents_in, hf_df, cfg,
+           for r in extract_sections_split(documents_in, spans_geom, cfg,
                                            skew_threshold=500,
                                            spans_per_chunk=200).collect()}
     want = {r.doc_id: (r.status, [t.asDict() for t in r.sections])
-            for r in extract_documents(documents_in, hf_df, cfg).collect()}
+            for r in extract_documents(documents_in, spans_geom,
+                                       cfg).collect()}
     assert got == want
 
 

@@ -98,7 +98,6 @@ def test_job_big_doc_folds_with_lineage(spark, job_paths, tmp_path):
     import random
 
     from pdfspark.config import SKEW_SPAN_THRESHOLD
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.extract import extract_documents
     from pdfspark.synth import DocBuilder, gen_skew
 
@@ -128,8 +127,7 @@ def test_job_big_doc_folds_with_lineage(spark, job_paths, tmp_path):
     got = {r.doc_id: r for r in rows}
     assert len(rows) == len(got) == n_docs
     want = extract_documents(
-        spark.read.parquet(inp),
-        header_footer(spark.read.parquet(job_paths["geom"])),
+        spark.read.parquet(inp), spark.read.parquet(job_paths["geom"]),
     ).filter(f"doc_id = '{b.doc_id}'").select(*cols).first()
     assert got[b.doc_id] == want
     assert len(want.spans) > 0

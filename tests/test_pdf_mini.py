@@ -879,11 +879,10 @@ def test_codec_state_ops_inside_strings_ignored():
 def test_ep3_tables_from_raw_bytes(spark, tmp_path):
     """The bytes-in → tables-out gap closed: a multi-table %PDF
     payload decoded by decode_payloads_geom feeds the EP3 pipeline
-    (header_footer + extract_tables_sql) end-to-end, and the
+    (extract_tables_sql, header/footer strip included) end-to-end, and the
     reconstructed tables match both the known planted content and
     the exact reference fold (fold_tables_page) run locally on the
     same geometry."""
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.tables import extract_tables_sql, fold_tables_page
     from pdfspark.sources.binary_decode import (
         decode_payloads_geom,
@@ -905,7 +904,7 @@ def test_ep3_tables_from_raw_bytes(spark, tmp_path):
     with open(os.path.join(d, "t.pdf"), "wb") as fh:
         fh.write(build_layout_pdf("pdf-tables", pages, compress=True))
     geom = decode_payloads_geom(read_payloads(spark, d))
-    rows = (extract_tables_sql(geom, header_footer(geom))
+    rows = (extract_tables_sql(geom)
             .orderBy("page_id", "table_id", "row_id").collect())
     got = [(r.page_id, r.table_id, r.title, r.row_id,
             None if r.cells is None else list(r.cells)) for r in rows]
@@ -924,7 +923,7 @@ def test_ep3_tables_from_raw_bytes(spark, tmp_path):
 
     exact = [(r.page_id, r.table_id, r.title, r.row_id,
               None if r.cells is None else list(r.cells))
-             for r in extract_tables_exact(geom, header_footer(geom))
+             for r in extract_tables_exact(geom)
              .orderBy("page_id", "table_id", "row_id").collect()]
     gx = geom.filter("kind = 'TextBox'").collect()
     expected = []
@@ -1251,7 +1250,6 @@ def test_ep3_tables_from_rotated_raw_bytes(spark, tmp_path):
     the EP3 table pipeline reconstructs the same planted tables from
     the rotated bytes (header/footer bands key off the landscape
     PageStart instead of the portrait one, hence mid-page targets)."""
-    from pdfspark.operators.boilerplate import header_footer
     from pdfspark.operators.tables import extract_tables_sql
     from pdfspark.sources.binary_decode import (
         decode_payloads_geom,
@@ -1279,7 +1277,7 @@ def test_ep3_tables_from_rotated_raw_bytes(spark, tmp_path):
             (r.page_id, r.text, r.x0, r.y0, r.x1, r.y1))
     assert sorted(by_doc["pdf-rot"]) == sorted(by_doc["pdf-upr"])
     rot = geom.filter("doc_id = 'pdf-rot'")
-    rows = (extract_tables_sql(rot, header_footer(rot))
+    rows = (extract_tables_sql(rot)
             .orderBy("table_id", "row_id").collect())
     cells = [None if r.cells is None else list(r.cells) for r in rows
              if r.title == "Table 1 Rotated scan"]

@@ -3,7 +3,6 @@ pure-Python run of the same fold (in-process oracle)."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from pdfspark.operators.boilerplate import all_doc_headers_footers
@@ -15,19 +14,14 @@ from pdfspark.operators.tables import (
 )
 
 
-@pytest.fixture(scope="module")
-def hf(spark, spans_geom):
-    return all_doc_headers_footers(spans_geom).cache()
-
-
-def test_exact_simple_table(spark, spans_geom, hf):
+def test_exact_simple_table(spark, spans_geom):
     doc = spans_geom.filter(F.col("doc_id").startswith("simple-table")).limit(0)
     one_id = (
         spans_geom.filter(F.col("doc_id").startswith("simple-table"))
         .select("doc_id").distinct().orderBy("doc_id").first()[0]
     )
     sub = spans_geom.filter(F.col("doc_id") == one_id)
-    out = extract_tables_exact(sub, hf).orderBy("page_id", "table_id", "row_id")
+    out = extract_tables_exact(sub).orderBy("page_id", "table_id", "row_id")
     rows = out.collect()
     assert rows, "no table rows extracted"
     titles = {r.title for r in rows}
@@ -42,7 +36,7 @@ def test_exact_simple_table(spark, spans_geom, hf):
             assert [x[-2:] for x in c] == ["c1", "c2", "c3"]
 
 
-def test_exact_matches_local_fold(spark, spans_geom, hf):
+def test_exact_matches_local_fold(spark, spans_geom):
     """Distributed applyInPandas == driver-side fold on every fixture
     page (determinism under partitioning)."""
     sub = spans_geom.filter(
@@ -52,9 +46,10 @@ def test_exact_matches_local_fold(spark, spans_geom, hf):
     )
     dist = {
         (r.doc_id, r.page_id, r.table_id, r.row_id): (r.title, tuple(r.cells or []))
-        for r in extract_tables_exact(sub, hf).collect()
+        for r in extract_tables_exact(sub).collect()
     }
-    hfm = {r.doc_id: (r.header, r.footer) for r in hf.collect()}
+    hfm = {r.doc_id: (r.header, r.footer)
+           for r in all_doc_headers_footers(spans_geom).collect()}
     local = {}
     tb = (
         sub.filter(F.col("kind") == "TextBox")
@@ -75,12 +70,12 @@ def test_exact_matches_local_fold(spark, spans_geom, hf):
     assert dist == local
 
 
-def test_sql_fast_path_agrees_on_clean_tables(spark, spans_geom, hf):
+def test_sql_fast_path_agrees_on_clean_tables(spark, spans_geom):
     """On well-formed table fixtures the intended-semantics SQL path
     produces the same cell grid as the exact fold (minus the leak/empty
     row quirks, which we filter out of the exact output)."""
     sub = spans_geom.filter(F.col("doc_id").startswith("continued-table"))
-    sql_rows = extract_tables_sql(sub, hf).collect()
+    sql_rows = extract_tables_sql(sub).collect()
     assert sql_rows
     by_tbl = {}
     for r in sql_rows:
@@ -95,9 +90,9 @@ def test_sql_fast_path_agrees_on_clean_tables(spark, spans_geom, hf):
         assert len(arities) == 1, (d, p, title, rows)
 
 
-def test_merge_continued(spark, spans_geom, hf):
+def test_merge_continued(spark, spans_geom):
     sub = spans_geom.filter(F.col("doc_id").startswith("continued-table"))
-    merged = merge_continued_tables(extract_tables_sql(sub, hf))
+    merged = merge_continued_tables(extract_tables_sql(sub))
     out = merged.collect()
     by_doc_title = {}
     for r in out:
