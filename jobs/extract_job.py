@@ -384,12 +384,19 @@ def main(argv=None) -> int:
             _prepare_output(spark, args, spark.read.parquet(args.input)),
             geom)
 
-    # persist once: the data write materialises the fold, and the
+    # the --metrics lineage is the fold's only second reader: persist
+    # for it alone, so the data write materialises the fold and the
     # metrics aggregation reads the cache (no second fold)
-    full.persist()
-    aux = [(lineage_table(full), args.metrics)] if args.metrics else None
-    _commit(args, full.select("doc_id", "status", "spans", "sections"), aux)
-    full.unpersist()
+    aux = None
+    if args.metrics:
+        full.persist()
+        aux = [(lineage_table(full), args.metrics)]
+    try:
+        _commit(args, full.select("doc_id", "status", "spans", "sections"),
+                aux)
+    finally:
+        if args.metrics:
+            full.unpersist()
     return 0
 
 

@@ -17,6 +17,12 @@ TOP_MARGIN = 50.0
 # Footer margin: footer iff el_y0 <= BOTTOM_MARGIN.
 # Ref: src/utilities/parse_util.py:417,438
 BOTTOM_MARGIN = 20.0
+# Normalized-position header/footer thresholds: header iff
+# y1/page_height > 1 - NORM_HEADER_THRESHOLD, footer iff
+# y1/page_height < NORM_FOOTER_THRESHOLD (the reference's bug, kept).
+# Ref: src/utilities/doc_util.py:4-24
+NORM_HEADER_THRESHOLD = 0.1
+NORM_FOOTER_THRESHOLD = 0.9
 # Main parse skips the first START_PAGE pages (front matter).
 # Ref: src/pdf_extractor.py:179,192  (pagenos = range(3, total))
 REF_START_PAGE = 3

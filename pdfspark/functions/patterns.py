@@ -135,7 +135,7 @@ def _word_boundary_find(needle_l: str, hay_l: str) -> bool:
         start = i + 1
 
 
-def find_section_by_heading(heading: str, section_headings, flags=re.IGNORECASE):
+def find_section_by_heading(heading: str, section_headings):
     """J1/X9 — the reference's unescaped whole-word lookup
     (src/document.py:99-112). Returns the index of the first section
     whose heading contains `\\b{clean}\\b`, else None. Regex
@@ -144,15 +144,15 @@ def find_section_by_heading(heading: str, section_headings, flags=re.IGNORECASE)
     if heading is None:
         return None
     clean = RE_TRAILING_PUNCT.sub("", heading)
-    # fast path assumes IGNORECASE + ASCII needle (str.lower() then
-    # equals regex casefolding); any other flags fall through to re
-    if flags == re.IGNORECASE and clean.isascii() and _LITERAL_HEADING.match(clean):
+    # fast path assumes an ASCII needle (str.lower() then equals
+    # IGNORECASE regex casefolding); non-ASCII falls through to re
+    if clean.isascii() and _LITERAL_HEADING.match(clean):
         needle = clean.lower()
         for i, h in enumerate(section_headings):
             if _word_boundary_find(needle, h.lower()):
                 return i
         return None
-    pattern = re.compile(rf"\b{clean}\b", flags)  # may raise re.error
+    pattern = re.compile(rf"\b{clean}\b", re.IGNORECASE)  # may raise re.error
     for i, h in enumerate(section_headings):
         if pattern.search(h):
             return i

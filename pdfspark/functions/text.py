@@ -33,12 +33,6 @@ def strip_characters(c: Column, patterns) -> Column:
     return c
 
 
-def remove_newlines(c: Column) -> Column:
-    """X13 — replace('\\n','') before header/footer comparison.
-    Ref: element_processors.py:69, parse_util.py:431."""
-    return F.regexp_replace(c, "\n", "")
-
-
 def first_line(c: Column) -> Column:
     """X14. Ref: element_processors.py:83-85."""
     return F.element_at(F.split(c, "\n"), 1)

@@ -22,7 +22,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from pdfspark.config import BOTTOM_MARGIN, PAGE_H, TOP_MARGIN
+from pdfspark.config import (
+    BOTTOM_MARGIN,
+    NORM_FOOTER_THRESHOLD,
+    NORM_HEADER_THRESHOLD,
+    PAGE_H,
+    TOP_MARGIN,
+)
 
 
 def with_page_y1(spans_geom: DataFrame) -> DataFrame:
@@ -144,16 +150,12 @@ def all_doc_headers_footers(spans_geom: DataFrame) -> DataFrame:
                               spans_geom)
 
 
-def margin_candidates_normalized(
-    spans_geom: DataFrame,
-    header_threshold: float = 0.1,
-    footer_threshold: float = 0.9,
-) -> DataFrame:
+def margin_candidates_normalized(spans_geom: DataFrame) -> DataFrame:
     """F12 — the normalized-position variant
     (ref src/utilities/doc_util.py:4-24), bug reproduced verbatim:
-    `footer_threshold=0.9` compares `y1/page_height < 0.9`, which marks
-    nearly every body element a footer candidate (the intended test
-    would be `< footer_threshold` with a small threshold, or on y0).
+    `NORM_FOOTER_THRESHOLD=0.9` compares `y1/page_height < 0.9`, which
+    marks nearly every body element a footer candidate (the intended
+    test would be `<` a small threshold, or on y0).
     Applies to LTTextBox and LTTextLine analogues."""
     df = with_page_y1(spans_geom).filter(
         F.col("kind").isin("TextBox", "TextLine")
@@ -161,7 +163,7 @@ def margin_candidates_normalized(
     top_pos = F.col("y1") / F.col("page_y1")
     return (
         df.withColumn("txt", F.trim("text"))
-        .withColumn("is_header", top_pos > F.lit(1.0 - header_threshold))
-        .withColumn("is_footer", top_pos < F.lit(footer_threshold))
+        .withColumn("is_header", top_pos > F.lit(1.0 - NORM_HEADER_THRESHOLD))
+        .withColumn("is_footer", top_pos < F.lit(NORM_FOOTER_THRESHOLD))
         .filter(F.col("is_header") | F.col("is_footer"))
     )

@@ -112,7 +112,6 @@ def classify_spans(spans: DataFrame) -> DataFrame:
 def with_current_section(
     classified: DataFrame,
     toc_conditional: bool = True,
-    cache_input: bool = False,
 ) -> DataFrame:
     """W3 — fill-down of the current section header in document order.
 
@@ -146,13 +145,7 @@ def with_current_section(
         # cheap parquet->explode->regex lineage three times beats
         # materializing the wide classify projection (measured
         # interleaved under the bench's clearCache protocol at sf0.1:
-        # 1.64 s recompute vs 2.49 s persisted for a8). Set
-        # cache_input=True only when the upstream is genuinely
-        # expensive per-row — e.g. spans decoded from raw PDF bytes
-        # via mapInPandas, where a re-execution re-parses every
-        # document three times.
-        if cache_input:
-            classified = classified.persist()
+        # 1.64 s recompute vs 2.49 s persisted for a8).
         # headings only — the skeleton's line_no window is not needed
         # for an existence test, so skip its per-doc sort exchange
         toc = _toc_headings(classified)
@@ -202,46 +195,35 @@ def with_current_section(
     return out.drop("_sec_matched") if toc_conditional else out
 
 
-def toc_skeleton(spans: DataFrame, patterns_to_strip=None) -> DataFrame:
+def toc_skeleton(spans: DataFrame) -> DataFrame:
     """J4/A7 — TOC lines become the section skeleton, in order.
 
     Ref: src/pdf_extractor.py:174-177 (cleanup: strip_characters +
     replace_extra_space + strip) and :135-156 (1-based line numbers).
     """
-    from pdfspark.config import PATTERNS_TO_STRIP
-    from pdfspark.functions.text import strip_characters
-
-    # None means defaults; an explicit empty sequence means strip
-    # nothing (mirrors ExtractConfig(patterns_to_strip=()) — a plain
-    # `or` would silently re-apply the defaults)
-    pats = PATTERNS_TO_STRIP if patterns_to_strip is None else patterns_to_strip
     w = Window.partitionBy("doc_id").orderBy("offset")
-    return _toc_headings(spans, pats, keep_offset=True).select(
+    return _toc_headings(spans, keep_offset=True).select(
         "doc_id",
         "heading",
         F.row_number().over(w).alias("line_no"),
     )
 
 
-def _toc_headings(
-    spans: DataFrame, patterns_to_strip=None, keep_offset: bool = False
-) -> DataFrame:
+def _toc_headings(spans: DataFrame, keep_offset: bool = False) -> DataFrame:
     """Cleaned TOC headings (doc_id, heading[, offset]) — the skeleton
     without line numbers, for existence probes that don't need the
     per-doc sort exchange of toc_skeleton's row_number."""
     from pdfspark.config import PATTERNS_TO_STRIP
     from pdfspark.functions.text import strip_characters
 
-    pats = (
-        PATTERNS_TO_STRIP if patterns_to_strip is None else patterns_to_strip
-    )
     toc = spans.filter(F.col("kind") == "TOC")
     # pytrim, not F.trim: the fold's clean_toc_line ends with Python
     # str.strip() (all whitespace); F.trim strips spaces only, so a
     # heading with a trailing newline/tab edge would diverge between
     # the SQL skeleton and SectionState's skeleton heading text
     cleaned = F.regexp_replace(
-        replace_extra_space(strip_characters(F.col("text"), pats)),
+        replace_extra_space(
+            strip_characters(F.col("text"), PATTERNS_TO_STRIP)),
         r"(?U)^\s+|\s+$", "",
     )
     cols = ["doc_id", cleaned.alias("heading")]
@@ -338,9 +320,7 @@ def sections_assembled(classified_with_section: DataFrame) -> DataFrame:
 SAFE_HEADING = r"^[A-Za-z0-9_](?:[A-Za-z0-9_ ,;:'\-]*[A-Za-z0-9_])?$"
 
 
-def headings_to_toc(
-    classified: DataFrame, toc: DataFrame, safe_only: bool = True
-) -> DataFrame:
+def headings_to_toc(classified: DataFrame, toc: DataFrame) -> DataFrame:
     """J1 — whole-word heading lookup as a broadcast theta join.
 
     For each heading candidate, find the first TOC skeleton line that
@@ -349,18 +329,15 @@ def headings_to_toc(
     including first-match-wins (min line_no). The reference does NOT
     regex-escape the heading (X9): an invalid pattern raises re.error
     there, the caller's per-element try/except swallows it, and the
-    observable result is "no section matched". With ``safe_only=True``
-    EVERY candidate whose cleaned text is not literal-safe keeps a
-    NULL line_no. For invalid patterns that is exactly the reference's
-    swallowed-raise observable; for VALID-metachar headings (e.g. one
-    containing '.') it is a documented deviation — the reference runs
-    them as regexes and may match — accepted because on the safe
-    subset Spark rlike, DuckDB RE2 and Python re provably agree
-    byte-for-byte, which is what the driver oracle certifies. With
-    ``safe_only=False`` the unescaped text goes straight into rlike
-    (valid-metachar headings then match exactly like the reference,
-    invalid ones fail the task instead of being swallowed) — use the
-    exact-parity fold when full X9 semantics matter.
+    observable result is "no section matched". EVERY candidate whose
+    cleaned text is not literal-safe keeps a NULL line_no. For invalid
+    patterns that is exactly the reference's swallowed-raise
+    observable; for VALID-metachar headings (e.g. one containing '.')
+    it is a documented deviation — the reference runs them as regexes
+    and may match — accepted because on the safe subset Spark rlike,
+    DuckDB RE2 and Python re provably agree byte-for-byte, which is
+    what the driver oracle certifies. Use the exact-parity fold when
+    full X9 semantics matter.
 
     Scale shape: candidates are heading spans only (a tiny projection)
     and the TOC side is broadcast; the theta join never sees body text.
@@ -378,10 +355,7 @@ def headings_to_toc(
         "is_safe",
         F.coalesce(F.col("clean").rlike(SAFE_HEADING), F.lit(False)),
     )
-    if safe_only:
-        probe = cand.filter(F.col("is_safe"))
-    else:
-        probe = cand
+    probe = cand.filter(F.col("is_safe"))
     # (?U): Java's \b and (?i) are ASCII-only by default, Python's
     # re is Unicode — same hardening as every JAVA_ pattern in
     # functions/patterns.py, applied to this dynamically-built one
@@ -403,8 +377,6 @@ def headings_to_toc(
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    if not safe_only:
-        return first
     # unsafe candidates resurface with NULL match (reference: raise
     # swallowed -> no section)
     unsafe = cand.filter(~F.col("is_safe")).select(

@@ -54,6 +54,11 @@ ROWS_PER_BAND = NUM_PERM // NUM_BANDS
 SHINGLE_WORDS = 3
 SIMHASH_HEX = 32  # md5 hex digits -> 32-bit signature
 SIMHASH_BANDS = 4
+# near-dup contract: a verified pair has rounded shingle Jaccard >= this
+JACCARD_THRESHOLD = 0.5
+# round cap of neardup_components' label propagation (observed
+# convergence is 2-3 rounds on near-dup components)
+CC_MAX_ITER = 12
 
 
 def normalized_text(col):
@@ -266,8 +271,9 @@ def minhash_candidates(
     return intra.unionByName(cross)
 
 
-def minhash_verified(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """LSH candidates verified with exact shingle Jaccard >= threshold.
+def minhash_verified(docs: DataFrame) -> DataFrame:
+    """LSH candidates verified with exact shingle Jaccard >=
+    JACCARD_THRESHOLD.
 
     Shingle sets are joined only for candidate pairs (the scale path:
     |candidates| << |docs|^2). Candidates are two-tier (see
@@ -320,12 +326,11 @@ def minhash_verified(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
                 4,
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
-def neardup_components(docs: DataFrame, threshold: float = 0.5,
-                       max_iter: int = 12,
+def neardup_components(docs: DataFrame,
                        precomputed_edges: DataFrame | None = None
                        ) -> DataFrame:
     """(doc_id, rep_id, comp_size) for every doc in a Jaccard-verified
@@ -373,7 +378,7 @@ def neardup_components(docs: DataFrame, threshold: float = 0.5,
     100 TB it halves the dominant shuffle work of a dedup session).
     """
     edges = (precomputed_edges if precomputed_edges is not None
-             else minhash_verified(docs, threshold)
+             else minhash_verified(docs)
              ).select("doc_a", "doc_b")
     sym = edges.unionByName(
         edges.select(F.col("doc_b").alias("doc_a"),
@@ -385,7 +390,7 @@ def neardup_components(docs: DataFrame, threshold: float = 0.5,
         .select("doc_id", F.least("doc_id", "nb").alias("rep"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nb = (
             sym.join(
                 labels.select(F.col("doc_id").alias("doc_b"),

@@ -909,7 +909,6 @@ def extract_documents_split(
 def extract_sections_auto(
     documents_in: DataFrame,
     spans_geom: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
@@ -930,17 +929,17 @@ def extract_sections_auto(
     pinned by the forced-threshold tests)."""
     mx = _max_span_count(documents_in)
     if mx <= skew_threshold:
-        return extract_documents(documents_in, spans_geom, cfg).select(
+        return extract_documents(documents_in, spans_geom).select(
             "doc_id", "status", "sections"
         )
-    return extract_sections_split(documents_in, spans_geom, cfg,
-                                  skew_threshold, spans_per_chunk)
+    return extract_sections_split(documents_in, spans_geom,
+                                  skew_threshold=skew_threshold,
+                                  spans_per_chunk=spans_per_chunk)
 
 
 def extract_spans_auto(
     documents_in: DataFrame,
     spans_geom: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
@@ -961,11 +960,10 @@ def extract_spans_auto(
     mx = _max_span_count(documents_in)
     if mx > skew_threshold:
         return extract_spans_split_rows(documents_in, spans_geom,
-                                        cfg, skew_threshold,
-                                        spans_per_chunk)
+                                        skew_threshold=skew_threshold,
+                                        spans_per_chunk=spans_per_chunk)
     return _explode_span_rows(
-        extract_documents(documents_in, spans_geom, cfg,
-                          spans_only=True)
+        extract_documents(documents_in, spans_geom, spans_only=True)
     )
 
 

@@ -35,6 +35,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# planner defaults shared with the DuckDB twins (oracle_pipeline)
+FRAME_EVERY_N = 5  # sample_frames: keep every n-th frame
+RESIZE_TARGET = 224  # resize_plan: longest output side (px)
+AUDIO_SAMPLE_RATE = 16000  # audio_chunk_plan: samples per second
+
 MEDIA_FEATURE_SCHEMA = StructType(
     [
         StructField("media_ref", StringType()),
@@ -146,7 +151,7 @@ def _fake_frame_count(payload: bytes) -> int:
     return 1 + hashlib.md5(payload).digest()[2] % 120
 
 
-def sample_frames(media: DataFrame, every_n: int = 5,
+def sample_frames(media: DataFrame, every_n: int = FRAME_EVERY_N,
                   fps: int = 25) -> DataFrame:
     """Frame sampling: one OUTPUT row per sampled frame of each video
     payload (the 1->N mapInPandas batch shape a real frame extractor
@@ -192,7 +197,7 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_plan(media: DataFrame, target: int = 224) -> DataFrame:
+def resize_plan(media: DataFrame, target: int = RESIZE_TARGET) -> DataFrame:
     """Aspect-preserving resize plan per image: decode dims (stub) ->
     integer-arithmetic target dims (floor((d*target)/max_dim), min 1 —
     integer-exact in every engine). The actual pixel resample is the
@@ -227,19 +232,16 @@ AUDIO_SCHEMA = StructType(
 )
 
 
-def audio_chunk_plan(media: DataFrame, sample_rate: int = 16000,
-                     chunk_seconds: int = 1) -> DataFrame:
+def audio_chunk_plan(media: DataFrame,
+                     sample_rate: int = AUDIO_SAMPLE_RATE) -> DataFrame:
     """Fixed-window audio chunking plan: fake decode maps payload bytes
     to a sample count (4 samples per byte), then 1-second windows with
     a ragged tail — the schema a streaming ASR feature extractor needs.
     Integer arithmetic only (engine-portable)."""
 
-    if sample_rate < 1 or chunk_seconds < 1:
-        raise ValueError(
-            f"sample_rate and chunk_seconds must be >= 1, got "
-            f"{sample_rate}/{chunk_seconds}"
-        )
-    chunk = sample_rate * chunk_seconds
+    if sample_rate < 1:
+        raise ValueError(f"sample_rate must be >= 1, got {sample_rate}")
+    chunk = sample_rate  # one-second windows
 
     def row(ref, b):
         n = len(b) * 4

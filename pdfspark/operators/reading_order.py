@@ -11,23 +11,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def reading_order_window(per_page: bool = True) -> Window:
-    keys = ["doc_id", "page_id"] if per_page else ["doc_id"]
+def reading_order_window() -> Window:
     # offset tie-break = the stable-sort semantics of Python list.sort
     # (equal keys keep storage order).
-    order = (
-        [F.desc("y1"), F.asc("x1"), F.asc("offset")]
-        if per_page
-        else [F.asc("page_id"), F.desc("y1"), F.asc("x1"), F.asc("offset")]
-    )
-    return Window.partitionBy(*keys).orderBy(*order)
+    return Window.partitionBy("doc_id", "page_id").orderBy(
+        F.desc("y1"), F.asc("x1"), F.asc("offset"))
 
 
-def with_reading_order(spans_geom: DataFrame, per_page: bool = True,
-                       col_name: str = "rord") -> DataFrame:
-    """Adds 1-based reading-order rank among TextBox spans of a page."""
+def with_reading_order(spans_geom: DataFrame) -> DataFrame:
+    """Adds the 1-based reading-order rank ``rord`` among TextBox spans
+    of a page."""
     tb = spans_geom.filter(F.col("kind") == "TextBox")
-    return tb.withColumn(col_name, F.row_number().over(reading_order_window(per_page)))
+    return tb.withColumn("rord", F.row_number().over(reading_order_window()))
 
 
 # ---------------------------------------------------------------------------
@@ -94,9 +89,8 @@ def xy_cut_order(x0, y0, x1, y1, offset) -> list:
     return rec(list(range(len(offset))), 0)
 
 
-def with_xy_cut_order(spans_geom: DataFrame,
-                      col_name: str = "rord") -> DataFrame:
-    """Distributed XY-cut: 1-based reading-order rank among the
+def with_xy_cut_order(spans_geom: DataFrame) -> DataFrame:
+    """Distributed XY-cut: 1-based reading-order rank ``rord`` among the
     TextBox spans of every page.
 
     One shuffle on (doc_id, page_id) — the same exchange the W1
@@ -146,7 +140,7 @@ def with_xy_cut_order(spans_geom: DataFrame,
             pos += hi - lo
         out = pd.DataFrame(
             {"doc_id": d[take], "page_id": p[take], "offset": off[take],
-             col_name: rord}
+             "rord": rord}
         )
         return out
 
@@ -176,5 +170,5 @@ def with_xy_cut_order(spans_geom: DataFrame,
     out_schema = T.StructType(
         [T.StructField(n, spans_geom.schema[n].dataType)
          for n in ("doc_id", "page_id", "offset")]
-        + [T.StructField(col_name, T.IntegerType())])
+        + [T.StructField("rord", T.IntegerType())])
     return part.mapInPandas(run, out_schema)

@@ -13,6 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# sessionization: a gap longer than this between a user's consecutive
+# events starts a new session
+SESSION_GAP_MINUTES = 30
+
 
 def keyword_hits(docs: DataFrame, keywords: DataFrame) -> DataFrame:
     """J6: keyword dimension joined against document text.
@@ -174,9 +178,9 @@ def tabular_pairs(geom: DataFrame) -> DataFrame:
     return cand.select("doc_id", "page_id", "o_a", "o_b", "relation")
 
 
-def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize_events(events: DataFrame) -> DataFrame:
     """Per-user sessionization: a new session starts when the gap to
-    the previous event exceeds gap_minutes (gaps-and-islands — the
+    the previous event exceeds SESSION_GAP_MINUTES (gaps-and-islands — the
     same shape as the reference's row clustering A4,
     src/table_extractor.py:80-101, and collation A9,
     src/pdf_test_parse.py:238-303, applied to timestamps).
@@ -187,8 +191,9 @@ def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     gap = us - F.lag(us).over(w)
     marked = events.withColumn(
         "new_sess",
-        F.when(gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), 1)
-        .otherwise(0),
+        F.when(
+            gap.isNull() | (gap > SESSION_GAP_MINUTES * 60 * 1_000_000), 1
+        ).otherwise(0),
     )
     sess = marked.withColumn(
         "session_id",

@@ -34,6 +34,10 @@ from pyspark.sql import types as T
 EMB_DIM = 64
 NUM_PLANES = 128
 PLANE_BANDS = 8  # 8 bands x 16 bits
+# rows per query of every top-k search (the reference's Pinecone top_k)
+TOPK = 5
+# neardup_lsh keeps verified pairs with rounded cosine >= this
+NEARDUP_COSINE = 0.99
 # Band width is the scale lever for neardup_lsh: expected FALSE
 # candidates for a random corpus are ~ bands * C(N,2) / 2^width, so
 # 4-bit bands (the original config) made the band self-join
@@ -45,10 +49,10 @@ PLANE_BANDS = 8  # 8 bands x 16 bits
 # scale; bands buy recall back linearly in cost.
 
 
-def _plane(p: int, dim: int = EMB_DIM) -> list[float]:
-    """Deterministic pseudo-random hyperplane in [-1, 1)^dim from md5."""
+def _plane(p: int) -> list[float]:
+    """Deterministic pseudo-random hyperplane in [-1, 1)^EMB_DIM from md5."""
     out = []
-    for d in range(dim):
+    for d in range(EMB_DIM):
         h = hashlib.md5(f"plane|{p}|{d}".encode()).hexdigest()[:8]
         out.append(int(h, 16) / 2**32 * 2.0 - 1.0)
     return out
@@ -74,7 +78,7 @@ def _norm(a):
 
 
 def cosine_topk_hof(
-    emb: DataFrame, queries: DataFrame, k: int = 5
+    emb: DataFrame, queries: DataFrame, k: int = TOPK
 ) -> DataFrame:
     """Interpreted HOF twin of cosine_topk — the 1:1 transliteration
     of the DuckDB oracle SQL; kept for parity tests only (the
@@ -205,7 +209,9 @@ def _topk_fold(emb: DataFrame, queries: DataFrame, k: int,
     )
 
 
-def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+def cosine_topk(
+    emb: DataFrame, queries: DataFrame, k: int = TOPK
+) -> DataFrame:
     """Brute-force cosine top-k (production form): fold-order
     Arrow/NumPy scan, rank by rounded similarity (desc) with vec_id
     tie-break, keep k. Output equals cosine_topk_hof row-for-row
@@ -214,7 +220,7 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
 
 
 def euclidean_topk(
-    emb: DataFrame, queries: DataFrame, k: int = 5
+    emb: DataFrame, queries: DataFrame, k: int = TOPK
 ) -> DataFrame:
     """Reference Pinecone semantics (J5), production form: top_k by
     euclidean distance via the fold-order Arrow/NumPy kernel; equals
@@ -226,7 +232,7 @@ def euclidean_topk(
 
 
 def cosine_topk_np(
-    emb: DataFrame, queries: DataFrame, k: int = 5
+    emb: DataFrame, queries: DataFrame, k: int = TOPK
 ) -> DataFrame:
     """Arrow/NumPy fast path for brute-force cosine top-k: the query
     block is tiny and broadcast as plain Python; each corpus partition
@@ -303,9 +309,7 @@ def cosine_topk_np(
     )
 
 
-def euclidean_topk_hof(
-    emb: DataFrame, queries: DataFrame, k: int = 5
-) -> DataFrame:
+def euclidean_topk_hof(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Interpreted HOF twin of euclidean_topk (J5 Pinecone semantics)
     — the DuckDB oracle's transliteration; kept for parity tests."""
     e = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
@@ -329,7 +333,7 @@ def euclidean_topk_hof(
     w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", F.col("rank").cast("int").alias("rank"),
                 "vec_id", "dist")
     )
@@ -423,9 +427,9 @@ def hyperplane_signature_hof(emb: DataFrame) -> DataFrame:
     return emb.select("vec_id", bits.alias("sig"))
 
 
-def neardup_lsh(emb: DataFrame, threshold: float = 0.99) -> DataFrame:
+def neardup_lsh(emb: DataFrame) -> DataFrame:
     """Embedding near-dup pairs via banded hyperplane LSH + exact
-    cosine verification of candidates only.
+    cosine verification of candidates only (cosine >= NEARDUP_COSINE).
 
     Candidates are two-tier (same rationale as
     dedup.minhash_candidates): vectors sharing the ENTIRE 128-bit
@@ -517,7 +521,7 @@ def neardup_lsh(emb: DataFrame, threshold: float = 0.99) -> DataFrame:
             )
 
     return pairs.mapInPandas(verify, schema).filter(
-        F.col("cosine") >= threshold
+        F.col("cosine") >= NEARDUP_COSINE
     )
 
 
@@ -587,71 +591,58 @@ def _nearest_cells(v, k: int, cents=None):
     return F.transform(F.slice(pairs, 1, k), lambda p: p["c"])
 
 
-def with_cells(
-    df: DataFrame, cents=None, vec_col: str = "v",
-    norm_col: str | None = None,
-) -> DataFrame:
+def with_cells(df: DataFrame, cents=None) -> DataFrame:
     """Arrow/NumPy IVF cell assignment: appends `cell` (nearest
-    centroid by squared L2, ties to the lowest cell id — np.argmin's
-    first-occurrence rule equals the HOF array_sort-on-(d, c) rule
-    because distances are bit-identical) and optionally a `norm_col`
-    (fold-order L2 norm of the vector) to ``df``. One vectorized pass
-    per Arrow batch; replaces per-element interpreted
-    aggregate(zip_with(...)) over |centroids| x dim products."""
+    centroid by squared L2 of the vector column `v`, ties to the
+    lowest cell id — np.argmin's first-occurrence rule equals the HOF
+    array_sort-on-(d, c) rule because distances are bit-identical) to
+    ``df``. One vectorized pass per Arrow batch; replaces per-element
+    interpreted aggregate(zip_with(...)) over |centroids| x dim
+    products."""
     import numpy as np
     import pandas as pd
 
     C = [list(c) for c in (cents if cents is not None else CENTROIDS)]
-    fields = list(df.schema.fields) + [T.StructField("cell", T.IntegerType())]
-    if norm_col:
-        fields.append(T.StructField(norm_col, T.DoubleType()))
-    schema = T.StructType(fields)
+    schema = T.StructType(
+        list(df.schema.fields) + [T.StructField("cell", T.IntegerType())])
     in_cols = [f.name for f in df.schema.fields]
 
     def run(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = _mat(pdf[vec_col])
+            m = _mat(pdf["v"])
             D = np.empty((len(pdf), len(C)))
             for ci, cent in enumerate(C):
                 diff = m - np.asarray(cent)
                 D[:, ci] = _fold_rows(diff * diff)
             out = pdf[in_cols].copy()
             out["cell"] = D.argmin(axis=1).astype("int32")
-            if norm_col:
-                out[norm_col] = np.sqrt(_fold_rows(m * m))
             yield out
 
     return df.mapInPandas(run, schema)
 
 
-def fit_ivf_centroids(
-    emb: DataFrame, k: int = NUM_CELLS, iters: int = 5, init=None
-) -> list[list[float]]:
-    """Lloyd's k-means fit for the IVF coarse quantizer.
+def fit_ivf_centroids(emb: DataFrame, iters: int = 5) -> list[list[float]]:
+    """Lloyd's k-means fit of the NUM_CELLS-cell IVF coarse quantizer.
 
-    Deterministic: init defaults to the md5-derived constant seeds (so
-    two runs — and any partitioning — produce identical centroids), and
-    each iteration is assign (nearest-centroid expression, JVM-side) →
-    per-(cell, dim) sum/count groupBy → driver-side mean update of the
-    k x dim model (k*dim rows collected per iteration — model-sized,
-    never data-sized; this is the standard Spark ML shape, the data
-    itself never leaves the executors). The per-dim sums accumulate in
+    Deterministic: the fit starts from the md5-derived constant seeds
+    CENTROIDS (so two runs — and any partitioning — produce identical
+    centroids), and each iteration is assign (nearest-centroid
+    expression, JVM-side) → per-(cell, dim) sum/count groupBy →
+    driver-side mean update of the cells x dim model (cells*dim rows
+    collected per iteration — model-sized, never data-sized; this is
+    the standard Spark ML shape, the data itself never leaves the
+    executors). The per-dim sums accumulate in
     DECIMAL(38,18) — decimal addition is exact and associative, so the
     result is bit-identical under ANY partitioning/combine order
     (double sums would drift in the last ulp and could flip a
     near-tie assignment in a later iteration). Empty cells keep their
     previous centroid. In production the result is checkpointed to a
-    centroids table and read by ivf_topk_* via the `centroids`
+    centroids table and read by ivf_topk_cosine via its `centroids`
     parameter.
     """
-    if init is None and k > len(CENTROIDS):
-        raise ValueError(
-            f"k={k} exceeds the {len(CENTROIDS)} constant seeds — "
-            "pass an explicit init for a larger quantizer (silently "
-            "fitting fewer cells would degrade recall with no signal)")
-    cents = [list(c) for c in (init if init is not None else CENTROIDS[:k])]
+    cents = [list(c) for c in CENTROIDS]
     e = emb.select(_as_double(F.col("embedding")).alias("v"))
     e.persist()
     try:
@@ -714,9 +705,7 @@ def quantization_sse(emb: DataFrame, cents) -> float:
     return e.select(F.sum(nearest).alias("sse")).collect()[0].sse
 
 
-def ivf_topk_euclidean(
-    emb: DataFrame, queries: DataFrame, k: int = 5, centroids=None
-) -> DataFrame:
+def ivf_topk_euclidean(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF ANN for the reference's ACTUAL Pinecone metric (euclidean,
     pinecone_vector_db.py:74): the scale path for J5 semantics.
     Same coarse quantizer as the cosine variant — euclidean cell
@@ -732,16 +721,13 @@ def ivf_topk_euclidean(
     # float64 widening in _mat, same values as _as_double, no
     # corpus-wide interpreted cast); the tiny broadcast query side
     # keeps the double cast for the _nearest_cells HOF expression
-    e = with_cells(
-        emb.select("vec_id", F.col("embedding").alias("v")),
-        cents=centroids,
-    )
+    e = with_cells(emb.select("vec_id", F.col("embedding").alias("v")))
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         _as_double(F.col("embedding")).alias("qv"),
     ).select(
         "query_id", "qv",
-        F.explode(_nearest_cells(F.col("qv"), NPROBE, centroids)).alias("cell"),
+        F.explode(_nearest_cells(F.col("qv"), NPROBE)).alias("cell"),
     )
     pairs = (
         e.join(F.broadcast(q), "cell")
@@ -772,14 +758,14 @@ def ivf_topk_euclidean(
     w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", F.col("rank").cast("int").alias("rank"),
                 "vec_id", "dist")
     )
 
 
 def ivf_topk_cosine(
-    emb: DataFrame, queries: DataFrame, k: int = 5, centroids=None
+    emb: DataFrame, queries: DataFrame, centroids=None
 ) -> DataFrame:
     """IVF ANN: corpus vectors live in 1 cell; queries probe NPROBE
     cells; ranking (rounded cosine desc, vec_id) happens only inside
@@ -842,7 +828,7 @@ def ivf_topk_cosine(
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", F.col("rank").cast("int").alias("rank"),
                 "vec_id", "sim")
     )

@@ -39,6 +39,10 @@ BPE_TOKEN_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+"
 
 FP_K = 8  # char k-gram size
 FP_W = 4  # winnowing window (positions)
+# curate_documents keeps docs classified CURATE_LANG with
+# quality_score >= MIN_QUALITY
+CURATE_LANG = "en"
+MIN_QUALITY = 0.5
 
 
 def _tok_count(norm, words: list[str]):
@@ -383,13 +387,13 @@ def text_profile(docs: DataFrame) -> DataFrame:
 
 
 def curate_documents(
-    docs: DataFrame, min_quality: float = 0.5, lang: str = "en",
-    near_dedup: bool = True, exact_components: bool = False,
+    docs: DataFrame, near_dedup: bool = True, exact_components: bool = False,
 ) -> DataFrame:
     """Composed training-data curation pass — the operators above used
     the way a 100 TB pipeline chains them: exact-dedup keep-first
     (cheapest pass, runs first), then MinHash near-dedup over the
-    exact survivors, then language filter, then quality filter.
+    exact survivors, then language filter (CURATE_LANG), then quality
+    filter (MIN_QUALITY).
     Shapes: one hash shuffle for the dedup groupBy, a semi-join on the
     keeper set, the banded star-candidate join of minhash_verified,
     and two narrow per-row feature projections joined on doc_id — no
@@ -455,7 +459,7 @@ def curate_documents(
     # dup-heavy 100 TB the regex scans run over the survivor set only
     q = quality_scores(uniq)
     survivors = uniq.join(
-        q.filter(F.col("quality_score") >= min_quality), "doc_id"
+        q.filter(F.col("quality_score") >= MIN_QUALITY), "doc_id"
     )
     if near_dedup:
         if exact_components:
@@ -483,6 +487,6 @@ def curate_documents(
     lid = language_id(survivors)
     return (
         survivors.join(lid.select("doc_id", "pred_lang"), "doc_id")
-        .filter(F.col("pred_lang") == lang)
+        .filter(F.col("pred_lang") == CURATE_LANG)
         .select("doc_id", "pred_lang", "quality_score", "n_words", "n_chars")
     )

@@ -11,6 +11,7 @@ absolute path.
 from __future__ import annotations
 
 from pdfspark.operators.dedup import (
+    JACCARD_THRESHOLD,
     NUM_BANDS,
     NUM_PERM,
     ROWS_PER_BAND,
@@ -18,19 +19,32 @@ from pdfspark.operators.dedup import (
     SIMHASH_BANDS,
     SIMHASH_HEX,
 )
+from pdfspark.operators.media import (
+    AUDIO_SAMPLE_RATE,
+    FRAME_EVERY_N,
+    RESIZE_TARGET,
+)
+from pdfspark.operators.retrieval import SESSION_GAP_MINUTES
 from pdfspark.operators.similarity import (
+    NEARDUP_COSINE,
     NUM_PLANES,
     PLANE_BANDS,
+    TOPK,
     plane_sql_literal,
 )
 from pdfspark.operators.textstats import (
     BPE_TOKEN_RE,
+    CURATE_LANG,
     FP_K,
     FP_W,
     EN_STOPWORDS,
+    MIN_QUALITY,
 )
+from pdfspark.streaming.windowed import WINDOW_HOURS
 
 NORM = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
+# unrolled neighbor-min rounds of components_sql (see its docstring)
+COMPONENT_ROUNDS = 8
 
 
 def _docs_all(fix: str) -> str:
@@ -134,7 +148,7 @@ SELECT doc_a, doc_b, n_shared_bands FROM pairs
 """
 
 
-def minhash_verified_sql(fix: str, threshold: float = 0.5) -> str:
+def minhash_verified_sql(fix: str) -> str:
     return f"""
 WITH {_docs_all(fix)}, {_shingles(SHINGLE_WORDS)}, {_minhash_cte()},
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
@@ -149,23 +163,23 @@ SELECT i.doc_a, i.doc_b,
 FROM inter i
 JOIN sizes na ON na.doc_id = i.doc_a
 JOIN sizes nb ON nb.doc_id = i.doc_b
-WHERE round(i.n_inter / (na.n_sh + nb.n_sh - i.n_inter), 4) >= {threshold}
+WHERE round(i.n_inter / (na.n_sh + nb.n_sh - i.n_inter), 4) >= {JACCARD_THRESHOLD}
 """
 
 
-def components_sql(fix: str, threshold: float = 0.5,
-                   rounds: int = 8) -> str:
+def components_sql(fix: str) -> str:
     """Twin of dedup.neardup_components. The component-min fixpoint is
     unique, so this needn't mirror the engine's pointer-jumping
-    rounds: `rounds` unrolled neighbor-min steps reach the fixpoint
-    for any component of diameter <= rounds (fixture components are
-    dense star+cross clusters of diameter 2-3)."""
+    rounds: COMPONENT_ROUNDS unrolled neighbor-min steps reach the
+    fixpoint for any component of diameter <= COMPONENT_ROUNDS
+    (fixture components are dense star+cross clusters of diameter
+    2-3)."""
     # MATERIALIZED throughout: every l{{i}} is referenced twice by
     # l{{i+1}}, so DuckDB's default CTE inlining would expand the
-    # verified-pairs subtree 2^rounds times (and run out of file
-    # handles re-opening the parquet inputs)
+    # verified-pairs subtree 2^COMPONENT_ROUNDS times (and run out of
+    # file handles re-opening the parquet inputs)
     steps = []
-    for i in range(rounds):
+    for i in range(COMPONENT_ROUNDS):
         steps.append(f"""
 l{i + 1} AS MATERIALIZED (
   SELECT s.src AS doc_id, least(min(own.rep), min(nb.rep)) AS rep
@@ -174,7 +188,7 @@ l{i + 1} AS MATERIALIZED (
   JOIN l{i} nb ON nb.doc_id = s.dst
   GROUP BY s.src)""")
     return f"""
-WITH verified AS MATERIALIZED ({minhash_verified_sql(fix, threshold)}),
+WITH verified AS MATERIALIZED ({minhash_verified_sql(fix)}),
 sym AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM verified
   UNION ALL
@@ -183,14 +197,13 @@ l0 AS MATERIALIZED (
   SELECT src AS doc_id, least(src, min(dst)) AS rep
   FROM sym GROUP BY src),{",".join(steps)}
 SELECT l.doc_id, l.rep AS rep_id, CAST(c.n AS INT) AS comp_size
-FROM l{rounds} l
-JOIN (SELECT rep, count(*) AS n FROM l{rounds} GROUP BY rep) c
+FROM l{COMPONENT_ROUNDS} l
+JOIN (SELECT rep, count(*) AS n FROM l{COMPONENT_ROUNDS} GROUP BY rep) c
      ON c.rep = l.rep
 """
 
 
-def curation_sql(fix: str, threshold: float = 0.5,
-                 min_quality: float = 0.5, lang: str = "en") -> str:
+def curation_sql(fix: str) -> str:
     """Twin of textstats.curate_documents with near_dedup=True: exact
     keep-first, then MinHash star-pair verification over the exact
     survivors (same staging as the engine — the pair set depends on
@@ -216,19 +229,19 @@ nd_drop AS (
   JOIN sizes na ON na.doc_id = i.doc_a
   JOIN sizes nb ON nb.doc_id = i.doc_b
   WHERE round(i.n_inter / (na.n_sh + nb.n_sh - i.n_inter), 4)
-        >= {threshold}),
+        >= {JACCARD_THRESHOLD}),
 cq AS (SELECT * FROM ({quality_sql(fix)})),
 cl AS (SELECT doc_id, pred_lang FROM ({langid_sql(fix)}))
 SELECT cq.doc_id, cl.pred_lang, cq.quality_score, cq.n_words, cq.n_chars
 FROM uniqd u
 JOIN cq ON cq.doc_id = u.doc_id
 JOIN cl ON cl.doc_id = u.doc_id
-WHERE cl.pred_lang = '{lang}' AND cq.quality_score >= {min_quality}
+WHERE cl.pred_lang = '{CURATE_LANG}' AND cq.quality_score >= {MIN_QUALITY}
   AND u.doc_id NOT IN (SELECT doc_id FROM nd_drop)
 """
 
 
-def _simhash_cte(bits: int = SIMHASH_HEX, suffix: str = "") -> str:
+def _simhash_cte(bits: int, suffix: str) -> str:
     """Positional-digit SimHash CTEs; bits > 32 extend the digit
     source with md5(shingle || '|2') — the engine's second
     engine-portable hash (dedup.simhash_signatures)."""
@@ -249,13 +262,6 @@ def _simhash_cte(bits: int = SIMHASH_HEX, suffix: str = "") -> str:
     return f"""
 ssum{suffix} AS (SELECT doc_id, {sums} FROM shingles2 GROUP BY doc_id),
 ssig{suffix} AS (SELECT doc_id, {bitstr} AS simhash FROM ssum{suffix})
-"""
-
-
-def simhash_sql(fix: str) -> str:
-    return f"""
-WITH {_docs_all(fix)}, {_shingles(2, "shingles2")}, {_simhash_cte()}
-SELECT doc_id, simhash FROM ssig
 """
 
 
@@ -490,7 +496,7 @@ def _dot(a: str, b: str) -> str:
     return f"list_dot_product({a}, {b})"
 
 
-def ann_cosine_sql(fix: str, k: int = 5) -> str:
+def ann_cosine_sql(fix: str) -> str:
     # nv/nq > 0: zero-norm embeddings are EXCLUDED on both sides,
     # the engine's quarantine semantics (similarity.cosine_topk_hof)
     # — without the filter DuckDB computes 0/0 = NaN and ranks it
@@ -508,11 +514,11 @@ ranked AS (
                                ORDER BY sim DESC, vec_id) AS rank
   FROM scored)
 SELECT query_id, CAST(rank AS INT) AS rank, vec_id, sim
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {TOPK}
 """
 
 
-def euclidean_topk_sql(fix: str, k: int = 5) -> str:
+def euclidean_topk_sql(fix: str) -> str:
     # list_distance = sqrt of the sequential squared-diff fold; exact
     # match (not merely round-identical) against the interpreted
     # list_reduce form it replaced, verified at sf0.01
@@ -527,11 +533,11 @@ ranked AS (
                                ORDER BY dist ASC, vec_id) AS rank
   FROM scored)
 SELECT query_id, CAST(rank AS INT) AS rank, vec_id, dist
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {TOPK}
 """
 
 
-def neardup_lsh_sql(fix: str, threshold: float = 0.99) -> str:
+def neardup_lsh_sql(fix: str) -> str:
     w = NUM_PLANES // PLANE_BANDS
     # variadic concat, not a || chain: DuckDB binds a || b || c ... as
     # nested binary calls and hits its 128-deep binder recursion limit
@@ -573,7 +579,7 @@ cos AS (
   FROM cands c
   JOIN en ea ON ea.vec_id = c.vec_a AND ea.nv > 0
   JOIN en eb ON eb.vec_id = c.vec_b AND eb.nv > 0)
-SELECT vec_a, vec_b, cosine FROM cos WHERE cosine >= {threshold}
+SELECT vec_a, vec_b, cosine FROM cos WHERE cosine >= {NEARDUP_COSINE}
 """
 
 
@@ -599,7 +605,7 @@ def _ivf_cell_pairs() -> str:
     )
 
 
-def ivf_topk_sql(fix: str, k: int = 5) -> str:
+def ivf_topk_sql(fix: str) -> str:
     from pdfspark.operators.similarity import NPROBE
 
     pairs = _ivf_cell_pairs()
@@ -626,11 +632,11 @@ ranked AS (
                                ORDER BY sim DESC, vec_id) AS rank
   FROM scored)
 SELECT query_id, CAST(rank AS INT) AS rank, vec_id, sim
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {TOPK}
 """
 
 
-def ivf_euclidean_sql(fix: str, k: int = 5) -> str:
+def ivf_euclidean_sql(fix: str) -> str:
     from pdfspark.operators.similarity import NPROBE
 
     pairs = _ivf_cell_pairs()
@@ -655,13 +661,13 @@ ranked AS (
                                ORDER BY dist ASC, vec_id) AS rank
   FROM scored)
 SELECT query_id, CAST(rank AS INT) AS rank, vec_id, dist
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= {TOPK}
 """
 
 
-def max_score_sql(fix: str, k: int = 5) -> str:
+def max_score_sql(fix: str) -> str:
     return f"""
-WITH topk AS ({ann_cosine_sql(fix, k)}),
+WITH topk AS ({ann_cosine_sql(fix)}),
 guarded AS (SELECT * FROM topk WHERE sim * 100 <= 100),
 rn AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY rank) AS r
        FROM guarded)
@@ -715,8 +721,8 @@ WHERE (({same_row} AND NOT ({same_col}) AND NOT ({y_overlap}))
 """
 
 
-def sessionize_sql(gap_minutes: int = 30) -> str:
-    gap_us = gap_minutes * 60 * 1_000_000
+def sessionize_sql() -> str:
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
     return f"""
 WITH m AS (
   SELECT *, CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
@@ -737,8 +743,8 @@ FROM s GROUP BY 1, 2
 
 
 def stream_windowed_sql() -> str:
-    return """
-SELECT strftime(time_bucket(INTERVAL 1 hour, ts), '%Y-%m-%d %H:%M:%S')
+    return f"""
+SELECT strftime(time_bucket(INTERVAL {WINDOW_HOURS} hour, ts), '%Y-%m-%d %H:%M:%S')
          AS window_start,
        event_type, CAST(count(*) AS INT) AS n_events,
        round(sum(value), 2) AS total_value
@@ -782,7 +788,7 @@ FROM rows_
 """
 
 
-def media_features_sql(fix: str, target: int = 224) -> str:
+def media_features_sql(fix: str) -> str:
     """M1 features + M3 resize targets in one twin (same 1:1 grain)."""
     def hexdig(p: int) -> str:
         return f"(strpos('0123456789abcdef', substr(md5(text), {p}, 1)) - 1)"
@@ -802,8 +808,8 @@ SELECT 'img://' || CAST(doc_id AS VARCHAR) AS media_ref,
        CAST(w AS INT) AS fake_width,
        CAST(h AS INT) AS fake_height,
        'ok' AS status,
-       CAST(greatest(1, (w * {target}) // greatest(w, h)) AS INT) AS out_w,
-       CAST(greatest(1, (h * {target}) // greatest(w, h)) AS INT) AS out_h
+       CAST(greatest(1, (w * {RESIZE_TARGET}) // greatest(w, h)) AS INT) AS out_w,
+       CAST(greatest(1, (h * {RESIZE_TARGET}) // greatest(w, h)) AS INT) AS out_h
 FROM d
 """
 
@@ -812,7 +818,7 @@ def _media_hexdig(p: int) -> str:
     return f"(strpos('0123456789abcdef', substr(md5(text), {p}, 1)) - 1)"
 
 
-def frame_sample_sql(fix: str, every_n: int = 5) -> str:
+def frame_sample_sql(fix: str) -> str:
     b2 = f"({_media_hexdig(5)} * 16 + {_media_hexdig(6)})"
     return f"""
 WITH {_docs_all(fix)},
@@ -820,7 +826,7 @@ v AS (SELECT 'vid://' || CAST(doc_id AS VARCHAR) AS media_ref,
              md5(text) AS cmd5, 1 + ({b2} % 120) AS n_frames
       FROM docs_all),
 fr AS (SELECT media_ref, cmd5,
-              unnest(range(0, n_frames, {every_n})) AS frame_idx
+              unnest(range(0, n_frames, {FRAME_EVERY_N})) AS frame_idx
        FROM v)
 SELECT media_ref, CAST(frame_idx AS INT) AS frame_idx,
        CAST(frame_idx * 40 AS INT) AS ts_ms,
@@ -829,33 +835,17 @@ FROM fr
 """
 
 
-def resize_plan_sql(fix: str, target: int = 224) -> str:
-    b0 = f"({_media_hexdig(1)} * 16 + {_media_hexdig(2)})"
-    b1 = f"({_media_hexdig(3)} * 16 + {_media_hexdig(4)})"
-    return f"""
-WITH {_docs_all(fix)},
-d AS (SELECT 'img://' || CAST(doc_id AS VARCHAR) AS media_ref,
-             16 + {b0} % 640 AS w, 16 + {b1} % 480 AS h
-      FROM docs_all)
-SELECT media_ref, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(greatest(1, (w * {target}) // greatest(w, h)) AS INT) AS out_w,
-       CAST(greatest(1, (h * {target}) // greatest(w, h)) AS INT) AS out_h,
-       'ok' AS status
-FROM d
-"""
-
-
-def audio_chunks_sql(fix: str, sample_rate: int = 16000) -> str:
+def audio_chunks_sql(fix: str) -> str:
     return f"""
 WITH {_docs_all(fix)},
 a AS (SELECT 'aud://' || CAST(doc_id AS VARCHAR) AS media_ref,
              octet_length(encode(text)) * 4 AS n
       FROM docs_all),
-c AS (SELECT *, greatest(1, CAST(ceil(n / {sample_rate}.0) AS INT))
+c AS (SELECT *, greatest(1, CAST(ceil(n / {AUDIO_SAMPLE_RATE}.0) AS INT))
              AS n_chunks FROM a)
-SELECT media_ref, CAST({sample_rate} AS INT) AS sample_rate,
+SELECT media_ref, CAST({AUDIO_SAMPLE_RATE} AS INT) AS sample_rate,
        CAST(n AS BIGINT) AS n_samples, n_chunks,
-       CAST(n - (n_chunks - 1) * {sample_rate} AS INT)
+       CAST(n - (n_chunks - 1) * {AUDIO_SAMPLE_RATE} AS INT)
          AS last_chunk_samples,
        'ok' AS status
 FROM c

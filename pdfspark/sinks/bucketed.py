@@ -43,9 +43,9 @@ def write_bucketed(
     path: str,
     key: str = "doc_id",
     n_buckets: int = DEFAULT_BUCKETS,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as an external bucketed+sorted parquet table.
+    """Write ``df`` as an external bucketed+sorted parquet table,
+    replacing any table of that name.
 
     ``sortBy(key)`` inside each bucket additionally lets one-file-
     per-bucket reads skip the SortMergeJoin sort. ``path`` makes the
@@ -61,7 +61,7 @@ def write_bucketed(
         .bucketBy(n_buckets, key)
         .sortBy(key)
         .option("path", path)
-        .mode(mode)
+        .mode("overwrite")
         .saveAsTable(table)
     )
 

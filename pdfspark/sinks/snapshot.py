@@ -87,6 +87,9 @@ MANIFEST_DIR = "_manifests"
 STAGING_DIR = "_staging"
 # every parquet file a commit or compaction writes (module docstring)
 PARQUET_CODEC = "zstd"
+# age (s) after which compact_snapshots takes over a maintenance lock
+# whose holder stopped its heartbeat (a crashed compactor)
+LOCK_TTL_S = 3600.0
 
 
 def _publish(output: str, snap: str,
@@ -445,7 +448,7 @@ def _read_snapshot(spark: SparkSession, output: str, snap: str,
 def compact_snapshots(
     spark: SparkSession, output: str, fmt: str = "parquet",
     n_files: int = 1, min_snapshots: int = 2,
-    partition_by: str | None = None, lock_ttl_s: float = 3600.0,
+    partition_by: str | None = None,
 ) -> str | None:
     """Small-files maintenance: rewrite every committed snapshot into
     ONE new snapshot of ``n_files`` files and atomically supersede the
@@ -472,9 +475,9 @@ def compact_snapshots(
     enforces the single-maintenance-writer rule on any filesystem
     with atomic create — a second compactor raises instead of
     corrupting, and a crashed holder's stale lock is taken over after
-    ``lock_ttl_s``."""
-    lock, token = _acquire_maintenance_lock(output, lock_ttl_s)
-    hb_stop = _start_lock_heartbeat(lock, lock_ttl_s)
+    ``LOCK_TTL_S``."""
+    lock, token = _acquire_maintenance_lock(output, LOCK_TTL_S)
+    hb_stop = _start_lock_heartbeat(lock, LOCK_TTL_S)
     try:
         return _compact_locked(spark, output, fmt, n_files, min_snapshots,
                                partition_by, lock, token)

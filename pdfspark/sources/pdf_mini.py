@@ -306,12 +306,6 @@ def _unescape_bytes(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _unescape(raw: bytes) -> str:
-    """Content-stream show strings: the bytes ARE the font's character
-    codes; latin-1 is the identity decode (simple non-CID fonts)."""
-    return _unescape_bytes(raw).decode("latin-1")
-
-
 def _text_string(b: bytes) -> str:
     """PDF *text string* semantics (7.9.2.2): UTF-16BE iff the bytes
     begin with the FE FF BOM, UTF-8 iff they begin with EF BB BF
@@ -334,13 +328,6 @@ def _hex_bytes(raw: bytes) -> bytes:
     if len(h) % 2:
         h += b"0"
     return bytes.fromhex(h.decode("ascii"))
-
-
-def _hex_str(raw: bytes) -> str:
-    """Hex string -> text via the latin-1 single-byte identity — the
-    honest slice for simple (non-CID) fonts, where the string bytes
-    ARE the character codes. CID strings go through _decode_codes."""
-    return _hex_bytes(raw).decode("latin-1")
 
 
 def _escape(s: str) -> bytes:
@@ -524,13 +511,12 @@ def _std_user_value(file_key: bytes, id0: bytes, r: int) -> bytes:
     return u + b"\x00" * 16
 
 
-def _obj_key(file_key: bytes, num: int, gen: int = 0,
-             aes: bool = False) -> bytes:
+def _obj_key(file_key: bytes, num: int, aes: bool = False) -> bytes:
     """Algorithm 1: the per-object key — MD5 of the file key plus the
-    object/generation numbers packed low-order-first; the AESV2 crypt
-    filter additionally appends the constant bytes `sAlT` (§7.6.2)."""
-    h = _md5(file_key + num.to_bytes(3, "little")
-             + gen.to_bytes(2, "little")
+    object/generation numbers packed low-order-first (the generation
+    is always 0 here); the AESV2 crypt filter additionally appends
+    the constant bytes `sAlT` (§7.6.2)."""
+    h = _md5(file_key + num.to_bytes(3, "little") + b"\x00\x00"
              + (b"sAlT" if aes else b""))
     return h[: min(len(file_key) + 5, 16)]
 

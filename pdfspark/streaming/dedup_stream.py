@@ -46,20 +46,16 @@ def dedup_stream(
     docs_dir: str,
     out_path: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain all unprocessed document files (parquet, DOCS_SCHEMA)
     into the keeper table at ``out_path``; returns after the
     availableNow query terminates. Restart with the same
     ``checkpoint_dir`` to process only newly arrived files."""
-    reader = (
+    stream = (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("pathGlobFilter", "*.parquet")
+        .parquet(docs_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(docs_dir)
 
     def sink(batch_df, epoch_id: int) -> None:
         firsts = (
@@ -104,13 +100,11 @@ def neardup_stream(
     out_path: str,
     bands_path: str,
     checkpoint_dir: str,
-    threshold: float = 0.5,
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """Streaming NEAR-dup keep-first: a newly arriving document is
     dropped iff it is an exact duplicate OR a Jaccard-verified
-    (>= ``threshold``) near-duplicate of any previously KEPT document
-    — the streaming form of curate_documents' staged
+    (>= ``JACCARD_THRESHOLD``) near-duplicate of any previously KEPT
+    document — the streaming form of curate_documents' staged
     exact-then-minhash contract, and what a continuously-fed training
     corpus actually needs (yesterday's crawl is state, today's is the
     batch).
@@ -140,20 +134,18 @@ def neardup_stream(
     invisible to future candidate searches, a silent recall loss.
     """
     from pdfspark.operators.dedup import (
+        JACCARD_THRESHOLD,
         lsh_bands,
         minhash_signatures,
         minhash_verified,
         word_shingles,
     )
 
-    reader = (
+    stream = (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("pathGlobFilter", "*.parquet")
+        .parquet(docs_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(docs_dir)
 
     def sink(batch_df, epoch_id: int) -> None:
         ss = batch_df.sparkSession
@@ -182,9 +174,8 @@ def neardup_stream(
         # 2. batch-internal near stage: linear doc_b-drop over the
         # batch's own verified pairs (curate_documents' contract)
         firsts = firsts.localCheckpoint(eager=True)
-        nd = minhash_verified(
-            firsts.select("doc_id", "text"), threshold
-        ).select(F.col("doc_b").alias("doc_id"))
+        nd = minhash_verified(firsts.select("doc_id", "text")).select(
+            F.col("doc_b").alias("doc_id"))
         surv = firsts.join(nd, "doc_id", "left_anti")
         # 3. cross-batch near stage: survivors' bands equi-join the
         # state band index; verify Jaccard against only the
@@ -235,7 +226,7 @@ def neardup_stream(
                            - F.col("n_inter")),
                         4,
                     )
-                    >= threshold
+                    >= JACCARD_THRESHOLD
                 )
                 .select(F.col("doc_b").alias("doc_id"))
                 .distinct()

@@ -126,17 +126,19 @@ def _sessionize_group(key, pdfs: Iterator[pd.DataFrame], state: GroupState,
 
 
 def sessionize_stream(
-    spark: SparkSession, events_path: str, gap_minutes: int = 30,
+    spark: SparkSession, events_path: str,
     max_files_per_trigger: int | None = None,
     path_glob: str | None = None,
 ) -> DataFrame:
     """Run stateful sessionization as a streaming query (availableNow,
-    memory sink) and return the materialized sessions.
+    memory sink) and return the materialized sessions, split at the
+    batch operator's SESSION_GAP_MINUTES.
 
     `max_files_per_trigger` forces a multi-micro-batch run (used by
     tests to prove cross-batch session merging); `path_glob` overrides
     the source's default file filter (exact basename for a file input,
     *.parquet for a directory dataset — see streaming/source.py)."""
+    from pdfspark.operators.retrieval import SESSION_GAP_MINUTES
     from pdfspark.streaming.source import parquet_stream
 
     stream = (
@@ -145,7 +147,7 @@ def sessionize_stream(
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .select("user_id", "event_id", "ts", "value")
     )
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
 
     def fn(key, pdfs, state):
         yield from _sessionize_group(key, pdfs, state, gap_us)

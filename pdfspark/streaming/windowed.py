@@ -7,35 +7,27 @@ On a finite input the result equals the batch `groupBy(window(...))`,
 which is what the DuckDB oracle computes — so even the streaming
 query is hash-verified.
 
-Output-mode honesty: this query runs in COMPLETE mode so that a
-finite availableNow drain emits every window (the oracle compares the
-full result). In complete mode a watermark would be a NO-OP — state
-is never evicted and late data is never dropped — so none is set
-here. The unbounded-source variant is the opposite trade:
-``output_mode="append"`` plus the 10-minute watermark bounds state
-and finalizes each window once, but a finite drain then emits ONLY
-windows older than the watermark (the tail stays buffered), which is
-why it is not the oracle-checked default. At scale the append+
-watermark form is the one to run continuously (file source swapped
-for Kafka/Iceberg streaming); state is keyed by (window, event_type)
-— small cardinality, no skew concern.
+The query runs in COMPLETE mode so that a finite availableNow drain
+emits every window (the oracle compares the full result). In complete
+mode a watermark would be a no-op (state is never evicted and late
+data is never dropped), so none is set. State is keyed by (window,
+event_type): small cardinality, no skew concern.
 """
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# tumbling-window width; the DuckDB oracle (oracle_pipeline
+# .stream_windowed_sql) buckets by the same value
+WINDOW_HOURS = 1
 
 def windowed_counts_stream(
-    spark: SparkSession, events_path: str, window: str = "1 hour",
-    output_mode: str = "complete", path_glob: str | None = None,
+    spark: SparkSession, events_path: str, path_glob: str | None = None,
 ) -> DataFrame:
     """Run the windowed aggregation as a real streaming query
-    (availableNow) and return the materialized result. See the module
-    docstring for the complete-vs-append trade; append mode attaches
-    the 10-minute watermark (where it actually takes effect)."""
+    (availableNow) and return the materialized result."""
     from pdfspark.streaming.source import parquet_stream
 
     stream = (
@@ -43,10 +35,8 @@ def windowed_counts_stream(
         parquet_stream(spark, events_path, path_glob)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    if output_mode == "append":
-        stream = stream.withWatermark("ts", "10 minutes")
     agg = stream.groupBy(
-        F.window("ts", window).alias("w"), "event_type"
+        F.window("ts", f"{WINDOW_HOURS} hour").alias("w"), "event_type"
     ).agg(
         F.count("*").cast("int").alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
@@ -56,7 +46,7 @@ def windowed_counts_stream(
     return drain_memory_sink(
         agg,
         "stream_windowed",
-        output_mode,
+        "complete",
         transform=lambda t: t.select(
             F.col("w.start").cast("string").alias("window_start"),
             "event_type",

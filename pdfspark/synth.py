@@ -192,13 +192,18 @@ def gen_page_numbers(b: DocBuilder, rng):
         b.add("TextBox", t, h=12.0)
 
 
-def _table_grid(b, rng, title, n_rows, n_cols, prefix, y_jitter=3.0):
+# per-cell vertical jitter (pt): a row's cells stay within 2x this of
+# each other, well inside the row-clustering Y_TOLERANCE
+TABLE_Y_JITTER = 3.0
+
+
+def _table_grid(b, rng, title, n_rows, n_cols, prefix):
     b.add("TextBox", title, h=14.0)
     xs = [72.0 + 150.0 * j for j in range(n_cols)]
     y = b.y
     for i in range(n_rows):
         for j in range(n_cols):
-            jit = rng.uniform(-y_jitter, y_jitter)
+            jit = rng.uniform(-TABLE_Y_JITTER, TABLE_Y_JITTER)
             b.add("TextBox", f"{prefix}r{i + 1}c{j + 1}",
                   x0=xs[j], w=100.0, h=12.0, y1=y + jit)
         y -= 24.0

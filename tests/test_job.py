@@ -1360,3 +1360,26 @@ def test_snapshot_table_random_op_sequences_preserve_rows(spark, tmp_path):
                else sorted((r.doc_id, r.v)
                            for r in S.read_committed(spark, out).collect()))
         assert got == sorted(model), f"divergence after step {step} ({op})"
+
+
+def test_job_persists_the_fold_only_for_metrics(spark, job_paths, tmp_path,
+                                               monkeypatch):
+    """The --metrics lineage is the fold's only second reader, so the
+    job caches the fold under --metrics and nowhere else."""
+    frame_cls = type(spark.range(1))
+    real = frame_cls.persist
+    calls = []
+
+    def counting(self, *a, **kw):
+        calls.append(self)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", counting)
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(cached())
+    for want, extra in ((0, []), (1, ["--metrics", str(tmp_path / "met")])):
+        del calls[:]
+        assert main(["--input", job_paths["input"],
+                     "--output", str(tmp_path / f"out{want}"), *extra]) == 0
+        assert len(calls) == want, extra
+        assert not set(cached()) - before, extra  # nothing left cached

@@ -207,3 +207,50 @@ def test_bytes_in_is_one_python_stage(spark):
     assert (df.rdd.getNumPartitions()
             <= spark.sparkContext.defaultParallelism)
     assert df.count() == len(glob.glob(os.path.join(src, "*")))
+
+
+# Job commits per mode: (table, source scanned, exchange ceiling). The
+# data commit is the fold plus the commit's rebalance (and, on
+# --input, the fold's salted repartition); the metrics commit adds the
+# lineage groupBy over the cached fold.
+JOB_COMMITS = {
+    "--input": [("out", "documents_in.parquet", 2),
+                ("met", "documents_in.parquet", 2)],
+    "--payloads": [("out", "payloads", 1), ("met", "payloads", 1)],
+}
+
+
+@pytest.mark.parametrize("mode", sorted(JOB_COMMITS))
+def test_job_commit_plans(spark, fixture_dir, tmp_path, monkeypatch, mode):
+    """Each frame extract_job commits reads its source directly through
+    one Python stage: no broadcast join, bounded exchanges, and on
+    --input --geom no scan of the geometry table (the job's config
+    never reads header/footer strings)."""
+    import pdfspark.sinks.snapshot as S
+    from jobs.extract_job import main
+    from tools.explain_audit import plan_summary
+
+    seen = []
+    real = S._stage_snapshot
+
+    def capture(df, output, *a, **kw):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        seen.append((os.path.basename(output),
+                     plan_summary(plan), plan))
+        return real(df, output, *a, **kw)
+
+    monkeypatch.setattr(S, "_stage_snapshot", capture)
+    src = {"--input": ["--input",
+                       os.path.join(fixture_dir, "documents_in.parquet"),
+                       "--geom",
+                       os.path.join(fixture_dir, "spans_geom.parquet")],
+           "--payloads": ["--payloads",
+                          os.path.join(fixture_dir, "payloads")]}[mode]
+    assert main([*src, "--output", str(tmp_path / "out"),
+                 "--metrics", str(tmp_path / "met")]) == 0
+    assert [t for t, _, _ in seen] == [t for t, _, _ in JOB_COMMITS[mode]]
+    for (table, s, plan), (_, scan, max_exch) in zip(seen,
+                                                     JOB_COMMITS[mode]):
+        assert s["pyarrow"] == 1 and s["bhj"] == 0, (table, plan)
+        assert s["exch"] <= max_exch, (table, plan)
+        assert s["scans"] == [scan], (table, plan)

@@ -28,10 +28,29 @@ SKIP = {"s8_stream_windowed", "s8_stream_sessionize"}
 _LOCATION = re.compile(r"Location: \w+\(\d+ paths?\)\[([^\]]*)\]")
 
 
+def _drop_initial_plans(plan: str) -> str:
+    """``plan`` without its "== Initial Plan ==" subtrees. A cached
+    frame that an earlier action already ran prints its adaptive plan
+    twice (final and initial), which would count each operator twice.
+    The initial plan is the last child of its AdaptiveSparkPlan, so its
+    subtree is every following line indented at least as deep."""
+    out, cut = [], None
+    for ln in plan.splitlines():
+        depth = len(ln) - len(ln.lstrip(" +-:"))
+        if cut is not None and depth >= cut:
+            continue
+        cut = depth if "== Initial Plan ==" in ln else None
+        if cut is None:
+            out.append(ln)
+    return "\n".join(out)
+
+
 def plan_summary(plan: str) -> dict:
     """Counts of the plan's joins, exchanges, Python stages and scans
     with pushed filters, plus ``scans``: the sorted file names (last
-    path component) of every location the plan scans."""
+    path component) of every location the plan scans. Each operator
+    counts once, also under a cached frame already executed."""
+    plan = _drop_initial_plans(plan)
     return {
         "bhj": plan.count("BroadcastHashJoin"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
