@@ -154,31 +154,26 @@ def _run_html_mode(spark, args) -> int:
     # zero-block pages (empty body, script-only, undecodable bytes)
     # MUST still commit a row: resume anti-joins committed doc_ids,
     # so an uncommitted page would be re-scanned — and its lineage
-    # re-appended to --metrics — on every --resume run forever
-    sentinel = (
-        pages.join(blocks.select("doc_id").distinct(),
-                   "doc_id", "left_anti")
-        .select(
-            "doc_id",
-            F.lit(-1).alias("block_id"),
-            F.lit("_empty").alias("tag"),
-            F.lit(0).alias("n_words"),
-            F.lit(0).alias("n_link_words"),
-            F.lit(0.0).alias("link_density"),
-            F.lit(False).alias("dom_boiler"),
-            F.lit(False).alias("is_content"),
-            F.lit("").alias("text"),
-        )
-    )
-    blocks = blocks.unionByName(
-        sentinel.select(*[f.name for f in blocks.schema.fields])
-    ).persist()
+    # re-appended to --metrics — on every --resume run forever. Every
+    # page left-joins its blocks, and a page with none gets the
+    # sentinel: one reference to blocks, so the DOM kernel runs once.
+    sentinel = {"block_id": -1, "tag": "_empty", "n_words": 0,
+                "n_link_words": 0, "link_density": 0.0,
+                "dom_boiler": False, "is_content": False, "text": ""}
+    no_block = F.col("block_id").isNull()
+    out = pages.select("doc_id").join(blocks, "doc_id", "left").select(
+        "doc_id",
+        *[F.when(no_block, F.lit(v)).otherwise(F.col(c)).alias(c)
+          for c, v in sentinel.items()])
     aux = None
     if args.metrics:
-        # count each page's committed rows (blocks or its sentinel)
-        # under THAT page's partition id: the sentinel rows come out of
-        # a join, so their own partition ids name no page partition
-        per_page = blocks.groupBy("doc_id").agg(
+        # the lineage is the committed frame's only second reader:
+        # persist for it alone. Count each page's committed rows
+        # (blocks or its sentinel) under THAT page's partition id: the
+        # committed rows come out of a join, so their own partition
+        # ids name no page partition
+        out = out.persist()
+        per_page = out.groupBy("doc_id").agg(
             F.count("*").cast("long").alias("spans_out"))
         metrics = (
             pages.select("doc_id", "bytes_in",
@@ -193,9 +188,12 @@ def _run_html_mode(spark, args) -> int:
             .withColumn("wall_ms", F.lit(None).cast("double"))
         )
         aux = [(metrics, args.metrics)]
-    _commit(args, blocks, aux)
-    pages.unpersist()
-    blocks.unpersist()
+    try:
+        _commit(args, out, aux)
+    finally:
+        pages.unpersist()
+        if args.metrics:
+            out.unpersist()
     return 0
 
 

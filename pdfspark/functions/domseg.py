@@ -304,8 +304,3 @@ def extract_blocks(html: str) -> list[Block]:
     sidecar writer, and the tests all share)."""
     return classify_blocks(segment_blocks(html))
 
-
-def main_text(html: str) -> str:
-    """The boilerplate-stripped page text: content blocks joined in
-    document order."""
-    return "\n".join(b.text for b in extract_blocks(html) if b.is_content)

@@ -31,7 +31,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdfspark.functions.domseg import extract_blocks
@@ -90,40 +89,3 @@ def main_content_blocks(pages: DataFrame) -> DataFrame:
 
     return pages.select("doc_id", "html").mapInPandas(run, schema)
 
-
-def main_content_text(pages: DataFrame) -> DataFrame:
-    """Doc-level rollup: the boilerplate-stripped page text plus strip
-    diagnostics. Built ON the block frame with one groupBy(doc_id) —
-    callers that already hold blocks can aggregate themselves; this
-    helper exists for the curation-style 'give me clean text' use."""
-    blocks = main_content_blocks(pages)
-    return (
-        blocks.groupBy("doc_id")
-        .agg(
-            # collect_list order is partition-dependent: sort by the
-            # carried block_id so main_text is deterministic
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("is_content"),
-                                F.struct("block_id", "text"),
-                            )
-                        )
-                    ),
-                    lambda s: s["text"],
-                ),
-                "\n",
-            ).alias("main_text"),
-            F.count("*").cast("int").alias("n_blocks"),
-            F.sum(F.col("is_content").cast("int"))
-            .cast("int")
-            .alias("n_content_blocks"),
-            F.round(
-                F.sum(F.when(~F.col("is_content"), F.col("n_words")).otherwise(0))
-                / F.greatest(F.sum("n_words"), F.lit(1)),
-                4,
-            ).alias("boiler_word_ratio"),
-        )
-    )

@@ -231,84 +231,6 @@ def euclidean_topk(
     return _topk_fold(emb, queries, k, "euclidean")
 
 
-def cosine_topk_np(
-    emb: DataFrame, queries: DataFrame, k: int = TOPK
-) -> DataFrame:
-    """Arrow/NumPy fast path for brute-force cosine top-k: the query
-    block is tiny and broadcast as plain Python; each corpus partition
-    does ONE matmul per Arrow batch instead of per-element interpreted
-    `aggregate(zip_with(...))` lambdas. Per-batch partial top-k keeps
-    the shuffle at |batches| x |queries| x k rows, then a global
-    window finishes. Same semantics as cosine_topk up to float
-    summation order (matmul accumulates in a different order than the
-    sequential fold; ranks agree except exactly at round-to-4 ties) —
-    equality is pytest-checked on the fixture, the HOF sibling stays
-    the DuckDB-oracled reference. Measured: 14x faster at a 104k-vector
-    corpus (27.6s -> 2.0s, local[32]) — HOF lambdas evaluate
-    interpreted per element, the matmul is one BLAS call per Arrow
-    batch — and the ratio grows with corpus size."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select("vec_id", "embedding").collect()  # model-sized
-    if not q_rows:
-        # np.array([]) is 1-D: the axis=1 norm below would raise on the
-        # driver where the HOF twin just returns an empty frame
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, rank int, vec_id long, sim double"
-        )
-    q_ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    qm = np.array([r.embedding for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    # zero-norm mask — the cosine_topk_hof quarantine semantics
-    qmask = qn > 0
-    q_ids, qm, qn = q_ids[qmask], qm[qmask], qn[qmask]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            nrm = np.linalg.norm(m, axis=1)
-            vmask = nrm > 0  # zero-norm candidates excluded
-            if not vmask.all():
-                ids, m, nrm = ids[vmask], m[vmask], nrm[vmask]
-            if not len(ids):
-                continue
-            sims = np.round((m @ qm.T) / np.outer(nrm, qn), 4)
-            rows = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = ids != qid
-                cids, cs = ids[mask], col[mask]
-                if not len(cids):
-                    continue
-                # partial top-k per batch (order by -sim, vec_id)
-                order = np.lexsort((cids, -cs))[:k]
-                rows.extend(
-                    (int(qid), int(cids[i]), float(cs[i])) for i in order
-                )
-            yield pd.DataFrame(rows, columns=["query_id", "vec_id", "sim"])
-
-    partial = emb.select("vec_id", "embedding").mapInPandas(run, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"),
-                "vec_id", "sim")
-    )
-
-
 def euclidean_topk_hof(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Interpreted HOF twin of euclidean_topk (J5 Pinecone semantics)
     — the DuckDB oracle's transliteration; kept for parity tests."""
@@ -343,11 +265,11 @@ def euclidean_topk_hof(emb: DataFrame, queries: DataFrame) -> DataFrame:
 #
 # Spark higher-order-function lambdas (aggregate/zip_with) evaluate
 # INTERPRETED per element — measured 14x slower than one vectorized
-# NumPy pass per Arrow batch on a 104k-vector corpus (see
-# cosine_topk_np). The kernels below are the production form of every
-# linear corpus scan (signatures, IVF cell assignment, candidate
-# verification); the HOF forms are kept as *_hof twins because they
-# transliterate 1:1 into the DuckDB oracle SQL.
+# NumPy pass per Arrow batch on a 104k-vector corpus. The kernels
+# below are the production form of every linear corpus scan
+# (signatures, IVF cell assignment, candidate verification); the HOF
+# forms are kept as *_hof twins because they transliterate 1:1 into
+# the DuckDB oracle SQL.
 #
 # BIT-EXACT parity trick: each kernel accumulates its reduction in the
 # SAME left-fold order as F.aggregate(..., (s, x) -> s + x) — one
@@ -360,8 +282,8 @@ def euclidean_topk_hof(emb: DataFrame, queries: DataFrame) -> DataFrame:
 # seam is the final round-to-4 (np half-even vs JVM HALF_UP), which
 # differs solely at exact .00005-representable doubles — the same
 # boundary the Spark-vs-DuckDB twins already exclude by fixture design
-# (see verify skill gotchas); pinned by the cosine_topk_np equality
-# test since round 2.
+# (see verify skill gotchas); pinned by the kernel-vs-HOF equality
+# tests.
 
 
 def _fold_rows(P):
@@ -533,8 +455,7 @@ def plane_sql_literal(p: int) -> str:
 # --- IVF (inverted-file) variant ------------------------------------------
 #
 # Coarse quantizer: NUM_CELLS deterministic centroids (same md5-derived
-# constants in Spark and the oracle — in production these come from a
-# k-means fit checkpointed to a table). Each corpus vector is assigned
+# constants in Spark and the oracle). Each corpus vector is assigned
 # to its nearest centroid ("cell"); a query probes its NPROBE nearest
 # cells and ranks only vectors in those cells. Candidate generation is
 # an equi-join on cell id — the IVF analogue of the LSH band join.
@@ -543,16 +464,15 @@ NUM_CELLS = 8
 NPROBE = 2
 
 # Measured recall@5 vs the brute-force row (sf0.1, 40 queries,
-# round 5) by NPROBE 1/2/3/4: deterministic centroids .445/.625/
-# .740/.825, k-means-fit .510/.665/.790/.870. The fixture embeddings
-# are synthetic near-uniform vectors — the known WORST case for a
-# coarse quantizer (no cluster structure to capture, so recall tracks
-# roughly the probed cell fraction, and the k-means fit can only buy
-# a few points). On real embedding corpora (which cluster heavily)
-# IVF recall at small NPROBE is far higher; the knob to turn is
-# NPROBE (linear candidate-volume cost), and the driver row keeps
-# NPROBE=2 deterministic centroids because its job is plan shape +
-# bit-exact oracle parity, not recall on unstructured noise.
+# round 5) by NPROBE 1/2/3/4: .445/.625/.740/.825. The fixture
+# embeddings are synthetic near-uniform vectors — the known WORST case
+# for a coarse quantizer (no cluster structure to capture, so recall
+# tracks roughly the probed cell fraction). On real embedding corpora
+# (which cluster heavily) IVF recall at small NPROBE is far higher;
+# the knob to turn is NPROBE (linear candidate-volume cost), and the
+# driver row keeps NPROBE=2 deterministic centroids because its job is
+# plan shape + bit-exact oracle parity, not recall on unstructured
+# noise.
 
 CENTROIDS: list[list[float]] = [
     _plane(1000 + c) for c in range(NUM_CELLS)
@@ -563,35 +483,33 @@ def centroid_sql_literal(c: int) -> str:
     return "[" + ", ".join(repr(x) for x in CENTROIDS[c]) + "]"
 
 
-def _cell_dists(v, cents=None):
+def _cell_dists(v):
     """Array of squared distances v -> each centroid (fold order fixed)."""
-    cents = CENTROIDS if cents is None else cents
     return [
         F.aggregate(
             F.zip_with(
                 v,
-                F.array(*[F.lit(x) for x in cents[c]]),
+                F.array(*[F.lit(x) for x in CENTROIDS[c]]),
                 lambda a, b: (a - b) * (a - b),
             ),
             F.lit(0.0),
             lambda s, x: s + x,
         )
-        for c in range(len(cents))
+        for c in range(NUM_CELLS)
     ]
 
 
-def _nearest_cells(v, k: int, cents=None):
+def _nearest_cells(v, k: int):
     """Indices of the k nearest centroids, ties broken by cell id."""
-    cents = CENTROIDS if cents is None else cents
-    d = _cell_dists(v, cents)
+    d = _cell_dists(v)
     pairs = F.array_sort(
         F.array(*[F.struct(d[c].alias("d"), F.lit(c).alias("c"))
-                  for c in range(len(cents))])
+                  for c in range(NUM_CELLS)])
     )
     return F.transform(F.slice(pairs, 1, k), lambda p: p["c"])
 
 
-def with_cells(df: DataFrame, cents=None) -> DataFrame:
+def with_cells(df: DataFrame) -> DataFrame:
     """Arrow/NumPy IVF cell assignment: appends `cell` (nearest
     centroid by squared L2 of the vector column `v`, ties to the
     lowest cell id — np.argmin's first-occurrence rule equals the HOF
@@ -602,7 +520,6 @@ def with_cells(df: DataFrame, cents=None) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    C = [list(c) for c in (cents if cents is not None else CENTROIDS)]
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField("cell", T.IntegerType())])
     in_cols = [f.name for f in df.schema.fields]
@@ -612,8 +529,8 @@ def with_cells(df: DataFrame, cents=None) -> DataFrame:
             if not len(pdf):
                 continue
             m = _mat(pdf["v"])
-            D = np.empty((len(pdf), len(C)))
-            for ci, cent in enumerate(C):
+            D = np.empty((len(pdf), NUM_CELLS))
+            for ci, cent in enumerate(CENTROIDS):
                 diff = m - np.asarray(cent)
                 D[:, ci] = _fold_rows(diff * diff)
             out = pdf[in_cols].copy()
@@ -621,88 +538,6 @@ def with_cells(df: DataFrame, cents=None) -> DataFrame:
             yield out
 
     return df.mapInPandas(run, schema)
-
-
-def fit_ivf_centroids(emb: DataFrame, iters: int = 5) -> list[list[float]]:
-    """Lloyd's k-means fit of the NUM_CELLS-cell IVF coarse quantizer.
-
-    Deterministic: the fit starts from the md5-derived constant seeds
-    CENTROIDS (so two runs — and any partitioning — produce identical
-    centroids), and each iteration is assign (nearest-centroid
-    expression, JVM-side) → per-(cell, dim) sum/count groupBy →
-    driver-side mean update of the cells x dim model (cells*dim rows
-    collected per iteration — model-sized, never data-sized; this is
-    the standard Spark ML shape, the data itself never leaves the
-    executors). The per-dim sums accumulate in
-    DECIMAL(38,18) — decimal addition is exact and associative, so the
-    result is bit-identical under ANY partitioning/combine order
-    (double sums would drift in the last ulp and could flip a
-    near-tie assignment in a later iteration). Empty cells keep their
-    previous centroid. In production the result is checkpointed to a
-    centroids table and read by ivf_topk_cosine via its `centroids`
-    parameter.
-    """
-    cents = [list(c) for c in CENTROIDS]
-    e = emb.select(_as_double(F.col("embedding")).alias("v"))
-    e.persist()
-    try:
-        for _ in range(iters):
-            # NumPy assignment kernel (bit-identical to the HOF
-            # expression, see with_cells) — the per-iteration full
-            # corpus scan is the fit's dominant cost
-            assigned = with_cells(e, cents)
-            stats = (
-                assigned.select("cell", F.posexplode("v").alias("pos", "x"))
-                .groupBy("cell", "pos")
-                .agg(
-                    F.sum(F.col("x").cast("decimal(38,18)")).alias("s"),
-                    F.count("*").alias("n"),
-                )
-                .collect()
-            )
-            sums: dict[int, list[float]] = {}
-            counts: dict[int, int] = {}
-            dim = len(cents[0])
-            for r in stats:
-                sums.setdefault(r.cell, [0.0] * dim)[r.pos] = r.s
-                counts[r.cell] = r.n
-            cents = [
-                ([float(x) / counts[c] for x in sums[c]] if counts.get(c)
-                 else cents[c])
-                for c in range(len(cents))
-            ]
-    finally:
-        e.unpersist()
-    return cents
-
-
-def save_centroids(spark, cents, path: str) -> None:
-    """Checkpoint a fitted coarse quantizer to a centroids table
-    (cell int, centroid array<double>) — the production hand-off
-    between the fit job and the IVF query path."""
-    df = spark.createDataFrame(
-        [(c, list(v)) for c, v in enumerate(cents)],
-        "cell int, centroid array<double>",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_centroids(spark, path: str) -> list[list[float]]:
-    rows = spark.read.parquet(path).orderBy("cell").collect()
-    # a real error, not an assert: under python -O a missing or
-    # duplicated cell row would silently misalign every IVF lookup
-    if [r.cell for r in rows] != list(range(len(rows))):
-        raise ValueError(f"centroid table at {path} is not a dense "
-                         "0..k-1 cell range")
-    return [list(r.centroid) for r in rows]
-
-
-def quantization_sse(emb: DataFrame, cents) -> float:
-    """Sum of squared distances to the nearest centroid (fit metric)."""
-    e = emb.select(_as_double(F.col("embedding")).alias("v"))
-    d = _cell_dists(F.col("v"), cents)
-    nearest = F.least(*d) if len(d) > 1 else d[0]
-    return e.select(F.sum(nearest).alias("sse")).collect()[0].sse
 
 
 def ivf_topk_euclidean(emb: DataFrame, queries: DataFrame) -> DataFrame:
@@ -764,29 +599,23 @@ def ivf_topk_euclidean(emb: DataFrame, queries: DataFrame) -> DataFrame:
     )
 
 
-def ivf_topk_cosine(
-    emb: DataFrame, queries: DataFrame, centroids=None
-) -> DataFrame:
+def ivf_topk_cosine(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF ANN: corpus vectors live in 1 cell; queries probe NPROBE
     cells; ranking (rounded cosine desc, vec_id) happens only inside
     probed cells. Join key = cell id (equi-join, shuffle by cell).
-    `centroids` defaults to the md5 constants (oracle-matched); pass
-    fit_ivf_centroids output for a data-fitted quantizer. Corpus cell
-    assignment and candidate cosines run on the NumPy kernels
+    Cells come from the md5 constants CENTROIDS (oracle-matched).
+    Corpus cell assignment and candidate cosines run on the NumPy kernels
     (bit-equal to the HOF twin the oracle encodes)."""
     import pandas as pd
 
     # corpus raw float32 into the kernels (see ivf_topk_euclidean note)
-    e = with_cells(
-        emb.select("vec_id", F.col("embedding").alias("v")),
-        cents=centroids,
-    )
+    e = with_cells(emb.select("vec_id", F.col("embedding").alias("v")))
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         _as_double(F.col("embedding")).alias("qv"),
     ).select(
         "query_id", "qv",
-        F.explode(_nearest_cells(F.col("qv"), NPROBE, centroids)).alias("cell"),
+        F.explode(_nearest_cells(F.col("qv"), NPROBE)).alias("cell"),
     )
     pairs = (
         e.join(F.broadcast(q), "cell")

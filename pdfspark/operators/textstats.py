@@ -20,7 +20,7 @@ fingerprinting are the standard training-pipeline extensions
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,9 +68,8 @@ def language_id(docs: DataFrame) -> DataFrame:
     replaces the relational plan's four exchanges (trigram groupBy,
     rank window, distance groupBy, pivot) with a zero-shuffle narrow
     projection; measured 5.3 -> 1.4 s at sf0.1. All-integer distances
-    and identical rank tie-breaks keep it row-for-row equal to
-    language_id_relational and the DuckDB twin (three independent
-    formulations, pinned by pytest + selfcheck).
+    and identical rank tie-breaks keep it row-for-row equal to the
+    DuckDB twin (the relational plan, pinned by selfcheck).
     """
     import pandas as pd
 
@@ -90,7 +89,7 @@ def language_id(docs: DataFrame) -> DataFrame:
         for pdf in batches:
             out = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # NULL text degrades like the relational form: no
+                # NULL text degrades like the DuckDB twin: no
                 # trigrams, distance 0 everywhere, tie-break -> LANGS[0]
                 pred, dists = classify(text if isinstance(text, str) else "")
                 out.append(
@@ -99,71 +98,6 @@ def language_id(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame(out, columns=cols)
 
     return docs.select("doc_id", "text").mapInPandas(run, schema)
-
-
-def language_id_relational(docs: DataFrame) -> DataFrame:
-    """Relational twin of language_id (the formulation the DuckDB
-    oracle transliterates; kept as the in-repo cross-check the parity
-    test runs against the Python classifier).
-
-    Plan: normalize to padded lowercase letters -> explode trigrams
-    (same codegen explode shape as fingerprints) -> per-doc rank
-    window (count desc, trigram asc) capped at DOC_TOP -> broadcast
-    join against the 4 x PROFILE_TOP profile table -> per-(doc, lang)
-    integer out-of-place distance -> pivot + argmin with LANGS-order
-    tie-break. Docs too short for a trigram get distance 0 everywhere
-    -> 'en', like the Python reference. All-integer distances: the
-    DuckDB twin matches exactly, no rounding seam."""
-    from pdfspark.functions.langprof import DOC_TOP, LANGS, PENALTY, PROFILES
-
-    spark = docs.sparkSession
-    norm_letters = F.trim(
-        F.regexp_replace(F.lower(F.col("text")), "[^a-z]+", " ")
-    )
-    base = docs.select(
-        "doc_id",
-        F.concat(F.lit(" "), norm_letters, F.lit(" ")).alias("p"),
-    )
-    tg = base.filter(F.length("p") >= 3).select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(sequence(1, length(p) - 2),"
-                   " i -> substring(p, i, 3))")
-        ).alias("tg"),
-    )
-    counts = tg.groupBy("doc_id", "tg").agg(F.count("*").alias("c"))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("c"), F.asc("tg"))
-    dprof = counts.withColumn("dr", F.row_number().over(w)).filter(
-        F.col("dr") <= DOC_TOP
-    )
-    prof = spark.createDataFrame(
-        [(lang, g, r) for lang in LANGS for g, r in PROFILES[lang].items()],
-        "lang string, tg string, pr int",
-    )
-    langs_df = spark.createDataFrame([(lg,) for lg in LANGS], "lang string")
-    per = (
-        dprof.crossJoin(F.broadcast(langs_df))
-        .join(F.broadcast(prof), ["lang", "tg"], "left")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum(
-                F.coalesce(F.abs(F.col("dr") - F.col("pr")),
-                           F.lit(PENALTY))
-            ).alias("dist")
-        )
-    )
-    piv = per.groupBy("doc_id").pivot("lang", LANGS).agg(F.first("dist"))
-    out = docs.select("doc_id").join(piv, "doc_id", "left")
-    dcols = {lg: F.coalesce(F.col(lg), F.lit(0)) for lg in LANGS}
-    best = F.least(*dcols.values())
-    pred = F.lit(None).cast("string")
-    for lg in reversed(LANGS):
-        pred = F.when(dcols[lg] == best, lg).otherwise(pred)
-    return out.select(
-        "doc_id",
-        pred.alias("pred_lang"),
-        *[dcols[lg].cast("bigint").alias(f"dist_{lg}") for lg in LANGS],
-    )
 
 
 def _quality_cols(text):
@@ -267,14 +201,8 @@ def _token_cols(text):
     ]
 
 
-def token_counts(docs: DataFrame) -> DataFrame:
-    """Whitespace token count + BPE-ish regex token count + chars per
-    BPE token (the usual tokens-per-doc budget metric)."""
-    return docs.select("doc_id", *_token_cols(F.col("text")))
-
-
 def quality_token_stats(docs: DataFrame) -> DataFrame:
-    """quality_scores + token_counts as ONE narrow projection — zero
+    """quality_scores + token counts as ONE narrow projection — zero
     shuffle, one scan — rather than a doc_id self-join of the two
     (which would re-read the corpus and shuffle both sides at scale)."""
     text = F.col("text")

@@ -1,33 +1,34 @@
-"""Streaming exact dedup: keep the FIRST occurrence of each
-normalized-content hash across a continuously-fed documents stream —
-the streaming form of dedup.exact_duplicates' keep-first contract,
-and the front gate a 100 TB training-data ingest actually runs
-(suppress re-crawls/re-uploads before they reach the expensive fold).
+"""Streaming near-dup keep-first (``neardup_stream``): drop a newly
+arriving document iff it is an exact duplicate OR a Jaccard-verified
+near-duplicate of a document already kept — the streaming form of
+operators/textstats.curate_documents' staged exact-then-minhash
+contract, and the front gate a 100 TB training-data ingest actually
+runs (suppress re-crawls/re-uploads before they reach the expensive
+fold).
 
-Shape: file-source stream -> foreachBatch {batch-local keep-min,
-anti-join against the accumulated output, append}. The output parquet
-IS the keeper state:
+Shape: file-source stream -> foreachBatch {exact stage, batch-internal
+near stage, cross-batch near stage, publish}. The published keeper
+and band tables ARE the state:
 
-* within a micro-batch, the keeper is the MIN doc_id per hash (a
-  groupBy, deterministic under any partitioning — a bare streaming
-  ``dropDuplicates`` keeps whichever row a task saw first, which is
-  run-dependent);
-* across batches, first-batch-wins falls out of the anti-join against
-  everything already written;
+* within a micro-batch, the exact keeper is the MIN doc_id per
+  normalized-content hash (a groupBy, deterministic under any
+  partitioning — a bare streaming ``dropDuplicates`` keeps whichever
+  row a task saw first, which is run-dependent);
+* across batches, first-batch-wins falls out of the anti-joins
+  against everything already written;
 * across restarts, the file-source checkpoint keeps input
-  exactly-once per FILE, and a crash between the anti-join and the
-  append is self-healing: the retried batch re-runs the anti-join, so
-  hashes that did land are skipped (the idempotence argument the
-  batch snapshot sink makes with manifests, here bought by keying the
-  state on the content hash itself).
+  exactly-once per FILE, and a crash between the anti-joins and the
+  publish is self-healing: the retried batch re-runs them, so hashes
+  that did land are skipped (the idempotence argument the batch
+  snapshot sink makes with manifests, here bought by keying the state
+  on the content hash itself).
 
-Spark also ships a built-in stateful operator for this
+Spark also ships a built-in stateful operator for the exact stage
 (``stream.dropDuplicates(["content_hash"])``, bounded-state variant
 ``dropDuplicatesWithinWatermark``); it was not chosen because its
 within-batch winner is nondeterministic and its state store is not
 readable as a table (the keeper set here doubles as the published
-dedup index downstream batch jobs anti-join against — same contract
-as operators/textstats.curate_documents' exact stage).
+dedup index downstream batch jobs anti-join against).
 """
 
 from __future__ import annotations
@@ -39,59 +40,6 @@ from pyspark.sql.utils import AnalysisException
 from pdfspark.operators.dedup import normalized_text
 
 DOCS_SCHEMA = "doc_id long, text string"
-
-
-def dedup_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    out_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain all unprocessed document files (parquet, DOCS_SCHEMA)
-    into the keeper table at ``out_path``; returns after the
-    availableNow query terminates. Restart with the same
-    ``checkpoint_dir`` to process only newly arrived files."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(docs_dir)
-    )
-
-    def sink(batch_df, epoch_id: int) -> None:
-        firsts = (
-            batch_df
-            .withColumn("content_hash",
-                        F.md5(normalized_text(F.col("text"))))
-            .groupBy("content_hash")
-            .agg(F.min("doc_id").alias("doc_id"),
-                 F.min_by("text", "doc_id").alias("text"))
-        )
-        try:
-            seen = batch_df.sparkSession.read.parquet(out_path).select(
-                "content_hash")
-        except AnalysisException:
-            seen = None  # first batch ever: no keeper table yet
-        if seen is not None:
-            # null-safe: md5(NULL text) is NULL, and a plain anti-join
-            # on NULL never matches — every null-text batch would
-            # append another NULL-hash keeper, while groupBy above
-            # collapses them into ONE group. eqNullSafe keeps the
-            # cross-batch gate consistent with the within-batch one.
-            firsts = firsts.alias("f").join(
-                seen.alias("s"),
-                F.col("f.content_hash").eqNullSafe(
-                    F.col("s.content_hash")),
-                "left_anti")
-        (firsts.select("content_hash", "doc_id", "text")
-         .write.mode("append").parquet(out_path))
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def neardup_stream(
@@ -164,8 +112,11 @@ def neardup_stream(
         except AnalysisException:
             keepers = None
         if keepers is not None:
-            # null-safe for the same reason as dedup_stream's exact
-            # gate: one NULL-hash keeper ever, not one per batch
+            # null-safe: md5(NULL text) is NULL, and a plain anti-join
+            # on NULL never matches — every null-text batch would
+            # append another NULL-hash keeper, while the groupBy above
+            # collapses them into ONE group. eqNullSafe keeps the
+            # cross-batch gate consistent with the within-batch one.
             firsts = firsts.alias("f").join(
                 keepers.select("content_hash").alias("s"),
                 F.col("f.content_hash").eqNullSafe(

@@ -9,7 +9,6 @@ import pytest
 
 from pdfspark.functions.domseg import (
     extract_blocks,
-    main_text,
     segment_blocks,
 )
 
@@ -134,7 +133,8 @@ def test_dom_veto_ends_with_container():
 def test_main_text_joins_content_blocks_in_order():
     html = (f"<nav>{_words(3)}</nav><p>{_words(18, 'a')}</p>"
             f"<p>{_words(19, 'b')}</p>")
-    assert main_text(html) == _words(18, "a") + "\n" + _words(19, "b")
+    main = "\n".join(b.text for b in _blocks(html) if b.is_content)
+    assert main == _words(18, "a") + "\n" + _words(19, "b")
 
 
 # -- Spark plumbing vs the Spark-free sidecar ------------------------------
@@ -164,21 +164,6 @@ def test_spark_blocks_zero_exchange(spark, fixture_dir):
     pages = spark.read.parquet(os.path.join(fixture_dir, "html_pages.parquet"))
     plan = main_content_blocks(pages)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_doc_rollup_strips_boilerplate(spark, fixture_dir):
-    from pdfspark.operators.html_main import main_content_text
-
-    pages = spark.read.parquet(os.path.join(fixture_dir, "html_pages.parquet"))
-    rows = {r.doc_id: r for r in main_content_text(pages).collect()}
-    # link farm: all blocks boiler -> empty main text
-    assert rows[0].main_text == "" and rows[0].n_content_blocks == 0
-    # empty body segments to zero blocks -> no row at all
-    assert 1 not in rows
-    # article pages keep their paragraphs and drop chrome words
-    art = rows[7]
-    assert art.n_content_blocks >= 2
-    assert 0.0 < art.boiler_word_ratio < 1.0
 
 
 def test_unclosed_head_is_implied_closed():
@@ -233,17 +218,6 @@ def test_self_closing_flow_tag_implies_head_close():
     assert [x.text for x in b] == ["text after hr", "para"]
     b = segment_blocks("<head><meta/><title>T</title></head><p>body</p>")
     assert [x.text for x in b] == ["body"]
-
-
-def test_doc_rollup_deterministic_under_repartition(spark, fixture_dir):
-    # main_text is assembled from collect_list: the block_id sort key
-    # must make it partition-layout-independent
-    from pdfspark.operators.html_main import main_content_text
-
-    pages = spark.read.parquet(os.path.join(fixture_dir, "html_pages.parquet"))
-    a = sorted(main_content_text(pages).collect())
-    b = sorted(main_content_text(pages.repartition(7)).collect())
-    assert a == b
 
 
 def test_null_html_rows_pass_through_as_zero_blocks(spark):

@@ -1,15 +1,22 @@
-"""Regrowth guard for tunables (Spark-free AST scan).
+"""Regrowth guards for product code (Spark-free AST scans).
 
-Every defaulted parameter of a top-level function in ``pdfspark/`` and
-``jobs/`` must be passed by at least one call site in the checkout:
-positionally, by keyword, or through ``*``/``**`` expansion. A default
-that no caller overrides is a constant in disguise; it belongs in a
-module constant (or in ``config.py`` with its reference citation), and
-the branches only a non-default value reaches should not exist.
+Tunables: every defaulted parameter of a top-level function in
+``pdfspark/`` and ``jobs/`` must be passed by at least one call site in
+the checkout: positionally, by keyword, or through ``*``/``**``
+expansion. A default that no caller overrides is a constant in
+disguise; it belongs in a module constant (or in ``config.py`` with its
+reference citation), and the branches only a non-default value reaches
+should not exist.
 
-Call sites are matched by function name (``f(...)`` or ``mod.f(...)``),
-so a same-named call anywhere counts: the scan can miss a dead knob,
-never flag a live one.
+Callers: every top-level function and class in ``pdfspark/`` and
+``jobs/`` must be named by product code (the package, the job, the
+driver entry, ``bench.py``, ``tools/`` or ``perfbench/``) outside its
+own definition. A function only tests call is a second implementation
+or an unused capability; it is deleted, unless it is a reference that a
+test compares a production kernel against (``REFERENCES``).
+
+Both scans match by name, so a same-named use anywhere counts: they
+can miss dead code, never flag live code.
 """
 
 import ast
@@ -17,8 +24,9 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFINED_IN = ("pdfspark", "jobs")
-CALLERS = ("pdfspark", "jobs", "__spark_entry__.py", "bench.py", "tools",
-           "perfbench", "tests")
+PRODUCT = ("pdfspark", "jobs", "__spark_entry__.py", "bench.py", "tools",
+           "perfbench")
+CALLERS = (*PRODUCT, "tests")
 
 # (file, function, parameter) -> why it stays although no call site
 # passes it
@@ -116,3 +124,71 @@ def test_every_default_is_passed_somewhere():
 def test_allowlist_is_current():
     stale = set(ALLOWED) - set(unpassed_defaults())
     assert not stale, f"drop from ALLOWED (now passed or gone): {stale}"
+
+
+# top-level products that only tests name, kept because a test compares
+# a production kernel against them
+REFERENCES = {
+    ("pdfspark/operators/similarity.py", "cosine_topk_hof"):
+        "bit-equality reference of the NumPy cosine top-k kernel "
+        "(the form the DuckDB oracle transliterates)",
+    ("pdfspark/operators/similarity.py", "euclidean_topk_hof"):
+        "bit-equality reference of the NumPy euclidean top-k kernel",
+    ("pdfspark/operators/similarity.py", "hyperplane_signature_hof"):
+        "bit-equality reference of the NumPy signature kernel",
+    ("pdfspark/operators/textstats.py", "quality_token_stats"):
+        "standalone reference text_profile is compared against",
+    ("pdfspark/operators/textstats.py", "fingerprints"):
+        "standalone reference text_profile is compared against",
+    ("pdfspark/sources/pdf_mini.py", "build_layout_pdf"):
+        "fixture writer; moves with the other PDF writers",
+}
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _names(node):
+    """Every name a subtree uses: identifiers, attributes, import
+    aliases and string constants (``getattr(mod, "f")`` wraps)."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.rsplit(".", 1)[-1]
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            yield n.value
+
+
+def uncalled_products():
+    """(file, name) of top-level defs no product code names outside
+    the def itself."""
+    users = {}
+    for rel in PRODUCT:
+        for path in _py_files(rel):
+            key = os.path.relpath(path, ROOT)
+            for top in _parse(path).body:
+                owner = top.name if isinstance(top, _DEFS) else None
+                for name in _names(top):
+                    users.setdefault(name, set()).add((key, owner))
+    out = []
+    for rel in DEFINED_IN:
+        for path in _py_files(rel):
+            key = os.path.relpath(path, ROOT)
+            out += [(key, top.name) for top in _parse(path).body
+                    if isinstance(top, _DEFS)
+                    and not users.get(top.name, set()) - {(key, top.name)}]
+    return sorted(out)
+
+
+def test_every_function_has_a_non_test_caller():
+    found = [k for k in uncalled_products() if k not in REFERENCES]
+    assert not found, (
+        f"{len(found)} top-level definitions only tests use; delete each "
+        f"(with the tests whose only subject it is) or, if tests compare "
+        f"a production kernel against it, add it to REFERENCES: {found}")
+
+
+def test_references_are_current():
+    stale = set(REFERENCES) - set(uncalled_products())
+    assert not stale, f"drop from REFERENCES (now used or gone): {stale}"

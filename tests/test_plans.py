@@ -209,23 +209,29 @@ def test_bytes_in_is_one_python_stage(spark):
     assert df.count() == len(glob.glob(os.path.join(src, "*")))
 
 
-# Job commits per mode: (table, source scanned, exchange ceiling). The
-# data commit is the fold plus the commit's rebalance (and, on
-# --input, the fold's salted repartition); the metrics commit adds the
-# lineage groupBy over the cached fold.
+# Job commits per mode: (table, source scanned, exchange ceiling,
+# broadcast joins). The data commit is the fold plus the commit's
+# rebalance (and, on --input, the fold's salted repartition); the
+# metrics commit adds the lineage groupBy over the cached fold. On
+# --html the data commit left-joins every page to its blocks (the
+# zero-block sentinel) and the metrics commit joins the pages' bytes
+# to their committed row counts.
 JOB_COMMITS = {
-    "--input": [("out", "documents_in.parquet", 2),
-                ("met", "documents_in.parquet", 2)],
-    "--payloads": [("out", "payloads", 1), ("met", "payloads", 1)],
+    "--input": [("out", "documents_in.parquet", 2, 0),
+                ("met", "documents_in.parquet", 2, 0)],
+    "--payloads": [("out", "payloads", 1, 0), ("met", "payloads", 1, 0)],
+    "--html": [("out", "html", 2, 1), ("met", "html", 4, 2)],
 }
 
 
 @pytest.mark.parametrize("mode", sorted(JOB_COMMITS))
 def test_job_commit_plans(spark, fixture_dir, tmp_path, monkeypatch, mode):
     """Each frame extract_job commits reads its source directly through
-    one Python stage: no broadcast join, bounded exchanges, and on
-    --input --geom no scan of the geometry table (the job's config
-    never reads header/footer strings)."""
+    one Python stage: no broadcast join beyond the mode's own, bounded
+    exchanges, and on --input --geom no scan of the geometry table (the
+    job's config never reads header/footer strings). On --html the DOM
+    kernel runs once per commit: the zero-block sentinel must not
+    re-run it."""
     import pdfspark.sinks.snapshot as S
     from jobs.extract_job import main
     from tools.explain_audit import plan_summary
@@ -240,17 +246,24 @@ def test_job_commit_plans(spark, fixture_dir, tmp_path, monkeypatch, mode):
         return real(df, output, *a, **kw)
 
     monkeypatch.setattr(S, "_stage_snapshot", capture)
+    html = tmp_path / "html"
+    if mode == "--html":
+        html.mkdir()
+        for r in spark.read.parquet(
+                os.path.join(fixture_dir, "html_pages.parquet")).collect():
+            (html / f"{r.doc_id}.html").write_text(r.html or "")
     src = {"--input": ["--input",
                        os.path.join(fixture_dir, "documents_in.parquet"),
                        "--geom",
                        os.path.join(fixture_dir, "spans_geom.parquet")],
            "--payloads": ["--payloads",
-                          os.path.join(fixture_dir, "payloads")]}[mode]
+                          os.path.join(fixture_dir, "payloads")],
+           "--html": ["--html", str(html)]}[mode]
     assert main([*src, "--output", str(tmp_path / "out"),
                  "--metrics", str(tmp_path / "met")]) == 0
-    assert [t for t, _, _ in seen] == [t for t, _, _ in JOB_COMMITS[mode]]
-    for (table, s, plan), (_, scan, max_exch) in zip(seen,
-                                                     JOB_COMMITS[mode]):
-        assert s["pyarrow"] == 1 and s["bhj"] == 0, (table, plan)
+    assert [t for t, _, _ in seen] == [c[0] for c in JOB_COMMITS[mode]]
+    for (table, s, plan), (_, scan, max_exch, bhj) in zip(
+            seen, JOB_COMMITS[mode]):
+        assert s["pyarrow"] == 1 and s["bhj"] == bhj, (table, plan)
         assert s["exch"] <= max_exch, (table, plan)
         assert s["scans"] == [scan], (table, plan)

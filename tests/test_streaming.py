@@ -252,52 +252,6 @@ def test_extract_payload_stream_mode_switch_single_layout(
     assert m.groupBy().sum("doc_count").collect()[0][0] == len(later)
 
 
-def test_dedup_stream_keep_first_across_batches_and_restart(
-        spark, tmp_path):
-    """Streaming exact dedup: within a batch the MIN doc_id per
-    content hash wins; across batches the first batch wins; a restart
-    with the same checkpoint processes only newly arrived files and
-    never re-emits an already-kept hash."""
-    from pdfspark.streaming.dedup_stream import dedup_stream
-
-    docs_dir = str(tmp_path / "docs")
-    out = str(tmp_path / "keepers")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(docs_dir)
-
-    def wave(name, rows):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1).write.mode("overwrite").parquet(str(tmp_path / ("w_" + name)))
-        import glob
-        import shutil
-        src = glob.glob(str(tmp_path / ("w_" + name) / "*.parquet"))[0]
-        shutil.copy(src, os.path.join(docs_dir, name + ".parquet"))
-
-    # wave 1: two distinct texts plus a within-batch duplicate where
-    # the LARGER doc_id arrives in the same file
-    wave("0001", [(10, "alpha beta gamma"), (20, "delta epsilon"),
-                  (30, "alpha  BETA gamma")])  # normalizes equal to 10's
-    dedup_stream(spark, docs_dir, out, ckpt)
-    got = {r.doc_id: r.text for r in spark.read.parquet(out).collect()}
-    assert set(got) == {10, 20}
-
-    # wave 2: a cross-batch duplicate (of 10), a new text, and a
-    # within-batch pair for the new text
-    wave("0002", [(40, "alpha beta gamma"), (51, "zeta eta"),
-                  (50, "zeta  eta")])
-    dedup_stream(spark, docs_dir, out, ckpt)
-    got = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got == {10, 20, 50}
-
-    # idempotent restart with nothing new
-    dedup_stream(spark, docs_dir, out, ckpt)
-    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {
-        10, 20, 50}
-    # one row per hash, ever
-    n = spark.read.parquet(out).count()
-    assert n == 3
-
-
 def test_neardup_stream_cross_batch_keep_first(spark, tmp_path):
     """Streaming NEAR-dup keep-first: a batch doc that is a verified
     near-duplicate of an earlier KEPT doc is dropped via the
@@ -359,31 +313,18 @@ def test_dedup_streams_null_text_single_keeper(spark, tmp_path):
     """md5(NULL text) is NULL and a plain anti-join on NULL never
     matches — before the null-safe gate, EVERY null-bearing batch
     appended another NULL-hash keeper. Contract: one NULL-hash
-    keeper ever (matching groupBy's one-NULL-group semantics), in
-    both the exact and the near-dup stream."""
+    keeper ever (matching groupBy's one-NULL-group semantics) in the
+    near-dup stream's exact gate."""
     import glob
     import shutil
 
-    from pdfspark.streaming.dedup_stream import (
-        dedup_stream, neardup_stream)
+    from pdfspark.streaming.dedup_stream import neardup_stream
 
     def wave(docs_dir, name, rows):
         spark.createDataFrame(rows, "doc_id long, text string").coalesce(
             1).write.mode("overwrite").parquet(str(tmp_path / ("t_" + name)))
         src = glob.glob(str(tmp_path / ("t_" + name) / "*.parquet"))[0]
         shutil.copy(src, os.path.join(docs_dir, name + ".parquet"))
-
-    docs = str(tmp_path / "d1")
-    out = str(tmp_path / "k1")
-    os.makedirs(docs)
-    wave(docs, "0001", [(10, None), (11, None), (20, "real text here")])
-    dedup_stream(spark, docs, out, str(tmp_path / "c1"))
-    wave(docs, "0002", [(30, None), (40, "more real text")])
-    dedup_stream(spark, docs, out, str(tmp_path / "c1"))
-    rows = spark.read.parquet(out).collect()
-    nulls = [r for r in rows if r.content_hash is None]
-    assert len(nulls) == 1 and nulls[0].doc_id == 10
-    assert {r.doc_id for r in rows} == {10, 20, 40}
 
     docs2 = str(tmp_path / "d2")
     out2 = str(tmp_path / "k2")
