@@ -61,7 +61,9 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
    mid-sized flat append about one per core (the fold's own count),
    and only an append above defaultParallelism x the advisory size
    writes files of about the advisory size
- - every committed parquet file is zstd, Iceberg's default codec
+ - every committed parquet file is zstd (Iceberg's default codec) at
+   level 6 with v2 delta-encoded pages and no dictionary
+   (snapshot.PARQUET_OPTIONS)
  - --geom is passed to the fold as its header/footer source; the fold
    builds header/footer strings from it only under the substring strip
    (ExtractConfig(broken_hf_strip=False)). The job folds under the

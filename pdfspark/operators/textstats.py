@@ -1,15 +1,18 @@
-"""Text-analysis operators for the training-data pipeline.
+"""Text-analysis operators for the training-data pipeline on a
+`documents(doc_id, text)` table: language ID, quality features,
+winnowing fingerprints, their merged per-doc `text_profile`, and the
+composed `curate_documents` pass. Every op has a DuckDB oracle twin.
 
-Language-ID (marker-token heuristic), quality scoring, token
-counting (whitespace + BPE-ish regex), and document fingerprinting
-(winnowing over char k-gram hashes) on a `documents(doc_id, text)`
-table. All pure DataFrame/SQL (whole-stage codegen, no UDFs); every
-op has a DuckDB oracle twin.
-
-Scale shapes: quality/lang-id/token ops are narrow per-row
-projections (no shuffle at all); fingerprinting explodes char
-k-grams but aggregates back per doc_id in one shuffle, and the
-winnowing window is per-doc (partition-local after the shuffle).
+Scale shapes: the quality features and the whitespace/BPE-ish token
+counts that `quality_token_stats` and `text_profile` project with
+them are JVM column expressions (narrow per-row projections in
+whole-stage codegen, no shuffle). `language_id` (Cavnar-Trenkle
+character-trigram rank profiles, functions/langprof.py) and
+`fingerprints` (winnowing over char k-gram md5s) are per-document
+`mapInPandas` kernels: one Arrow crossing, no shuffle.
+`text_profile` runs the winnowing kernel and projects the quality and
+token expressions on top. `curate_documents` adds the dedup shuffles
+(see its docstring).
 
 Reference basis: the reference's text cleanup vocabulary
 (src/utilities/parse_util.py:117-168 strips, whitespace collapse) is

@@ -55,18 +55,31 @@ lineage aux frames come out of a ``groupBy`` that already yields one
 file, so a rebalance would only add a stage; and compaction asks for
 an explicit file count (``coalesce(n_files)``), which it keeps.
 
-Codec: every parquet file the sink writes — data, aux and compaction
-output — is zstd (``PARQUET_CODEC``), Iceberg's default
-``write.parquet.compression-codec`` since 1.4, in place of Spark's
-snappy. It is a constant of the sink, like the manifest layout, with
-no option to change it; ``fmt="json"`` data is written as Spark writes
-it. Readers need no setting: parquet records the codec per column
-chunk, so a table that mixes snappy snapshots committed before this
-codec with zstd ones reads as one, and ``compact_snapshots`` rewrites
-the old ones to zstd. The saving is in the data pages (the text
-columns shrink by about 30%); the parquet footer is not compressed,
-so a small commit of a few KB gains little, and a 1.7 KB lineage
-file grows by about 50-70 bytes.
+Page layout: every parquet file the sink writes — data, aux and
+compaction output — takes the writer settings of ``PARQUET_OPTIONS``:
+zstd (Iceberg's default ``write.parquet.compression-codec`` since
+1.4) at level 6, DataPageV2 pages, and no dictionary encoding. V2
+pages write integers DELTA_BINARY_PACKED and strings DELTA_BYTE_ARRAY:
+a span's ``offset`` is its list index, so its deltas pack to almost
+nothing, and most span texts are unique, so dictionary indices cost
+more than they save. The settings are constants of the sink, like the
+manifest layout, with no option to change them; ``fmt="json"`` data
+is written as Spark writes it. Readers need no setting: parquet
+records the codec per column chunk and the encoding per page, so a
+table that mixes snapshots committed in an older layout (snappy, or
+v1 pages with dictionaries) with new ones reads as one, and
+``compact_snapshots`` rewrites the old ones into this layout. Spark's
+vectorized and row readers, pyarrow and DuckDB all decode it.
+
+Against v1 dictionary pages at zstd's default level, a perfbench
+``table_in`` commit is about 18% smaller and the sf0.1 fold output
+7%, and a commit's write takes 5-8% longer (BASELINE.md, "Commit page
+layout A/B"). Columns with few distinct values (``kind``, section
+headings) grow without their dictionaries, and so does a table whose
+documents repeat whole: eight copies of the sf0.1 fold output are 5%
+larger. Level 9 saves more on ``table_in`` (22%) but made the
+8x-sf0.1 commit 15-30% slower to write. The footer is not
+compressed, so a lineage file of under 2 KB changes by a few bytes.
 
 On a real cluster, swap this module for ``format("iceberg")`` with a
 catalog — the job's call sites are the only coupling. That is also
@@ -85,8 +98,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_DIR = "_manifests"
 STAGING_DIR = "_staging"
-# every parquet file a commit or compaction writes (module docstring)
-PARQUET_CODEC = "zstd"
+# writer settings of every parquet file a commit or compaction writes
+# (module docstring)
+PARQUET_OPTIONS = {
+    "compression": "zstd",
+    "parquet.compression.codec.zstd.level": "6",
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary": "false",
+}
 # age (s) after which compact_snapshots takes over a maintenance lock
 # whose holder stopped its heartbeat (a crashed compactor)
 LOCK_TTL_S = 3600.0
@@ -172,7 +191,7 @@ def _stage_snapshot(
     staging = os.path.join(output, STAGING_DIR, snap)
     w = df.write.mode("overwrite").format(fmt)
     if fmt == "parquet":
-        w = w.option("compression", PARQUET_CODEC)
+        w = w.options(**PARQUET_OPTIONS)
     if partition_by:
         w = w.partitionBy(partition_by)
     w.save(staging)
@@ -210,7 +229,8 @@ def commit_append(
     defaultParallelism x the advisory size writes advisory-sized
     files. The ``aux`` frames are written as they come (see the module
     docstring). Every parquet file of the commit, ``aux`` included, is
-    zstd-compressed (``PARQUET_CODEC``).
+    written with the sink's page layout (``PARQUET_OPTIONS``: zstd
+    level 6, v2 delta pages, no dictionary).
 
     ``aux`` — side tables (e.g. the lineage metrics) committed under
     the SAME snapshot id, analogous to an Iceberg multi-table commit.

@@ -21,17 +21,45 @@ def _read_out(spark, output, fmt="parquet"):
     return df
 
 
-def _parquet_codecs(paths):
-    """The set of codecs over every column chunk of ``paths``."""
+def _parquet_layout(paths):
+    """What the sink's writer settings decide, over every column chunk
+    of ``paths``: the set of codecs, whether any chunk has a
+    dictionary page, and the set of encodings of each column path."""
+    import collections
+
     import pyarrow.parquet as pq
 
-    codecs = set()
+    codecs, dict_pages = set(), False
+    encodings = collections.defaultdict(set)
     for p in paths:
         md = pq.ParquetFile(p).metadata
-        codecs.update(md.row_group(g).column(c).compression
-                      for g in range(md.num_row_groups)
-                      for c in range(md.num_columns))
-    return codecs
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(g).column(c)
+                codecs.add(col.compression)
+                dict_pages |= col.has_dictionary_page
+                encodings[col.path_in_schema].update(col.encodings)
+    return codecs, dict_pages, encodings
+
+
+def _committed_files(table):
+    """Absolute paths of every data file of ``table``'s committed
+    snapshots."""
+    from pdfspark.sinks.snapshot import _list_data_files
+
+    return [os.path.join(table, f) for s in committed_snapshots(table)
+            for f in _list_data_files(os.path.join(table, s), table)]
+
+
+def _assert_sink_layout(output, metrics):
+    """Every committed data and lineage file is zstd with no
+    dictionary page, and the span offsets are delta-encoded (DataPageV2
+    integers)."""
+    for table in (output, metrics):
+        codecs, dict_pages, _ = _parquet_layout(_committed_files(table))
+        assert (codecs, dict_pages) == ({"ZSTD"}, False), table
+    _, _, enc = _parquet_layout(_committed_files(output))
+    assert enc["spans.list.element.offset"] == {"DELTA_BINARY_PACKED"}
 
 
 @pytest.fixture(scope="module")
@@ -558,7 +586,9 @@ def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
     lineage file per snapshot, holding the rows extract_payloads
     yields; --input --buckets 4 commits at most one data file per
     bucket= directory, and --compact keeps that layout. Every data and
-    lineage file the commits and the compaction write is zstd."""
+    lineage file the commits and the compaction write is in the sink's
+    page layout: zstd, no dictionary page, delta-encoded span
+    offsets."""
     import collections
 
     from pyspark.sql import functions as F
@@ -569,11 +599,6 @@ def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
     def snapshot_files(table):
         return [_list_data_files(os.path.join(table, s), table)
                 for s in committed_snapshots(table)]
-
-    def codecs(table):
-        return _parquet_codecs(os.path.join(table, f)
-                               for files in snapshot_files(table)
-                               for f in files)
 
     def multiset(rows):
         return collections.Counter(
@@ -591,7 +616,7 @@ def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
         for table in (out, met):
             files = snapshot_files(table)
             assert [len(f) for f in files] == [1], (mode, table, files)
-            assert codecs(table) == {"ZSTD"}, (mode, table)
+        _assert_sink_layout(out, met)
         assert multiset(_read_out(spark, out).collect()) == want, mode
 
     def files_per_bucket(table):
@@ -615,14 +640,82 @@ def test_job_commits_files_sized_by_data(spark, fixture_dir, tmp_path):
     assert len(committed_snapshots(out)) == 2
     assert max(files_per_bucket(out).values()) == 1
     assert detect_partition_col(out) == "bucket"
-    assert codecs(out) == codecs(met) == {"ZSTD"}
+    _assert_sink_layout(out, met)
 
     assert main(["--compact", "--output", out, "--metrics", met]) == 0
     assert len(committed_snapshots(out)) == len(committed_snapshots(met)) == 1
     assert detect_partition_col(out) == "bucket"
     assert max(files_per_bucket(out).values()) == 1
     assert _read_out(spark, out).count() == docs.count()
-    assert codecs(out) == codecs(met) == {"ZSTD"}
+    _assert_sink_layout(out, met)
+
+
+@pytest.fixture(scope="module")
+def input_commit(fixture_dir, tmp_path_factory):
+    """One plain ``--input --metrics`` commit of the tier-1 fixture
+    (no --geom, no --buckets): (output, metrics)."""
+    d = tmp_path_factory.mktemp("input_commit")
+    out, met = str(d / "out"), str(d / "metrics")
+    assert main(["--input", os.path.join(fixture_dir, "documents_in.parquet"),
+                 "--output", out, "--metrics", met]) == 0
+    return out, met
+
+
+def test_committed_layout_reads_identically_everywhere(spark, input_commit):
+    """The sink's DataPageV2 delta encodings are acceptable only while
+    every parquet reader in the repo decodes them: Spark with the
+    vectorized (flat and nested) reader on and then off, pyarrow and
+    DuckDB read the same rows from the committed data and lineage
+    tables."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = ("spark.sql.parquet.enableVectorizedReader",
+            "spark.sql.parquet.enableNestedColumnVectorizedReader")
+    saved = {k: spark.conf.get(k) for k in keys}
+    for table in input_commit:
+        files = _committed_files(table)
+        reads = {}
+        try:
+            for flag in ("true", "false"):
+                for k in keys:
+                    spark.conf.set(k, flag)
+                df = _read_out(spark, table)
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                assert f"Batched: {flag}" in plan, (flag, plan)
+                reads[f"spark vectorized={flag}"] = [
+                    r.asDict(recursive=True) for r in df.collect()]
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+        reads["pyarrow"] = pa.concat_tables(
+            pq.read_table(f) for f in files).to_pylist()
+        con = duckdb.connect()
+        try:
+            reads["duckdb"] = con.read_parquet(files).arrow().to_pylist()
+        finally:
+            con.close()
+        canon = {k: sorted(v, key=repr) for k, v in reads.items()}
+        want = canon.pop("spark vectorized=true")
+        assert want
+        for reader, got in canon.items():
+            assert got == want, (table, reader)
+
+
+# data bytes of the plain --input commit of the tier-1 fixture in the
+# sink's page layout (39,076 B on the local[4] test session) plus 5%.
+# The layout before it (v1 pages, dictionaries, zstd's default level)
+# writes 44,436 B, and v1 pages without dictionaries at level 9 41,675 B.
+INPUT_COMMIT_MAX_BYTES = 41_029
+
+
+def test_input_commit_stays_under_its_byte_ceiling(input_commit):
+    """A change that reverts the sink's page layout, or otherwise grows
+    the committed bytes, fails here before the benchmark sees it."""
+    out, _ = input_commit
+    n = sum(os.path.getsize(f) for f in _committed_files(out))
+    assert n <= INPUT_COMMIT_MAX_BYTES, n
 
 
 def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):
@@ -777,10 +870,13 @@ def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path):
     """Compaction (the rewrite_data_files analogue): N append
     snapshots collapse into one snapshot of exactly n_files files (the
     append path's rebalance must not resize it), rows and values
-    bit-identical, inputs reclaimed, later appends untouched. One
-    input is a snappy snapshot, as committed before the sink wrote
-    zstd: the mixed table reads as one, and compaction rewrites it
-    to zstd."""
+    bit-identical, inputs reclaimed, later appends untouched. Two
+    inputs are hand-published in older layouts of the sink: a snappy
+    snapshot, as committed before the sink wrote zstd, and a zstd one
+    with v1 pages and dictionary encoding, as committed before the
+    sink set its page layout. The mixed table reads as one, and
+    compaction rewrites both into the sink's layout: zstd, no
+    dictionary page, delta-encoded columns."""
     import glob
 
     from pdfspark.sinks.snapshot import (
@@ -800,18 +896,24 @@ def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path):
             rows += batch
             commit_append(spark.createDataFrame(batch, schema), out)
         # hand-published in the sink's layout: a <snap> dir and a bare
-        # manifest
-        old = "snap-0-snappy"
-        batch = [(f"s{j}", 100 + j) for j in range(5)]
-        rows += batch
-        spark.createDataFrame(batch, schema).write \
-            .option("compression", "snappy").parquet(os.path.join(out, old))
-        _publish(out, old)
+        # manifest. The v1 batch repeats one v, so its dictionary pays
+        # and parquet-mr keeps it.
+        for old, batch, options in (
+                ("snap-0-snappy", [(f"s{j}", 100 + j) for j in range(5)],
+                 {"compression": "snappy"}),
+                ("snap-1-v1dict", [(f"o{j}", 200) for j in range(5)],
+                 {"compression": "zstd", "parquet.writer.version": "v1",
+                  "parquet.enable.dictionary": "true"})):
+            rows += batch
+            spark.createDataFrame(batch, schema).write.options(**options) \
+                .parquet(os.path.join(out, old))
+            _publish(out, old)
         before = sorted(read_committed(spark, out).collect())
         assert [tuple(r) for r in before] == sorted(rows)
-        assert len(committed_snapshots(out)) == 5
+        assert len(committed_snapshots(out)) == 6
         files_before = glob.glob(f"{out}/**/*.parquet", recursive=True)
-        assert _parquet_codecs(files_before) == {"SNAPPY", "ZSTD"}
+        codecs, dict_pages, _ = _parquet_layout(files_before)
+        assert (codecs, dict_pages) == ({"SNAPPY", "ZSTD"}, True)
 
         snap = compact_snapshots(spark, out, n_files=n_files)
         assert snap is not None
@@ -820,7 +922,10 @@ def test_compact_snapshots_rewrites_without_row_change(spark, tmp_path):
         files_after = glob.glob(f"{out}/**/*.parquet", recursive=True)
         assert len(files_after) < len(files_before)
         assert len(files_after) == n_files, n_files
-        assert _parquet_codecs(files_after) == {"ZSTD"}
+        codecs, dict_pages, enc = _parquet_layout(files_after)
+        assert (codecs, dict_pages) == ({"ZSTD"}, False)
+        assert enc == {"doc_id": {"DELTA_BYTE_ARRAY"},
+                       "v": {"DELTA_BINARY_PACKED"}}
 
     # idempotent: a second run finds < min_snapshots inputs
     assert compact_snapshots(spark, out) is None
