@@ -377,12 +377,12 @@ def _q_extract_spans(spark, sf_dir):
     forced-threshold tests; its array-collecting sibling
     extract_spans_split is what the bench scaling job drives. The
     DuckDB oracle replicates the quirk-mode semantics relationally
-    (labels are state-free, see pdfspark/fold.py). The geometry frame
-    goes in as the header/footer source; the default config never
-    reads the strings, so the plan scans no geometry."""
+    (labels are state-free, see pdfspark/fold.py). The fold's
+    dict-membership header/footer strip reads no per-doc strings, so
+    no geometry goes in."""
     from pdfspark.operators.extract import extract_spans_auto
 
-    return extract_spans_auto(_docs_in(spark, sf_dir), _geom(spark, sf_dir))
+    return extract_spans_auto(_docs_in(spark, sf_dir))
 
 
 def _q_extract_spans_sql(spark, sf_dir):
@@ -400,8 +400,7 @@ def _q_extract_sections(spark, sf_dir):
     (spans, sections) row is never built) — oracle = materialized
     output of the independent reference transliteration; parity is
     additionally pytest-gated (tests/test_extract_parity). As in
-    ep1_extract_spans, the geometry frame is passed but not scanned
-    under the default config."""
+    ep1_extract_spans, the fold reads no geometry."""
     from pdfspark.operators.extract import extract_sections_auto
 
     # the default threshold targets genuine stragglers (docs whose
@@ -411,7 +410,7 @@ def _q_extract_sections(spark, sf_dir):
     # cost entirely when the corpus max is below threshold. The
     # chunked branch is equality-pinned by tests at a forced low
     # threshold.
-    out = extract_sections_auto(_docs_in(spark, sf_dir), _geom(spark, sf_dir))
+    out = extract_sections_auto(_docs_in(spark, sf_dir))
     return out.select(
         "doc_id", "status", F.posexplode("sections").alias("section_id", "sec")
     ).select(
@@ -429,14 +428,12 @@ def _q_lineage(spark, sf_dir):
     table (extract.lineage_table, exercised by jobs/extract_job and its
     pytest) rolls up from. Fully SQL-oracled: spans_in/bytes_in from
     the input span arrays, spans_out from the extract-spans oracle.
-    Like ep1_extract_spans, it passes the geometry frame, which the
-    default config never scans."""
+    Like ep1_extract_spans, it folds the documents alone."""
     from pdfspark.operators.extract import extract_documents
 
     # spans_only: this query reads five scalar columns — no reason to
     # run the sections state machine or ship its arrays through Arrow
-    out = extract_documents(_docs_in(spark, sf_dir), _geom(spark, sf_dir),
-                            spans_only=True)
+    out = extract_documents(_docs_in(spark, sf_dir), spans_only=True)
     return out.select(
         "doc_id",
         "status",
@@ -1197,7 +1194,7 @@ surv AS (
     CASE
       WHEN kind IN ('TextLine', 'Line', 'Rectangle') THEN kind
       WHEN kind IN ('Figure', 'Image') THEN 'media'
-      -- matcher_always_fires quirk: ANY non-blank first line is a
+      -- matcher-always-fires quirk: ANY non-blank first line is a
       -- heading, so a TextBox can only ever be heading|paragraph —
       -- no appendix/figure_caption arm can fire (a section/appendix/
       -- figure match implies a non-blank line, already caught here)

@@ -98,9 +98,9 @@ REPLICATE = int(os.environ.get("PDFSPARK_BENCH_REPLICATE", "48"))
 def _scaling_job(spark, sf_dir: str, k: int):
     """The flagship span job on a K-times-replicated span input
     (distinct doc_ids, same per-doc work), so the fold's work grows
-    with K — same job, bigger input. It runs under the default config,
-    which reads no header/footer strings, so no geometry input is
-    given: the job is the span fold and its skew route alone.
+    with K — same job, bigger input. The fold reads no header/footer
+    strings, so no geometry input is given: the job is the span fold
+    and its skew route alone.
 
     The BASE input is repartitioned to a FIXED 64 slices (same at
     every level) BEFORE the replicating crossJoin: each sf0.1

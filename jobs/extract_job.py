@@ -6,8 +6,7 @@ Usage:
     zip -r pdfspark.zip pdfspark
     spark-submit --py-files pdfspark.zip jobs/extract_job.py \
         --input  <documents_in parquet/iceberg path> \
-        --geom   <spans_geom path, optional: header/footer source, \
-                  not read under the default config> \
+        --geom   <spans_geom path, optional; accepted, not read> \
         --output <extracted spans table path> \
         --metrics <lineage metrics table path> \
         [--resume]
@@ -64,11 +63,10 @@ Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
  - every committed parquet file is zstd (Iceberg's default codec) at
    level 6 with v2 delta-encoded pages and no dictionary
    (snapshot.PARQUET_OPTIONS)
- - --geom is passed to the fold as its header/footer source; the fold
-   builds header/footer strings from it only under the substring strip
-   (ExtractConfig(broken_hf_strip=False)). The job folds under the
-   reference-quirk default, so no geometry scan, aggregation or join
-   runs; reading the path still fails fast when it is missing
+ - --geom is accepted with --input and not read: the fold reproduces
+   the reference's dict-membership header/footer strip, which needs no
+   per-doc header/footer strings, so no geometry scan, aggregation,
+   join or schema read runs (the path is not even checked)
 """
 
 from __future__ import annotations
@@ -272,10 +270,9 @@ def main(argv=None) -> int:
              "--metrics records per-partition lineage rows.")
     ap.add_argument(
         "--geom", default=None,
-        help="spans_geom parquet, --input only: the fold's per-doc "
-             "header/footer source. Under the job's reference-quirk "
-             "config (broken_hf_strip) nothing is built from it; the "
-             "path must still exist.")
+        help="spans_geom parquet, --input only. Accepted and not read: "
+             "the fold's reference-quirk header/footer strip needs no "
+             "per-doc header/footer strings.")
     ap.add_argument("--output", required=True)
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--resume", action="store_true")
@@ -379,10 +376,8 @@ def main(argv=None) -> int:
         full = _prepare_output(spark, args, extract_payloads(
             read_payloads(spark, args.payloads)))
     else:
-        geom = spark.read.parquet(args.geom) if args.geom else None
         full = extract_documents(
-            _prepare_output(spark, args, spark.read.parquet(args.input)),
-            geom)
+            _prepare_output(spark, args, spark.read.parquet(args.input)))
 
     # the --metrics lineage is the fold's only second reader: persist
     # for it alone, so the data write materialises the fold and the

@@ -23,10 +23,6 @@ BOTTOM_MARGIN = 20.0
 # Ref: src/utilities/doc_util.py:4-24
 NORM_HEADER_THRESHOLD = 0.1
 NORM_FOOTER_THRESHOLD = 0.9
-# Main parse skips the first START_PAGE pages (front matter).
-# Ref: src/pdf_extractor.py:179,192  (pagenos = range(3, total))
-REF_START_PAGE = 3
-
 # Synthetic page geometry (US Letter in PDF points).
 PAGE_W = 612.0
 PAGE_H = 792.0
@@ -47,28 +43,7 @@ PATTERNS_TO_STRIP = [r"\\u20ac", r"\\n", "€"]
 SKEW_SPAN_THRESHOLD = 50_000
 
 
+# Only perfbench/check.py still constructs this; ROADMAP item C deletes it.
 @dataclass(frozen=True)
 class ExtractConfig:
-    """Knobs of the extraction fold (operators/extract.py).
-
-    matcher_always_fires=True reproduces the reference quirk where the
-    spaCy matcher's all-optional token patterns
-    (src/matcher_patterns.py:56-65) match any non-empty first line, so
-    the appendix/figure branches of
-    src/processors/element_processors.py:143-167 are dead code. Set
-    False for the *intended* semantics (terms must actually prefix the
-    first line) which revives those branches.
-    """
-
-    start_page: int = 0
-    matcher_always_fires: bool = True
-    # True reproduces the reference main-path quirk where the
-    # header/footer strip tests dict-key membership (only literal
-    # 'header'/'footer' texts stripped, src/processors/
-    # element_processors.py:69 with the dict from pdf_extractor.py:363);
-    # False applies the intended substring strip. Only the substring
-    # strip reads the per-doc header/footer strings, so under True no
-    # extraction route builds them from the geometry frame it is given
-    # (operators/extract.py::_with_hf).
-    broken_hf_strip: bool = True
-    patterns_to_strip: tuple = tuple(PATTERNS_TO_STRIP)
+    """No fields: the extraction fold has one semantics (fold.py)."""

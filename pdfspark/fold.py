@@ -7,14 +7,13 @@ list, quirks included:
 
 * matcher-always-fires: the spaCy matcher built from all-optional
   token patterns (src/matcher_patterns.py:56-65) matches any non-blank
-  first line, so the appendix/figure/else branches are mostly dead
-  (ExtractConfig.matcher_always_fires toggles intended semantics).
+  first line, so the appendix/figure/else branches are mostly dead.
 * broken main-path header/footer strip: process_element tests
   ``text in header_footer_text`` where header_footer_text is the
   *dict* ``{"header": ..., "footer": ...}`` (src/pdf_extractor.py:363
   passes the dict; src/processors/element_processors.py:69 does a dict
   key-membership test) — i.e. only literal texts 'header'/'footer' are
-  ever stripped. ExtractConfig toggles the intended substring strip.
+  ever stripped, so the fold needs no per-doc header/footer strings.
 * state wipes: every non-TextBox element and every stripped TextBox
   returns None from process_element, and the caller assigns that to
   current_section_header (src/pdf_extractor.py:206) — the running
@@ -27,8 +26,10 @@ list, quirks included:
 * heading rewrite: a numbered heading that matches a TOC-skeleton
   section rewrites that section's heading in place
   (element_processors.py:127-131), affecting later lookups.
-* front-matter skip: pages with index < start_page are not processed
-  at all (src/pdf_extractor.py:179,192).
+
+These quirks are the fold's only semantics: the reference's intended
+readings (a substring header/footer strip, a matcher that must match
+a named term, a front-matter page skip) have no implementation here.
 
 Output span kinds: 'heading' | 'appendix' | 'figure_caption' |
 'paragraph' for surviving TextBoxes (by branch taken), 'media' for
@@ -43,7 +44,7 @@ from __future__ import annotations
 
 import re
 
-from pdfspark.config import ExtractConfig
+from pdfspark.config import PATTERNS_TO_STRIP
 from pdfspark.functions import patterns as P
 
 GEOM_KINDS = {"TextLine", "Line", "Rectangle"}
@@ -51,8 +52,8 @@ MEDIA_KINDS = {"Figure", "Image"}
 DROP_KINDS = {"VerticalText", "TextGroup", "Container", "TextGroupTBRL", "Curve", "Char"}
 
 
-def clean_toc_line(line: str, patterns_to_strip) -> str:
-    for p in patterns_to_strip:
+def clean_toc_line(line: str) -> str:
+    for p in PATTERNS_TO_STRIP:
         line = re.sub(p, " ", line)
     return P.RE_EXTRA_SPACE.sub(" ", line).strip()
 
@@ -79,9 +80,8 @@ class SectionState:
 
     _RAISES = object()
 
-    def __init__(self, toc_lines, cfg: ExtractConfig):
-        headings = [clean_toc_line(l, cfg.patterns_to_strip)
-                    for l in toc_lines]
+    def __init__(self, toc_lines):
+        headings = [clean_toc_line(l) for l in toc_lines]
         self.sections = [
             dict(heading=h, paragraphs=[], figures=[], tables=[])
             for h in headings
@@ -156,9 +156,6 @@ class SectionState:
 
 def fold_document(
     spans: list[dict],
-    header: str,
-    footer: str,
-    cfg: ExtractConfig = ExtractConfig(),
     collect_events: bool = False,
     skip_sections: bool = False,
 ) -> dict:
@@ -192,13 +189,12 @@ def fold_document(
     # None text coerced like every other span path (a NULL TOC line
     # would otherwise crash clean_toc_line's re.sub)
     toc_lines = [s["text"] or "" for s in spans if s["kind"] == "TOC"]
-    state = SectionState(toc_lines, cfg)
+    state = SectionState(toc_lines)
     sections = state.sections
 
     current_header: str | None = ""
     out: list[dict] = []
     events: list[tuple] = []
-    page_index = -1  # counts PageStart markers; pages < start_page skipped
 
     def emit(kind, text, media_ref):
         out.append(dict(kind=kind, text=text, media_ref=media_ref,
@@ -209,13 +205,8 @@ def fold_document(
 
     for s in spans:
         kind = s["kind"]
-        if kind == "TOC":
+        if kind in ("TOC", "PageStart"):
             continue
-        if kind == "PageStart":
-            page_index += 1
-            continue
-        if cfg.start_page > 0 and page_index < cfg.start_page:
-            continue  # front-matter skip (incl. spans before page 0)
 
         if kind in DROP_KINDS:
             current_header = None  # processor returns None -> state wipe
@@ -241,13 +232,8 @@ def fold_document(
 
         content = s["text"].lstrip().rstrip() if s["text"] is not None else ""
 
-        # F2 header/footer strip (broken dict-membership by default)
-        nl = content.replace("\n", "")
-        if cfg.broken_hf_strip:
-            stripped = nl in ("header", "footer")
-        else:
-            stripped = bool((header and nl in header) or (footer and nl in footer))
-        if stripped:
+        # F2 header/footer strip (the broken dict-membership test)
+        if content.replace("\n", "") in ("header", "footer"):
             current_header = None
             if collect_events:
                 events.append(("W", -1))
@@ -267,7 +253,7 @@ def fold_document(
             line_count = len(lines)
         first_line = P.RE_EXTRA_SPACE.sub(" ", first_line)
 
-        matches = P.matcher_fires(first_line, cfg.matcher_always_fires)
+        matches = P.matcher_fires(first_line)
         found_sections = P.RE_SECTION.findall(first_line)
 
         # pick the branch first (pure regex, cannot raise), then run
@@ -306,8 +292,7 @@ def fold_document(
     )
 
 
-def replay_boundaries(bounds, toc_lines, needed_ords,
-                      cfg: ExtractConfig = ExtractConfig()):
+def replay_boundaries(bounds, toc_lines, needed_ords):
     """The irreducibly-sequential core of the segment-parallel sections
     replay, stripped to memoized pointer work.
 
@@ -341,7 +326,7 @@ def replay_boundaries(bounds, toc_lines, needed_ords,
     reference's swallowed exception (state.apply semantics, mirrored
     here over precomputed matches; equality with the sequential fold
     is pinned by the forced-threshold split tests)."""
-    state = SectionState(toc_lines, cfg)
+    state = SectionState(toc_lines)
     lookup_index = state.lookup_index
     sections = state.sections
     appends: list[tuple] = []

@@ -35,8 +35,9 @@ TABLE_LABEL = r"^\bTable\s\d+\b"
 
 # X18 — matcher terms (src/matcher_patterns.py:81-91). With the
 # intended semantics these must prefix the first line, token-wise and
-# lowercase; with the reference's all-optional-token quirk the matcher
-# fires on ANY non-empty first line.
+# lowercase; with the reference's all-optional-token quirk, which the
+# fold reproduces (matcher_fires), the matcher fires on ANY non-empty
+# first line. The terms feed classify's ``is_named`` column only.
 MATCHER_TERMS = (
     ("executive", "summary"),
     ("foreword",),
@@ -92,22 +93,13 @@ JAVA_PAGE_NUMBER_MATCH = "(?iU)^" + PAGE_NUMBER
 JAVA_TABLE_LABEL = "(?U)" + TABLE_LABEL
 
 
-def matcher_fires(first_line: str, always: bool = True) -> bool:
-    """X18. `always=True` reproduces the reference quirk: the spaCy
-    Matcher built from all-optional tokens (matcher_patterns.py:56-65)
-    matches any tokenizable (non-blank) first line. `always=False` is
-    the intended prefix-match semantics."""
-    if not first_line or not first_line.strip():
-        return False
-    if always:
-        return True
-    # \b-prefix semantics (RE_MATCHER_PREFIX), NOT a whitespace token
-    # split: spaCy tokenizes "References:" as ["references", ":"], so
-    # the reference matcher fires on punctuation-adjacent terms — a
-    # whitespace split would not, and the fold would then disagree with
-    # the SQL path's JAVA_MATCHER_PREFIX on e.g. "Summary," headings
-    # (pinned by tests/test_patterns.py named-matcher corpus cases).
-    return RE_MATCHER_PREFIX.match(first_line) is not None
+def matcher_fires(first_line: str) -> bool:
+    """X18, the reference quirk: the spaCy Matcher built from
+    all-optional tokens (matcher_patterns.py:56-65) matches any
+    tokenizable (non-blank) first line. The named-term prefix reading
+    lives on only as classify's ``is_named`` column
+    (JAVA_MATCHER_PREFIX, with RE_MATCHER_PREFIX its Python twin)."""
+    return bool(first_line and first_line.strip())
 
 
 # fast path applies when the cleaned heading is pure literal text that

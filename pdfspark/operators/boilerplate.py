@@ -20,7 +20,6 @@ header/footer frame.
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from pdfspark.config import (
     BOTTOM_MARGIN,
@@ -122,19 +121,13 @@ def header_footer(spans_geom: DataFrame) -> DataFrame:
     )
 
 
-def with_header_footer(df: DataFrame,
-                       spans_geom: DataFrame | None) -> DataFrame:
+def with_header_footer(df: DataFrame, spans_geom: DataFrame) -> DataFrame:
     """``df`` with its doc's ``header``/``footer`` strings — the one
     place any consumer gets them. They come from ``header_footer`` over
     ``spans_geom``, left-joined on doc_id, with '' for docs that have
     no margin spans (the reference initializes both to '',
-    parse_util.py:421-425). ``spans_geom=None`` gives empty literals and
-    plans no geometry scan, aggregation or join: a consumer that does
-    not read the strings (the extraction fold under the reference
-    quirk) passes None."""
-    if spans_geom is None:
-        return df.withColumn("header", F.lit("")).withColumn(
-            "footer", F.lit(""))
+    parse_util.py:421-425). The extraction fold is not a consumer: its
+    dict-membership strip reads no strings."""
     return df.join(header_footer(spans_geom), "doc_id", "left").fillna(
         {"header": "", "footer": ""}
     )

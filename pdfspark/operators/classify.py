@@ -26,9 +26,7 @@ def explode_documents(documents_in: DataFrame) -> DataFrame:
     ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
 
 
-def strip_boilerplate(
-    spans: DataFrame, spans_geom: DataFrame | None = None
-) -> DataFrame:
+def strip_boilerplate(spans: DataFrame, spans_geom: DataFrame) -> DataFrame:
     """F2 + F3 on an exploded span table (text spans only).
 
     F2 drops a span whose newline-stripped text is a substring of the

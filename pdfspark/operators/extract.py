@@ -4,9 +4,9 @@
 with explicit salted repartition on xxhash64(doc_id); emits spans +
 sections + per-doc lineage columns.
 
-Every route takes the optional geometry frame ``spans_geom``; only
-the substring strip (``broken_hf_strip=False``) builds per-doc
-header/footer strings from it (see _with_hf).
+Every route folds ``documents_in`` alone: the fold reproduces the
+reference's dict-membership header/footer strip, which reads no
+per-doc header/footer strings, so no route takes a geometry frame.
 
 Skew routes (``*_split``, picked by the ``*_auto`` probes): docs above
 ``skew_threshold`` spans (default config.SKEW_SPAN_THRESHOLD) are
@@ -35,9 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdfspark.config import SKEW_SPAN_THRESHOLD, ExtractConfig
+from pdfspark.config import SKEW_SPAN_THRESHOLD
 from pdfspark.fold import fold_document
-from pdfspark.operators.boilerplate import with_header_footer
 from pdfspark.schema import SPAN
 
 SECTION_STRUCT = T.StructType(
@@ -73,19 +72,7 @@ EXTRACT_SPANS_ONLY = T.StructType(
 )
 
 
-def _with_hf(documents_in: DataFrame, spans_geom: DataFrame | None,
-             cfg: ExtractConfig) -> DataFrame:
-    """The fold's input with per-doc ``header``/``footer`` strings.
-    Only the substring strip (``broken_hf_strip=False``) reads them, so
-    only then does ``with_header_footer`` get the geometry; under the
-    reference quirk (the default) the columns are empty literals and no
-    header/footer plan exists: the fold is a Python UDF, so Spark could
-    not prune that geometry scan, aggregation and join itself."""
-    return with_header_footer(
-        documents_in, None if cfg.broken_hf_strip else spans_geom)
-
-
-def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
+def _fold_batches(spans_only: bool = False):
     """``spans_only=True`` skips the sections attachment state machine
     (fold_document's skip_sections — span labels never depend on it)
     and omits the sections column from the Arrow batches; pair it with
@@ -106,8 +93,7 @@ def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
                          media_ref=s["media_ref"], offset=s["offset"])
                     for s in (r.spans if r.spans is not None else [])
                 ]
-                res = fold_document(spans, r.header or "", r.footer or "",
-                                    cfg, skip_sections=spans_only)
+                res = fold_document(spans, skip_sections=spans_only)
                 wall = (time.perf_counter() - t0) * 1000.0
                 row = dict(
                     doc_id=r.doc_id,
@@ -132,74 +118,31 @@ def _fold_batches(cfg: ExtractConfig, spans_only: bool = False):
     return run
 
 
-def _fold_salted(df: DataFrame, cfg: ExtractConfig, spans_only: bool = False,
+def _fold_salted(df: DataFrame, spans_only: bool = False,
                  num_partitions: int | None = None) -> DataFrame:
     """Salted repartition on xxhash64(doc_id), then the per-doc fold —
     the one fold stage every route runs for its ordinary docs."""
     parts = [num_partitions] if num_partitions else []
     return df.repartition(*parts, F.xxhash64("doc_id")).mapInPandas(
-        _fold_batches(cfg, spans_only=spans_only),
+        _fold_batches(spans_only=spans_only),
         EXTRACT_SPANS_ONLY if spans_only else EXTRACT_FULL,
     )
 
 
 def extract_documents(
     documents_in: DataFrame,
-    spans_geom: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
     num_partitions: int | None = None,
     spans_only: bool = False,
 ) -> DataFrame:
     """Sequential-per-doc exact fold; salted repartition first.
-    ``spans_geom`` is the geometry the per-doc header/footer strings
-    come from; under the default config they are never read, so no
-    header/footer plan is built from it (see _with_hf).
     ``spans_only`` drops the sections side-output at the fold (see
     _fold_batches) — for consumers that never read it."""
-    df = _with_hf(documents_in, spans_geom, cfg)
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = (num_partitions
+         or documents_in.sparkSession.sparkContext.defaultParallelism)
     # hash-repartition on doc_id: uniform unless one doc is huge (that
     # case goes through the skew split routes)
-    return _fold_salted(df, cfg, spans_only=spans_only, num_partitions=n)
-
-
-def chunk_exploded_spans(exploded: DataFrame, cfg: ExtractConfig,
-                         spans_per_chunk: int) -> DataFrame:
-    """Front-matter cutoff + chunk assignment for exploded big-doc
-    spans — windowless (see extract_spans_split docstring). Split out
-    so tests can assert the REAL chunk ids fan out (not re-derive them
-    arithmetically)."""
-    if cfg.start_page > 0:
-        # cutoff = pos of the (start_page+1)-th PageStart marker; a doc
-        # with fewer pages keeps only its TOC spans (page_index never
-        # reaches start_page), exactly like the sequential fold.
-        # try_element_at: under Spark 4.x default ANSI mode a plain
-        # element_at THROWS on out-of-bounds, so a doc with >=1 but
-        # <=start_page PageStart markers would crash the job instead of
-        # producing the NULL the cut.isNotNull() filter depends on
-        # composite (pos, _ap) key: pos is the span's offset (may
-        # duplicate on adversarial input), _ap the array position —
-        # the cutoff compare must follow the fold's stable offset
-        # sort, so the marker key and the span keys use the same
-        # lexicographic struct ordering
-        ckey = F.struct(F.col("pos"), F.col("_ap"))
-        cut = (
-            exploded.filter(F.col("s.kind") == "PageStart")
-            .groupBy("doc_id")
-            .agg(
-                F.try_element_at(
-                    F.sort_array(F.collect_list(F.struct("pos", "_ap"))),
-                    F.lit(cfg.start_page + 1),
-                ).alias("cut")
-            )
-        )
-        exploded = exploded.join(cut, "doc_id", "left").filter(
-            (F.col("s.kind") == "TOC")
-            | (F.col("cut").isNotNull() & (ckey >= F.col("cut")))
-        ).drop("cut")
-    return exploded.withColumn(
-        "chunk", (F.col("pos") / F.lit(spans_per_chunk)).cast("int")
-    )
+    return _fold_salted(documents_in, spans_only=spans_only,
+                        num_partitions=n)
 
 
 CHUNKED_SPANS = T.StructType(
@@ -240,7 +183,7 @@ def _explode_span_rows(folded: DataFrame) -> DataFrame:
     )
 
 
-def _split_inputs(documents_in, spans_geom, cfg, skew_threshold):
+def _split_inputs(df, skew_threshold):
     """(small, big, big_bad) partition of the input by size and the
     DecodeError quarantine marker. A pathologically large doc can
     still carry a DecodeError: the sequential fold quarantines the
@@ -255,7 +198,6 @@ def _split_inputs(documents_in, spans_geom, cfg, skew_threshold):
     extract_sections_auto becomes a manifest-statistics lookup.
     Persisting the flagged frame instead would pin the whole fat
     table in executor memory — wrong trade at that scale."""
-    df = _with_hf(documents_in, spans_geom, cfg)
     # size(NULL) is NULL under ANSI: without the coalesce a NULL-spans
     # doc falls out of ALL THREE branches and silently vanishes from
     # the split path, while the sequential fold emits status='empty'
@@ -272,32 +214,31 @@ def _split_inputs(documents_in, spans_geom, cfg, skew_threshold):
     )
 
 
-def _fold_big_chunks(big: DataFrame, cfg: ExtractConfig,
-                     spans_per_chunk: int,
+def _fold_big_chunks(big: DataFrame, spans_per_chunk: int,
                      collect_events: bool = False) -> DataFrame:
     """Shared chunk machinery of every skew path: explode -> windowless
-    cutoff/chunk ids -> per-chunk re-pack -> parallel fold (sections
-    state machine skipped — chunk-local sections are discarded; span
-    labels never depend on it). Returns CHUNKED_SPANS, or CHUNKED_FULL
-    with chunk-local classification events when ``collect_events``."""
-    import dataclasses
-
+    chunk ids -> per-chunk re-pack -> parallel fold (sections state
+    machine skipped — chunk-local sections are discarded; span labels
+    never depend on it). Returns CHUNKED_SPANS, or CHUNKED_FULL with
+    chunk-local classification events when ``collect_events``."""
     # pos = the span's OWN offset field (the sequential fold's sort
     # key, fold.py:182), with the array position `_ap` as a stable
     # tiebreak: a spans array stored out of offset order (upstream
-    # reassembly) must chunk/cut/fold in the same order the
-    # sequential fold uses, or the pinned route equality breaks. For
-    # every in-repo producer offsets are dense array positions, so
-    # this is identical to the old posexplode ordinal there.
-    exploded = big.select(
-        "doc_id", "header", "footer", F.posexplode("spans").alias("_ap", "s")
-    ).withColumn("pos", F.col("s.offset"))
-    chunked = chunk_exploded_spans(exploded, cfg, spans_per_chunk)
-    chunk_cfg = dataclasses.replace(cfg, start_page=0)  # skip already applied
-    chunks = chunked.groupBy("doc_id", "chunk", "header", "footer").agg(
+    # reassembly) must chunk/fold in the same order the sequential
+    # fold uses, or the pinned route equality breaks. For every
+    # in-repo producer offsets are dense array positions, so this is
+    # identical to the old posexplode ordinal there. Chunk ids need no
+    # page alignment and no per-doc window: every output span label
+    # depends only on its own text (see fold.py), so a chunk boundary
+    # mid-page is safe.
+    chunked = big.select(
+        "doc_id", F.posexplode("spans").alias("_ap", "s")
+    ).withColumn("pos", F.col("s.offset")).withColumn(
+        "chunk", (F.col("pos") / F.lit(spans_per_chunk)).cast("int"))
+    chunks = chunked.groupBy("doc_id", "chunk").agg(
         F.sort_array(F.collect_list(F.struct("pos", "_ap", "s"))).alias("ps")
     ).select(
-        "doc_id", "chunk", "header", "footer",
+        "doc_id", "chunk",
         F.transform(
             "ps",
             lambda x: F.struct(
@@ -316,8 +257,7 @@ def _fold_big_chunks(big: DataFrame, cfg: ExtractConfig,
                 spans = [dict(kind=s["kind"], text=s["text"],
                               media_ref=s["media_ref"], offset=s["offset"])
                          for s in r.spans]
-                res = fold_document(spans, r.header or "", r.footer or "",
-                                    chunk_cfg, collect_events=collect_events,
+                res = fold_document(spans, collect_events=collect_events,
                                     skip_sections=True)
                 row = dict(doc_id=r.doc_id, chunk=r.chunk,
                            spans=res["out_spans"])
@@ -339,9 +279,7 @@ def _fold_big_chunks(big: DataFrame, cfg: ExtractConfig,
 def _assemble_big_spans(folded: DataFrame) -> DataFrame:
     """Chunk-folded big docs -> (doc_id, spans): chunks concatenated in
     chunk order, output offsets renumbered densely. The big-doc branch
-    of extract_spans_split, shared with extract_documents_split. A doc
-    with no chunk rows (the start_page cutoff removed every span) has
-    no row here."""
+    of extract_spans_split, shared with extract_documents_split."""
     return (
         folded.groupBy("doc_id")
         .agg(
@@ -371,58 +309,26 @@ def _assemble_big_spans(folded: DataFrame) -> DataFrame:
 
 def extract_spans_split(
     documents_in: DataFrame,
-    spans_geom: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
     """Span-sequence output (doc_id, spans) with skew splitting.
 
-    Big docs: explode spans, apply the front-matter skip via a per-doc
-    cutoff position, chunk by `floor(pos / spans_per_chunk)`, fold each
-    chunk independently, reassemble ordered and renumber offsets.
-
-    No per-doc global window anywhere in the pre-split (a 10M-span doc
-    must not serialize into one task before it is even split):
-
-    * the front-matter skip needs only the position of the PageStart
-      that opens page `start_page` — computed from the PageStart rows
-      alone (#pages per doc, a tiny aggregation), then joined back;
-    * chunk ids need NO page alignment: after the cutoff the chunk
-      folds run with start_page=0, PageStart markers are pure
-      pass-throughs, and every output span label depends only on its
-      own text (see fold.py) — so a chunk boundary mid-page is safe.
-      For sections on the skew path see extract_sections_split; for
-      the nested-array-free row shape see extract_spans_split_rows.
+    Big docs: explode spans, chunk by `floor(pos / spans_per_chunk)`,
+    fold each chunk independently, reassemble ordered and renumber
+    offsets. No per-doc global window anywhere in the pre-split (a
+    10M-span doc must not serialize into one task before it is even
+    split; see _fold_big_chunks). For sections on the skew path see
+    extract_sections_split; for the nested-array-free row shape see
+    extract_spans_split_rows.
     """
-    small, big, bad = _split_inputs(documents_in, spans_geom, cfg,
-                                    skew_threshold)
-    empty_spans = F.array().cast(T.ArrayType(SPAN)).alias("spans")
-    big_bad = bad.select("doc_id", empty_spans)
-
-    small_out = _fold_salted(small, cfg, spans_only=True).select(
+    small, big, bad = _split_inputs(documents_in, skew_threshold)
+    big_bad = bad.select(
+        "doc_id", F.array().cast(T.ArrayType(SPAN)).alias("spans"))
+    small_out = _fold_salted(small, spans_only=True).select(
         "doc_id", "spans")
-
-    folded = _fold_big_chunks(big, cfg, spans_per_chunk)
-    if cfg.start_page > 0:
-        # the `missing` anti-join below probes folded a second time;
-        # without materialization the whole Python chunk-fold subtree
-        # (the dominant stage) re-executes for the probe
-        folded = folded.persist()
-    big_out = _assemble_big_spans(folded)
-    out = small_out.unionByName(big_out).unionByName(big_bad)
-    if cfg.start_page > 0:
-        # only the front-matter cutoff can remove EVERY span of a big
-        # doc (no TOC, too few pages) so it produces no chunks at all —
-        # re-add it as an empty row, exactly like the sequential fold.
-        # (Guarded: the anti-join probe recomputes the chunk subtree,
-        # pointless in the start_page=0 common case where no doc can
-        # go missing.)
-        missing = big.select("doc_id").join(
-            folded.select("doc_id").distinct(), "doc_id", "left_anti"
-        ).select("doc_id", empty_spans)
-        out = out.unionByName(missing)
-    return out
+    big_out = _assemble_big_spans(_fold_big_chunks(big, spans_per_chunk))
+    return small_out.unionByName(big_out).unionByName(big_bad)
 
 
 # metadata-sized: a code plus the CHUNK-LOCAL offset of the referenced
@@ -485,8 +391,7 @@ _PHASEA_OUT = T.StructType(
 
 
 def _big_doc_sections(big: DataFrame, folded: DataFrame,
-                      cfg: ExtractConfig, spans_per_chunk: int,
-                      persisted: list) -> DataFrame:
+                      spans_per_chunk: int, persisted: list) -> DataFrame:
     """Sections of the chunk-folded big docs (``folded`` from
     _fold_big_chunks(collect_events=True)) by a SEGMENT-PARALLEL
     replay: no task anywhere touches a whole pathological document.
@@ -701,7 +606,7 @@ def _big_doc_sections(big: DataFrame, folded: DataFrame,
             br["pos"].to_numpy(dtype="int64", na_value=-1),
         )
         headings, targets, appends = replay_boundaries(
-            blist, toc_lines, needed_ords, cfg
+            blist, toc_lines, needed_ords
         )
         out = []
         for k, (tp, tf) in targets.items():
@@ -801,8 +706,6 @@ def _big_doc_sections(big: DataFrame, folded: DataFrame,
 
 def extract_sections_split(
     documents_in: DataFrame,
-    spans_geom: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
@@ -812,17 +715,11 @@ def extract_sections_split(
 
     Output: (doc_id, status, sections).
     """
-    small, big, bad = _split_inputs(documents_in, spans_geom, cfg,
-                                    skew_threshold)
-    folded = _fold_big_chunks(big, cfg, spans_per_chunk,
-                              collect_events=True)
-    # NOTE: no `missing` re-add here (unlike extract_spans_split):
-    # big_out left-joins from `big` itself, so a big doc whose spans
-    # were all removed by the start_page cutoff already gets its one
-    # ('ok', empty sections) row — a second union would duplicate it
+    small, big, bad = _split_inputs(documents_in, skew_threshold)
+    folded = _fold_big_chunks(big, spans_per_chunk, collect_events=True)
     big_out = (
         big.select("doc_id", F.lit("ok").alias("status"))
-        .join(_big_doc_sections(big, folded, cfg, spans_per_chunk, []),
+        .join(_big_doc_sections(big, folded, spans_per_chunk, []),
               "doc_id", "left")
         .unionByName(bad.select("doc_id", F.lit("quarantined")
                                 .alias("status")),
@@ -831,14 +728,12 @@ def extract_sections_split(
             "sections", F.array().cast(T.ArrayType(SECTION_STRUCT))
         ).alias("sections"))
     )
-    return _fold_salted(small, cfg).select(
+    return _fold_salted(small).select(
         "doc_id", "status", "sections").unionByName(big_out)
 
 
 def extract_documents_split(
     documents_in: DataFrame,
-    spans_geom: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
     persisted: list | None = None,
@@ -849,9 +744,7 @@ def extract_documents_split(
     product code calls it: extract_job's plain fold beat it at every
     size up to 1M spans (BASELINE.md, "Job route A/B"). It is kept only
     because the traced benchmark wraps it by name, and goes with that
-    wrap. Each big doc is one row left-joined from ``big``, so one the
-    start_page cutoff emptied comes out 'ok' and empty, like the
-    sequential fold.
+    wrap. Each big doc is one row left-joined from ``big``.
     Its lineage is input-derived like the fold's; wall_ms and
     partition_id are NULL (no one task folds it). At 1M spans the
     nested row itself dominates on any path that builds it; consumers
@@ -859,8 +752,7 @@ def extract_documents_split(
     extract_sections_split instead. The cached big-doc intermediates
     are appended to ``persisted`` for the caller to unpersist once the
     result is materialised."""
-    small, big, bad = _split_inputs(documents_in, spans_geom, cfg,
-                                    skew_threshold)
+    small, big, bad = _split_inputs(documents_in, skew_threshold)
 
     def input_lineage(df, status):
         return df.select(
@@ -875,14 +767,13 @@ def extract_documents_split(
 
     # two consumers (span reassembly, sections enrichment): persist so
     # the Python chunk fold runs once
-    folded = _fold_big_chunks(big, cfg, spans_per_chunk,
+    folded = _fold_big_chunks(big, spans_per_chunk,
                               collect_events=True).persist()
     persisted = [] if persisted is None else persisted
     persisted.append(folded)
     rows = (
         input_lineage(big, "ok")
-        .join(_big_doc_sections(big, folded, cfg, spans_per_chunk,
-                                persisted),
+        .join(_big_doc_sections(big, folded, spans_per_chunk, persisted),
               "doc_id", "left")
         .join(_assemble_big_spans(folded), "doc_id", "left")
         # DecodeError big docs are never chunk-folded: quarantined whole
@@ -903,12 +794,11 @@ def extract_documents_split(
         F.lit(None).cast("int").alias("partition_id"),
         F.lit(None).cast("double").alias("wall_ms"),
     )
-    return _fold_salted(small, cfg).unionByName(big_out)
+    return _fold_salted(small).unionByName(big_out)
 
 
 def extract_sections_auto(
     documents_in: DataFrame,
-    spans_geom: DataFrame | None = None,
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
@@ -929,17 +819,16 @@ def extract_sections_auto(
     pinned by the forced-threshold tests)."""
     mx = _max_span_count(documents_in)
     if mx <= skew_threshold:
-        return extract_documents(documents_in, spans_geom).select(
+        return extract_documents(documents_in).select(
             "doc_id", "status", "sections"
         )
-    return extract_sections_split(documents_in, spans_geom,
+    return extract_sections_split(documents_in,
                                   skew_threshold=skew_threshold,
                                   spans_per_chunk=spans_per_chunk)
 
 
 def extract_spans_auto(
     documents_in: DataFrame,
-    spans_geom: DataFrame | None = None,
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
@@ -959,18 +848,16 @@ def extract_spans_auto(
     """
     mx = _max_span_count(documents_in)
     if mx > skew_threshold:
-        return extract_spans_split_rows(documents_in, spans_geom,
+        return extract_spans_split_rows(documents_in,
                                         skew_threshold=skew_threshold,
                                         spans_per_chunk=spans_per_chunk)
     return _explode_span_rows(
-        extract_documents(documents_in, spans_geom, spans_only=True)
+        extract_documents(documents_in, spans_only=True)
     )
 
 
 def extract_spans_split_rows(
     documents_in: DataFrame,
-    spans_geom: DataFrame | None = None,
-    cfg: ExtractConfig = ExtractConfig(),
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
@@ -989,14 +876,13 @@ def extract_spans_split_rows(
     anyway (the driver contract's nested arrays are re-exploded by
     every consumer).
     """
-    small, big, _bad = _split_inputs(documents_in, spans_geom, cfg,
-                                     skew_threshold)
+    small, big, _bad = _split_inputs(documents_in, skew_threshold)
     # big+bad docs: quarantined, no span rows at all (exploded shape
     # has no empty-doc rows by definition)
 
-    small_out = _explode_span_rows(_fold_salted(small, cfg, spans_only=True))
+    small_out = _explode_span_rows(_fold_salted(small, spans_only=True))
 
-    folded = _fold_big_chunks(big, cfg, spans_per_chunk)
+    folded = _fold_big_chunks(big, spans_per_chunk)
     rows = folded.select(
         "doc_id", "chunk", F.posexplode("spans").alias("_i", "o")
     ).select(
@@ -1030,17 +916,16 @@ def extract_spans_split_rows(
 
 
 def extract_spans_relational(documents_in: DataFrame) -> DataFrame:
-    """Pure-SQL fast path for the flagship span extraction under the
-    reference's DEFAULT quirk configuration (matcher-always-fires +
-    broken dict-membership header/footer strip, start_page=0): every
-    surviving span's label depends only on its own text, so the whole
-    fold collapses to regex projections + one per-doc renumbering
-    window — no Python anywhere, whole-stage codegen end to end.
+    """Pure-SQL fast path for the flagship span extraction: under the
+    reference's quirks the fold reproduces (matcher-always-fires +
+    broken dict-membership header/footer strip) every surviving span's
+    label depends only on its own text, so the whole fold collapses to
+    regex projections + one per-doc renumbering window — no Python
+    anywhere, whole-stage codegen end to end.
 
     Exactly the relational semantics the DuckDB extract-spans oracle
     encodes; pytest pins equality against the mapInPandas fold, which
-    remains the path for non-default configs and the sections
-    side-output (those are order-stateful).
+    remains the path for the sections side-output (order-stateful).
 
     Output: exploded (doc_id, offset, kind, text, media_ref).
     """

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import re
 
+from pdfspark.config import PATTERNS_TO_STRIP
+
 
 class _Section:
     def __init__(self, heading):
@@ -47,28 +49,14 @@ _APPENDIX_PATTERN = r"^(Appendix|Annex)\s+[A-Z]\.*"
 _FIGURE_PATTERN = r"^Figure\s\d+|Fig\.\s\d+"
 _PAGE_NO_PATTERN = r"(?:Page|page|pg)\s(?:\d+|[ivx])+"
 
-_MATCHER_TERMS = [
-    ["executive", "summary"],
-    ["foreword"],
-    ["introduction"],
-    ["summary"],
-    ["bibliography"],
-    ["references"],
-]
 
-
-def _matcher(first_line: str, always_fires: bool) -> bool:
+def _matcher(first_line: str) -> bool:
     # ref src/matcher_patterns.py:56-65: all tokens optional -> matches
     # any tokenizable doc. nlp('') has no tokens -> no match.
-    if not first_line.strip():
-        return False
-    if always_fires:
-        return True
-    toks = first_line.lower().split()
-    return any(toks[: len(t)] == t for t in _MATCHER_TERMS)
+    return first_line.strip() != ""
 
 
-def _process_textbox(content, document, current_section_header, cfg,
+def _process_textbox(content, document, current_section_header,
                      header_footer):
     """ref element_processors.py:59-179. Returns (emitted_label | None,
     new current_section_header). Raises re.error like the original."""
@@ -76,14 +64,8 @@ def _process_textbox(content, document, current_section_header, cfg,
 
     if header_footer is not None:  # ref :68-70
         probe = textbox_content.replace("\n", "")
-        if cfg.broken_hf_strip:
-            if probe in header_footer:  # dict-key membership quirk
-                return None, None
-        else:
-            if (header_footer.get("header") and probe in header_footer["header"]) or (
-                header_footer.get("footer") and probe in header_footer["footer"]
-            ):
-                return None, None
+        if probe in header_footer:  # dict-key membership quirk
+            return None, None
     if re.match(_PAGE_NO_PATTERN, textbox_content, re.IGNORECASE):  # ref :73-74
         return None, None
 
@@ -95,7 +77,7 @@ def _process_textbox(content, document, current_section_header, cfg,
         line_count = len(content_lines_list)
     first_line = re.sub(r"\s{2,}", " ", first_line)  # ref :106
 
-    matches = _matcher(first_line, cfg.matcher_always_fires)
+    matches = _matcher(first_line)
     found_sections = re.findall(_SECTION_PATTERN, first_line)
 
     if matches or found_sections != []:  # ref :114-142
@@ -143,9 +125,10 @@ def _process_textbox(content, document, current_section_header, cfg,
         return "paragraph", current_section_header
 
 
-def oracle_extract(spans, header, footer, cfg):
+def oracle_extract(spans, header, footer, _unused=None):
     """Reference-mirroring extraction over one document's span list.
     Same return shape as pdfspark.fold.fold_document."""
+    # _unused: only perfbench/check.py passes it; ROADMAP item C drops it
     spans = sorted(spans, key=lambda s: s["offset"])
     n_in = len(spans)
     if any(s["kind"] == "DecodeError" for s in spans):
@@ -159,7 +142,7 @@ def oracle_extract(spans, header, footer, cfg):
     for s in spans:
         if s["kind"] == "TOC":
             line = s["text"] or ""  # NULL coerced, same as TextBoxes
-            for pat in cfg.patterns_to_strip:  # ref pdf_extractor.py:174-177
+            for pat in PATTERNS_TO_STRIP:  # ref pdf_extractor.py:174-177
                 line = re.sub(pat, " ", line)
             line = re.sub(r"\s{2,}", " ", line)
             document.sections.append(_Section(line.strip()))
@@ -167,21 +150,15 @@ def oracle_extract(spans, header, footer, cfg):
     header_footer = {"header": header, "footer": footer}
     current_section_header = ""
     out = []
-    page_index = -1
 
     for s in spans:
         kind = s["kind"]
-        if kind == "TOC":
-            continue
-        if kind == "PageStart":
-            page_index += 1
-            continue
-        if cfg.start_page > 0 and page_index < cfg.start_page:
+        if kind in ("TOC", "PageStart"):
             continue
         try:
             if kind == "TextBox":
                 label, current_section_header = _process_textbox(
-                    s["text"] or "", document, current_section_header, cfg,
+                    s["text"] or "", document, current_section_header,
                     header_footer,
                 )
                 if label is not None:
@@ -203,7 +180,7 @@ def oracle_extract(spans, header, footer, cfg):
         except re.error:
             # ref pdf_extractor.py:209-210: log and continue; the span
             # was appended to the page before classification raised.
-            label = _label_for_crashed(s["text"] or "", cfg)
+            label = _label_for_crashed(s["text"] or "")
             out.append(dict(kind=label, text=(s["text"] or "").strip(),
                             media_ref=None, offset=len(out)))
 
@@ -216,13 +193,11 @@ def oracle_extract(spans, header, footer, cfg):
                 spans_in=n_in, spans_out=len(out))
 
 
-def _label_for_crashed(text, cfg):
+def _label_for_crashed(text):
     content = text.lstrip().rstrip()
     first_line = content.split("\n")[0] if content else ""
     first_line = re.sub(r"\s{2,}", " ", first_line)
-    if _matcher(first_line, cfg.matcher_always_fires) or re.findall(
-        _SECTION_PATTERN, first_line
-    ):
+    if _matcher(first_line) or re.findall(_SECTION_PATTERN, first_line):
         return "heading"
     if re.findall(_APPENDIX_PATTERN, first_line, re.IGNORECASE):
         return "appendix"

@@ -39,7 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdfspark.config import ExtractConfig
 from pdfspark.operators.extract import EXTRACT_FULL, _fold_batches
 from pdfspark.schema import SPAN, SPANS_GEOM
 
@@ -159,17 +158,15 @@ def decode_docs(bin_df: DataFrame, decoder=None) -> DataFrame:
         _decode_batches(decoder or _decode_payload), DECODED)
 
 
-def extract_payloads(bin_df: DataFrame,
-                     cfg: ExtractConfig = ExtractConfig()) -> DataFrame:
+def extract_payloads(bin_df: DataFrame) -> DataFrame:
     """binaryFile rows -> EXTRACT_FULL rows, one per payload, in ONE
     Python stage: the decode kernel feeds the fold kernel
     (operators/extract.py) in the same task, over the scan coalesced
     (narrow) to the default parallelism. A payload that failed decode
     folds the DecodeError marker span (status='quarantined') with its
     size as lineage bytes_in; decoded payloads get NULL (the fold
-    counts their span text). Header and footer are empty: the job's
-    config (broken_hf_strip) never reads them."""
-    decode, fold = _decode_batches(_decode_payload), _fold_batches(cfg)
+    counts their span text)."""
+    decode, fold = _decode_batches(_decode_payload), _fold_batches()
     marker = [dict(kind="DecodeError", text="corrupt payload",
                    media_ref=None, offset=0)]
 
@@ -179,7 +176,7 @@ def extract_payloads(bin_df: DataFrame,
             yield pdf.assign(
                 spans=[s if good else marker
                        for s, good in zip(pdf["spans"], ok)],
-                bytes_in=pdf["bytes_len"].where(~ok), header="", footer="")
+                bytes_in=pdf["bytes_len"].where(~ok))
 
     n = bin_df.sparkSession.sparkContext.defaultParallelism
     return bin_df.select("path", "length", "content").coalesce(n).mapInPandas(

@@ -30,7 +30,6 @@ import hashlib
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from pdfspark.config import ExtractConfig
 from pdfspark.operators.extract import lineage_table
 # called through the module, so a wrapper set on it at run time (the
 # perfbench tracer's commit span) sees every epoch's commit
@@ -48,7 +47,6 @@ def extract_payload_stream(
     payload_dir: str,
     out_path: str,
     checkpoint_dir: str,
-    cfg: ExtractConfig = ExtractConfig(),
     max_files_per_trigger: int | None = None,
     metrics_path: str | None = None,
 ) -> None:
@@ -91,7 +89,7 @@ def extract_payload_stream(
     # each payload folds to its own row (two payloads declaring one
     # doc_id fold to two rows — dedupe by doc_id downstream).
     def sink(batch_df, epoch_id: int) -> None:
-        folded = extract_payloads(batch_df, cfg)
+        folded = extract_payloads(batch_df)
         write_metrics = metrics_path is not None
         if write_metrics:
             folded.persist()

@@ -936,7 +936,6 @@ def write_oracle_outputs(sf_name: str, out_dir: str,
     and the exact table fold (fold_tables_page run locally, no Spark).
     This gives the two exact-parity queries a real driver oracle
     instead of rows-only checks."""
-    from pdfspark.config import ExtractConfig
     from pdfspark.operators.tables import fold_tables_page
     from pdfspark.oracle import oracle_extract
 
@@ -945,7 +944,6 @@ def write_oracle_outputs(sf_name: str, out_dir: str,
     # place where seed drift could desynchronize oracle from input
     if docs is None:
         docs = generate_docs(sf_name)
-    cfg = ExtractConfig()
 
     sec_rows = []
     tbl_rows = []
@@ -954,8 +952,7 @@ def write_oracle_outputs(sf_name: str, out_dir: str,
         res = oracle_extract(
             [dict(kind=s["kind"], text=s["text"], media_ref=s["media_ref"],
                   offset=s["offset"]) for s in d.spans],
-            h, f, cfg,
-        )
+            h, f)
         for i, sec in enumerate(res["sections"]):
             sec_rows.append(
                 dict(doc_id=d.doc_id, section_id=i, heading=sec["heading"],

@@ -4,10 +4,8 @@ splitter vs the unsplit path."""
 
 import itertools
 
-import pytest
 from pyspark.sql import functions as F
 
-from pdfspark.config import ExtractConfig
 from pdfspark.fold import fold_document
 from pdfspark.operators.boilerplate import all_doc_headers_footers
 from pdfspark.operators.extract import (
@@ -31,27 +29,18 @@ def _hf_strings(spark, spans_geom):
     }
 
 
-CONFIGS = [
-    ExtractConfig(),
-    ExtractConfig(matcher_always_fires=False),
-    ExtractConfig(broken_hf_strip=False),
-    ExtractConfig(start_page=3),
-    ExtractConfig(matcher_always_fires=False, broken_hf_strip=False,
-                  start_page=3),
-]
-
-
-@pytest.mark.parametrize("cfg", CONFIGS, ids=lambda c: (
-    f"quirk={c.matcher_always_fires},hf={c.broken_hf_strip},sp={c.start_page}"))
-def test_fold_matches_oracle_all_fixture_docs(spark, spans_geom, cfg):
+def test_fold_matches_oracle_all_fixture_docs(spark, spans_geom):
+    """fold.py vs the independent transliteration on every fixture doc.
+    The oracle gets each doc's real header/footer strings, as the
+    reference does; its dict-membership strip ignores them, and the
+    fold takes none."""
     hf = _hf_strings(spark, spans_geom)
     n_checked = 0
     for doc_id, spans in _docs().items():
         sp = [dict(kind=s["kind"], text=s["text"], media_ref=s["media_ref"],
                    offset=s["offset"]) for s in spans]
-        h, f = hf.get(doc_id, ("", ""))
-        got = fold_document(sp, h, f, cfg)
-        want = oracle_extract(sp, h, f, cfg)
+        got = fold_document(sp)
+        want = oracle_extract(sp, *hf.get(doc_id, ("", "")))
         assert got["status"] == want["status"], doc_id
         assert got["out_spans"] == want["out_spans"], (
             doc_id,
@@ -63,79 +52,50 @@ def test_fold_matches_oracle_all_fixture_docs(spark, spans_geom, cfg):
     assert n_checked >= 60
 
 
-def test_spark_extract_matches_fold(spark, documents_in, spans_geom,
-                                    monkeypatch):
+def test_spark_extract_matches_fold(spark, documents_in):
     """The plain fold and the skew route (forced onto the chunk fold
-    for the skew doc) equal fold_document run with each doc's
-    header/footer strings, under the default reference quirk and under
-    the substring strip (broken_hf_strip=False). Both routes take the
-    geometry frame; only the substring strip reads the strings, so only
-    its routes build the header/footer frame (counted at
-    boilerplate.header_footer) and scan and join it: the default's
-    skipped side input must not leak into its plans."""
-    import pdfspark.operators.boilerplate as BP
+    for the skew doc) equal fold_document run per doc, and neither
+    plan joins anything into the fold's input."""
     from tools.explain_audit import plan_summary
 
-    hf = _hf_strings(spark, spans_geom)
-    builds = []
-    real = BP.header_footer
+    want = {}
+    for doc_id, spans in _docs().items():
+        res = fold_document([dict(kind=s["kind"], text=s["text"],
+                                  media_ref=s["media_ref"],
+                                  offset=s["offset"]) for s in spans])
+        want[doc_id] = (res["status"], res["out_spans"])
 
-    def counting(*a, **kw):
-        builds.append(a)
-        return real(*a, **kw)
-
-    monkeypatch.setattr(BP, "header_footer", counting)
-    for cfg in (ExtractConfig(), ExtractConfig(broken_hf_strip=False)):
-        want, n_stripped = {}, 0
-        for doc_id, spans in _docs().items():
-            sp = [dict(kind=s["kind"], text=s["text"],
-                       media_ref=s["media_ref"], offset=s["offset"])
-                  for s in spans]
-            res = fold_document(sp, *hf.get(doc_id, ("", "")), cfg)
-            want[doc_id] = (res["status"], res["out_spans"])
-            n_stripped += res["out_spans"] != fold_document(
-                sp, "", "", cfg)["out_spans"]
-        reads_hf = not cfg.broken_hf_strip
-        assert (n_stripped > 0) == reads_hf, (cfg, n_stripped)
-
-        routes = {
-            "extract_documents": extract_documents(documents_in, spans_geom,
-                                                   cfg),
-            "extract_spans_split": extract_spans_split(
-                documents_in, spans_geom, cfg=cfg, skew_threshold=500,
-                spans_per_chunk=200),
-        }
-        assert (len(builds) > 0) == reads_hf, (cfg, len(builds))
-        del builds[:]
-        for name, out in routes.items():
-            s = plan_summary(
-                out._jdf.queryExecution().executedPlan().toString())
-            assert ("spans_geom.parquet" in s["scans"]) == reads_hf, (
-                name, cfg, s)
-            assert (s["bhj"] + s["smj"] > 0) == reads_hf, (name, cfg, s)
-            rows = out.collect()
-            got = {r.doc_id: [t.asDict() for t in r.spans] for r in rows}
-            assert set(got) == set(want), (name, cfg)
-            for doc_id, (status, spans) in want.items():
-                assert got[doc_id] == spans, (name, cfg, doc_id)
-            if "status" in out.columns:
-                assert {r.doc_id: r.status for r in rows} == {
-                    d: w[0] for d, w in want.items()}, (name, cfg)
+    routes = {
+        "extract_documents": extract_documents(documents_in),
+        "extract_spans_split": extract_spans_split(
+            documents_in, skew_threshold=500, spans_per_chunk=200),
+    }
+    for name, out in routes.items():
+        s = plan_summary(out._jdf.queryExecution().executedPlan().toString())
+        assert s["bhj"] + s["smj"] == 0, (name, s)
+        rows = out.collect()
+        got = {r.doc_id: [t.asDict() for t in r.spans] for r in rows}
+        assert set(got) == set(want), name
+        for doc_id, (status, spans) in want.items():
+            assert got[doc_id] == spans, (name, doc_id)
+        if "status" in out.columns:
+            assert {r.doc_id: r.status for r in rows} == {
+                d: w[0] for d, w in want.items()}, name
 
 
-def test_partitioning_determinism(spark, documents_in, spans_geom):
-    a = extract_documents(documents_in, spans_geom, num_partitions=2)
-    b = extract_documents(documents_in, spans_geom, num_partitions=16)
+def test_partitioning_determinism(spark, documents_in):
+    a = extract_documents(documents_in, num_partitions=2)
+    b = extract_documents(documents_in, num_partitions=16)
     ka = {(r.doc_id): [t.asDict() for t in r.spans] for r in a.collect()}
     kb = {(r.doc_id): [t.asDict() for t in r.spans] for r in b.collect()}
     assert ka == kb
 
 
-def test_skew_splitter_equality(spark, documents_in, spans_geom):
+def test_skew_splitter_equality(spark, documents_in):
     # force the skew path for the 2000-span skew doc
-    split = extract_spans_split(documents_in, spans_geom, skew_threshold=500,
+    split = extract_spans_split(documents_in, skew_threshold=500,
                                 spans_per_chunk=200)
-    unsplit = extract_documents(documents_in, spans_geom).select(
+    unsplit = extract_documents(documents_in).select(
         "doc_id", "spans")
     ks = {r.doc_id: [t.asDict() for t in r.spans] for r in split.collect()}
     ku = {r.doc_id: [t.asDict() for t in r.spans] for r in unsplit.collect()}
@@ -145,8 +105,8 @@ def test_skew_splitter_equality(spark, documents_in, spans_geom):
         assert ks[d] == ku[d], d
 
 
-def test_lineage_and_resume(spark, documents_in, spans_geom):
-    full = extract_documents(documents_in, spans_geom, num_partitions=4)
+def test_lineage_and_resume(spark, documents_in):
+    full = extract_documents(documents_in, num_partitions=4)
     lin = lineage_table(full).collect()
     assert sum(r.doc_count for r in lin) == documents_in.count()
     assert all(r.wall_ms >= 0 for r in lin)
@@ -168,22 +128,6 @@ def test_local_hf_transliteration_matches_spark(spark, spans_geom):
         assert (h, f) == (wh, wf), d.doc_id
 
 
-def test_skew_splitter_equality_with_front_matter_skip(spark, documents_in,
-                                                       spans_geom):
-    """The windowless cutoff join must reproduce the sequential fold's
-    front-matter skip (start_page=3) on the skew path."""
-    cfg = ExtractConfig(start_page=3)
-    split = extract_spans_split(documents_in, spans_geom, cfg=cfg,
-                                skew_threshold=500, spans_per_chunk=200)
-    unsplit = extract_documents(documents_in, spans_geom, cfg).select(
-        "doc_id", "spans")
-    ks = {r.doc_id: [t.asDict() for t in r.spans] for r in split.collect()}
-    ku = {r.doc_id: [t.asDict() for t in r.spans] for r in unsplit.collect()}
-    assert set(ks) == set(ku)
-    for d in ku:
-        assert ks[d] == ku[d], d
-
-
 def test_skew_giant_doc_parallel_presplit(spark):
     """A 100k-span pathological doc: the skew path must (a) equal the
     sequential fold and (b) run its chunk folds across >1 task — the
@@ -201,25 +145,20 @@ def test_skew_giant_doc_parallel_presplit(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    out = extract_spans_split(df, None, skew_threshold=5000,
-                              spans_per_chunk=4096)
+    out = extract_spans_split(df, skew_threshold=5000, spans_per_chunk=4096)
     got = [t.asDict() for t in out.collect()[0].spans]
-    want = fold_document(spans, "", "", ExtractConfig())["out_spans"]
+    want = fold_document(spans)["out_spans"]
     assert got == want
-    # the REAL chunk assignment (same helper the split path runs) must
-    # fan the doc out over many chunk ids — not arithmetic on len()
-    from pdfspark.operators.extract import chunk_exploded_spans
+    # the REAL chunk assignment (the chunk fold the split path runs)
+    # must fan the doc out over many chunk ids — not arithmetic on len()
+    from pdfspark.operators.extract import _fold_big_chunks
 
-    exploded = df.withColumn("header", F.lit("")).withColumn(
-        "footer", F.lit("")
-    ).select("doc_id", "header", "footer",
-             F.posexplode("spans").alias("pos", "s"))
-    chunked = chunk_exploded_spans(exploded, ExtractConfig(), 4096)
+    chunked = _fold_big_chunks(df, 4096)
     n_chunks = chunked.select("chunk").distinct().count()
     assert n_chunks > 20, n_chunks
 
 
-def test_sections_auto_routes_equal(spark, documents_in, spans_geom):
+def test_sections_auto_routes_equal(spark, documents_in):
     """The adaptive route must emit identical rows whichever plan the
     probe picks (high threshold -> sequential, forced low -> split)."""
     from pdfspark.operators.extract import extract_sections_auto
@@ -232,14 +171,13 @@ def test_sections_auto_routes_equal(spark, documents_in, spans_geom):
             for r in rows
         }
 
-    hi = key(extract_sections_auto(documents_in, spans_geom,
-                                   skew_threshold=10**9))
-    lo = key(extract_sections_auto(documents_in, spans_geom,
-                                   skew_threshold=500, spans_per_chunk=200))
+    hi = key(extract_sections_auto(documents_in, skew_threshold=10**9))
+    lo = key(extract_sections_auto(documents_in, skew_threshold=500,
+                                   spans_per_chunk=200))
     assert hi == lo
 
 
-def test_spans_auto_routes_equal(spark, documents_in, spans_geom):
+def test_spans_auto_routes_equal(spark, documents_in):
     """The flagship's adaptive route must emit identical span rows
     whichever plan the probe picks (high threshold -> plain fold +
     posexplode, forced low -> exploded-rows split path)."""
@@ -252,15 +190,13 @@ def test_spans_auto_routes_equal(spark, documents_in, spans_geom):
             for r in rows
         )
 
-    hi = key(extract_spans_auto(documents_in, spans_geom,
-                                skew_threshold=10**9))
-    lo = key(extract_spans_auto(documents_in, spans_geom,
-                                skew_threshold=500, spans_per_chunk=200))
+    hi = key(extract_spans_auto(documents_in, skew_threshold=10**9))
+    lo = key(extract_spans_auto(documents_in, skew_threshold=500,
+                                spans_per_chunk=200))
     assert hi == lo
 
 
-def test_spans_auto_routing_choice(spark, documents_in, spans_geom,
-                                   monkeypatch):
+def test_spans_auto_routing_choice(spark, documents_in, monkeypatch):
     """The probe must pick the one-scan sequential fold when no doc
     crosses the threshold, and the split path only when one does —
     the round-3 review caught the flagship call site shipping with a
@@ -273,60 +209,20 @@ def test_spans_auto_routing_choice(spark, documents_in, spans_geom,
 
     # no doc crosses: the split path must NOT be touched
     monkeypatch.setattr(X, "extract_spans_split_rows", boom)
-    assert X.extract_spans_auto(documents_in, spans_geom,
+    assert X.extract_spans_auto(documents_in,
                                 skew_threshold=10**9).count() > 0
 
     # a doc crosses: the split path MUST be the route
     sentinel = object()
     monkeypatch.setattr(X, "extract_spans_split_rows",
                         lambda *a, **k: sentinel)
-    assert X.extract_spans_auto(documents_in, spans_geom,
+    assert X.extract_spans_auto(documents_in,
                                 skew_threshold=1) is sentinel
 
 
-def test_sections_split_cutoff_doc_single_row(spark):
-    """A big doc whose spans are ALL removed by the start_page cutoff
-    (and one whose TOC survives) must come out of the sections split
-    as exactly ONE row per doc, equal to the sequential fold — the
-    round-3 review found the old `missing` re-add duplicated them."""
-    from pdfspark.operators.extract import extract_sections_split
-
-    def mkdoc(doc_id, with_toc):
-        spans = []
-        if with_toc:
-            spans.append(dict(kind="TOC", text="1. Intro", media_ref=None,
-                              offset=0))
-        spans.append(dict(kind="PageStart", text="", media_ref=None,
-                          offset=len(spans)))
-        spans += [dict(kind="TextBox", text=f"1. Intro\nbody {i}",
-                       media_ref=None, offset=len(spans) + i)
-                  for i in range(600)]
-        return (doc_id, spans)
-
-    df = spark.createDataFrame(
-        [mkdoc("cut-notoc", False), mkdoc("cut-toc", True)],
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    cfg = ExtractConfig(start_page=3)
-    got = extract_sections_split(df, None, cfg=cfg, skew_threshold=500,
-                                 spans_per_chunk=200).collect()
-    assert sorted(r.doc_id for r in got) == ["cut-notoc", "cut-toc"]
-    want = {r.doc_id: (r.status,
-                       [(s.heading, list(s.paragraphs), list(s.figures))
-                        for s in r.sections])
-            for r in extract_documents(df, None, cfg).collect()}
-    for r in got:
-        assert (r.status, [(s.heading, list(s.paragraphs), list(s.figures))
-                           for s in r.sections]) == want[r.doc_id], r.doc_id
-
-
 def test_skew_big_doc_fewer_pages_than_start_page(spark):
-    """A big doc with >=1 but <=start_page PageStart markers: under
-    Spark 4 ANSI mode a plain element_at would THROW on the
-    out-of-bounds cutoff lookup; try_element_at yields NULL and the
-    skew path must match the sequential fold (only TOC spans survive
-    — page_index never reaches start_page)."""
+    """A big doc of only two pages, whose 600 TextBoxes all sit on
+    the first: the skew path must match the sequential fold."""
     spans = [dict(kind="TOC", text="1. Intro", media_ref=None, offset=0),
              dict(kind="PageStart", text="", media_ref=None, offset=1)]
     spans += [dict(kind="TextBox", text=f"body {i}", media_ref=None,
@@ -338,18 +234,16 @@ def test_skew_big_doc_fewer_pages_than_start_page(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    cfg = ExtractConfig(start_page=3)
-    got = extract_spans_split(df, None, cfg=cfg, skew_threshold=500,
+    got = extract_spans_split(df, skew_threshold=500,
                               spans_per_chunk=200).collect()
-    want = extract_documents(df, None, cfg).select("doc_id", "spans").collect()
+    want = extract_documents(df).select("doc_id", "spans").collect()
     assert len(got) == 1 and len(want) == 1
     assert [t.asDict() for t in got[0].spans] == \
         [t.asDict() for t in want[0].spans]
 
-    # full-output split route: the same doc plus a TOC-less twin whose
-    # spans the cutoff removes entirely (no chunk rows at all) — each
-    # must come out as exactly ONE row (no duplicate from the big-doc
-    # join plus a re-add, none missing), equal to the sequential fold
+    # full-output split route: the same doc plus a TOC-less twin —
+    # each must come out as exactly ONE row (no duplicate from the
+    # big-doc joins, none missing), equal to the sequential fold
     from pdfspark.operators.extract import extract_documents_split
 
     notoc = [s for s in spans if s["kind"] != "TOC"]
@@ -364,15 +258,14 @@ def test_skew_big_doc_fewer_pages_than_start_page(spark):
                 [t.asDict() for t in r.sections], r.spans_in,
                 r.spans_out, r.bytes_in)
 
-    got2 = extract_documents_split(df2, None, cfg, skew_threshold=500,
+    got2 = extract_documents_split(df2, skew_threshold=500,
                                    spans_per_chunk=200).collect()
     assert sorted(r.doc_id for r in got2) == ["fewpages-00000",
                                               "fewpages-notoc"]
     want2 = {r.doc_id: full(r)
-             for r in extract_documents(df2, None, cfg).collect()}
+             for r in extract_documents(df2).collect()}
     for r in got2:
         assert full(r) == want2[r.doc_id], r.doc_id
-    assert want2["fewpages-notoc"][1] == []
 
 
 def test_skew_big_doc_with_decode_error_is_quarantined(spark):
@@ -395,19 +288,18 @@ def test_skew_big_doc_with_decode_error_is_quarantined(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    out = extract_spans_split(df, None, skew_threshold=500,
+    out = extract_spans_split(df, skew_threshold=500,
                               spans_per_chunk=200).collect()
     assert len(out) == 1
     assert out[0].doc_id == b.doc_id
     assert list(out[0].spans) == []
-    seq = extract_documents(df, None).collect()[0]
+    seq = extract_documents(df).collect()[0]
     assert seq.status == "quarantined" and list(seq.spans) == []
 
 
-def test_relational_spans_equal_fold_default_config(spark, documents_in,
-                                                    spans_geom):
+def test_relational_spans_equal_fold_default_config(spark, documents_in):
     """The pure-SQL fast path must equal the mapInPandas fold span-for-
-    span under the default quirk config (labels are text-local there),
+    span (labels are text-local under the reference quirks),
     including on adversarially padded text (tabs/newlines around page
     numbers and headings — Python strip() vs Spark trim territory)."""
     from pdfspark.operators.extract import extract_spans_relational
@@ -432,7 +324,7 @@ def test_relational_spans_equal_fold_default_config(spark, documents_in,
     )
     docs = documents_in.unionByName(pad_doc)
 
-    fold_out = extract_documents(docs, spans_geom).filter(
+    fold_out = extract_documents(docs).filter(
         "status = 'ok'"
     ).select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id", "s.offset", "s.kind", "s.text", "s.media_ref"
@@ -467,21 +359,18 @@ def _unicode_doc_spans():
 
 
 def test_fold_matches_oracle_on_unicode_doc():
-    """fold.py vs the independent transliteration on the unicode doc,
-    across quirk configs (pure-Python both sides — the ground truth)."""
-    from pdfspark.oracle import oracle_extract
-
+    """fold.py vs the independent transliteration on the unicode doc
+    (pure-Python both sides — the ground truth)."""
     spans = _unicode_doc_spans()
-    for cfg in CONFIGS:
-        got = fold_document(list(spans), "", "", cfg)
-        want = oracle_extract(list(spans), "", "", cfg)
-        assert got["out_spans"] == want["out_spans"], cfg
-        assert got["sections"] == want["sections"], cfg
+    got = fold_document(list(spans))
+    want = oracle_extract(list(spans), "", "")
+    assert got["out_spans"] == want["out_spans"]
+    assert got["sections"] == want["sections"]
 
 
 def test_relational_spans_equal_fold_on_unicode_doc(spark):
     """The (?U)-aligned SQL fast path must agree with the Python-re
-    fold on non-ASCII text too (default config)."""
+    fold on non-ASCII text too."""
     from pdfspark.operators.extract import extract_spans_relational
 
     spans = _unicode_doc_spans()
@@ -490,7 +379,7 @@ def test_relational_spans_equal_fold_on_unicode_doc(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    want = fold_document(spans, "", "", ExtractConfig())["out_spans"]
+    want = fold_document(spans)["out_spans"]
     got = [
         dict(kind=r.kind, text=r.text, media_ref=r.media_ref,
              offset=r.offset)
@@ -499,19 +388,16 @@ def test_relational_spans_equal_fold_on_unicode_doc(spark):
     assert got == want
 
 
-@pytest.mark.parametrize("cfg", [ExtractConfig(), ExtractConfig(start_page=3)],
-                         ids=["default", "sp3"])
-def test_full_split_extraction_equals_sequential(spark, documents_in,
-                                                 spans_geom, cfg):
+def test_full_split_extraction_equals_sequential(spark, documents_in):
     """extract_documents_split (chunk-parallel classification, span
     reassembly + segment-parallel sections replay) must equal
     extract_documents on status, spans, the order-stateful sections
     side-output AND the input-derived lineage counts."""
     from pdfspark.operators.extract import extract_documents_split
 
-    split = extract_documents_split(documents_in, spans_geom, cfg,
-                                    skew_threshold=500, spans_per_chunk=200)
-    seq = extract_documents(documents_in, spans_geom, cfg)
+    split = extract_documents_split(documents_in, skew_threshold=500,
+                                    spans_per_chunk=200)
+    seq = extract_documents(documents_in)
     ks = {r.doc_id: (r.status, [t.asDict() for t in r.spans],
                      [t.asDict() for t in r.sections],
                      (r.spans_in, r.spans_out, r.bytes_in))
@@ -530,24 +416,20 @@ def test_full_split_extraction_equals_sequential(spark, documents_in,
     assert ks["skew-00000"][2] == ku["skew-00000"][2]
 
 
-@pytest.mark.parametrize("cfg", [ExtractConfig(), ExtractConfig(start_page=3)],
-                         ids=["default", "sp3"])
-def test_exploded_rows_split_equals_sequential(spark, documents_in,
-                                               spans_geom, cfg):
+def test_exploded_rows_split_equals_sequential(spark, documents_in):
     """extract_spans_split_rows (no nested-array reassembly; offsets
     from chunk-size prefix sums) must equal the sequential fold span-
     for-span on the fixture, skew path forced."""
     from pdfspark.operators.extract import extract_spans_split_rows
 
-    collected = extract_spans_split_rows(documents_in, spans_geom, cfg,
-                                         skew_threshold=500,
+    collected = extract_spans_split_rows(documents_in, skew_threshold=500,
                                          spans_per_chunk=200).collect()
     got = {}
     for r in collected:
         got.setdefault(r.doc_id, {})[r.offset] = (r.kind, r.text, r.media_ref)
     # no duplicate (doc_id, offset) rows hiding behind the dict
     assert len(collected) == sum(len(v) for v in got.values())
-    seq = extract_documents(documents_in, spans_geom, cfg)
+    seq = extract_documents(documents_in)
     want = {}
     for r in seq.collect():
         want[r.doc_id] = {s.offset: (s.kind, s.text, s.media_ref)
@@ -558,21 +440,16 @@ def test_exploded_rows_split_equals_sequential(spark, documents_in,
     assert "skew-00000" in got  # the chunked branch ran
 
 
-@pytest.mark.parametrize("cfg", [ExtractConfig(), ExtractConfig(start_page=3)],
-                         ids=["default", "sp3"])
-def test_sections_split_rows_equals_sequential(spark, documents_in,
-                                               spans_geom, cfg):
+def test_sections_split_rows_equals_sequential(spark, documents_in):
     """extract_sections_split (chunk-row applyInPandas replay, no
     doc-sized arrays) must equal the sequential fold's sections."""
     from pdfspark.operators.extract import extract_sections_split
 
     got = {r.doc_id: (r.status, [t.asDict() for t in r.sections])
-           for r in extract_sections_split(documents_in, spans_geom, cfg,
-                                           skew_threshold=500,
+           for r in extract_sections_split(documents_in, skew_threshold=500,
                                            spans_per_chunk=200).collect()}
     want = {r.doc_id: (r.status, [t.asDict() for t in r.sections])
-            for r in extract_documents(documents_in, spans_geom,
-                                       cfg).collect()}
+            for r in extract_documents(documents_in).collect()}
     assert got == want
 
 
@@ -601,11 +478,10 @@ def test_split_path_null_spans_and_null_toc_text_parity(spark):
         f"doc_id string, spans {span_t}")
 
     seq = {r.doc_id: (r.status, [t.asDict() for t in r.spans])
-           for r in extract_documents(docs, None).collect()}
+           for r in extract_documents(docs).collect()}
     spl = {r.doc_id: (r.status, [t.asDict() for t in r.spans])
            for r in extract_documents_split(
-               docs, None, skew_threshold=10,
-               spans_per_chunk=8).collect()}
+               docs, skew_threshold=10, spans_per_chunk=8).collect()}
     assert set(spl) == set(seq) == {"nullspans", "tocnull", "plain"}
     for d in seq:
         assert spl[d] == seq[d], d
@@ -616,11 +492,10 @@ def test_skew_route_equality_out_of_order_spans_array(spark):
     """A spans array stored OUT of offset order (upstream reassembly)
     must fold identically on the sequential and skew routes: both now
     order by the span's own offset field (fold.py:182), with array
-    position as the stable tiebreak — the skew path used to chunk and
-    cut by raw array position."""
+    position as the stable tiebreak — the skew path used to chunk by
+    raw array position."""
     import random
 
-    from pdfspark.config import ExtractConfig
     from pdfspark.operators.extract import (
         extract_documents,
         extract_spans_split,
@@ -643,16 +518,8 @@ def test_skew_route_equality_out_of_order_spans_array(spark):
         "doc_id string, spans array<struct<kind string, text string, "
         "media_ref string, offset int>>",
     )
-    cfg = ExtractConfig()
-    seq = extract_documents(df, None, cfg, spans_only=True).collect()
-    par = extract_spans_split(df, None, cfg, skew_threshold=4096).collect()
+    seq = extract_documents(df, spans_only=True).collect()
+    par = extract_spans_split(df, skew_threshold=4096).collect()
     assert len(seq) == len(par) == 1
     assert [t.asDict() for t in seq[0].spans] == \
            [t.asDict() for t in par[0].spans]
-    # start_page front-matter cutoff must follow offset order too
-    cfg2 = ExtractConfig(start_page=1)
-    seq2 = extract_documents(df, None, cfg2, spans_only=True).collect()
-    par2 = extract_spans_split(df, None, cfg2,
-                               skew_threshold=4096).collect()
-    assert [t.asDict() for t in seq2[0].spans] == \
-           [t.asDict() for t in par2[0].spans]

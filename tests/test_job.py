@@ -154,9 +154,8 @@ def test_job_big_doc_folds_with_lineage(spark, job_paths, tmp_path):
     rows = _read_out(spark, out).select(*cols).collect()
     got = {r.doc_id: r for r in rows}
     assert len(rows) == len(got) == n_docs
-    want = extract_documents(
-        spark.read.parquet(inp), spark.read.parquet(job_paths["geom"]),
-    ).filter(f"doc_id = '{b.doc_id}'").select(*cols).first()
+    want = extract_documents(spark.read.parquet(inp)).filter(
+        f"doc_id = '{b.doc_id}'").select(*cols).first()
     assert got[b.doc_id] == want
     assert len(want.spans) > 0
 
@@ -205,14 +204,13 @@ def test_job_routes_call_wrapped_names(spark, job_paths, fixture_dir,
         assert calls == [want], mode
 
 
-def test_job_geom_builds_no_header_footer_under_default_config(
-        spark, job_paths, tmp_path, monkeypatch):
-    """The job's config (the reference quirk, broken_hf_strip) never
-    reads header/footer strings, so --input --geom must not build the
-    header/footer frame, and it commits the same rows as a run without
-    --geom. A missing --geom path still fails."""
-    from pyspark.errors import AnalysisException
-
+def test_job_geom_is_not_read(spark, job_paths, tmp_path, monkeypatch):
+    """--geom is accepted with --input and not read: the fold's
+    dict-membership header/footer strip needs no per-doc strings. An
+    --input --metrics call with --geom commits the same rows as one
+    without, builds no header/footer frame and runs the same number of
+    Spark jobs, at most 7 (reading the geometry parquet's schema
+    costs one more)."""
     import pdfspark.operators.boilerplate as BP
 
     calls = []
@@ -223,23 +221,26 @@ def test_job_geom_builds_no_header_footer_under_default_config(
         return real(*a, **kw)
 
     monkeypatch.setattr(BP, "header_footer", counting)
+    sc = spark.sparkContext
     cols = ("doc_id", "status", "spans", "sections")
-    rows = {}
+    rows, n_jobs = {}, {}
     for name, geom in (("geom", ["--geom", job_paths["geom"]]),
                        ("nogeom", [])):
         out = str(tmp_path / name)
-        assert main(["--input", job_paths["input"], *geom,
-                     "--output", out]) == 0
+        group = f"{tmp_path.name}-{name}"
+        sc.setJobGroup(group, f"extract_job --input {name}")
+        try:
+            assert main(["--input", job_paths["input"], *geom,
+                         "--output", out,
+                         "--metrics", str(tmp_path / f"{name}_met")]) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         rows[name] = sorted(_read_out(spark, out).select(*cols).collect())
     assert calls == []
     assert rows["geom"] == rows["nogeom"]
     assert len(rows["geom"]) == spark.read.parquet(job_paths["input"]).count()
-
-    with pytest.raises(AnalysisException):
-        main(["--input", job_paths["input"],
-              "--geom", str(tmp_path / "no_such_geom"),
-              "--output", str(tmp_path / "missing")])
-    assert not committed_snapshots(str(tmp_path / "missing"))
+    assert n_jobs["geom"] == n_jobs["nogeom"] <= 7, n_jobs
 
 
 def test_job_crash_between_data_and_metrics_manifest_heals(
@@ -437,7 +438,6 @@ def test_job_payloads_bytes_in_extraction_out(spark, tmp_path):
     import collections
     import os as _os
 
-    from pdfspark.config import ExtractConfig
     from pdfspark.fold import fold_document
     from pdfspark.sources.pdf_mini import (
         build_layout_pdf,
@@ -470,13 +470,12 @@ def test_job_payloads_bytes_in_extraction_out(spark, tmp_path):
     assert len(rows) == len(got) == len(payloads) + 1
     assert [r.status for r in rows if r.doc_id == "broken"] == [
         "quarantined"]
-    cfg = ExtractConfig()
     for doc_id, raw in payloads.items():
         spans = decode_tiny_pdf(raw)["spans"]
         res = fold_document(
             [dict(kind=s["kind"], text=s["text"],
                   media_ref=s["media_ref"], offset=s["offset"])
-             for s in spans], "", "", cfg)
+             for s in spans])
         assert got[doc_id] == [
             (s["kind"], s["text"], s["media_ref"], s["offset"])
             for s in res["out_spans"]], doc_id
@@ -524,7 +523,6 @@ def test_extract_payloads_matches_the_kernels(spark, tmp_path):
     import json
     import os as _os
 
-    from pdfspark.config import ExtractConfig
     from pdfspark.fold import fold_document
     from pdfspark.operators.extract import lineage_table
     from pdfspark.sources.binary_decode import (
@@ -560,12 +558,11 @@ def test_extract_payloads_matches_the_kernels(spark, tmp_path):
     full = extract_payloads(read_payloads(spark, pdir))
     rows = {r.doc_id: r for r in full.collect()}
     assert len(rows) == len(payloads) + 1
-    cfg = ExtractConfig()
     for doc_id, raw in payloads.items():
         res = fold_document(
             [dict(kind=s["kind"], text=s["text"],
                   media_ref=s["media_ref"], offset=s["offset"])
-             for s in _decode_payload(raw)["spans"]], "", "", cfg)
+             for s in _decode_payload(raw)["spans"]])
         r = rows[doc_id]
         assert r.status == res["status"], doc_id
         assert [s.asDict() for s in r.spans] == res["out_spans"], doc_id

@@ -15,7 +15,13 @@ own definition. A function only tests call is a second implementation
 or an unused capability; it is deleted, unless it is a reference that a
 test compares a production kernel against (``REFERENCES``).
 
-Both scans match by name, so a same-named use anywhere counts: they
+Config fields: every field with a default of a dataclass in
+``pdfspark/`` and ``jobs/`` must be set by product code, either by a
+constructor call of the class (by keyword or position) or by an
+assignment to the attribute. A field only tests set is a tunable no
+product path turns, the dataclass form of an unpassed default.
+
+All scans match by name, so a same-named use anywhere counts: they
 can miss dead code, never flag live code.
 """
 
@@ -192,3 +198,56 @@ def test_every_function_has_a_non_test_caller():
 def test_references_are_current():
     stale = set(REFERENCES) - set(uncalled_products())
     assert not stale, f"drop from REFERENCES (now used or gone): {stale}"
+
+
+def _is_dataclass(decorator):
+    d = decorator.func if isinstance(decorator, ast.Call) else decorator
+    return (isinstance(d, ast.Name) and d.id == "dataclass"
+            or isinstance(d, ast.Attribute) and d.attr == "dataclass")
+
+
+def defaulted_fields():
+    """(file, class, field, positional index) of every dataclass field
+    with a default."""
+    out = []
+    for rel in DEFINED_IN:
+        for path in _py_files(rel):
+            key = os.path.relpath(path, ROOT)
+            for node in _parse(path).body:
+                if not (isinstance(node, ast.ClassDef)
+                        and any(map(_is_dataclass, node.decorator_list))):
+                    continue
+                fields = [f for f in node.body
+                          if isinstance(f, ast.AnnAssign)
+                          and isinstance(f.target, ast.Name)]
+                out += [(key, node.name, f.target.id, i)
+                        for i, f in enumerate(fields) if f.value is not None]
+    return out
+
+
+def unset_fields():
+    calls, assigned = {}, set()
+    for rel in PRODUCT:
+        for path in _py_files(rel):
+            for node in ast.walk(_parse(path)):
+                if (isinstance(node, ast.Attribute)
+                        and isinstance(node.ctx, ast.Store)):
+                    assigned.add(node.attr)
+                elif isinstance(node, ast.Call):
+                    f = node.func
+                    name = (f.id if isinstance(f, ast.Name)
+                            else f.attr if isinstance(f, ast.Attribute)
+                            else None)
+                    calls.setdefault(name, []).append(node)
+    return sorted(
+        (f, cls, fld) for f, cls, fld, i in defaulted_fields()
+        if fld not in assigned
+        and not any(_passes(c, fld, i) for c in calls.get(cls, ())))
+
+
+def test_every_dataclass_default_is_set_somewhere():
+    found = unset_fields()
+    assert not found, (
+        f"{len(found)} dataclass fields no product code sets; make each "
+        f"a module constant and drop the branches only it reaches: "
+        f"{found}")

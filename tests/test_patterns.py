@@ -80,7 +80,7 @@ CORPUS = [
     "1. Heading (with parens) - dash, comma",
     # X18 named terms with adjacent punctuation: spaCy splits the
     # punctuation into its own token, so the intended-semantics matcher
-    # fires — matcher_fires and JAVA_MATCHER_PREFIX must agree here
+    # fires — RE_MATCHER_PREFIX and JAVA_MATCHER_PREFIX must agree here
     "References:",
     "Summary,",
     "Executive  Summary — FY24",
@@ -194,21 +194,12 @@ def test_table_label_parity(corpus_results):
 
 
 def test_named_matcher_prefix_parity(corpus_results):
-    """JAVA_MATCHER_PREFIX (the SQL twin of the intended-semantics matcher,
-    X18 always=False) must agree with the tokenized prefix test."""
+    """JAVA_MATCHER_PREFIX (classify's ``is_named`` column, the
+    intended-semantics reading of the X18 matcher) must agree with its
+    Python twin RE_MATCHER_PREFIX. Both anchor at the start of the
+    input only, so multi-line strings compare whole."""
     for r in corpus_results:
-        py = P.matcher_fires(r.s.split("\n")[0] if r.s else r.s, always=False)
-        # the regex runs on the raw line; matcher_fires tokenizes the
-        # first line — compare on the first line for multi-line input
-        first = r.s.split("\n")[0] if r.s else r.s
-        rx = re.compile(
-            r"^(executive\s+summary|foreword|introduction|summary|"
-            r"bibliography|references)\b",
-            re.IGNORECASE,
-        )
-        assert _py_bool(rx, first) == py or first != r.s, r.s
-        if first == r.s:
-            assert r.named == py, r.s
+        assert r.named == _py_bool(P.RE_MATCHER_PREFIX, r.s, "match"), r.s
 
 
 def test_j1_oracle_trailing_strip_matches_python_W_underscore():

@@ -935,8 +935,10 @@ def test_classify_fold_parity_edges(spark):
     the (unanchored) figure pattern is a heading, as in the reference's
     if/elif ladder; (2) Python-strip semantics — a leading newline/tab
     must not blank first_line; (3) NULL text — coerced to '' and kept,
-    exactly like fold_document, not silently dropped."""
+    exactly like fold_document, not silently dropped. The geometry
+    frame is empty: no doc has a header or footer string."""
     from pdfspark.operators.classify import classify_spans, strip_boilerplate
+    from pdfspark.schema import SPANS_GEOM
 
     rows = [
         ("d1", "TextBox", "2.3 Results, see Fig. 7\nbody", None, 0),
@@ -947,7 +949,7 @@ def test_classify_fold_parity_edges(spark):
         rows, "doc_id string, kind string, text string, "
               "media_ref string, offset int")
 
-    kept = strip_boilerplate(spans)
+    kept = strip_boilerplate(spans, spark.createDataFrame([], SPANS_GEOM))
     assert kept.count() == 3  # NULL-text row not dropped
 
     c = {r.offset: r for r in classify_spans(kept).collect()}
@@ -1144,7 +1146,6 @@ def test_toc_skeleton_python_strip_semantics(spark):
     clean_toc_line (str.strip()), not F.trim's spaces-only — a TOC
     line with a real trailing newline or tab must match the
     SectionState skeleton heading byte-for-byte."""
-    from pdfspark.config import ExtractConfig
     from pdfspark.fold import clean_toc_line
     from pdfspark.operators.classify import toc_skeleton
 
@@ -1155,8 +1156,7 @@ def test_toc_skeleton_python_strip_semantics(spark):
               "media_ref string, offset int")
     got = [r.heading for r in
            toc_skeleton(spans).orderBy("line_no").collect()]
-    cfg = ExtractConfig()
-    want = [clean_toc_line(t, cfg.patterns_to_strip) for t in texts]
+    want = [clean_toc_line(t) for t in texts]
     assert got == want == ["Overview", "Scope", "Results", "Plain"]
 
 
@@ -1195,9 +1195,8 @@ def test_current_section_rewrite_is_toc_conditional(spark):
 
     # fold agreement on the same document: SectionState keeps the raw
     # first line for the unmatched heading too
-    from pdfspark.config import ExtractConfig
     from pdfspark.fold import SectionState
-    state = SectionState(["Methods"], ExtractConfig())
+    state = SectionState(["Methods"])
     h1 = state.apply("heading", "3.2 Methods\nbody a", "3.2 Methods", 2, "")
     h2 = state.apply("heading", "4.1 Unlisted topic\nbody b",
                      "4.1 Unlisted topic", 2, h1)

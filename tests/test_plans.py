@@ -153,9 +153,9 @@ def test_filter_pushdown_reaches_scans(plans):
     assert not bad, f"pushdown missing at the scan: {bad}"
 
 
-# Span-fold queries under the default config (broken_hf_strip): the
-# fold never reads the header/footer strings, so its plan must not scan
-# the geometry table that header_footer() aggregates.
+# Span-fold queries: the fold's dict-membership strip never reads
+# header/footer strings, so its plan must not scan the geometry table
+# that header_footer() aggregates.
 NO_GEOM_SCAN = {"ep1_extract_spans", "ep1_extract_sections",
                 "lineage_metrics"}
 

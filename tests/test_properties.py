@@ -7,7 +7,6 @@ import re
 from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
-from pdfspark.config import ExtractConfig
 from pdfspark.fold import fold_document
 from pdfspark.functions.patterns import RE_TRAILING_PUNCT, find_section_by_heading
 
@@ -72,11 +71,10 @@ def test_fold_invariant_under_storage_shuffle(spans, rnd):
     of the same (offset-stamped) spans yields identical output."""
     for i, s in enumerate(spans):
         s["offset"] = i
-    cfg = ExtractConfig()
-    base = fold_document([dict(s) for s in spans], "hdr", "ftr", cfg)
+    base = fold_document([dict(s) for s in spans])
     shuffled = list(spans)
     rnd.shuffle(shuffled)
-    again = fold_document([dict(s) for s in shuffled], "hdr", "ftr", cfg)
+    again = fold_document([dict(s) for s in shuffled])
     assert base["out_spans"] == again["out_spans"]
     assert base["sections"] == again["sections"]
     assert base["status"] == again["status"]
@@ -87,7 +85,7 @@ def test_fold_invariant_under_storage_shuffle(spans, rnd):
 def test_fold_offsets_dense_and_monotone(spans):
     for i, s in enumerate(spans):
         s["offset"] = i
-    res = fold_document(spans, "", "", ExtractConfig())
+    res = fold_document(spans)
     offs = [s["offset"] for s in res["out_spans"]]
     assert offs == list(range(len(offs)))
 

@@ -99,7 +99,6 @@ def test_extract_payload_stream_matches_batch_and_resumes(spark, fixture_dir,
     processes ONLY newly arrived files (exactly-once per file)."""
     import shutil
 
-    from pdfspark.config import ExtractConfig
     from pdfspark.fold import fold_document
     from pdfspark.sinks.snapshot import committed_snapshots, read_committed
     from pdfspark.sources.binary_decode import (
@@ -129,7 +128,7 @@ def test_extract_payload_stream_matches_batch_and_resumes(spark, fixture_dir,
     for b in batch:
         spans = [t.asDict() for t in b.spans]
         if b.status == "ok":
-            want = fold_document(spans, "", "", ExtractConfig())
+            want = fold_document(spans)
             assert got1[b.doc_id] == (want["status"], want["out_spans"]), b.doc_id
         else:
             assert got1[b.doc_id][0] == "quarantined"
