@@ -387,7 +387,8 @@ def _q_extract_spans(spark, sf_dir):
 
 def _q_extract_spans_sql(spark, sf_dir):
     """Flagship fast path: the same span extraction as ep1_extract_spans
-    (default quirk config) as pure SQL — no Python worker at all."""
+    (the fold's one semantics, the reference's quirks) as pure SQL — no
+    Python worker at all."""
     from pdfspark.operators.extract import extract_spans_relational
 
     return extract_spans_relational(_docs_in(spark, sf_dir))
@@ -395,8 +396,9 @@ def _q_extract_spans_sql(spark, sf_dir):
 
 def _q_extract_sections(spark, sf_dir):
     """Sections side output of the exact fold, via the SKEW-SAFE
-    sections-only path (chunk-parallel classification + chunk-row
-    event replay; this query never reads spans, so the nested
+    sections-only path (chunk-parallel classification, then one
+    ordered replay of the heading/paragraph/wipe events with no span
+    text in it; this query never reads spans, so the nested
     (spans, sections) row is never built) — oracle = materialized
     output of the independent reference transliteration; parity is
     additionally pytest-gated (tests/test_extract_parity). As in

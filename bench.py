@@ -81,12 +81,6 @@ def _sf_value(sf_dir: str) -> float:
         return 0.1
 
 
-def _flagship(spark, sf_dir: str):
-    """The end-to-end extraction job the north rule describes: spans in,
-    extracted span sequences + sections out (skew splitter engaged)."""
-    return E.queries()["ep1_extract_spans"](spark, sf_dir)
-
-
 # Replication factor for the scaling pair: the sf0.1 fold finishes in
 # ~6 s on 32 cores, so fixed overhead (scheduler, Python worker spin-up)
 # would dominate an N-vs-4N comparison. Replicating the input K times

@@ -7,7 +7,9 @@ list, quirks included:
 
 * matcher-always-fires: the spaCy matcher built from all-optional
   token patterns (src/matcher_patterns.py:56-65) matches any non-blank
-  first line, so the appendix/figure/else branches are mostly dead.
+  first line, so a TextBox is a heading exactly when its stripped
+  text is non-empty and a paragraph otherwise; the appendix and
+  figure-caption branches cannot fire.
 * broken main-path header/footer strip: process_element tests
   ``text in header_footer_text`` where header_footer_text is the
   *dict* ``{"header": ..., "footer": ...}`` (src/pdf_extractor.py:363
@@ -31,13 +33,12 @@ These quirks are the fold's only semantics: the reference's intended
 readings (a substring header/footer strip, a matcher that must match
 a named term, a front-matter page skip) have no implementation here.
 
-Output span kinds: 'heading' | 'appendix' | 'figure_caption' |
-'paragraph' for surviving TextBoxes (by branch taken), 'media' for
-Figure/Image inputs (media_ref preserved), original kind for the
-geometry elements the reference keeps as page elements (TextLine,
-Line, Rectangle). Kinds the reference merely logs (Image handled as
-media here per the north rule; VerticalText, TextGroup, Container,
-TextGroupTBRL, Curve) emit nothing.
+Output span kinds: 'heading' | 'paragraph' for surviving TextBoxes,
+'media' for Figure/Image inputs (media_ref preserved), original kind
+for the geometry elements the reference keeps as page elements
+(TextLine, Line, Rectangle). Kinds the reference merely logs (Image
+handled as media here per the north rule; VerticalText, TextGroup,
+Container, TextGroupTBRL, Curve) emit nothing.
 """
 
 from __future__ import annotations
@@ -67,10 +68,10 @@ class SectionState:
     """The order-stateful half of the fold: the TOC-skeleton sections
     list, the memoized first-match-wins heading lookup (cache cleared
     on every in-place rewrite; re.error results cached too — the
-    reference raises deterministically per heading), and the per-label
-    attachment transitions of element_processors.py:114-179. Shared by
-    fold_document and replay_boundaries so the chunked skew path cannot
-    drift from the sequential fold.
+    reference raises deterministically per heading), and the two
+    attachment transitions of element_processors.py:114-179, heading
+    and paragraph. Shared by fold_document and replay_events so the
+    chunked skew path cannot drift from the sequential fold.
 
     Memoization note: between heading rewrites the headings list is
     immutable, so a given heading string always resolves to the same
@@ -104,53 +105,51 @@ class SectionState:
             self._cache[h] = idx
         return idx
 
-    def lookup(self, h):
-        idx = self.lookup_index(h)
-        return None if idx is None else self.sections[idx]
+    def heading(self, first_line, line_count, g1, g2):
+        """The heading transition over the RE_SECTION_GROUPS groups of
+        ``first_line`` (g2 is None when it does not match): a numbered
+        heading that finds its TOC section rewrites that section's
+        heading in place. Returns (new current_header, index of the
+        section the box's content appends to, or None). May raise
+        re.error before any state changes — the CALLER keeps the old
+        current_header, reproducing the reference's swallowed-exception
+        rollback."""
+        new_header = first_line
+        if g2 is None:
+            idx = self.lookup_index(first_line)
+        else:
+            idx = self.lookup_index(g2.strip())
+            if idx is not None:
+                new_header = f"{g1.strip()} {g2.strip()}"
+                sec = self.sections[idx]
+                if sec["heading"] != new_header:
+                    sec["heading"] = new_header
+                    self._cache.clear()  # headings changed
+        return new_header, (idx if line_count > 1 else None)
+
+    def paragraph(self, current_header):
+        """The paragraph transition: index of the section an empty box
+        appends to (never under a '' or wiped header), or None; the
+        header is unchanged. May raise re.error."""
+        if not current_header:
+            return None
+        return self.lookup_index(current_header)
 
     def apply(self, label, content, first_line, line_count,
               current_header):
-        """State update for one classified TextBox (may raise re.error
-        — the CALLER keeps the old current_header, reproducing the
-        reference's swallowed-exception rollback). Returns the new
-        current_header."""
+        """State update for one classified TextBox: the transition of
+        ``label`` ('heading' or 'paragraph'), then the append of
+        ``content``. May raise re.error — the CALLER keeps the old
+        current_header. Returns the new current_header."""
         if label == "heading":
-            new_header = first_line
-            section_match = P.RE_SECTION_GROUPS.match(new_header)
-            current_section = None
-            if section_match is not None:
-                g2 = section_match.group(2)
-                if g2 is not None:
-                    current_section = self.lookup(g2.lstrip().rstrip())
-                    if current_section is not None:
-                        new_header = (
-                            f"{section_match.group(1).strip()} "
-                            f"{section_match.group(2).strip()}"
-                        )
-                        if current_section["heading"] != new_header:
-                            current_section["heading"] = new_header
-                            self._cache.clear()  # headings changed
-            else:
-                current_section = self.lookup(new_header)
-            if line_count > 1 and current_section is not None:
-                current_section["paragraphs"].append(content)
-            return new_header
-        if label == "appendix":
-            new_header = first_line.strip()
-            current_section = self.lookup(new_header)
-            if current_section is not None:
-                current_section["paragraphs"].append(content)
-            return new_header
-        if label == "figure_caption":
-            current_section = self.lookup(current_header)
-            if current_section is not None:
-                current_section["figures"].append(content)
-            return current_header  # no reassignment in the reference
-        # paragraph
-        if current_header != "":
-            current_section = self.lookup(current_header)
-            if current_section is not None:
-                current_section["paragraphs"].append(content)
+            m = P.RE_SECTION_GROUPS.match(first_line)
+            current_header, idx = self.heading(
+                first_line, line_count, *(m.groups() if m else (None, None))
+            )
+        else:
+            idx = self.paragraph(current_header)
+        if idx is not None:
+            self.sections[idx]["paragraphs"].append(content)
         return current_header
 
 
@@ -167,14 +166,14 @@ def fold_document(
     src/pdf_extractor.py:185,211-212 is_extractable guard).
 
     With ``collect_events=True`` the result also carries the ordered
-    classification event list — 'W' wipes, and 'H'/'A'/'F'/'P' rows
-    that reference their emitted span by OFFSET (the span already
-    carries the content; events stay metadata-sized) — which the
-    chunk-parallel skew path consumes: it runs THIS (regex-heavy) part
-    per chunk and replays only the boundary events sequentially
-    (replay_boundaries). ``skip_sections=True`` skips the
-    attachment state machine entirely (chunk folds discard their
-    chunk-local sections anyway; span labels never depend on it).
+    event list the sections state machine consumes: 'W' for a wipe,
+    'H' for a heading and 'P' for a paragraph, the last two with the
+    OFFSET of the span they emitted (the span already carries the
+    content; events stay metadata-sized). The chunk-parallel skew path
+    runs this per chunk and replays the events in document order
+    (replay_events). ``skip_sections=True`` skips the attachment
+    state machine entirely (chunk folds discard their chunk-local
+    sections anyway; span labels never depend on it).
     """
     spans = sorted(spans, key=lambda s: s["offset"])
     n_in = len(spans)
@@ -190,7 +189,6 @@ def fold_document(
     # would otherwise crash clean_toc_line's re.sub)
     toc_lines = [s["text"] or "" for s in spans if s["kind"] == "TOC"]
     state = SectionState(toc_lines)
-    sections = state.sections
 
     current_header: str | None = ""
     out: list[dict] = []
@@ -200,47 +198,30 @@ def fold_document(
         out.append(dict(kind=kind, text=text, media_ref=media_ref,
                         offset=len(out)))
 
-    EV = {"heading": "H", "appendix": "A", "figure_caption": "F",
-          "paragraph": "P"}
-
     for s in spans:
         kind = s["kind"]
         if kind in ("TOC", "PageStart"):
             continue
 
-        if kind in DROP_KINDS:
+        if kind == "TextBox":
+            content = (s["text"].lstrip().rstrip()
+                       if s["text"] is not None else "")
+            # F2 header/footer strip (the broken dict-membership test)
+            # and F3 page-number strip
+            wipe = (content.replace("\n", "") in ("header", "footer")
+                    or P.RE_PAGE_NUMBER.match(content))
+        else:
+            if kind in MEDIA_KINDS:
+                emit("media", "", s.get("media_ref"))
+            elif kind in GEOM_KINDS:
+                emit(kind, "", None)
+            elif kind not in DROP_KINDS:
+                # unsupported element type: ValueError swallowed by
+                # caller (src/pdf_extractor.py:207-208); state NOT updated
+                continue
+            wipe = True
+        if wipe:
             current_header = None  # processor returns None -> state wipe
-            if collect_events:
-                events.append(("W", -1))
-            continue
-        if kind in MEDIA_KINDS:
-            emit("media", "", s.get("media_ref"))
-            current_header = None
-            if collect_events:
-                events.append(("W", -1))
-            continue
-        if kind in GEOM_KINDS:
-            emit(kind, "", None)
-            current_header = None
-            if collect_events:
-                events.append(("W", -1))
-            continue
-        if kind != "TextBox":
-            # unsupported element type: ValueError swallowed by caller
-            # (src/pdf_extractor.py:207-208); state NOT updated.
-            continue
-
-        content = s["text"].lstrip().rstrip() if s["text"] is not None else ""
-
-        # F2 header/footer strip (the broken dict-membership test)
-        if content.replace("\n", "") in ("header", "footer"):
-            current_header = None
-            if collect_events:
-                events.append(("W", -1))
-            continue
-        # F3 page-number strip
-        if P.RE_PAGE_NUMBER.match(content):
-            current_header = None
             if collect_events:
                 events.append(("W", -1))
             continue
@@ -253,25 +234,19 @@ def fold_document(
             line_count = len(lines)
         first_line = P.RE_EXTRA_SPACE.sub(" ", first_line)
 
-        matches = P.matcher_fires(first_line)
-        found_sections = P.RE_SECTION.findall(first_line)
-
-        # pick the branch first (pure regex, cannot raise), then run
-        # its state updates under the reference's per-element
-        # try/except: on re.error the span is still emitted (the page
-        # element was added before classification,
-        # element_processors.py:76-79) but the state update rolls back.
-        if matches or found_sections != []:
-            label = "heading"
-        elif P.RE_APPENDIX.findall(first_line):
-            label = "appendix"
-        elif P.RE_FIGURE.findall(first_line):
-            label = "figure_caption"
-        else:
-            label = "paragraph"
+        # matcher-always-fires: any non-blank first line is a heading.
+        # A non-empty stripped text always has a non-blank first line,
+        # and RE_SECTION, RE_APPENDIX and RE_FIGURE each need a digit
+        # or a letter, so the appendix, figure and else branches
+        # cannot fire on a blank one: a box is a heading exactly when
+        # its content is non-empty, else a paragraph.
+        label = "heading" if content else "paragraph"
+        # the span is emitted before classification
+        # (element_processors.py:76-79), so a re.error in the state
+        # update below rolls back the state but keeps the span
         emit(label, content, None)
         if collect_events:
-            events.append((EV[label], len(out) - 1))
+            events.append(("H" if content else "P", len(out) - 1))
 
         if skip_sections:
             continue
@@ -285,101 +260,44 @@ def fold_document(
     return dict(
         status="ok",
         out_spans=out,
-        sections=sections,
+        sections=state.sections,
         spans_in=n_in,
         spans_out=len(out),
         events=events,
     )
 
 
-def replay_boundaries(bounds, toc_lines, needed_ords):
-    """The irreducibly-sequential core of the segment-parallel sections
-    replay, stripped to memoized pointer work.
+def replay_events(events, toc_lines):
+    """The sections state machine over one document's fold events in
+    document order, with no span text: the sequential core of the skew
+    route's sections (operators/extract.py::_big_doc_sections).
 
-    The attachment state machine's state is (current_header, skeleton).
-    Only H/A/W events touch it ('H'/'A' set current_header from their
-    own first line and may rewrite a skeleton heading; 'W' wipes it to
-    None); 'P'/'F' events are pure reads whose target section is
-    CONSTANT between consecutive boundaries — rewrites happen only at
-    H events, so the skeleton version is segment-fixed too. Under the
-    matcher-always-fires quirk nearly EVERY span is an H boundary, so
-    this pass must be cheap per event: all regex work (first_line
-    normalization, RE_SECTION_GROUPS match) arrives PRECOMPUTED from
-    the parallel chunk tasks, appends are recorded as (section, field,
-    pos) references — no content strings flow through here — and the
-    heading lookup is the same memoized SectionState cache the
-    sequential fold uses.
+    ``events``: tuples (code, first_line, line_count, g1, g2, pos). 'W'
+    (one per run of wipes) sets current_header to None; 'H' runs the
+    heading transition on its first line, line count and
+    RE_SECTION_GROUPS groups, all precomputed by the parallel chunk
+    tasks; 'P' appends to the current header's section. A lookup that
+    raises re.error rolls the event back, exactly like the fold.
 
-    ``bounds``: ordered tuples (code 'H'|'A', first_line, line_count,
-    sec_matched, g1, g2, wiped_before, pos). ``needed_ords``: the set
-    of segment ordinals that actually contain P/F events (k=0 is the
-    start-of-doc segment, where current_header is '' — paragraphs
-    never attach, figures go through lookup('') like the fold);
-    targets are computed only for those.
-
-    Returns (final_headings, targets, appends): targets[k] =
-    (target_paragraph_idx, target_figure_idx); appends from the
-    boundary events themselves. 'paragraph' attaches only when
-    current_header is neither None nor '' and the lookup succeeds;
-    'figure_caption' has no ''-guard; a lookup raising re.error
-    yields no append and rolls the header back — exactly the
-    reference's swallowed exception (state.apply semantics, mirrored
-    here over precomputed matches; equality with the sequential fold
-    is pinned by the forced-threshold split tests)."""
+    Returns (final headings, appends): appends are (section index,
+    pos) in document order. A 'P' append's content is '' by
+    construction; an 'H' append's is the text of the span at pos,
+    which the caller joins back in."""
     state = SectionState(toc_lines)
-    lookup_index = state.lookup_index
-    sections = state.sections
-    appends: list[tuple] = []
-
-    def seg_targets(hdr):
-        if hdr is None:
-            return (None, None)
-        try:
-            tf = lookup_index(hdr)
-        except re.error:
-            tf = None
-        return (None if hdr == "" else tf, tf)
-
     current_header: str | None = ""
-    targets = {}
-    if 0 in needed_ords:
-        targets[0] = seg_targets(current_header)
-    k = 0
-    for code, first_line, line_count, matched, g1, g2, wiped, pos in bounds:
-        k += 1
-        if wiped:
+    appends: list[tuple] = []
+    for code, first_line, line_count, g1, g2, pos in events:
+        if code == "W":
             current_header = None
-        # inlined SectionState.apply for 'heading'/'appendix' over the
-        # precomputed RE_SECTION_GROUPS result (apply itself re-runs
-        # the regex; branch logic identical)
+            continue
         try:
             if code == "H":
-                new_header = first_line
-                idx = None
-                if matched:
-                    if g2 is not None:
-                        idx = lookup_index(g2.lstrip().rstrip())
-                        if idx is not None:
-                            new_header = f"{g1.strip()} {g2.strip()}"
-                            sec = sections[idx]
-                            if sec["heading"] != new_header:
-                                sec["heading"] = new_header
-                                state._cache.clear()
-                else:
-                    idx = lookup_index(new_header)
-                if line_count > 1 and idx is not None:
-                    appends.append((idx, "p", pos))
-                current_header = new_header
-            else:  # 'A'
-                new_header = first_line.strip()
-                idx = lookup_index(new_header)
-                if idx is not None:
-                    appends.append((idx, "p", pos))
-                current_header = new_header
+                current_header, idx = state.heading(
+                    first_line, line_count, g1, g2)
+            else:
+                idx = state.paragraph(current_header)
         except re.error:
-            pass  # rollback, exactly like the fold
-        if k in needed_ords:
-            targets[k] = seg_targets(current_header)
-    headings = [s["heading"] for s in sections]
-    return headings, targets, appends
-
+            continue  # rollback, exactly like the fold
+        if idx is not None:
+            appends.append((idx, pos))
+    return [s["heading"] for s in state.sections], appends

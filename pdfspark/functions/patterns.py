@@ -36,8 +36,9 @@ TABLE_LABEL = r"^\bTable\s\d+\b"
 # X18 — matcher terms (src/matcher_patterns.py:81-91). With the
 # intended semantics these must prefix the first line, token-wise and
 # lowercase; with the reference's all-optional-token quirk, which the
-# fold reproduces (matcher_fires), the matcher fires on ANY non-empty
-# first line. The terms feed classify's ``is_named`` column only.
+# fold reproduces (every non-empty TextBox is a heading, see fold.py),
+# the matcher fires on ANY non-blank first line. The terms feed
+# classify's ``is_named`` column only.
 MATCHER_TERMS = (
     ("executive", "summary"),
     ("foreword",),
@@ -91,15 +92,6 @@ JAVA_CONTINUED_SEARCH = "(?iU)" + CONTINUED
 JAVA_CONTINUED_MATCH = "(?iU)^" + CONTINUED
 JAVA_PAGE_NUMBER_MATCH = "(?iU)^" + PAGE_NUMBER
 JAVA_TABLE_LABEL = "(?U)" + TABLE_LABEL
-
-
-def matcher_fires(first_line: str) -> bool:
-    """X18, the reference quirk: the spaCy Matcher built from
-    all-optional tokens (matcher_patterns.py:56-65) matches any
-    tokenizable (non-blank) first line. The named-term prefix reading
-    lives on only as classify's ``is_named`` column
-    (JAVA_MATCHER_PREFIX, with RE_MATCHER_PREFIX its Python twin)."""
-    return bool(first_line and first_line.strip())
 
 
 # fast path applies when the cleaned heading is pure literal text that

@@ -249,9 +249,10 @@ def sections_assembled(classified_with_section: DataFrame) -> DataFrame:
     # reached only when neither the matcher nor a numbered section
     # fired, and it appends the box content as a paragraph with NO
     # line_count gate — unlike the heading branch's `if line_count > 1`
-    # (:135-140). The fold mirrors this (SectionState.apply label
-    # 'appendix' appends unconditionally), so a single-line appendix
-    # box must NOT collapse to heading_only here.
+    # (:135-140). The reference transliteration mirrors this
+    # (oracle.py), so a single-line appendix box must NOT collapse to
+    # heading_only here. The extraction fold never reaches the branch:
+    # its always-firing matcher takes every non-blank line as a heading.
     appendix_branch = (
         F.col("is_appendix") & ~F.col("is_section") & ~F.col("is_named")
     )

@@ -12,8 +12,9 @@ Skew routes (``*_split``, picked by the ``*_auto`` probes): docs above
 ``skew_threshold`` spans (default config.SKEW_SPAN_THRESHOLD) are
 chunk-folded in parallel and reassembled — safe because span labels
 depend only on each span's own text (see fold.py) — and their
-order-stateful sections are rebuilt by a segment-parallel replay. They
-give spans, span rows or sections only. ``extract_documents_split``
+order-stateful sections are rebuilt by one ordered replay of the chunk
+folds' events, into which no span text crosses. They give spans, span
+rows or sections only. ``extract_documents_split``
 gives the full extract_documents output but has no caller: extract_job
 folds every doc with ``extract_documents``, which beat it up to 1M
 spans.
@@ -222,7 +223,7 @@ def _fold_big_chunks(big: DataFrame, spans_per_chunk: int,
     never depend on it). Returns CHUNKED_SPANS, or CHUNKED_FULL with
     chunk-local classification events when ``collect_events``."""
     # pos = the span's OWN offset field (the sequential fold's sort
-    # key, fold.py:182), with the array position `_ap` as a stable
+    # key, fold.py:178), with the array position `_ap` as a stable
     # tiebreak: a spans array stored out of offset order (upstream
     # reassembly) must chunk/fold in the same order the sequential
     # fold uses, or the pinned route equality breaks. For every
@@ -331,9 +332,8 @@ def extract_spans_split(
     return small_out.unionByName(big_out).unionByName(big_bad)
 
 
-# metadata-sized: a code plus the CHUNK-LOCAL offset of the referenced
-# output span (-1 for wipes); the sections enrichment rebases offsets
-# per chunk
+# metadata-sized: a code ('H' heading, 'P' paragraph, 'W' wipe) plus
+# the CHUNK-LOCAL offset of the output span it emitted (-1 for wipes)
 EVENT = T.StructType(
     [
         T.StructField("code", T.StringType()),
@@ -350,40 +350,30 @@ CHUNKED_FULL = T.StructType(
     ]
 )
 
-# enriched event rows: 'E' = segment-governed P/F event, 'B' = H/A
-# boundary (with its regex work precomputed in the parallel chunk
-# task: normalized first line, line count, RE_SECTION_GROUPS result),
-# 'S' = per-chunk summary for the cross-chunk prefix scan
+# one row per H event (its text plus the regex work the replay needs,
+# done in the parallel chunk task: normalized first line, line count,
+# RE_SECTION_GROUPS groups), per P event (no string: a paragraph's
+# content is '' by construction) and per run of W events. ``pos`` is
+# the document-order stamp (chunk << 32) + event index.
 _ENRICHED = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
-        T.StructField("chunk", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("code", T.StringType()),
         T.StructField("pos", T.LongType()),
-        T.StructField("ord_local", T.IntegerType()),
-        T.StructField("gov_entry", T.BooleanType()),
-        T.StructField("wiped", T.BooleanType()),
+        T.StructField("code", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("first_line", T.StringType()),
         T.StructField("line_count", T.IntegerType()),
-        T.StructField("matched", T.BooleanType()),
         T.StructField("g1", T.StringType()),
         T.StructField("g2", T.StringType()),
-        T.StructField("n_ha", T.IntegerType()),
-        T.StructField("tail", T.StringType()),
     ]
 )
 
+# the skeleton (one row per section: heading, no pos) and the appends
+# (section_id + the pos of the appending event, no heading)
 _PHASEA_OUT = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
-        T.StructField("kind", T.StringType()),  # 'T' target / 'K' skeleton / 'P' append
-        T.StructField("ord", T.IntegerType()),
-        T.StructField("tp", T.IntegerType()),
-        T.StructField("tf", T.IntegerType()),
         T.StructField("section_id", T.IntegerType()),
-        T.StructField("field", T.StringType()),
         T.StructField("pos", T.LongType()),
         T.StructField("heading", T.StringType()),
     ]
@@ -391,63 +381,35 @@ _PHASEA_OUT = T.StructType(
 
 
 def _big_doc_sections(big: DataFrame, folded: DataFrame,
-                      spans_per_chunk: int, persisted: list) -> DataFrame:
+                      persisted: list) -> DataFrame:
     """Sections of the chunk-folded big docs (``folded`` from
-    _fold_big_chunks(collect_events=True)) by a SEGMENT-PARALLEL
-    replay: no task anywhere touches a whole pathological document.
-    The big-doc branch of extract_sections_split, shared with
+    _fold_big_chunks(collect_events=True)) by one ordered replay of
+    the fold's own event stream, into which no span text crosses. The
+    big-doc branch of extract_sections_split, shared with
     extract_documents_split.
 
-    The attachment state machine's state (current_header + skeleton)
-    changes only at H/A/W boundary events; between boundaries every
-    P/F event reads a CONSTANT target section (rewrites happen only at
-    H events, so the skeleton version is segment-constant too). That
-    factors the old per-doc sequential replay (47 s of one task
-    walking 1M events) into:
-
-    1. chunk folds (parallel, unchanged) emit classification events;
-    2. a chunk-local enrichment pass tags each P/F event with its
-       governing boundary (wipe-governed events are dropped inside the
-       chunk task — they can never append) and emits the tiny H/A
-       boundary rows with wipe flags + per-chunk summaries;
-    3. a prefix scan over per-chunk summaries (#chunks rows) resolves
-       cross-chunk boundary ordinals — same shape as the rows-path
-       offset rebase;
-    4. phase A: fold.replay_boundaries runs the O(#headings)
-       irreducibly-sequential core per doc (through the SAME
-       SectionState as the sequential fold) producing per-segment
-       target section indices, the final skeleton, and stamped
-       boundary appends;
-    5. phase B: every surviving P/F event joins its segment's target —
-       embarrassingly parallel — and the sections assemble with
-       ordinary sort/groupBy aggregation (append order = the event
-       stamp chunk*spans_per_chunk + chunk-local offset, strictly
-       increasing in document order).
+    1. chunk folds (parallel) emit the H/P/W events;
+    2. a chunk-local enrichment pass (parallel) turns them into
+       _ENRICHED rows stamped with their document-order position, with
+       each heading's regex work precomputed;
+    3. phase A: one groupBy(doc_id).applyInPandas sorts a doc's rows by
+       the stamp and runs fold.replay_events over them (through the
+       SAME SectionState as the sequential fold) from the TOC lines of
+       a seed row, giving the final skeleton and (section, pos)
+       appends;
+    4. a heading append gets its content by a join on pos (a paragraph
+       append's is ''), and the sections assemble with ordinary
+       sort/groupBy aggregation.
 
     Equality with the sequential fold is by construction (phase A IS
-    SectionState) and pinned by the forced-threshold tests. Amdahl
-    residue: O(#headings) per doc instead of O(#events).
+    SectionState) and pinned by the forced-threshold tests. The
+    sequential residue is O(#events) per doc of metadata-sized rows:
+    every heading, every paragraph and one row per run of wipes.
 
     Returns (doc_id, sections) for the big docs with a non-empty
     section skeleton; callers left-join it from ``big`` and coalesce
     the rest to empty sections. The frames it caches go to ``persisted``.
     """
-    toc = (
-        # per-doc TOC line texts (the skeleton), in the fold's (offset,
-        # array-pos) stable sort order (fold.py:182,194)
-        big.select("doc_id", F.posexplode("spans").alias("_ap", "s"))
-        .withColumn("pos", F.col("s.offset"))
-        .filter(F.col("s.kind") == "TOC")
-        .groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "_ap", "s"))),
-                # NULL-text TOC spans coerce to '' like the sequential
-                # fold (fold.py `s['text'] or ''`)
-                lambda x: F.coalesce(x["s"]["text"], F.lit("")),
-            ).alias("toc_lines")
-        )
-    )
 
     def enrich(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pdfspark.functions import patterns as PP
@@ -459,249 +421,122 @@ def _big_doc_sections(big: DataFrame, folded: DataFrame,
             rows = []  # tuple rows in _ENRICHED field order (dict-per-
             add = rows.append  # row costs ~3x at 1M events/batch)
             for r in pdf.itertuples(index=False):
-                doc, chunk = r.doc_id, r.chunk
+                doc, base = r.doc_id, int(r.chunk) << 32
                 texts = [s["text"] for s in r.spans]
-                base = int(chunk) * spans_per_chunk
-                local_ha, last, wiped_since = 0, None, False
-                for e in r.events:
-                    code, off = e["code"], e["off"]
-                    if code == "W":
-                        last, wiped_since = "W", True
-                    elif code == "H" or code == "A":
-                        local_ha += 1
-                        content = texts[off] or ""
-                        if content:
-                            lines = content.split("\n")
-                            first_line = sub_extra(" ", lines[0])
-                            line_count = len(lines)
-                        else:
-                            first_line, line_count = "", 0
-                        m = match_groups(first_line) if code == "H" else None
-                        add((doc, chunk, "B", code, base + off, local_ha,
-                             None, wiped_since, content, first_line,
-                             line_count, m is not None,
-                             m.group(1) if m else None,
-                             m.group(2) if m else None, None, None))
-                        last, wiped_since = "HA", False
-                    else:  # P / F — wipe-governed ones can never append
-                        if last == "W":
-                            continue
-                        add((doc, chunk, "E", code, base + off, local_ha,
-                             last is None, None, texts[off], None, None,
-                             None, None, None, None, None))
-                add((doc, chunk, "S", None, None, None, None, None, None,
-                     None, None, None, None, None, local_ha,
-                     "none" if last is None else last))
+                last = None
+                for i, e in enumerate(r.events):
+                    code = e["code"]
+                    if code == "H":
+                        content = texts[e["off"]]
+                        lines = content.split("\n")
+                        first_line = sub_extra(" ", lines[0])
+                        m = match_groups(first_line)
+                        g1, g2 = m.groups() if m else (None, None)
+                        add((doc, base + i, code, content, first_line,
+                             len(lines), g1, g2))
+                    elif code == "P" or last != "W":  # a W run: one row
+                        add((doc, base + i, code, None, None, None, None,
+                             None))
+                    last = code
             out = pd.DataFrame(rows, columns=cols)
-            # nullable dtypes: None-mixed int columns must not decay to
-            # float64/NaN (Arrow cannot cast non-finite to int)
-            out["pos"] = out["pos"].astype("Int64")
-            for c in ("ord_local", "n_ha", "line_count"):
-                out[c] = out[c].astype("Int32")
-            for c in ("gov_entry", "wiped", "matched"):
-                out[c] = out[c].astype("boolean")
+            # nullable dtype: None-mixed ints must not decay to float64
+            out["line_count"] = out["line_count"].astype("Int32")
             yield out
 
     enriched = folded.mapInPandas(enrich, _ENRICHED).persist()
 
-    # cross-chunk prefix (one row per chunk — model-sized window)
-    wc = Window.partitionBy("doc_id").orderBy("chunk")
-    pref = (
-        enriched.filter(F.col("kind") == "S")
-        .select("doc_id", "chunk", "n_ha", "tail")
-        .withColumn("entry_ha", F.sum("n_ha").over(wc) - F.col("n_ha"))
-        .withColumn(
-            "entry_tail",
-            F.coalesce(
-                F.last(
-                    F.when(F.col("tail") != "none", F.col("tail")),
-                    ignorenulls=True,
-                ).over(wc.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit("none"),
-            ),
-        )
-        .select("doc_id", "chunk", "entry_ha", "entry_tail")
-    )
-
-    events = (
-        enriched.filter(F.col("kind") == "E")
-        .join(pref, ["doc_id", "chunk"])
-        .filter(~(F.col("gov_entry") & (F.col("entry_tail") == "W")))
-        .select(
-            "doc_id", "code", "pos", "text",
-            # entry-governed rows have ord_local=0 and, with no prior
-            # boundary anywhere, entry_ha=0 — so one expression covers
-            # the start-of-doc (ord 0) and inherited-boundary cases
-            (F.col("entry_ha") + F.col("ord_local"))
-            .cast("int").alias("ord"),
-        )
-        .persist()
-    )
-    # phase A computes targets only for segments that actually contain
-    # events: under the always-fires quirk nearly every span is a
-    # boundary and segments are empty, so this keeps the sequential
-    # task's output (and the later join) proportional to real work
+    # seed row per big doc, carrying its TOC line texts (the skeleton)
+    # in the fold's (offset, array-pos) stable sort order
+    # (fold.py:178,190), so phase A runs even for docs with no events.
+    # Its pos is -1, not NULL: a NULL would turn the column to float64
+    # in pandas
     _null = lambda t, n: F.lit(None).cast(t).alias(n)  # noqa: E731
-    needed = events.select("doc_id", "ord").distinct().select(
-        "doc_id", "ord", F.lit("N").alias("rkind"),
-        _null("string", "code"), _null("long", "pos"),
-        _null("boolean", "wiped"), _null("string", "first_line"),
-        _null("int", "line_count"), _null("boolean", "matched"),
+    seeds = big.select(
+        "doc_id",
+        F.lit(-1).cast("long").alias("pos"), _null("string", "code"),
+        _null("string", "first_line"), _null("int", "line_count"),
         _null("string", "g1"), _null("string", "g2"),
-        F.lit(None).cast(T.ArrayType(T.StringType())).alias("toc_lines"),
+        F.transform(
+            F.array_sort(F.filter(
+                F.transform("spans", lambda s, i: F.struct(
+                    s["offset"].alias("pos"), i.alias("ap"),
+                    s["kind"].alias("kind"), s["text"].alias("text"))),
+                lambda x: x["kind"] == "TOC",
+            )),
+            # NULL-text TOC spans coerce to '' like the sequential
+            # fold (fold.py `s['text'] or ''`)
+            lambda x: F.coalesce(x["text"], F.lit("")),
+        ).alias("toc_lines"),
     )
-    # slim boundary rows into the sequential task: first_line + the
-    # precomputed section-match, never the full span text
-    bounds = (
-        enriched.filter(F.col("kind") == "B")
-        .join(pref, ["doc_id", "chunk"])
-        .select(
-            "doc_id",
-            (F.col("entry_ha") + F.col("ord_local")).cast("int").alias("ord"),
-            F.lit("B").alias("rkind"),
-            "code", "pos",
-            (F.col("wiped")
-             | ((F.col("ord_local") == 1)
-                & (F.col("entry_tail") == "W"))).alias("wiped"),
-            "first_line", "line_count", "matched", "g1", "g2",
-            F.lit(None).cast(T.ArrayType(T.StringType())).alias("toc_lines"),
-        )
-    )
-    # seed row per big doc (carries toc_lines) so phase A runs even for
-    # docs with zero boundaries — their segment-0 targets still matter
-    seeds = (
-        big.select("doc_id")
-        .join(toc, "doc_id", "left")
-        .select(
-            "doc_id", _null("int", "ord"), F.lit("SEED").alias("rkind"),
-            _null("string", "code"), _null("long", "pos"),
-            _null("boolean", "wiped"), _null("string", "first_line"),
-            _null("int", "line_count"), _null("boolean", "matched"),
-            _null("string", "g1"), _null("string", "g2"),
-            "toc_lines",
-        )
-    )
-    phase_a_in = bounds.unionByName(seeds).unionByName(needed)
+    phase_a_in = enriched.drop("text").withColumn(
+        "toc_lines", F.lit(None).cast(T.ArrayType(T.StringType()))
+    ).unionByName(seeds)
 
     def phase_a(pdf: pd.DataFrame) -> pd.DataFrame:
-        from pdfspark.fold import replay_boundaries
+        from pdfspark.fold import replay_events
 
         doc = pdf["doc_id"].iloc[0]
-        toc_lines: list = []
-        for tl in pdf.loc[pdf["rkind"] == "SEED", "toc_lines"]:
-            if tl is not None and len(tl):
-                toc_lines = list(tl)
-        needed_ords = {int(o) for o in pdf.loc[pdf["rkind"] == "N", "ord"]}
-        br = pdf[pdf["rkind"] == "B"].sort_values("ord")
+        is_seed = pdf["code"].isna()
+        toc_lines = list(pdf.loc[is_seed, "toc_lines"].iloc[0])
+        ev = pdf[~is_seed].sort_values("pos")
         # plain numpy views: iterating pandas nullable series directly
-        # costs microseconds per element at 1M boundaries
-        blist = zip(
-            br["code"].to_numpy(),
-            br["first_line"].to_numpy(),
-            br["line_count"].to_numpy(dtype="int64", na_value=0),
-            br["matched"].to_numpy(dtype=bool, na_value=False),
-            br["g1"].to_numpy(),
-            br["g2"].to_numpy(),
-            br["wiped"].to_numpy(dtype=bool, na_value=False),
-            br["pos"].to_numpy(dtype="int64", na_value=-1),
+        # costs microseconds per element at 1M events
+        headings, appends = replay_events(zip(
+            ev["code"].to_numpy(),
+            ev["first_line"].to_numpy(),
+            ev["line_count"].to_numpy(dtype="int64", na_value=0),
+            ev["g1"].to_numpy(),
+            ev["g2"].to_numpy(),
+            ev["pos"].to_numpy(dtype="int64"),
+        ), toc_lines)
+        res = pd.DataFrame(
+            [(doc, i, None, h) for i, h in enumerate(headings)]
+            + [(doc, sec, int(pos), None) for sec, pos in appends],
+            columns=[f.name for f in _PHASEA_OUT.fields],
         )
-        headings, targets, appends = replay_boundaries(
-            blist, toc_lines, needed_ords
-        )
-        out = []
-        for k, (tp, tf) in targets.items():
-            out.append(dict(doc_id=doc, kind="T", ord=k, tp=tp, tf=tf,
-                            section_id=None, field=None, pos=None,
-                            heading=None))
-        for i, h in enumerate(headings):
-            out.append(dict(doc_id=doc, kind="K", ord=None, tp=None,
-                            tf=None, section_id=i, field=None, pos=None,
-                            heading=h))
-        for sec, field, pos in appends:
-            out.append(dict(doc_id=doc, kind="P", ord=None, tp=None,
-                            tf=None, section_id=sec, field=field,
-                            pos=int(pos), heading=None))
-        res = pd.DataFrame(out, columns=[f.name for f in _PHASEA_OUT.fields])
-        for c in ("ord", "tp", "tf", "section_id"):
-            res[c] = res[c].astype("Int32")
+        res["section_id"] = res["section_id"].astype("Int32")
         res["pos"] = res["pos"].astype("Int64")
         return res
 
     pa = phase_a_in.groupBy("doc_id").applyInPandas(
         phase_a, _PHASEA_OUT
     ).persist()
-    persisted += [enriched, events, pa]
+    persisted += [enriched, pa]
 
-    targets = pa.filter(F.col("kind") == "T").select(
-        "doc_id", "ord", "tp", "tf"
-    )
-    # no broadcast hint: targets is O(event-containing segments), which
-    # a boundary/paragraph-alternating pathology makes O(#spans) — let
-    # AQE pick broadcast only when it is actually small
-    phase_b = (
-        events.join(targets, ["doc_id", "ord"])
-        .select(
-            "doc_id",
-            F.when(F.col("code") == "P", F.col("tp"))
-            .otherwise(F.col("tf")).alias("section_id"),
-            F.when(F.col("code") == "P", F.lit("p"))
-            .otherwise(F.lit("f")).alias("field"),
-            "pos",
-            F.col("text").alias("content"),
-        )
-        .filter(F.col("section_id").isNotNull())
-    )
-    # phase-A appends are position references; resolve content from the
-    # boundary rows (distributed join — strings never crossed phase A)
-    pa_appends = (
-        pa.filter(F.col("kind") == "P")
-        .select("doc_id", "section_id", "field", "pos")
-        .join(
-            enriched.filter(F.col("kind") == "B")
-            .select("doc_id", "pos", F.col("text").alias("content")),
-            ["doc_id", "pos"],
-        )
-        .select("doc_id", "section_id", "field", "pos", "content")
-    )
-    all_appends = phase_b.unionByName(pa_appends)
-    agg = all_appends.groupBy("doc_id", "section_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.when(
-                F.col("field") == "p", F.struct("pos", "content")
-            ))),
+    # appends are position references; a heading's content comes from
+    # its enriched row (distributed join — strings never crossed phase
+    # A), a paragraph's is ''
+    paragraphs = (
+        pa.filter(F.col("pos").isNotNull())
+        .join(enriched.filter(F.col("code") == "H").select(
+            "doc_id", "pos", "text"), ["doc_id", "pos"], "left")
+        .groupBy("doc_id", "section_id")
+        .agg(F.transform(
+            F.array_sort(F.collect_list(F.struct(
+                "pos", F.coalesce("text", F.lit("")).alias("content")))),
             lambda x: x["content"],
-        ).alias("paragraphs"),
-        F.transform(
-            F.array_sort(F.collect_list(F.when(
-                F.col("field") == "f", F.struct("pos", "content")
-            ))),
-            lambda x: x["content"],
-        ).alias("figures"),
+        ).alias("paragraphs"))
     )
-    skel = pa.filter(F.col("kind") == "K").select(
+    skel = pa.filter(F.col("pos").isNull()).select(
         "doc_id", "section_id", "heading"
     )
     empty_arr = F.array().cast(T.ArrayType(T.StringType()))
-    secs = (
-        skel.join(agg, ["doc_id", "section_id"], "left")
+    return (
+        skel.join(paragraphs, ["doc_id", "section_id"], "left")
         .groupBy("doc_id")
         .agg(
             F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(
-                        "section_id", "heading", "paragraphs", "figures"
-                    ))
-                ),
+                F.array_sort(F.collect_list(
+                    F.struct("section_id", "heading", "paragraphs"))),
                 lambda x: F.struct(
                     x["heading"].alias("heading"),
                     F.coalesce(x["paragraphs"], empty_arr).alias("paragraphs"),
-                    F.coalesce(x["figures"], empty_arr).alias("figures"),
+                    empty_arr.alias("figures"),
                     empty_arr.alias("tables"),
                 ),
             ).alias("sections")
         )
     )
-    return secs
 
 
 def extract_sections_split(
@@ -710,8 +545,8 @@ def extract_sections_split(
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
     """Sections-only skew path: docs above ``skew_threshold`` spans go
-    through the chunk folds and the segment-parallel replay of
-    _big_doc_sections; the rest through the ordinary fold.
+    through the chunk folds and the event replay of _big_doc_sections;
+    the rest through the ordinary fold.
 
     Output: (doc_id, status, sections).
     """
@@ -719,7 +554,7 @@ def extract_sections_split(
     folded = _fold_big_chunks(big, spans_per_chunk, collect_events=True)
     big_out = (
         big.select("doc_id", F.lit("ok").alias("status"))
-        .join(_big_doc_sections(big, folded, spans_per_chunk, []),
+        .join(_big_doc_sections(big, folded, []),
               "doc_id", "left")
         .unionByName(bad.select("doc_id", F.lit("quarantined")
                                 .alias("status")),
@@ -740,11 +575,11 @@ def extract_documents_split(
 ) -> DataFrame:
     """extract_documents' output (EXTRACT_FULL) with the docs above
     ``skew_threshold`` spans chunk-folded once and fed to the span
-    reassembly and sections replay the other skew paths share. No
-    product code calls it: extract_job's plain fold beat it at every
-    size up to 1M spans (BASELINE.md, "Job route A/B"). It is kept only
-    because the traced benchmark wraps it by name, and goes with that
-    wrap. Each big doc is one row left-joined from ``big``.
+    reassembly and the sections event replay the other skew paths
+    share. No product code calls it: extract_job's plain fold beat it
+    at every size up to 1M spans (BASELINE.md, "Job route A/B"). It is
+    kept only because the traced benchmark wraps it by name, and goes
+    with that wrap. Each big doc is one row left-joined from ``big``.
     Its lineage is input-derived like the fold's; wall_ms and
     partition_id are NULL (no one task folds it). At 1M spans the
     nested row itself dominates on any path that builds it; consumers
@@ -773,7 +608,7 @@ def extract_documents_split(
     persisted.append(folded)
     rows = (
         input_lineage(big, "ok")
-        .join(_big_doc_sections(big, folded, spans_per_chunk, persisted),
+        .join(_big_doc_sections(big, folded, persisted),
               "doc_id", "left")
         .join(_assemble_big_spans(folded), "doc_id", "left")
         # DecodeError big docs are never chunk-folded: quarantined whole
@@ -959,7 +794,7 @@ def extract_spans_relational(documents_in: DataFrame) -> DataFrame:
         "doc_id",
         F.col("s.offset").alias("pos"),
         # array position: stable tiebreak for duplicate offsets, so the
-        # renumber window matches the fold's stable sort (fold.py:182)
+        # renumber window matches the fold's stable sort (fold.py:178)
         F.col("_ap").alias("ap"),
         F.col("s.kind").alias("k"),
         pytrim.alias("content"),
@@ -983,12 +818,9 @@ def extract_spans_relational(documents_in: DataFrame) -> DataFrame:
     label = (
         F.when(F.col("k").isin("TextLine", "Line", "Rectangle"), F.col("k"))
         .when(F.col("k").isin("Figure", "Image"), "media")
-        .when(
-            (F.trim("fl") != "") | F.col("fl").rlike(P.JAVA_SECTION),
-            "heading",
-        )
-        .when(F.col("fl").rlike(P.JAVA_APPENDIX), "appendix")
-        .when(F.col("fl").rlike(P.JAVA_FIGURE), "figure_caption")
+        # a TextBox is a heading exactly when its first line is
+        # non-blank (see fold.py), the DuckDB oracle's own expression
+        .when(F.trim("fl") != "", "heading")
         .otherwise("paragraph")
     )
     w = Window.partitionBy("doc_id").orderBy("pos", "ap")

@@ -3,6 +3,7 @@ oracle (pure Python), then Spark plumbing vs the fold, then the skew
 splitter vs the unsplit path."""
 
 import itertools
+import random
 
 from pyspark.sql import functions as F
 
@@ -523,3 +524,105 @@ def test_skew_route_equality_out_of_order_spans_array(spark):
     assert len(seq) == len(par) == 1
     assert [t.asDict() for t in seq[0].spans] == \
            [t.asDict() for t in par[0].spans]
+
+
+# TextBox texts of the mixed-event documents, by the fold event each
+# one makes: headings (hitting, missing, rewriting a TOC section,
+# raising re.error in the unescaped lookup, multi-line, or looking
+# like an appendix or a figure caption), blanks (paragraph events)
+# and wipes (the header/footer literals and page numbers)
+_MIXED_HEADINGS = [
+    "Introduction", "Risk management", "Results\nwith a second line",
+    "1. Introduction\nbody text follows", "2. Risk management",
+    "3.1 Methods\nstep one\nstep two", "4. Unknown part",
+    "C++ (v2)", "C++ (v2)\nsecond line", "Appendix A. Data tables",
+    "Annex B\ndetails here", "Figure 2 shows growth", "see Fig. 3 here",
+    "plain words of body text\nsecond line", "Methods",
+]
+_MIXED_BLANKS = ["", "   ", " \n\t ", None]
+_MIXED_WIPES = ["header", "footer", " header\n", "Page 3", "page iv"]
+_MIXED_OTHER = [
+    ("Figure", None, "fig-1.png"), ("Image", None, "img-2.jpg"),
+    ("TextLine", "a line", None), ("Line", None, None),
+    ("Rectangle", None, None), ("Curve", None, None),
+    ("TextGroup", None, None), ("NarrativeText", "unsupported", None),
+    ("PageStart", "pageid:1", None),
+]
+_MIXED_TOC = ["Introduction", "Risk management", "Methods", "Results ... 7",
+              "C++ (v2)", "Appendix A Data", "Figure 1 Overview"]
+
+
+def _mixed_doc(rng, n_spans):
+    """One document of ``n_spans`` spans mixing every fold event, with
+    a TOC of 4-6 lines at random positions; every fifth call stores
+    the spans array out of offset order."""
+    spans = []
+    for _ in range(n_spans):
+        r = rng.random()
+        if r < 0.35:
+            kind, text, ref = "TextBox", rng.choice(_MIXED_HEADINGS), None
+        elif r < 0.75:
+            kind, text, ref = "TextBox", rng.choice(_MIXED_BLANKS), None
+        elif r < 0.83:
+            kind, text, ref = "TextBox", rng.choice(_MIXED_WIPES), None
+        else:
+            kind, text, ref = rng.choice(_MIXED_OTHER)
+        spans.append(dict(kind=kind, text=text, media_ref=ref))
+    for line in rng.sample(_MIXED_TOC, rng.randint(4, 6)):
+        spans.insert(rng.randrange(len(spans) + 1),
+                     dict(kind="TOC", text=line, media_ref=None))
+    for i, s in enumerate(spans):
+        s["offset"] = i
+    if rng.random() < 0.2:
+        rng.shuffle(spans)
+    return spans
+
+
+def _mixed_docs(n_docs, seed, lo=30, hi=400):
+    rng = random.Random(seed)
+    return {f"mixed-{i:03d}": _mixed_doc(rng, rng.randint(lo, hi))
+            for i in range(n_docs)}
+
+
+def test_sections_split_equals_fold_on_mixed_events(spark):
+    """On documents whose fold events mix headings, paragraphs and
+    wipes across 7-span chunks, both skew routes equal the sequential
+    fold, and the fold equals the reference transliteration."""
+    from pdfspark.operators.extract import (
+        extract_documents_split,
+        extract_sections_split,
+    )
+
+    docs = _mixed_docs(40, "42|mixed")
+    want = {d: fold_document(sp) for d, sp in docs.items()}
+    for d, sp in docs.items():
+        ref = oracle_extract(sp, "", "")
+        got = want[d]
+        assert (got["status"], got["out_spans"], got["sections"]) == (
+            ref["status"], ref["out_spans"], ref["sections"]), d
+    # the documents reach what they are built for: paragraph spans,
+    # and paragraph appends into sections
+    assert sum(s["kind"] == "paragraph" for w in want.values()
+               for s in w["out_spans"]) > 2000
+    assert sum(p == "" for w in want.values() for sec in w["sections"]
+               for p in sec["paragraphs"]) > 400
+
+    df = spark.createDataFrame(
+        list(docs.items()),
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    secs = {r.doc_id: (r.status, [t.asDict() for t in r.sections])
+            for r in extract_sections_split(
+                df, skew_threshold=10, spans_per_chunk=7).collect()}
+    assert secs == {d: (w["status"], w["sections"])
+                    for d, w in want.items()}
+    full = {r.doc_id: (r.status, [t.asDict() for t in r.spans],
+                       [t.asDict() for t in r.sections],
+                       r.spans_in, r.spans_out, r.bytes_in)
+            for r in extract_documents_split(
+                df, skew_threshold=10, spans_per_chunk=7).collect()}
+    assert full == {
+        d: (w["status"], w["out_spans"], w["sections"], w["spans_in"],
+            w["spans_out"], sum(len(s["text"] or "") for s in docs[d]))
+        for d, w in want.items()}

@@ -267,3 +267,28 @@ def test_job_commit_plans(spark, fixture_dir, tmp_path, monkeypatch, mode):
         assert s["pyarrow"] == 1 and s["bhj"] == bhj, (table, plan)
         assert s["exch"] <= max_exch, (table, plan)
         assert s["scans"] == [scan], (table, plan)
+
+
+def test_sections_split_plan(spark, documents_in):
+    """The skew sections route, forced onto the fixture's skew doc,
+    replays the fold's events in one grouped Python stage after the
+    chunk folds: no cross-chunk prefix window and no join of events
+    to segment targets. The ceilings are the executed plan's audited
+    counts."""
+    from pdfspark.operators.extract import extract_sections_split
+    from tools.explain_audit import plan_summary
+
+    # a frame an earlier test left cached would stand in for its
+    # subtree here (CacheManager reuse): audit a cold catalog
+    spark.catalog.clearCache()
+    df = extract_sections_split(documents_in, skew_threshold=500,
+                                spans_per_chunk=200)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    spark.catalog.clearCache()
+    s = plan_summary(plan)
+    # (exchanges, broadcast joins, Python stages): 13, 3 and 8 with
+    # the prefix window and the segment-target join
+    got = (s["exch"], s["bhj"], s["pyarrow"])
+    assert all(g <= cap for g, cap in zip(got, (10, 2, 6))), got
+    assert "Window" not in plan, plan
