@@ -427,15 +427,17 @@ def _q_extract_sections(spark, sf_dir):
 def _q_lineage(spark, sf_dir):
     """Per-doc lineage rows (doc_id, status, spans_in, spans_out,
     bytes_in) — the deterministic foundation the per-partition metrics
-    table (extract.lineage_table, exercised by jobs/extract_job and its
-    pytest) rolls up from. Fully SQL-oracled: spans_in/bytes_in from
-    the input span arrays, spans_out from the extract-spans oracle.
-    Like ep1_extract_spans, it folds the documents alone."""
-    from pdfspark.operators.extract import extract_documents
+    table (the fold's lineage accumulator, extract.lineage_frame,
+    committed by jobs/extract_job) rolls up from. Fully SQL-oracled:
+    spans_in/bytes_in from the input span arrays, spans_out from the
+    extract-spans oracle. Like ep1_extract_spans, it folds the
+    documents alone, after the driver routes' salted repartition."""
+    from pdfspark.operators.extract import _fold_salted
 
     # spans_only: this query reads five scalar columns — no reason to
     # run the sections state machine or ship its arrays through Arrow
-    out = extract_documents(_docs_in(spark, sf_dir), spans_only=True)
+    out = _fold_salted(_docs_in(spark, sf_dir), spans_only=True,
+                       num_partitions=spark.sparkContext.defaultParallelism)
     return out.select(
         "doc_id",
         "status",

@@ -36,15 +36,23 @@ Usage:
 
 Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
  - one route for every document, folded into one ordered row in one
-   task: --input after a salted repartition on xxhash64(doc_id),
-   --payloads inside its scan task with no shuffle (no skew split — the
-   one nested output row dominates, so chunking a big doc lost to the
-   plain fold up to 1M spans; BASELINE.md, "Job route A/B")
+   task: --input and --payloads each fold inside the task that scans
+   the document, over the scan coalesced (narrow) to the default
+   parallelism, so the commit's rebalance is the call's only shuffle
+   (no skew split — the one nested output row dominates, so chunking a
+   big doc lost to the plain fold up to 1M spans; BASELINE.md, "Job
+   route A/B")
  - per-partition lineage rows (partition_id, doc_count, bytes_in,
-   spans_out, wall_ms) committed to --metrics under the
-   SAME snapshot id as the data (multi-table commit; a crash between the two
-   manifest publishes is healed by the sink's recover at the next start,
-   so committed documents can never lose their lineage rows)
+   spans_out, wall_ms) of the fold's tasks committed to --metrics under
+   the SAME snapshot id as the data (multi-table commit; a crash
+   between the two manifest publishes is healed by the sink's recover
+   at the next start, so committed documents can never lose their
+   lineage rows). The fold's tasks count them in the fold's own pass
+   (an accumulator keyed by partition id), so the lineage costs no
+   cache, no second read of the fold and no Python stage; under a
+   partial --payloads --resume they also count the payloads the fold
+   decoded and the resume anti-join then skipped, since their fold
+   time was spent
  - every write — batch append, stream epoch, --compact rewrite — is a
    manifest-committed snapshot through one protocol
    (pdfspark/sinks/snapshot.py: staging write -> atomic rename ->
@@ -187,7 +195,7 @@ def _run_html_mode(spark, args) -> int:
             )
             .withColumn("wall_ms", F.lit(None).cast("double"))
         )
-        aux = [(metrics, args.metrics)]
+        aux = [(lambda: metrics, args.metrics)]
     try:
         _commit(args, out, aux)
     finally:
@@ -198,7 +206,7 @@ def _run_html_mode(spark, args) -> int:
 
 
 def _commit(args, out, aux) -> None:
-    """Commit ``out`` (with the ``aux`` lineage frames) as one snapshot
+    """Commit ``out`` (with the ``aux`` lineage builders) as one snapshot
     of --output, partitioned by pmod(xxhash64(doc_id), N) under
     --buckets — the one bucket transform of every batch mode, so the
     flag cannot silently no-op in one of them."""
@@ -326,7 +334,11 @@ def main(argv=None) -> int:
     else:
         spark = build_session()
 
-    from pdfspark.operators.extract import extract_documents, lineage_table
+    from pdfspark.operators.extract import (
+        extract_documents,
+        lineage_accumulator,
+        lineage_frame,
+    )
 
     # truthiness, not `is not None`: an empty-string input (unset env
     # var in a deployment script) must be a usage error here, not a
@@ -364,6 +376,9 @@ def main(argv=None) -> int:
     if args.html:
         return _run_html_mode(spark, args)
 
+    # --metrics: the fold's tasks count the lineage as they fold, and
+    # the commit writes it after the data write
+    lineage = lineage_accumulator(spark) if args.metrics else None
     if args.payloads:
         if args.geom:
             ap.error("--geom applies to --input only")
@@ -374,24 +389,16 @@ def main(argv=None) -> int:
 
         # doc_ids exist only after decode: --resume filters folded rows
         full = _prepare_output(spark, args, extract_payloads(
-            read_payloads(spark, args.payloads)))
+            read_payloads(spark, args.payloads), lineage))
     else:
         full = extract_documents(
-            _prepare_output(spark, args, spark.read.parquet(args.input)))
+            _prepare_output(spark, args, spark.read.parquet(args.input)),
+            lineage=lineage)
 
-    # the --metrics lineage is the fold's only second reader: persist
-    # for it alone, so the data write materialises the fold and the
-    # metrics aggregation reads the cache (no second fold)
     aux = None
     if args.metrics:
-        full.persist()
-        aux = [(lineage_table(full), args.metrics)]
-    try:
-        _commit(args, full.select("doc_id", "status", "spans", "sections"),
-                aux)
-    finally:
-        if args.metrics:
-            full.unpersist()
+        aux = [(lambda: lineage_frame(spark, lineage), args.metrics)]
+    _commit(args, full.select("doc_id", "status", "spans", "sections"), aux)
     return 0
 
 

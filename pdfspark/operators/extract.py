@@ -1,8 +1,16 @@
 """Exact-parity extraction over documents_in (SURVEY.md §7 Phase 3/4).
 
-``extract_documents``  — mapInPandas fold per document (Arrow batches)
-with explicit salted repartition on xxhash64(doc_id); emits spans +
-sections + per-doc lineage columns.
+``extract_documents``  — the job's fold: mapInPandas per document
+(Arrow batches) over the input coalesced (narrow, no shuffle) to the
+default parallelism; emits spans + sections + per-doc lineage columns.
+Given a ``lineage_accumulator``, the same pass also counts each task's
+north-rule lineage (partition_id, doc_count, bytes_in, spans_out,
+wall_ms), which ``lineage_frame`` turns into the LINEAGE rows the job
+commits: no second read of the fold, no cache, no aggregation.
+
+``_fold_salted``       — the same kernel after a salted repartition on
+xxhash64(doc_id): the plain fold of the driver routes (the ``*_auto``
+routers, the split routes' small docs, the driver's lineage query).
 
 Every route folds ``documents_in`` alone: the fold reproduces the
 reference's dict-membership header/footer strip, which reads no
@@ -19,9 +27,6 @@ gives the full extract_documents output but has no caller: extract_job
 folds every doc with ``extract_documents``, which beat it up to 1M
 spans.
 
-``lineage_table``      — per-partition metrics rows (partition_id,
-doc_count, bytes_in, spans_out, wall_ms) per the north rule.
-
 ``resume_filter``      — anti-join against already-committed doc_ids
 (resume from the last committed snapshot).
 """
@@ -32,13 +37,14 @@ import time
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.accumulators import Accumulator, AccumulatorParam
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdfspark.config import SKEW_SPAN_THRESHOLD
 from pdfspark.fold import fold_document
-from pdfspark.schema import SPAN
+from pdfspark.schema import LINEAGE, SPAN
 
 SECTION_STRUCT = T.StructType(
     [
@@ -73,17 +79,58 @@ EXTRACT_SPANS_ONLY = T.StructType(
 )
 
 
-def _fold_batches(spans_only: bool = False):
+class LineageMerge(AccumulatorParam):
+    """Merge rule of the fold's lineage accumulator, a dict
+    {partition_id: (doc_count, bytes_in, spans_out, wall_ms)}: an
+    entry overwrites the one under the same partition id instead of
+    adding to it. A task Spark runs again (a lost shuffle output, a
+    retried stage) reports its partition's totals a second time, and
+    a sum would count its documents twice."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        value1.update(value2)
+        return value1
+
+
+def lineage_accumulator(spark: SparkSession) -> Accumulator:
+    """An empty lineage accumulator for one fold: pass it to
+    ``extract_documents`` or ``binary_decode.extract_payloads``, run
+    the fold, then read it with ``lineage_frame``."""
+    return spark.sparkContext.accumulator({}, LineageMerge())
+
+
+def lineage_frame(spark: SparkSession, lineage: Accumulator) -> DataFrame:
+    """The LINEAGE rows the fold's tasks reported into ``lineage``, one
+    per partition id, in one partition. The frame is built from an
+    Arrow table, so Spark writes it without a Python worker or a scan,
+    as one file."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = [dict(zip(LINEAGE.fieldNames(), (pid, *totals)))
+            for pid, totals in sorted(lineage.value.items())]
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE))
+    return spark.createDataFrame(table).coalesce(1)
+
+
+def _fold_batches(spans_only: bool = False,
+                  lineage: Accumulator | None = None):
     """``spans_only=True`` skips the sections attachment state machine
     (fold_document's skip_sections — span labels never depend on it)
     and omits the sections column from the Arrow batches; pair it with
-    EXTRACT_SPANS_ONLY."""
+    EXTRACT_SPANS_ONLY. With a ``lineage`` accumulator, a task that
+    folded at least one document adds its totals (doc_count, bytes_in,
+    spans_out, wall_ms) under its partition id after its last batch."""
     schema = EXTRACT_SPANS_ONLY if spans_only else EXTRACT_FULL
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+        totals = (0, 0, 0, 0.0)
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -112,9 +159,13 @@ def _fold_batches(spans_only: bool = False):
                 if not spans_only:
                     row["sections"] = res["sections"]
                 rows.append(row)
+                totals = (totals[0] + 1, totals[1] + row["bytes_in"],
+                          totals[2] + row["spans_out"], totals[3] + wall)
             yield pd.DataFrame(
                 rows, columns=[f.name for f in schema.fields]
             )
+        if lineage is not None and totals[0]:
+            lineage.add({pid: totals})
 
     return run
 
@@ -122,7 +173,10 @@ def _fold_batches(spans_only: bool = False):
 def _fold_salted(df: DataFrame, spans_only: bool = False,
                  num_partitions: int | None = None) -> DataFrame:
     """Salted repartition on xxhash64(doc_id), then the per-doc fold —
-    the one fold stage every route runs for its ordinary docs."""
+    the one fold stage every driver route runs for its ordinary docs
+    (the driver's inputs are one file per table, so the shuffle is what
+    spreads the fold over the cores; the job's fold is
+    extract_documents)."""
     parts = [num_partitions] if num_partitions else []
     return df.repartition(*parts, F.xxhash64("doc_id")).mapInPandas(
         _fold_batches(spans_only=spans_only),
@@ -132,18 +186,18 @@ def _fold_salted(df: DataFrame, spans_only: bool = False,
 
 def extract_documents(
     documents_in: DataFrame,
-    num_partitions: int | None = None,
-    spans_only: bool = False,
+    lineage: Accumulator | None = None,
 ) -> DataFrame:
-    """Sequential-per-doc exact fold; salted repartition first.
-    ``spans_only`` drops the sections side-output at the fold (see
-    _fold_batches) — for consumers that never read it."""
-    n = (num_partitions
-         or documents_in.sparkSession.sparkContext.defaultParallelism)
-    # hash-repartition on doc_id: uniform unless one doc is huge (that
-    # case goes through the skew split routes)
-    return _fold_salted(documents_in, spans_only=spans_only,
-                        num_partitions=n)
+    """The job's fold: the sequential per-doc exact fold over the input
+    coalesced (narrow, no shuffle) to the default parallelism, so each
+    doc folds in the task that scans it and a commit's rebalance is the
+    job's only exchange (as binary_decode.extract_payloads does for
+    bytes-in). An input with fewer scan partitions than cores folds on
+    fewer tasks. ``lineage`` (from lineage_accumulator) collects each
+    task's lineage in the same pass (see _fold_batches)."""
+    n = documents_in.sparkSession.sparkContext.defaultParallelism
+    return documents_in.coalesce(n).mapInPandas(
+        _fold_batches(lineage=lineage), EXTRACT_FULL)
 
 
 CHUNKED_SPANS = T.StructType(
@@ -654,9 +708,11 @@ def extract_sections_auto(
     pinned by the forced-threshold tests)."""
     mx = _max_span_count(documents_in)
     if mx <= skew_threshold:
-        return extract_documents(documents_in).select(
-            "doc_id", "status", "sections"
-        )
+        return _fold_salted(
+            documents_in,
+            num_partitions=documents_in.sparkSession.sparkContext
+            .defaultParallelism,
+        ).select("doc_id", "status", "sections")
     return extract_sections_split(documents_in,
                                   skew_threshold=skew_threshold,
                                   spans_per_chunk=spans_per_chunk)
@@ -686,9 +742,11 @@ def extract_spans_auto(
         return extract_spans_split_rows(documents_in,
                                         skew_threshold=skew_threshold,
                                         spans_per_chunk=spans_per_chunk)
-    return _explode_span_rows(
-        extract_documents(documents_in, spans_only=True)
-    )
+    return _explode_span_rows(_fold_salted(
+        documents_in, spans_only=True,
+        num_partitions=documents_in.sparkSession.sparkContext
+        .defaultParallelism,
+    ))
 
 
 def extract_spans_split_rows(
@@ -832,16 +890,6 @@ def extract_spans_relational(documents_in: DataFrame) -> DataFrame:
         F.when(F.col("k").isin("Figure", "Image"), F.col("mref")).alias(
             "media_ref"
         ),
-    )
-
-
-def lineage_table(extracted_full: DataFrame) -> DataFrame:
-    """North-rule metrics: one row per executor partition."""
-    return extracted_full.groupBy("partition_id").agg(
-        F.count("*").alias("doc_count"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("spans_out").alias("spans_out"),
-        F.sum("wall_ms").alias("wall_ms"),
     )
 
 

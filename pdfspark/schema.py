@@ -77,11 +77,12 @@ TABLES_OUT = T.StructType(
     ]
 )
 
-# Per-partition lineage row (BASELINE.json north_rule).
+# Per-partition lineage row (BASELINE.json north_rule); a partition
+# that folded no document has no row, so doc_count is never NULL.
 LINEAGE = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType()),
-        T.StructField("doc_count", T.LongType()),
+        T.StructField("doc_count", T.LongType(), nullable=False),
         T.StructField("bytes_in", T.LongType()),
         T.StructField("spans_out", T.LongType()),
         T.StructField("wall_ms", T.DoubleType()),

@@ -15,12 +15,15 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # one task slot per CPU this process may run on (its affinity mask,
+    # not the host's CPU count) unless SPARK_GRAFT_CPUS says otherwise
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # size shuffles to the MASTER actually in use: a caller passing
-        # master='local[2]' must not inherit the 32-partition env
-        # default (8-16x over-partitioned shuffles on a 2-core session)
+        # master='local[2]' must not inherit the env's CPU count
+        # (over-partitioned shuffles on a 2-core session)
         import re
 
         m = re.fullmatch(r"local\[(\d+)\]", master)

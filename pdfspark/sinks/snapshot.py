@@ -50,10 +50,12 @@ its shuffle — and files of about the advisory size above that. A
 ``--buckets`` append hashes each bucket to one partition, so it writes
 one file per ``bucket=`` directory until a bucket passes the advisory
 size, against up to one per fold task per directory without the
-rebalance. Two writes are not rebalanced: the
-lineage aux frames come out of a ``groupBy`` that already yields one
-file, so a rebalance would only add a stage; and compaction asks for
-an explicit file count (``coalesce(n_files)``), which it keeps.
+rebalance. Two writes are not rebalanced: the aux frames, which the
+caller builds after the data write (the job's lineage is a
+one-partition local frame, ``extract.lineage_frame``, that already
+writes one file, so a rebalance would only add a stage); and
+compaction, which asks for an explicit file count
+(``coalesce(n_files)``) and keeps it.
 
 Page layout: every parquet file the sink writes — data, aux and
 compaction output — takes the writer settings of ``PARQUET_OPTIONS``:
@@ -93,6 +95,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -180,14 +183,26 @@ def _list_data_files(base: str, relative_to: str) -> list[str]:
     )
 
 
+def _has_rows(path: str, fmt: str) -> bool:
+    """Whether the data file at ``path`` holds a row: its parquet
+    footer's row count, or a non-empty json file."""
+    if fmt == "parquet":
+        import pyarrow.parquet as pq
+
+        return pq.read_metadata(path).num_rows > 0
+    return os.path.getsize(path) > 0
+
+
 def _stage_snapshot(
     df: DataFrame, output: str, snap: str, fmt: str,
     partition_by: str | None = None,
 ) -> bool:
     """Write ``df`` under _staging/<snap> and atomically rename it to
     <output>/<snap>. Returns False (and cleans up) when the write
-    produced no data files — a file-less parquet snapshot cannot be
-    read back."""
+    produced no row: Spark writes one schema-only file for an empty
+    frame, and committing it would publish an empty snapshot, with its
+    aux tables, on every resume that has nothing left to do. The row
+    check stops at the first file that holds one."""
     staging = os.path.join(output, STAGING_DIR, snap)
     w = df.write.mode("overwrite").format(fmt)
     if fmt == "parquet":
@@ -195,7 +210,8 @@ def _stage_snapshot(
     if partition_by:
         w = w.partitionBy(partition_by)
     w.save(staging)
-    if not _list_data_files(staging, output):
+    if not any(_has_rows(os.path.join(output, f), fmt)
+               for f in _list_data_files(staging, output)):
         shutil.rmtree(staging, ignore_errors=True)
         return False
     dest = os.path.join(output, snap)
@@ -212,7 +228,7 @@ def _stage_snapshot(
 def commit_append(
     df: DataFrame, output: str, fmt: str = "parquet",
     partition_by: str | None = None,
-    aux: list[tuple[DataFrame, str]] | None = None,
+    aux: list[tuple[Callable[[], DataFrame], str]] | None = None,
     snap_id: str | None = None,
 ) -> str | None:
     """Append ``df`` to ``output`` as one atomically-committed
@@ -233,11 +249,14 @@ def commit_append(
     level 6, v2 delta pages, no dictionary).
 
     ``aux`` — side tables (e.g. the lineage metrics) committed under
-    the SAME snapshot id, analogous to an Iceberg multi-table commit.
-    Ordering closes every crash window:
+    the SAME snapshot id, analogous to an Iceberg multi-table commit,
+    as (builder, path) pairs: each builder is a zero-argument callable
+    returning the aux frame, called after the data write, so a frame
+    can hold what the data write measured (the fold's lineage
+    accumulator). Ordering closes every crash window:
 
         1. stage + rename the data snapshot
-        2. stage + rename each aux snapshot          (unmanifested)
+        2. build, stage + rename each aux snapshot   (unmanifested)
         3. publish the DATA manifest                 <- commit point
         4. publish each aux manifest
 
@@ -274,8 +293,8 @@ def commit_append(
                   else df.hint("rebalance"))
     if not _stage_snapshot(rebalanced, output, snap, fmt, partition_by):
         return None
-    aux_staged = [aux_output for aux_df, aux_output in aux or []
-                  if _stage_snapshot(aux_df, aux_output, snap, "parquet")]
+    aux_staged = [aux_output for build, aux_output in aux or []
+                  if _stage_snapshot(build(), aux_output, snap, "parquet")]
     _publish(output, snap)
     for aux_output in aux_staged:
         _publish(aux_output, snap)

@@ -35,6 +35,7 @@ import os
 from typing import Iterator
 
 import pandas as pd
+from pyspark.accumulators import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -158,15 +159,19 @@ def decode_docs(bin_df: DataFrame, decoder=None) -> DataFrame:
         _decode_batches(decoder or _decode_payload), DECODED)
 
 
-def extract_payloads(bin_df: DataFrame) -> DataFrame:
+def extract_payloads(bin_df: DataFrame,
+                     lineage: Accumulator | None = None) -> DataFrame:
     """binaryFile rows -> EXTRACT_FULL rows, one per payload, in ONE
     Python stage: the decode kernel feeds the fold kernel
     (operators/extract.py) in the same task, over the scan coalesced
     (narrow) to the default parallelism. A payload that failed decode
     folds the DecodeError marker span (status='quarantined') with its
     size as lineage bytes_in; decoded payloads get NULL (the fold
-    counts their span text)."""
-    decode, fold = _decode_batches(_decode_payload), _fold_batches()
+    counts their span text). ``lineage`` (from
+    extract.lineage_accumulator) collects each task's lineage totals
+    in the same pass."""
+    decode = _decode_batches(_decode_payload)
+    fold = _fold_batches(lineage=lineage)
     marker = [dict(kind="DecodeError", text="corrupt payload",
                    media_ref=None, offset=0)]
 

@@ -20,7 +20,10 @@ stage (sources/binary_decode.py extract_payloads, so a corrupt payload
 is one status='quarantined' row in both modes), run unchanged on each
 micro-batch inside foreachBatch. No stateful operator is involved
 (each document folds independently), so there is no watermark and no
-state store to size.
+state store to size. An epoch's lineage comes out of the same pass:
+the fold's tasks count it into an accumulator
+(extract.lineage_accumulator), so the epoch neither caches nor
+re-reads its fold, and its lineage commit runs no Python.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ import hashlib
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from pdfspark.operators.extract import lineage_table
+from pdfspark.operators.extract import lineage_accumulator, lineage_frame
 # called through the module, so a wrapper set on it at run time (the
 # perfbench tracer's commit span) sees every epoch's commit
 from pdfspark.sinks import snapshot
@@ -87,35 +90,32 @@ def extract_payload_stream(
 
     # Decode + fold run INSIDE foreachBatch, on the raw binary batch:
     # each payload folds to its own row (two payloads declaring one
-    # doc_id fold to two rows — dedupe by doc_id downstream).
+    # doc_id fold to two rows — dedupe by doc_id downstream). The
+    # lineage is counted by the fold's own tasks (one accumulator,
+    # emptied per epoch: epochs run one at a time).
+    lineage = None if metrics_path is None else lineage_accumulator(spark)
+
     def sink(batch_df, epoch_id: int) -> None:
-        folded = extract_payloads(batch_df)
-        write_metrics = metrics_path is not None
-        if write_metrics:
-            folded.persist()
-        try:
-            # deterministic id: a replayed epoch re-reads the SAME file
-            # set (recorded in the source commit log), so the path
-            # digest matches and the commit no-ops; a fresh checkpoint
-            # over a grown input dir yields a new digest even at the
-            # same epoch number. Paths only — a driver-sized collect
-            # bounded by maxFilesPerTrigger.
-            paths = sorted(r.path for r in batch_df.select("path").collect())
-            digest = hashlib.md5(
-                "\n".join(paths).encode("utf-8")).hexdigest()[:12]
-            aux = None
-            if write_metrics:
-                aux = [(lineage_table(folded)
-                        .withColumn("epoch_id", F.lit(epoch_id).cast("long")),
-                        metrics_path)]
-            snapshot.commit_append(
-                folded.select("doc_id", "status", "spans", "spans_in",
-                              "spans_out"),
-                out_path, aux=aux,
-                snap_id=f"snap-epoch{epoch_id:09d}-{digest}")
-        finally:
-            if write_metrics:
-                folded.unpersist()
+        aux = None
+        if lineage is not None:
+            lineage.value = {}
+            aux = [(lambda: lineage_frame(batch_df.sparkSession, lineage)
+                    .withColumn("epoch_id", F.lit(epoch_id).cast("long")),
+                    metrics_path)]
+        # deterministic id: a replayed epoch re-reads the SAME file
+        # set (recorded in the source commit log), so the path
+        # digest matches and the commit no-ops; a fresh checkpoint
+        # over a grown input dir yields a new digest even at the
+        # same epoch number. Paths only — a driver-sized collect
+        # bounded by maxFilesPerTrigger.
+        paths = sorted(r.path for r in batch_df.select("path").collect())
+        digest = hashlib.md5(
+            "\n".join(paths).encode("utf-8")).hexdigest()[:12]
+        snapshot.commit_append(
+            extract_payloads(batch_df, lineage).select(
+                "doc_id", "status", "spans", "spans_in", "spans_out"),
+            out_path, aux=aux,
+            snap_id=f"snap-epoch{epoch_id:09d}-{digest}")
 
     # heal the data-manifested / aux-unmanifested crash window a prior
     # run may have left (the replay no-ops on the data side, so only

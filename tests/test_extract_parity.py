@@ -12,7 +12,8 @@ from pdfspark.operators.boilerplate import all_doc_headers_footers
 from pdfspark.operators.extract import (
     extract_documents,
     extract_spans_split,
-    lineage_table,
+    lineage_accumulator,
+    lineage_frame,
     resume_filter,
 )
 from pdfspark.oracle import oracle_extract
@@ -85,8 +86,10 @@ def test_spark_extract_matches_fold(spark, documents_in):
 
 
 def test_partitioning_determinism(spark, documents_in):
-    a = extract_documents(documents_in, num_partitions=2)
-    b = extract_documents(documents_in, num_partitions=16)
+    # the fold coalesces its input to the default parallelism (4): 2
+    # partitions stay 2, 16 merge into 4
+    a = extract_documents(documents_in.repartition(2))
+    b = extract_documents(documents_in.repartition(16))
     ka = {(r.doc_id): [t.asDict() for t in r.spans] for r in a.collect()}
     kb = {(r.doc_id): [t.asDict() for t in r.spans] for r in b.collect()}
     assert ka == kb
@@ -107,14 +110,63 @@ def test_skew_splitter_equality(spark, documents_in):
 
 
 def test_lineage_and_resume(spark, documents_in):
-    full = extract_documents(documents_in, num_partitions=4)
-    lin = lineage_table(full).collect()
-    assert sum(r.doc_count for r in lin) == documents_in.count()
+    """The fold's tasks count one lineage row per partition they fold;
+    the rows add up to the folded rows' own per-doc columns."""
+    lineage = lineage_accumulator(spark)
+    full = extract_documents(documents_in.repartition(4),
+                             lineage=lineage).collect()
+    lin = lineage_frame(spark, lineage).collect()
+    assert sorted(r.partition_id for r in lin) == sorted(
+        {r.partition_id for r in full})
+    for col in ("bytes_in", "spans_out"):
+        assert sum(r[col] for r in lin) == sum(r[col] for r in full), col
+    assert sum(r.doc_count for r in lin) == len(full) == documents_in.count()
     assert all(r.wall_ms >= 0 for r in lin)
     # resume: after committing half the docs, only the rest remain
     committed = documents_in.limit(30).select("doc_id")
     rest = resume_filter(documents_in, committed)
     assert rest.count() == documents_in.count() - 30
+
+
+def test_lineage_merge_keeps_one_entry_per_partition():
+    """Spark-free: a task Spark runs again reports its partition's
+    lineage totals a second time, and the accumulator's merge keeps one
+    entry per partition id, equal to one run's, instead of adding."""
+    import functools
+
+    import pandas as pd
+
+    from pdfspark.operators.extract import LineageMerge, _fold_batches
+
+    class Updates:
+        """Stands in for the accumulator: records what a task adds."""
+
+        def __init__(self):
+            self.seen = []
+
+        def add(self, value):
+            self.seen.append(value)
+
+    docs = _docs()
+    batch = pd.DataFrame(
+        [dict(doc_id=d, spans=sp) for d, sp in sorted(docs.items())[:5]])
+    updates = Updates()
+    for _attempt in range(2):
+        list(_fold_batches(lineage=updates)(iter([batch])))
+    assert len(updates.seen) == 2
+    merge = LineageMerge()
+    got = functools.reduce(merge.addInPlace, updates.seen, merge.zero({}))
+    # outside Spark there is no task context: partition id -1
+    assert list(got) == list(updates.seen[0]) == [-1]
+    n_docs, bytes_in, spans_out, wall_ms = got[-1]
+    assert (n_docs, bytes_in, spans_out) == updates.seen[0][-1][:3]
+    assert n_docs == 5 and wall_ms > 0
+    assert spans_out == sum(len(fold_document(sp)["out_spans"])
+                            for _d, sp in sorted(docs.items())[:5])
+    # an empty task reports nothing
+    empty = Updates()
+    list(_fold_batches(lineage=empty)(iter([])))
+    assert empty.seen == []
 
 
 def test_local_hf_transliteration_matches_spark(spark, spans_geom):
@@ -519,7 +571,7 @@ def test_skew_route_equality_out_of_order_spans_array(spark):
         "doc_id string, spans array<struct<kind string, text string, "
         "media_ref string, offset int>>",
     )
-    seq = extract_documents(df, spans_only=True).collect()
+    seq = extract_documents(df).collect()
     par = extract_spans_split(df, skew_threshold=4096).collect()
     assert len(seq) == len(par) == 1
     assert [t.asDict() for t in seq[0].spans] == \

@@ -209,8 +209,9 @@ def test_job_geom_is_not_read(spark, job_paths, tmp_path, monkeypatch):
     dict-membership header/footer strip needs no per-doc strings. An
     --input --metrics call with --geom commits the same rows as one
     without, builds no header/footer frame and runs the same number of
-    Spark jobs, at most 7 (reading the geometry parquet's schema
-    costs one more)."""
+    Spark jobs, 4 (reading the geometry parquet's schema would cost one
+    more): the input's schema read, the fold with the commit's
+    rebalance, the data write and the lineage write."""
     import pdfspark.operators.boilerplate as BP
 
     calls = []
@@ -240,7 +241,7 @@ def test_job_geom_is_not_read(spark, job_paths, tmp_path, monkeypatch):
     assert calls == []
     assert rows["geom"] == rows["nogeom"]
     assert len(rows["geom"]) == spark.read.parquet(job_paths["input"]).count()
-    assert n_jobs["geom"] == n_jobs["nogeom"] <= 7, n_jobs
+    assert n_jobs["geom"] == n_jobs["nogeom"] == 4, n_jobs
 
 
 def test_job_crash_between_data_and_metrics_manifest_heals(
@@ -285,9 +286,12 @@ def test_job_crash_between_data_and_metrics_manifest_heals(
 
 def test_job_resume_is_exactly_once(spark, job_paths):
     """Second run with --resume must add zero documents (anti-join
-    against the committed snapshot) while appending metrics."""
+    against the committed snapshot), and with nothing left to write it
+    commits no snapshot, neither data nor metrics."""
     docs = spark.read.parquet(job_paths["input"])
     before = _read_out(spark, job_paths["output"]).count()
+    snaps = {t: committed_snapshots(job_paths[t])
+             for t in ("output", "metrics")}
     rc = main([
         "--input", job_paths["input"], "--geom", job_paths["geom"],
         "--output", job_paths["output"], "--metrics", job_paths["metrics"],
@@ -297,6 +301,7 @@ def test_job_resume_is_exactly_once(spark, job_paths):
     out = _read_out(spark, job_paths["output"])
     assert out.count() == before == docs.count()
     assert out.select("doc_id").distinct().count() == docs.count()
+    assert {t: committed_snapshots(job_paths[t]) for t in snaps} == snaps
 
 
 def test_job_resume_on_missing_output_runs_full(spark, job_paths,
@@ -524,7 +529,7 @@ def test_extract_payloads_matches_the_kernels(spark, tmp_path):
     import os as _os
 
     from pdfspark.fold import fold_document
-    from pdfspark.operators.extract import lineage_table
+    from pdfspark.operators.extract import lineage_accumulator, lineage_frame
     from pdfspark.sources.binary_decode import (
         _decode_payload,
         extract_payloads,
@@ -555,7 +560,8 @@ def test_extract_payloads_matches_the_kernels(spark, tmp_path):
     with open(_os.path.join(pdir, "broken.bin"), "wb") as fh:
         fh.write(corrupt)
 
-    full = extract_payloads(read_payloads(spark, pdir))
+    lineage = lineage_accumulator(spark)
+    full = extract_payloads(read_payloads(spark, pdir), lineage)
     rows = {r.doc_id: r for r in full.collect()}
     assert len(rows) == len(payloads) + 1
     for doc_id, raw in payloads.items():
@@ -572,7 +578,7 @@ def test_extract_payloads_matches_the_kernels(spark, tmp_path):
             res["spans_in"], res["spans_out"]), doc_id
     bad = rows["broken"]
     assert (bad.status, bad.bytes_in) == ("quarantined", len(corrupt))
-    assert lineage_table(full).groupBy().sum(
+    assert lineage_frame(spark, lineage).groupBy().sum(
         "doc_count").first()[0] == len(payloads) + 1
 
 
@@ -713,6 +719,65 @@ def test_input_commit_stays_under_its_byte_ceiling(input_commit):
     out, _ = input_commit
     n = sum(os.path.getsize(f) for f in _committed_files(out))
     assert n <= INPUT_COMMIT_MAX_BYTES, n
+
+
+def test_input_lineage_totals_match_the_committed_rows(spark, fixture_dir,
+                                                      input_commit):
+    """The --input lineage rows, counted by the fold's tasks, add up to
+    the committed rows: one doc per committed row, their spans, and the
+    span text of their input documents; one row per partition id."""
+    import pyarrow.parquet as pq
+
+    out, met = input_commit
+    lin = _read_out(spark, met).collect()
+    rows = _read_out(spark, out).collect()
+    docs = pq.read_table(os.path.join(fixture_dir, "documents_in.parquet"),
+                         columns=["spans"]).to_pylist()
+    assert len({r.partition_id for r in lin}) == len(lin)
+    assert sum(r.doc_count for r in lin) == len(rows) == len(docs)
+    assert sum(r.spans_out for r in lin) == sum(len(r.spans) for r in rows)
+    assert sum(r.bytes_in for r in lin) == sum(
+        len(s["text"] or "") for d in docs for s in d["spans"] or [])
+    assert all(r.wall_ms > 0 for r in lin)
+
+
+def test_payloads_partial_resume_lineage_counts_the_fold(spark, tmp_path):
+    """Under --payloads --resume the resume anti-join runs after the
+    fold (doc_ids exist only after decode), and the lineage describes
+    the fold's tasks: a rerun over a directory half of which is
+    committed commits only the new half, while its lineage counts
+    every payload the fold decoded, the skipped ones included."""
+    import json
+    import shutil
+
+    from pdfspark.sinks.snapshot import _read_snapshot
+
+    pdir, first = str(tmp_path / "payloads"), str(tmp_path / "first")
+    os.makedirs(pdir)
+    os.makedirs(first)
+    sizes = {}
+    for i in range(6):
+        body = json.dumps(dict(doc_id=f"json-r{i}", spans=[
+            dict(kind="TextBox", text=f"{i + 1}. Heading {i}",
+                 media_ref=None, offset=0)])).encode("utf-8")
+        sizes[i] = len(f"{i + 1}. Heading {i}")
+        with open(os.path.join(pdir, f"json-r{i}.bin"), "wb") as fh:
+            fh.write(body)
+        if i < 3:
+            shutil.copy(os.path.join(pdir, f"json-r{i}.bin"), first)
+    out, met = str(tmp_path / "out"), str(tmp_path / "met")
+    assert main(["--payloads", first, "--output", out,
+                 "--metrics", met]) == 0
+    assert main(["--payloads", pdir, "--output", out, "--metrics", met,
+                 "--resume"]) == 0
+    snaps = committed_snapshots(out)
+    assert committed_snapshots(met) == snaps and len(snaps) == 2
+    data = _read_snapshot(spark, out, snaps[1]).collect()
+    lin = _read_snapshot(spark, met, snaps[1]).collect()
+    assert sorted(r.doc_id for r in data) == [f"json-r{i}" for i in (3, 4, 5)]
+    assert sum(r.doc_count for r in lin) == 6
+    assert sum(r.bytes_in for r in lin) == sum(sizes.values())
+    assert all(r.wall_ms > 0 for r in lin)
 
 
 def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):
@@ -1113,7 +1178,7 @@ def test_compact_preserves_idempotent_replay_and_aux_heal(spark, tmp_path):
     # manifest we strip (simulating the crash between the publishes)
     for e in range(2):
         S.commit_append(df(f"e{e}"), out, snap_id=f"snap-epoch{e}-aa")
-    S.commit_append(df("e2"), out, aux=[(df("m2"), met)],
+    S.commit_append(df("e2"), out, aux=[(lambda: df("m2"), met)],
                     snap_id="snap-epoch2-aa")
     os.remove(os.path.join(met, S.MANIFEST_DIR, "snap-epoch2-aa.manifest"))
     assert S.read_committed(spark, met) is None  # aux invisible
@@ -1464,10 +1529,11 @@ def test_snapshot_table_random_op_sequences_preserve_rows(spark, tmp_path):
         assert got == sorted(model), f"divergence after step {step} ({op})"
 
 
-def test_job_persists_the_fold_only_for_metrics(spark, job_paths, tmp_path,
-                                               monkeypatch):
-    """The --metrics lineage is the fold's only second reader, so the
-    job caches the fold under --metrics and nowhere else."""
+def test_job_fold_modes_persist_nothing(spark, job_paths, fixture_dir,
+                                       tmp_path, monkeypatch):
+    """The fold's own tasks count the --metrics lineage, so no fold
+    mode (--input, --payloads, --stream-payloads) caches a frame, with
+    or without --metrics, and none leaves one cached."""
     frame_cls = type(spark.range(1))
     real = frame_cls.persist
     calls = []
@@ -1479,9 +1545,16 @@ def test_job_persists_the_fold_only_for_metrics(spark, job_paths, tmp_path,
     monkeypatch.setattr(frame_cls, "persist", counting)
     cached = spark.sparkContext._jsc.getPersistentRDDs
     before = set(cached())
-    for want, extra in ((0, []), (1, ["--metrics", str(tmp_path / "met")])):
-        del calls[:]
-        assert main(["--input", job_paths["input"],
-                     "--output", str(tmp_path / f"out{want}"), *extra]) == 0
-        assert len(calls) == want, extra
-        assert not set(cached()) - before, extra  # nothing left cached
+    pdir = os.path.join(fixture_dir, "payloads")
+    for mode, src in (("--input", job_paths["input"]),
+                      ("--payloads", pdir), ("--stream-payloads", pdir)):
+        for met in ([], ["--metrics"]):
+            name = f"{mode.strip('-')}{len(met)}"
+            argv = [mode, src, "--output", str(tmp_path / name)]
+            argv += [*met, str(tmp_path / f"{name}_met")] if met else []
+            if mode == "--stream-payloads":
+                argv += ["--checkpoint", str(tmp_path / f"{name}_ck")]
+            del calls[:]
+            assert main(argv) == 0
+            assert calls == [], argv
+            assert not set(cached()) - before, argv  # nothing left cached

@@ -209,29 +209,34 @@ def test_bytes_in_is_one_python_stage(spark):
     assert df.count() == len(glob.glob(os.path.join(src, "*")))
 
 
-# Job commits per mode: (table, source scanned, exchange ceiling,
-# broadcast joins). The data commit is the fold plus the commit's
-# rebalance (and, on --input, the fold's salted repartition); the
-# metrics commit adds the lineage groupBy over the cached fold. On
-# --html the data commit left-joins every page to its blocks (the
-# zero-block sentinel) and the metrics commit joins the pages' bytes
-# to their committed row counts.
+# Job commits per mode: (table, sources scanned, Python stages,
+# exchange ceiling, broadcast joins). The data commit is the fold plus
+# the commit's rebalance, its only exchange. The fold modes' lineage
+# commit is a local frame of what the fold's tasks counted: no scan,
+# no Python, no exchange. A stream epoch's data commit reads the
+# micro-batch from the source's RDD (``Scan ExistingRDD``), which names
+# no location. On --html the data commit left-joins every
+# page to its blocks (the zero-block sentinel) and the metrics commit
+# joins the pages' bytes to their committed row counts.
 JOB_COMMITS = {
-    "--input": [("out", "documents_in.parquet", 2, 0),
-                ("met", "documents_in.parquet", 2, 0)],
-    "--payloads": [("out", "payloads", 1, 0), ("met", "payloads", 1, 0)],
-    "--html": [("out", "html", 2, 1), ("met", "html", 4, 2)],
+    "--input": [("out", ["documents_in.parquet"], 1, 1, 0),
+                ("met", [], 0, 0, 0)],
+    "--payloads": [("out", ["payloads"], 1, 1, 0), ("met", [], 0, 0, 0)],
+    "--stream-payloads": [("out", [], 1, 1, 0),
+                          ("met", [], 0, 0, 0)],
+    "--html": [("out", ["html"], 1, 2, 1), ("met", ["html"], 1, 4, 2)],
 }
 
 
 @pytest.mark.parametrize("mode", sorted(JOB_COMMITS))
 def test_job_commit_plans(spark, fixture_dir, tmp_path, monkeypatch, mode):
     """Each frame extract_job commits reads its source directly through
-    one Python stage: no broadcast join beyond the mode's own, bounded
-    exchanges, and on --input --geom no scan of the geometry table (the
-    job's config never reads header/footer strings). On --html the DOM
-    kernel runs once per commit: the zero-block sentinel must not
-    re-run it."""
+    one Python stage, or, for the fold modes' lineage, nothing at all:
+    no broadcast join beyond the mode's own, bounded exchanges, and on
+    --input --geom no scan of the geometry table (the job's config
+    never reads header/footer strings). One --stream-payloads epoch
+    commits like --payloads. On --html the DOM kernel runs once per
+    commit: the zero-block sentinel must not re-run it."""
     import pdfspark.sinks.snapshot as S
     from jobs.extract_job import main
     from tools.explain_audit import plan_summary
@@ -252,21 +257,23 @@ def test_job_commit_plans(spark, fixture_dir, tmp_path, monkeypatch, mode):
         for r in spark.read.parquet(
                 os.path.join(fixture_dir, "html_pages.parquet")).collect():
             (html / f"{r.doc_id}.html").write_text(r.html or "")
+    payloads = os.path.join(fixture_dir, "payloads")
     src = {"--input": ["--input",
                        os.path.join(fixture_dir, "documents_in.parquet"),
                        "--geom",
                        os.path.join(fixture_dir, "spans_geom.parquet")],
-           "--payloads": ["--payloads",
-                          os.path.join(fixture_dir, "payloads")],
+           "--payloads": ["--payloads", payloads],
+           "--stream-payloads": ["--stream-payloads", payloads,
+                                 "--checkpoint", str(tmp_path / "ck")],
            "--html": ["--html", str(html)]}[mode]
     assert main([*src, "--output", str(tmp_path / "out"),
                  "--metrics", str(tmp_path / "met")]) == 0
     assert [t for t, _, _ in seen] == [c[0] for c in JOB_COMMITS[mode]]
-    for (table, s, plan), (_, scan, max_exch, bhj) in zip(
+    for (table, s, plan), (_, scans, py, max_exch, bhj) in zip(
             seen, JOB_COMMITS[mode]):
-        assert s["pyarrow"] == 1 and s["bhj"] == bhj, (table, plan)
+        assert s["pyarrow"] == py and s["bhj"] == bhj, (table, plan)
         assert s["exch"] <= max_exch, (table, plan)
-        assert s["scans"] == [scan], (table, plan)
+        assert s["scans"] == scans, (table, plan)
 
 
 def test_sections_split_plan(spark, documents_in):

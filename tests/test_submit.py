@@ -63,3 +63,39 @@ def test_spark_submit_py_files(fixture_dir, tmp_path, spark):
     m = read_committed(spark, metrics)
     assert m is not None
     assert m.groupBy().sum("doc_count").collect()[0][0] == docs.count()
+
+
+def test_build_session_defaults_to_the_cpus_it_may_use(monkeypatch):
+    """Without SPARK_GRAFT_CPUS, build_session asks for one local task
+    slot (and one shuffle partition) per CPU in the process's affinity
+    mask, not a fixed count. Checked on a stand-in builder, so no
+    second session starts."""
+    import pdfspark.session as S
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def master(self, m):
+            self.conf["master"] = m
+            return self
+
+        def appName(self, _name):
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(S.SparkSession, "builder", Builder())
+    n = len(os.sched_getaffinity(0))
+    conf = S.build_session()
+    assert conf["master"] == f"local[{n}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(n)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setattr(S.SparkSession, "builder", Builder())
+    assert S.build_session()["master"] == "local[3]"
