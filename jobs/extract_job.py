@@ -35,24 +35,24 @@ Usage:
         --compact [N] --output <table path> [--metrics ...]
 
 Behavior (all per SURVEY.md §4 / BASELINE.json north_rule):
- - one route for every document, folded into one ordered row in one
-   task: --input and --payloads each fold inside the task that scans
-   the document, over the scan coalesced (narrow) to the default
-   parallelism, so the commit's rebalance is the call's only shuffle
-   (no skew split — the one nested output row dominates, so chunking a
-   big doc lost to the plain fold up to 1M spans; BASELINE.md, "Job
-   route A/B")
+ - one route for every document, in the one task that scans it,
+   over the scan coalesced (narrow) to the default parallelism, so the
+   commit's rebalance is the call's only shuffle: --input and
+   --payloads fold a document into one ordered row (no skew split —
+   the one nested output row dominates, so chunking a big doc lost to
+   the plain fold up to 1M spans; BASELINE.md, "Job route A/B"), and
+   --html turns a page into its block rows, or one '_empty' row
  - per-partition lineage rows (partition_id, doc_count, bytes_in,
-   spans_out, wall_ms) of the fold's tasks committed to --metrics under
-   the SAME snapshot id as the data (multi-table commit; a crash
-   between the two manifest publishes is healed by the sink's recover
-   at the next start, so committed documents can never lose their
-   lineage rows). The fold's tasks count them in the fold's own pass
-   (an accumulator keyed by partition id), so the lineage costs no
-   cache, no second read of the fold and no Python stage; under a
-   partial --payloads --resume they also count the payloads the fold
-   decoded and the resume anti-join then skipped, since their fold
-   time was spent
+   spans_out = rows out, wall_ms) of those tasks committed to
+   --metrics under the SAME snapshot id as the data (multi-table
+   commit; a crash between the two manifest publishes is healed by the
+   sink's recover at the next start, so committed documents can never
+   lose their lineage rows). The tasks count them in their own pass
+   (an accumulator keyed by partition id), so no mode's lineage costs
+   a cache, a second read or a Python stage; under a partial
+   --payloads --resume they also count the payloads the fold decoded
+   and the resume anti-join then skipped, since their fold time was
+   spent
  - every write — batch append, stream epoch, --compact rewrite — is a
    manifest-committed snapshot through one protocol
    (pdfspark/sinks/snapshot.py: staging write -> atomic rename ->
@@ -109,30 +109,25 @@ def _prepare_output(spark, args, frame):
     return frame
 
 
-def _run_html_mode(spark, args) -> int:
-    """--html: directory of .html pages -> main-content block rows
-    (boilerplate strip + DOM heuristics), with the SAME snapshot
-    commit, --resume exactly-once, crash-reconcile and lineage
-    machinery as the span fold. Lineage rows are keyed by the page
-    scan's partition ids; each page's committed rows (its blocks, or
-    its zero-block sentinel) count under its own page's id."""
+def _read_pages(spark, path):
+    """--html's source: the .html/.htm pages under ``path`` as (doc_id
+    = file name stem, html, bytes_in) rows. Raises on two files with
+    the same stem."""
     from pyspark.sql import functions as F
-
-    from pdfspark.operators.html_main import main_content_blocks
 
     pages = (
         spark.read.format("binaryFile")
         # brace glob: real page corpora mix .html and .htm
         .option("pathGlobFilter", "*.{html,htm}")
-        .load(args.html)
+        .load(path)
         .select(
             F.regexp_extract(F.col("path"), r"([^/]+)\.html?$", 1)
             .alias("doc_id"),
             # F4 quarantine, not a stage kill: bare decode() throws
             # MALFORMED_CHARACTER_CODING under Spark 4 ANSI on the
             # first latin-1 page — gate it so malformed bytes become
-            # NULL html, which the operator passes through as zero
-            # blocks and the sentinel below commits as '_empty'
+            # NULL html, which the page kernel commits as one '_empty'
+            # row, like any page with no blocks
             F.when(
                 F.expr("is_valid_utf8(cast(content as string))"),
                 F.decode("content", "UTF-8"),
@@ -154,55 +149,7 @@ def _run_html_mode(spark, args) -> int:
             f"(stem maps .html/.htm and subdirs together): "
             f"{[r.doc_id for r in dup]} — rename the files or split "
             "the input directories")
-
-    pages = _prepare_output(spark, args, pages)
-
-    pages = pages.persist()
-    blocks = main_content_blocks(pages)
-    # zero-block pages (empty body, script-only, undecodable bytes)
-    # MUST still commit a row: resume anti-joins committed doc_ids,
-    # so an uncommitted page would be re-scanned — and its lineage
-    # re-appended to --metrics — on every --resume run forever. Every
-    # page left-joins its blocks, and a page with none gets the
-    # sentinel: one reference to blocks, so the DOM kernel runs once.
-    sentinel = {"block_id": -1, "tag": "_empty", "n_words": 0,
-                "n_link_words": 0, "link_density": 0.0,
-                "dom_boiler": False, "is_content": False, "text": ""}
-    no_block = F.col("block_id").isNull()
-    out = pages.select("doc_id").join(blocks, "doc_id", "left").select(
-        "doc_id",
-        *[F.when(no_block, F.lit(v)).otherwise(F.col(c)).alias(c)
-          for c, v in sentinel.items()])
-    aux = None
-    if args.metrics:
-        # the lineage is the committed frame's only second reader:
-        # persist for it alone. Count each page's committed rows
-        # (blocks or its sentinel) under THAT page's partition id: the
-        # committed rows come out of a join, so their own partition
-        # ids name no page partition
-        out = out.persist()
-        per_page = out.groupBy("doc_id").agg(
-            F.count("*").cast("long").alias("spans_out"))
-        metrics = (
-            pages.select("doc_id", "bytes_in",
-                         F.spark_partition_id().alias("partition_id"))
-            .join(per_page, "doc_id", "left")
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").cast("long").alias("doc_count"),
-                F.sum("bytes_in").cast("long").alias("bytes_in"),
-                F.sum("spans_out").cast("long").alias("spans_out"),
-            )
-            .withColumn("wall_ms", F.lit(None).cast("double"))
-        )
-        aux = [(lambda: metrics, args.metrics)]
-    try:
-        _commit(args, out, aux)
-    finally:
-        pages.unpersist()
-        if args.metrics:
-            out.unpersist()
-    return 0
+    return pages
 
 
 def _commit(args, out, aux) -> None:
@@ -221,7 +168,11 @@ def _commit(args, out, aux) -> None:
         part = "bucket"
     snap = commit_append(out, args.output, fmt=args.format,
                          partition_by=part, aux=aux)
-    print(f"extract_job: wrote snapshot {snap} to {args.output}")
+    if snap is None:
+        print(f"extract_job: no new rows; committed nothing to "
+              f"{args.output}")
+    else:
+        print(f"extract_job: wrote snapshot {snap} to {args.output}")
 
 
 def _run_compact_mode(spark, args) -> int:
@@ -329,10 +280,7 @@ def main(argv=None) -> int:
     # only sets the engine's semantic defaults (AQE, Arrow, UTC).
     from pdfspark.session import build_session
 
-    if SparkSession.getActiveSession() is not None:
-        spark = SparkSession.getActiveSession()
-    else:
-        spark = build_session()
+    spark = SparkSession.getActiveSession() or build_session()
 
     from pdfspark.operators.extract import (
         extract_documents,
@@ -352,6 +300,8 @@ def main(argv=None) -> int:
     if n_inputs != 1:
         ap.error("exactly one of --input / --payloads / --html / "
                  "--stream-payloads is required (non-empty)")
+    if args.geom and not args.input:
+        ap.error("--geom applies to --input only")
 
     if args.stream_payloads:
         if not args.checkpoint:
@@ -373,32 +323,32 @@ def main(argv=None) -> int:
         )
         return 0
 
-    if args.html:
-        return _run_html_mode(spark, args)
-
-    # --metrics: the fold's tasks count the lineage as they fold, and
+    # --metrics: the kernel's tasks count the lineage as they run, and
     # the commit writes it after the data write
     lineage = lineage_accumulator(spark) if args.metrics else None
-    if args.payloads:
-        if args.geom:
-            ap.error("--geom applies to --input only")
+    fold_cols = ("doc_id", "status", "spans", "sections")
+    if args.html:
+        from pdfspark.operators.html_main import page_blocks
+
+        out = page_blocks(
+            _prepare_output(spark, args, _read_pages(spark, args.html)),
+            lineage)
+    elif args.payloads:
         from pdfspark.sources.binary_decode import (
             extract_payloads,
             read_payloads,
         )
 
         # doc_ids exist only after decode: --resume filters folded rows
-        full = _prepare_output(spark, args, extract_payloads(
-            read_payloads(spark, args.payloads), lineage))
+        out = _prepare_output(spark, args, extract_payloads(
+            read_payloads(spark, args.payloads), lineage)).select(*fold_cols)
     else:
-        full = extract_documents(
+        out = extract_documents(
             _prepare_output(spark, args, spark.read.parquet(args.input)),
-            lineage=lineage)
+            lineage=lineage).select(*fold_cols)
 
-    aux = None
-    if args.metrics:
-        aux = [(lambda: lineage_frame(spark, lineage), args.metrics)]
-    _commit(args, full.select("doc_id", "status", "spans", "sections"), aux)
+    _commit(args, out, [(lambda: lineage_frame(spark, lineage), args.metrics)]
+            if args.metrics else None)
     return 0
 
 

@@ -21,6 +21,18 @@ def _read_out(spark, output, fmt="parquet"):
     return df
 
 
+def _run_counting_jobs(spark, group, argv):
+    """main(argv)'s exit code and the number of Spark jobs it ran,
+    counted as the jobs of a job group named ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, f"extract_job {argv[0]}")
+    try:
+        rc = main(argv)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rc, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _parquet_layout(paths):
     """What the sink's writer settings decide, over every column chunk
     of ``paths``: the set of codecs, whether any chunk has a
@@ -222,21 +234,16 @@ def test_job_geom_is_not_read(spark, job_paths, tmp_path, monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(BP, "header_footer", counting)
-    sc = spark.sparkContext
     cols = ("doc_id", "status", "spans", "sections")
     rows, n_jobs = {}, {}
     for name, geom in (("geom", ["--geom", job_paths["geom"]]),
                        ("nogeom", [])):
         out = str(tmp_path / name)
-        group = f"{tmp_path.name}-{name}"
-        sc.setJobGroup(group, f"extract_job --input {name}")
-        try:
-            assert main(["--input", job_paths["input"], *geom,
-                         "--output", out,
-                         "--metrics", str(tmp_path / f"{name}_met")]) == 0
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        n_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        rc, n_jobs[name] = _run_counting_jobs(
+            spark, f"{tmp_path.name}-{name}",
+            ["--input", job_paths["input"], *geom, "--output", out,
+             "--metrics", str(tmp_path / f"{name}_met")])
+        assert rc == 0
         rows[name] = sorted(_read_out(spark, out).select(*cols).collect())
     assert calls == []
     assert rows["geom"] == rows["nogeom"]
@@ -284,10 +291,10 @@ def test_job_crash_between_data_and_metrics_manifest_heals(
     assert m.groupBy().sum("doc_count").collect()[0][0] == docs.count()
 
 
-def test_job_resume_is_exactly_once(spark, job_paths):
+def test_job_resume_is_exactly_once(spark, job_paths, capsys):
     """Second run with --resume must add zero documents (anti-join
     against the committed snapshot), and with nothing left to write it
-    commits no snapshot, neither data nor metrics."""
+    commits no snapshot, neither data nor metrics, and says so."""
     docs = spark.read.parquet(job_paths["input"])
     before = _read_out(spark, job_paths["output"]).count()
     snaps = {t: committed_snapshots(job_paths[t])
@@ -298,6 +305,10 @@ def test_job_resume_is_exactly_once(spark, job_paths):
         "--buckets", str(N_BUCKETS), "--resume",
     ])
     assert rc == 0
+    printed = capsys.readouterr().out
+    assert ("extract_job: no new rows; committed nothing to "
+            f"{job_paths['output']}") in printed, printed
+    assert "wrote snapshot" not in printed, printed
     out = _read_out(spark, job_paths["output"])
     assert out.count() == before == docs.count()
     assert out.select("doc_id").distinct().count() == docs.count()
@@ -808,8 +819,14 @@ def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):
 
     out = str(tmp_path / "blocks_out")
     met = str(tmp_path / "blocks_metrics")
-    rc = main(["--html", hdir, "--output", out, "--metrics", met])
+    # 5 Spark jobs: the stem-collision check (its groupBy's two
+    # stages), the page kernel with the commit's rebalance, the data
+    # write and the lineage write
+    rc, n_jobs = _run_counting_jobs(
+        spark, f"{tmp_path.name}-html",
+        ["--html", hdir, "--output", out, "--metrics", met])
     assert rc == 0
+    assert n_jobs == 5
 
     got = {}
     for r in _read_out(spark, out).collect():
@@ -827,6 +844,11 @@ def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):
     assert sum(r.spans_out for r in m) == n_blocks
     assert sum(r.bytes_in for r in m) == sum(
         len(h.encode()) for h in pages.values())
+    # the page kernel's own tasks counted it: each row names one of
+    # them and carries their time
+    par = spark.sparkContext.defaultParallelism
+    assert all(0 <= r.partition_id < par for r in m), m
+    assert all(r.wall_ms is not None and r.wall_ms >= 0 for r in m), m
 
     # resume: add one page, rerun — only the new doc's blocks append
     with open(_os.path.join(hdir, "page-c.html"), "w") as fh:
@@ -1531,9 +1553,9 @@ def test_snapshot_table_random_op_sequences_preserve_rows(spark, tmp_path):
 
 def test_job_fold_modes_persist_nothing(spark, job_paths, fixture_dir,
                                        tmp_path, monkeypatch):
-    """The fold's own tasks count the --metrics lineage, so no fold
-    mode (--input, --payloads, --stream-payloads) caches a frame, with
-    or without --metrics, and none leaves one cached."""
+    """The kernel's own tasks count the --metrics lineage, so no job
+    mode (--input, --payloads, --stream-payloads, --html) caches a
+    frame, with or without --metrics, and none leaves one cached."""
     frame_cls = type(spark.range(1))
     real = frame_cls.persist
     calls = []
@@ -1546,8 +1568,14 @@ def test_job_fold_modes_persist_nothing(spark, job_paths, fixture_dir,
     cached = spark.sparkContext._jsc.getPersistentRDDs
     before = set(cached())
     pdir = os.path.join(fixture_dir, "payloads")
+    hdir = tmp_path / "html"
+    hdir.mkdir()
+    for r in spark.read.parquet(
+            os.path.join(fixture_dir, "html_pages.parquet")).collect():
+        (hdir / f"{r.doc_id}.html").write_text(r.html or "")
     for mode, src in (("--input", job_paths["input"]),
-                      ("--payloads", pdir), ("--stream-payloads", pdir)):
+                      ("--payloads", pdir), ("--stream-payloads", pdir),
+                      ("--html", str(hdir))):
         for met in ([], ["--metrics"]):
             name = f"{mode.strip('-')}{len(met)}"
             argv = [mode, src, "--output", str(tmp_path / name)]

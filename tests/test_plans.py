@@ -210,33 +210,32 @@ def test_bytes_in_is_one_python_stage(spark):
 
 
 # Job commits per mode: (table, sources scanned, Python stages,
-# exchange ceiling, broadcast joins). The data commit is the fold plus
-# the commit's rebalance, its only exchange. The fold modes' lineage
-# commit is a local frame of what the fold's tasks counted: no scan,
-# no Python, no exchange. A stream epoch's data commit reads the
-# micro-batch from the source's RDD (``Scan ExistingRDD``), which names
-# no location. On --html the data commit left-joins every
-# page to its blocks (the zero-block sentinel) and the metrics commit
-# joins the pages' bytes to their committed row counts.
+# exchange ceiling, broadcast joins). Every mode's data commit is its
+# one Python kernel (the fold, or --html's page kernel) over its source
+# plus the commit's rebalance, its only exchange, and joins nothing.
+# The lineage commit is a local frame of what the kernel's tasks
+# counted: no scan, no Python, no exchange. A stream epoch's data
+# commit reads the micro-batch from the source's RDD (``Scan
+# ExistingRDD``), which names no location.
 JOB_COMMITS = {
     "--input": [("out", ["documents_in.parquet"], 1, 1, 0),
                 ("met", [], 0, 0, 0)],
     "--payloads": [("out", ["payloads"], 1, 1, 0), ("met", [], 0, 0, 0)],
     "--stream-payloads": [("out", [], 1, 1, 0),
                           ("met", [], 0, 0, 0)],
-    "--html": [("out", ["html"], 1, 2, 1), ("met", ["html"], 1, 4, 2)],
+    "--html": [("out", ["html"], 1, 1, 0), ("met", [], 0, 0, 0)],
 }
 
 
 @pytest.mark.parametrize("mode", sorted(JOB_COMMITS))
 def test_job_commit_plans(spark, fixture_dir, tmp_path, monkeypatch, mode):
     """Each frame extract_job commits reads its source directly through
-    one Python stage, or, for the fold modes' lineage, nothing at all:
-    no broadcast join beyond the mode's own, bounded exchanges, and on
+    one Python stage, or, for the lineage, nothing at all: no
+    broadcast join, bounded exchanges, and on
     --input --geom no scan of the geometry table (the job's config
     never reads header/footer strings). One --stream-payloads epoch
-    commits like --payloads. On --html the DOM kernel runs once per
-    commit: the zero-block sentinel must not re-run it."""
+    commits like --payloads, and --html like both: its zero-block
+    sentinel and its lineage come out of the page kernel's one pass."""
     import pdfspark.sinks.snapshot as S
     from jobs.extract_job import main
     from tools.explain_audit import plan_summary
