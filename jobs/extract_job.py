@@ -81,7 +81,10 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
+from collections import Counter
+from urllib.parse import unquote
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:  # not needed when shipped via --py-files
@@ -139,16 +142,19 @@ def _read_pages(spark, path):
     # doc_id = filename stem, so alpha.html + alpha.htm (or the same
     # stem in two subdirs) would silently merge into one document —
     # and --resume would then skip the late twin forever. Fail loudly
-    # with examples instead; the check projects only the path-derived
-    # doc_id, so no page content is read for it.
-    dup = (pages.groupBy("doc_id").count().filter(F.col("count") > 1)
-           .limit(5).collect())
+    # with examples instead. The driver's file listing already names
+    # every page (inputFiles() honours pathGlobFilter), so the check
+    # runs no Spark job; its URIs are percent-encoded (a%20b.html)
+    # where the path column is not, hence the unquote.
+    stems = Counter(
+        re.sub(r"\.html?$", "", unquote(f.rsplit("/", 1)[-1]))
+        for f in pages.inputFiles())
+    dup = sorted(s for s, n in stems.items() if n > 1)[:5]
     if dup:
         raise ValueError(
             "duplicate doc_ids from colliding page filenames "
             f"(stem maps .html/.htm and subdirs together): "
-            f"{[r.doc_id for r in dup]} — rename the files or split "
-            "the input directories")
+            f"{dup} — rename the files or split the input directories")
     return pages
 
 

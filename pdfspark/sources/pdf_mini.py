@@ -54,12 +54,9 @@ render_contents, with the form's ``/Resources /XObject`` map layered
 over the page's, a cycle guard, and a depth bound; a ``Do`` naming a
 missing XObject or an unsupported subtype quarantines the document.
 Inline images (``BI..ID..EI``) emit Image spans at the paint site
-(``inline://<decoded-stream offset>`` refs) with their whole byte
-range excised from the operator scan first — the raw sample bytes can
-spell ``BT``/``Do`` and must never parse as content (the delimiter is
-the standard whitespace-EI-token heuristic pdfminer also uses; a
-full ``BI..ID..EI`` spelling inside a text STRING is the accepted
-approximation of a non-tokenizing scan).
+(``inline://<decoded-stream offset>`` refs); the content tokenizer
+skips their raw sample bytes, which can spell ``BT``/``Do``, up to the
+whitespace-EI-token boundary pdfminer also uses.
 
 Stream filters: FlateDecode (stdlib zlib), ASCIIHexDecode,
 ASCII85Decode (stdlib base64) and LZWDecode (TIFF flavor, EarlyChange
@@ -90,7 +87,6 @@ standard escapes.
 from __future__ import annotations
 
 import base64
-import bisect
 import re
 import zlib
 
@@ -106,30 +102,10 @@ _TITLE_RE = re.compile(rb"/Title\s*\(((?:[^()\\]|\\.)*)\)")
 # hex-string /Title — the form writers use for UTF-16BE titles
 # (<FEFF...>); (?!<) keeps dict-open `<<` from matching
 _TITLE_HEX_RE = re.compile(rb"/Title\s*<(?!<)([0-9A-Fa-f\s]*)>")
-# token-boundary BT/ET (the q/Q idiom): 'ET' inside a longer token
-# (a font name like /NETFont in a Tf) must not terminate the block.
-# String contents are excluded by matching on the string-masked scan
-# copy, not here — '(NET income) Tj' was the round-5 truncation bug.
-_BT_RE = re.compile(
-    rb"(?<![A-Za-z])BT(?![A-Za-z])(.*?)(?<![A-Za-z])ET(?![A-Za-z])",
-    re.DOTALL)
-# show-text operators: Tj, the move-and-show pair ' and " (older
-# word-processor writers emit one (line) ' per line instead of
-# Td/Tj), and TJ arrays. The positioning side effects of ' / " (T*,
-# word/char spacing) don't change the span model — each show is one
-# span, like Tj.
-_SHOW_RE = re.compile(
-    rb"\(((?:[^()\\]|\\.)*)\)\s*(?:Tj|'|\")"
-    rb"|<([0-9A-Fa-f\s]*)>\s*(?:Tj|'|\")"
-    rb"|\[(.*?)\]\s*TJ",
-    re.DOTALL)
-# any string token inside BT..ET — used by the wrong-parse guard: a
-# string the show scan did not consume means a text operator this
-# codec doesn't understand, and parsing on would silently drop text
+# any string token — the decryption pass rewrites every string of a
+# decrypted object body in place through it
 _STR_TOKEN_RE = re.compile(
     rb"\(((?:[^()\\]|\\.)*)\)|<(?!<)([0-9A-Fa-f\s]*)>", re.DOTALL)
-_TJ_STR_RE = re.compile(
-    rb"\(((?:[^()\\]|\\.)*)\)|<([0-9A-Fa-f\s]*)>")
 _STREAM_START_RE = re.compile(rb"stream(\r\n|\n)")
 # (?![0-9]) pins the full number first — without it, backtracking lets
 # a multi-digit indirect length like "/Length 50 0 R" match a truncated
@@ -157,59 +133,43 @@ _TRAILER_DICT_RE = re.compile(rb"trailer\s*<<(.*?)>>", re.DOTALL)
 _ENCRYPT_RE = re.compile(rb"/Encrypt\s*(\d+\s+\d+\s+R|<<)")
 _RES_REF_RE = re.compile(rb"/Resources\s+(\d+)\s+\d+\s+R")
 _XOBJ_DICT_RE = re.compile(rb"/XObject\s*<<(.*?)>>", re.DOTALL)
-# PDF names are not \w-limited: real writers emit /Image-1, /F#23oo
-# (§7.3.5 regular characters incl. '#' escapes). The name class below
-# is shared by the resource-dict parse, the paint scan and Tf so a
-# hyphenated name binds on both sides instead of silently skipping
-# the paint (the documented unresolvable-XObject quarantine relies on
-# the Do matching in the first place).
-_NAME_CLS = rb"[^\s/<>\[\]()%{}]+"
-_XOBJ_NAME_RE = re.compile(rb"/(" + _NAME_CLS + rb")\s+(\d+)\s+0\s+R")
-_DO_RE = re.compile(rb"/(" + _NAME_CLS + rb")\s+Do(?![A-Za-z])")
-# inline image segment: BI <dict entries> ID <one ws byte><binary> EI.
-# The EI delimiter is the standard whitespace-EI-token-boundary
-# heuristic (what pdfminer's get_inline_data implements): raw sample
-# bytes can contain anything, including operator spellings.
-_INLINE_RE = re.compile(
-    rb"(?<![A-Za-z0-9])BI\b(.*?)\sID\s(.*?)\sEI(?![A-Za-z0-9])",
-    re.DOTALL,
-)
+# PDF whitespace is §7.2.2's six bytes plus VT, which pdfminer's `\s`
+# also skips; a regular character is anything but whitespace and the
+# delimiters. PDF names are not \w-limited — real writers emit
+# /Image-1, /F#23oo (§7.3.5 regular characters incl. '#' escapes) — so
+# the resource-dict parse and the content tokenizer both take every
+# regular character, and a hyphenated name binds on both sides of a
+# paint.
+_PDF_WS = rb"\x00\t\n\x0b\x0c\r "
+_REGULAR = rb"[^" + _PDF_WS + rb"()<>\[\]{}/%]"
+_XOBJ_NAME_RE = re.compile(rb"/(" + _REGULAR + rb"+)\s+(\d+)\s+0\s+R")
 _SUBTYPE_IMG_RE = re.compile(rb"/Subtype\s*/Image\b")
 _FONT_DICT_RE = re.compile(rb"/Font\s*<<(.*?)>>", re.DOTALL)
-_TF_RE = re.compile(rb"/(" + _NAME_CLS + rb")\s+([\d.+-]+)\s+Tf")
-# text-state operators (PDF 32000-1 §9.4.2) for the geometry slice:
-# Td/TD line moves, Tm matrix set, T* next-line, TL leading. Scanned
-# over a string-masked copy of the stream so operand-shaped bytes
-# inside show strings can't false-match.
 _NUM = rb"[+-]?(?:\d+\.?\d*|\.\d+)"
-_TD_RE = re.compile(
-    rb"(" + _NUM + rb")\s+(" + _NUM + rb")\s+(Td|TD)\b")
-_TM_RE = re.compile(
-    rb"(" + _NUM + rb")\s+(" + _NUM + rb")\s+(" + _NUM + rb")\s+("
-    + _NUM + rb")\s+(" + _NUM + rb")\s+(" + _NUM + rb")\s+Tm\b")
-_TSTAR_RE = re.compile(rb"T\*")
-_TL_RE = re.compile(rb"(" + _NUM + rb")\s+TL\b")
-# spacing state (§9.3.2-3): char spacing, word spacing, horizontal
-# scaling — all enter the advance; persist across BT blocks
-_TC_RE = re.compile(rb"(" + _NUM + rb")\s+Tc\b")
-_TW_RE = re.compile(rb"(" + _NUM + rb")\s+Tw\b")
-_TZ_RE = re.compile(rb"(" + _NUM + rb")\s+Tz\b")
-_TS_RE = re.compile(rb"(" + _NUM + rb")\s+Ts\b")
-# the " operator's own aw ac operands (word/char spacing set by the
-# show itself, §9.4.3)
-_DQ_OPS_RE = re.compile(
-    rb"(" + _NUM + rb")\s+(" + _NUM + rb")\s*$")
-_CM_RE = re.compile(
-    rb"(" + _NUM + rb")\s+(" + _NUM + rb")\s+(" + _NUM + rb")\s+("
-    + _NUM + rb")\s+(" + _NUM + rb")\s+(" + _NUM + rb")\s+cm\b")
+# one content-stream token (ISO 32000-1 §7.2-7.3): whitespace and %
+# comments (unnamed, skipped), numbers, names, literal strings — a
+# string whose parentheses nest falls to `lpar`, balanced by
+# _nested_string — hex strings, array/dict brackets, and operator
+# keywords (any run of regular characters: Tj, T*, ', "). `junk` is a
+# delimiter no grammar rule takes (a stray `)`, `{` or bad hex `<`).
+_TOKEN_RE = re.compile(
+    rb"[" + _PDF_WS + rb"]+|%[^\r\n]*"
+    rb"|(?P<num>" + _NUM + rb")"
+    rb"|/(?P<name>" + _REGULAR + rb"*)"
+    rb"|\((?P<str>(?:[^()\\]|\\.)*)\)|(?P<lpar>\()"
+    rb"|<(?P<hex>[0-9A-Fa-f" + _PDF_WS + rb"]*)>"
+    rb"|(?P<open><<|\[)|(?P<close>>>|\])"
+    rb"|(?P<op>" + _REGULAR + rb"+)|(?P<junk>.)",
+    re.DOTALL)
+_PAREN_RE = re.compile(rb"\\.|[()]", re.DOTALL)
+# an inline image's sample bytes run from one whitespace byte after ID
+# to the whitespace-EI-token boundary (pdfminer's get_inline_data
+# heuristic): the bytes themselves can spell anything
+_EI_RE = re.compile(rb"\sEI(?![A-Za-z0-9])")
 _MEDIABOX_RE = re.compile(
     rb"/MediaBox\s*\[\s*(" + _NUM + rb")\s+(" + _NUM + rb")\s+("
     + _NUM + rb")\s+(" + _NUM + rb")\s*\]")
 _ROTATE_RE = re.compile(rb"/Rotate\s+(-?\d+)")
-# TJ array elements: strings AND kerning numbers (thousandths of an
-# em subtracted from the advance, §9.4.3)
-_TJ_ELEM_RE = re.compile(
-    rb"\(((?:[^()\\]|\\.)*)\)|<([0-9A-Fa-f\s]*)>|(" + _NUM + rb")")
 # deterministic glyph metrics for the geometry slice: 0.5 em advance
 # per decoded char, 1.0 em line box above the baseline. pdfminer uses
 # the font's real widths/ascent; without embedded metrics this
@@ -258,8 +218,6 @@ _ENCMETA_RE = re.compile(rb"/EncryptMetadata\s+(true|false)")
 # R6 (AES-256) key-wrap entries (§7.6.4)
 _UE_LIT_RE = re.compile(rb"/UE\s*\(((?:[^()\\]|\\.)*)\)", re.DOTALL)
 _UE_HEX_RE = re.compile(rb"/UE\s*<(?!<)([0-9A-Fa-f\s]*)>")
-_OE_LIT_RE = re.compile(rb"/OE\s*\(((?:[^()\\]|\\.)*)\)", re.DOTALL)
-_OE_HEX_RE = re.compile(rb"/OE\s*<(?!<)([0-9A-Fa-f\s]*)>")
 _PERMS_LIT_RE = re.compile(rb"/Perms\s*\(((?:[^()\\]|\\.)*)\)",
                            re.DOTALL)
 _PERMS_HEX_RE = re.compile(rb"/Perms\s*<(?!<)([0-9A-Fa-f\s]*)>")
@@ -782,8 +740,8 @@ def build_tiny_pdf(doc_id: str, pages: list[list[str]],
     `/Fm1 Do` ahead of every page's text — exercising the decoder's
     form recursion. ``inline_images`` gives a per-page count of BI..
     ID..EI inline images whose raw sample bytes deliberately spell
-    text/paint operators (" BT ", " Tj ", " Do ") — the masking
-    hazard the decoder's excision pass exists for. ``quote_show``
+    text/paint operators (" BT ", " Tj ", " Do ") — bytes the
+    decoder's tokenizer must skip unread. ``quote_show``
     emits each page's first line with Tj and the rest with the
     move-and-show operators (`(line) '`, and the last line as
     `aw ac (line) "`) — the older word-processor-writer shape.
@@ -813,7 +771,7 @@ def build_tiny_pdf(doc_id: str, pages: list[list[str]],
     ``tagged=True`` wraps every Tj in a §14.6 marked-content sequence
     (`/P << /MCID n /ActualText (line) >> BDC .. EMC`) — the
     accessibility shape modern office writers emit, whose property
-    strings are operands the decoder must mask, not shows.
+    strings are BDC operands, not shows.
     ``rotate`` writes a `/Rotate N` page attribute — on every page
     object, or (``rotate_on_parent=True``) once on the /Pages tree
     node so the decoder's inheritance path (§7.7.3.4) is exercised —
@@ -2701,433 +2659,344 @@ def _decode_codes(bs: bytes, cmap: dict) -> str:
     return "".join(out)
 
 
-def _mask_marked_content_dicts(cdata: bytes) -> bytes:
-    """Space-fill (offset-preserving) every inline dictionary whose
-    next token is the BDC or DP marked-content operator (§14.6):
-    tagged PDFs — the accessibility default every modern office
-    writer emits — carry property lists like
-    `/Span << /ActualText (x) >> BDC` whose STRINGS are operands,
-    not shows. pdfminer ignores marked-content operands entirely;
-    without the mask the wrong-parse guard would quarantine every
-    tagged document over its own tag metadata. The balanced `<<`/`>>`
-    scan skips literal and hex strings inside the dict, so a
-    `)`/`>>` spelling INSIDE an /Alt or /ActualText value cannot
-    end the dict early; a dict that still fails to balance is left
-    unmasked and the existing guards quarantine as before (safe
-    fail: quarantine, never a silent wrong parse). Name-form
-    property lists (`/Tag /Name BDC`) and BMC/MP/EMC carry no
-    strings and need no masking."""
-    out = bytearray(cdata)
-    n = len(cdata)
-    i = 0
-    while True:
-        s = cdata.find(b"<<", i)
-        if s == -1:
-            break
-        depth = 0
-        j = s
-        while j < n:
-            b2 = cdata[j:j + 2]
-            if b2 == b"<<":
-                depth += 1
-                j += 2
-            elif b2 == b">>":
-                depth -= 1
-                j += 2
-                if depth == 0:
-                    break
-            elif cdata[j:j + 1] in (b"(", b"<"):
-                sm = _STR_TOKEN_RE.match(cdata, j)
-                # a stray ( or < that is not a well-formed string
-                # advances one byte; the dict then typically fails to
-                # balance and is left for the guards
-                j = sm.end() if sm is not None else j + 1
-            else:
-                j += 1
-        if depth != 0:
-            break
-        if re.match(rb"\s*(BDC|DP)\b", cdata[j:]) is not None:
-            out[s:j] = b" " * (j - s)
-        i = j
-    return bytes(out)
+def _show_text(raw: bytes, cmap) -> str:
+    """Show-string bytes -> text under the active font's decode table
+    (``_font_cmap``): the latin-1 identity, a simple-font /Encoding or
+    ToUnicode CMap codes."""
+    if cmap is None:
+        return raw.decode("latin-1")
+    if "enc_map" in cmap:
+        return _decode_simple(raw, cmap["enc_map"])
+    return _decode_codes(raw, cmap)
+
+
+def _nested_string(data: bytes, start: int) -> tuple[bytes, int]:
+    """Body of the literal string whose `(` ends just before ``start``
+    and whose parentheses nest (§7.3.4.2: balanced pairs need no
+    escape), plus the offset after its closing `)`. A string still
+    open at the end of the stream would swallow every operator after
+    it, so it raises."""
+    depth = 1
+    for m in _PAREN_RE.finditer(data, start):
+        tok = m.group()
+        if tok == b"(":
+            depth += 1
+        elif tok == b")":
+            depth -= 1
+            if not depth:
+                return data[start:m.start()], m.end()
+    raise ValueError("unterminated string")
+
+
+def _last_nums(args: list, n: int) -> list | None:
+    """The last ``n`` operands when all are numbers, else None: the
+    operator is then skipped, as pdfminer skips one short of operands."""
+    nums = args[-n:]
+    if len(nums) == n and all(type(x) is float for x in nums):
+        return nums
+    return None
+
+
+def _unit_box(ctm) -> tuple:
+    """Axis-aligned envelope of the unit square under ``ctm``: where an
+    image paints (§8.3.4)."""
+    a, b, c, d, e, f = ctm
+    xs = (e, e + a, e + c, e + a + c)
+    ys = (f, f + b, f + d, f + b + d)
+    return (min(xs), min(ys), max(xs), max(ys))
+
+
+def _next_line(tm: list, lm: list, tx: float, ty: float) -> None:
+    """Td (§9.4.2): translate the line matrix by (tx, ty) in its own
+    space and start the text matrix there."""
+    lm[4] = tx * lm[0] + ty * lm[2] + lm[4]
+    lm[5] = tx * lm[1] + ty * lm[3] + lm[5]
+    tm[:] = lm
+
+
+def _paint_xobject(objs, name: str, xobjs, fonts, emit, active,
+                   cmap_cache, ctm) -> None:
+    """``/name Do`` (§8.8): /Image emits an Image span with the
+    deterministic media_ref ``xobj://<obj>/<name>`` and the unit-square
+    box under ``ctm`` (None before any cm); /Form walks the form's own
+    content stream with its /Resources /XObject and /Font maps layered
+    over the inherited ones. A missing XObject, another subtype or a
+    form cycle quarantines."""
+    onum = xobjs.get(name.encode("latin-1"))
+    xbody = objs.get(onum) if onum is not None else None
+    if xbody is None:
+        raise ValueError(f"unresolvable XObject /{name}")
+    head = (xbody[:xbody.find(b"stream")]
+            if b"stream" in xbody else xbody)
+    if _SUBTYPE_IMG_RE.search(head):
+        emit("Image", "", media_ref=f"xobj://{onum}/{name}",
+             bbox=None if ctm is None else _unit_box(ctm))
+        return
+    if not _SUBTYPE_FORM_RE.search(head):
+        raise ValueError("unsupported XObject subtype paint")
+    if onum in active:
+        raise ValueError("form XObject cycle")
+    # forms carry indirect '/Resources N 0 R' too — append the
+    # referenced body so the dict scans below see the form's own
+    # fonts/xobjects
+    rrm = _RES_REF_RE.search(head)
+    if rrm is not None:
+        rref = objs.get(int(rrm.group(1)))
+        if rref is None:
+            raise ValueError("missing /Resources object")
+        head = head + b"\n" + rref
+    fx = dict(xobjs)
+    fm = _XOBJ_DICT_RE.search(head)
+    if fm is not None:
+        fx.update({m2.group(1): int(m2.group(2))
+                   for m2 in _XOBJ_NAME_RE.finditer(fm.group(1))})
+    ff = dict(fonts)  # form /Font layers over inherited
+    ffm = _FONT_DICT_RE.search(head)
+    if ffm is not None:
+        ff.update({m2.group(1): int(m2.group(2))
+                   for m2 in _XOBJ_NAME_RE.finditer(ffm.group(1))})
+    _walk_content(objs, _content_stream(xbody), fx, emit, active | {onum},
+                  fonts=ff, cmap_cache=cmap_cache)
+
+
+_IDENT = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
+_CLOSER = {b"[": b"]", b"<<": b">>"}
+_SHOWS = (b"Tj", b"'", b'"', b"TJ")
+_TEXT_SCALARS = (b"TL", b"Tc", b"Tw", b"Tz", b"Ts")
 
 
 def _walk_content(objs, cdata, xobjs, emit, active,
                   fonts=None, cmap_cache=None) -> None:
-    """Interleave BT..ET text blocks and Do XObject paints in STREAM
-    order — span order is the document's reading order contract. A Do
-    inside a BT range is a string byte, not an operator.
+    """Run one content stream through one left-to-right tokenizer pass
+    (§7.8.2: operands, then the operator that takes them), emitting
+    TextBox and Image spans in stream order — span order is the
+    document's reading-order contract. pdfminer, the reference's
+    decoder, reads a stream the same way.
 
-    Do dispatch by /Subtype: /Image emits an Image span with a
-    deterministic media_ref; /Form RECURSES into the form's own
-    content stream (pdfminer's render_contents nesting — running
-    headers and watermarks are Forms in real-world writers), with the
-    form's /Resources /XObject map layered over the inherited one and
-    an `active` object-number set guarding cycles (a self-referencing
-    form quarantines rather than looping). Any other subtype — or a
-    nesting deeper than 8, the depth pdfminer tolerates in practice —
-    quarantines the document: parsing on would silently drop text.
+    State, in stream order:
+    - the text state — Tf font and size, TL, Tc, Tw, Tz, Ts — persists
+      across BT blocks (§9.3.1); TD sets TL, " sets Tw and Tc;
+    - the text and line matrices reset at BT and move under Td, TD,
+      Tm, T*, ' and " (§9.4.2); these and the shows act only inside
+      BT..ET;
+    - the q/Q/cm stack maps the unit square to each image's box
+      (§8.4.2: a paint after Q never sees the popped transform).
 
-    Text decoding is FONT-AWARE: Tf operators are tracked in stream
-    order, and a show under a font carrying /ToUnicode decodes its
-    fixed-width big-endian codes through the CMap (the CID/Type0
-    shape every modern embedded-subset font uses — the latin-1
-    identity would emit garbage for those, a silent wrong parse).
-    Fonts without /ToUnicode keep the latin-1 identity (simple
-    fonts' bytes ARE the character codes). Each walk tracks its own
-    Tf sequence (a form relying on the caller's text state at Do
-    time is out of this slice's scope)."""
+    A show (Tj, ', ", TJ) decodes its strings through the active
+    font — a ToUnicode CMap (the CID shape), a simple /Encoding, else
+    the latin-1 identity — and advances per §9.4.4. Do dispatches
+    through ``_paint_xobject``; a form walks with fresh text and
+    graphics state, and nesting deeper than 8 (what pdfminer tolerates
+    in practice) quarantines. An inline image (BI <dict> ID <data> EI)
+    emits an Image span keyed on the BI offset in the decoded stream
+    (``inline://<offset>``, filter-invariant); its data is skipped
+    unread. BDC/DP take their property lists (tagged-PDF /ActualText
+    strings included) like any operand, and pdfminer ignores them.
+
+    Wrong-parse guards, each a ValueError that quarantines the document
+    instead of silently losing text: inside BT..ET a string operand
+    taken by any operator but a show, BDC or DP ("unconsumed string in
+    text object"); a BT with no ET; an array, dictionary or inline
+    image left open at the end of the stream (it swallowed every
+    operator after it), or a closer that matches no opener; a stray
+    delimiter; an unterminated string or inline image (no EI)."""
     if len(active) > 8:
         raise ValueError("form XObject nesting too deep")
-    # inline images (BI..ID..EI) are located FIRST and their whole
-    # byte ranges masked from the BT/Do scans: the raw sample bytes
-    # between ID and EI can contain accidental operator spellings
-    # ("BT", "/X Do") that a naive scan would misparse as content.
-    # Each paints at its site as an Image span; the media_ref keys on
-    # the segment's offset in the DECODED stream (filter-invariant,
-    # deterministic).
-    inline = [(m.start(), m.end()) for m in _INLINE_RE.finditer(cdata)]
-    if inline:
-        # excise the segments (space-fill, offset-preserving) rather
-        # than filter matches: a regex match STARTING inside image
-        # data still consumes input past the mask, which would
-        # swallow a real BT block that follows the image
-        scan = bytearray(cdata)
-        for s, e in inline:
-            scan[s:e] = b" " * (e - s)
-        cdata = bytes(scan)
-
-    # tagged-PDF marked content: BDC/DP property dicts are operands
-    # (strings included), masked so their /ActualText-style values
-    # never register as shows or trip the unconsumed-string guard
-    if b"BDC" in cdata or b"DP" in cdata:
-        cdata = _mask_marked_content_dicts(cdata)
-
     fonts = fonts or {}
     if cmap_cache is None:
         cmap_cache = {}
-    # string-masked copy for STATE-operator scans (Tf/TL/Td/TD/Tm/T*/
-    # cm): operand-shaped bytes inside show strings ("(0 -14 Td)")
-    # must not register as state changes. Offset-preserving, so event
-    # positions line up with the real stream.
-    sscan = bytearray(cdata)
-    for sm in _STR_TOKEN_RE.finditer(cdata):
-        s_, e_ = sm.span()
-        sscan[s_:e_] = b" " * (e_ - s_)
-    sscan = bytes(sscan)
-    # Tf/TL events over the whole masked stream, in order; the active
-    # font/size/leading at any position is the last event before it —
-    # text state persists across BT blocks within a stream (§9.3.1)
-    tf_events = [(t.start(), t.group(1), float(t.group(2)))
-                 for t in _TF_RE.finditer(sscan)]
-    tl_events = [(t.start(), float(t.group(1)))
-                 for t in _TL_RE.finditer(sscan)]
-    # image geometry: the unit square maps through the CTM at the
-    # paint site, replayed through the q/Q graphics-state stack
-    # (§8.4.2: q pushes a copy, Q restores, cm premultiplies) — a
-    # paint after a Q must NOT see a popped transform
-    gs_events = [(t.start(), "cm",
-                  tuple(float(t.group(i)) for i in range(1, 7)))
-                 for t in _CM_RE.finditer(sscan)]
-    gs_events += [(t.start(), "q", None)
-                  for t in re.finditer(rb"(?<![A-Za-z])q(?![A-Za-z])",
-                                       sscan)]
-    gs_events += [(t.start(), "Q", None)
-                  for t in re.finditer(rb"(?<![A-Za-z])Q(?![A-Za-z])",
-                                       sscan)]
-    gs_events.sort(key=lambda e: e[0])
-
-    # positions are sorted: every at-position lookup is a bisect, not
-    # a rescan from stream start — _font_at runs once per SHOW, so a
-    # linear scan made the walk O(shows x events) on big streams
-    tf_pos = [p for p, _nm, _sz in tf_events]
-
-    def _font_at(pos: int):
-        i = bisect.bisect_left(tf_pos, pos)
-        return tf_events[i - 1][1] if i else None
-
-    tc_events = [(t.start(), float(t.group(1)))
-                 for t in _TC_RE.finditer(sscan)]
-    tw_events = [(t.start(), float(t.group(1)))
-                 for t in _TW_RE.finditer(sscan)]
-    tz_events = [(t.start(), float(t.group(1)))
-                 for t in _TZ_RE.finditer(sscan)]
-    ts_events = [(t.start(), float(t.group(1)))
-                 for t in _TS_RE.finditer(sscan)]
-
-    def _stepper(events, default: float):
-        ps = [p for p, _v in events]
-
-        def at(pos: int) -> float:
-            i = bisect.bisect_left(ps, pos)
-            return events[i - 1][1] if i else default
-
-        return at
-
-    tl_at = _stepper(tl_events, 0.0)
-    tc_at = _stepper(tc_events, 0.0)
-    tw_at = _stepper(tw_events, 0.0)
-    tz_at = _stepper(tz_events, 100.0)
-    ts_at = _stepper(ts_events, 0.0)
-
-    def _state_at(pos: int):
-        i = bisect.bisect_left(tf_pos, pos)
-        size = tf_events[i - 1][2] if i else 12.0
-        return (size, tl_at(pos), tc_at(pos), tw_at(pos),
-                tz_at(pos), ts_at(pos))
-
-    # the q/Q/cm replay carries a STACK, so it cannot bisect — but
-    # paint sites arrive in position order (the event loop below is
-    # sorted), so the replay is INCREMENTAL: each call advances the
-    # cursor from the previous paint instead of rescanning from 0
-    _ident = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
-    _gs = {"i": 0, "ctm": _ident, "any": False}
-    _gs_stack: list[tuple] = []
-
-    def _cm_box(pos: int):
-        i, ctm = _gs["i"], _gs["ctm"]
-        while i < len(gs_events) and gs_events[i][0] < pos:
-            _p, op, mat = gs_events[i]
-            if op == "q":
-                _gs_stack.append(ctm)
-            elif op == "Q":
-                ctm = _gs_stack.pop() if _gs_stack else _ident
+    font, size = None, 12.0
+    state = {b"TL": 0.0, b"Tc": 0.0, b"Tw": 0.0, b"Tz": 100.0, b"Ts": 0.0}
+    in_bt = False
+    tm = list(_IDENT)
+    lm = list(_IDENT)
+    ctm, cm_seen, saved = _IDENT, False, []
+    args: list = []
+    nest: list = []  # open [, << and BI: (opener, outer args, offset)
+    n_str = 0  # strings among the pending operands, at any depth
+    pos, end = 0, len(cdata)
+    while pos < end:
+        m = _TOKEN_RE.match(cdata, pos)
+        pos = m.end()
+        kind = m.lastgroup
+        if kind is None:
+            continue
+        if kind == "num":
+            args.append(float(m.group(kind)))
+            continue
+        if kind == "name":
+            args.append(m.group(kind).decode("latin-1"))
+            continue
+        if kind == "str":
+            args.append(_unescape_bytes(m.group(kind)))
+            n_str += 1
+            continue
+        if kind == "hex":
+            args.append(_hex_bytes(m.group(kind)))
+            n_str += 1
+            continue
+        if kind == "lpar":
+            raw, pos = _nested_string(cdata, pos)
+            args.append(_unescape_bytes(raw))
+            n_str += 1
+            continue
+        if kind == "open":
+            nest.append((m.group(kind), args, m.start()))
+            args = []
+            continue
+        if kind == "close":
+            if not nest or _CLOSER.get(nest[-1][0]) != m.group(kind):
+                raise ValueError("unbalanced array or dictionary")
+            opener, outer, _at = nest.pop()
+            outer.append(args if opener == b"[" else tuple(args))
+            args = outer
+            continue
+        if kind == "junk" and not nest:
+            raise ValueError("stray delimiter in content stream")
+        op = m.group("op")
+        if nest:
+            if op != b"ID" or nest[-1][0] != b"BI":
+                # a keyword inside an array or dict is a value (true,
+                # false, null — or, as pdfminer's PSStackParser reads
+                # it, any spelling or stray delimiter inside a
+                # malformed property list)
+                args.append(None)
+                continue
+            _bi, args, at = nest.pop()
+            ei = _EI_RE.search(cdata, pos + 1)
+            if ei is None:
+                raise ValueError("inline image without EI")
+            pos = ei.end()
+            n_str = 0
+            emit("Image", "", media_ref=f"inline://{at}",
+                 bbox=_unit_box(ctm) if cm_seen else None)
+            continue
+        was_bt = in_bt
+        if op in _SHOWS:
+            shown = args[-1] if in_bt and args else None
+            if op == b"TJ":
+                raws = ([e for e in shown if type(e) is bytes]
+                        if type(shown) is list else None)
             else:
-                _gs["any"] = True
+                raws = [shown] if type(shown) is bytes else None
+            if raws is not None:
+                n_str -= len(raws)
+                fnum = fonts.get(font)
+                cmap = _font_cmap(objs, fnum, cmap_cache)
+                widths = _font_widths(objs, fnum, cmap_cache)
+                # word spacing applies per byte-32 of SINGLE-BYTE
+                # encodings only (§9.3.3) — CID multi-byte codes never
+                # trigger it, so spaces are counted on the raw bytes
+                # and only for non-CMap fonts
+                simple = cmap is None or "enc_map" in cmap
+                text = "".join([_show_text(r, cmap) for r in raws])
+                all_raw = b"".join(raws)
+                n_spaces = all_raw.count(0x20) if simple else 0
+                # TJ kerning, thousandths of an em (§9.4.3)
+                kern = (sum(e for e in shown if type(e) is float)
+                        if op == b"TJ" else 0.0)
+                # ' and " move to the next line BEFORE showing; " also
+                # SETS word/char spacing from its aw ac operands
+                if op == b'"':
+                    awac = _last_nums(args[:-1], 2)
+                    if awac is not None:
+                        state[b"Tw"], state[b"Tc"] = awac
+                if op == b"'" or op == b'"':
+                    _next_line(tm, lm, 0.0, -state[b"TL"])
+                # text-space advance per §9.4.4 — (w0*Tfs + Tc +
+                # Tw_if_space) * Tz% per glyph. w0 comes from the
+                # simple font's declared /Widths table when one is
+                # present (pdfminer's real-metrics path, per CODE byte;
+                # glyph units scale by 1/1000, or by the /FontMatrix
+                # x-scale for Type3 — pdfminer PDFType3Font hscale),
+                # else from the deterministic GLYPH_W model; the box is
+                # the text-space rect (0,rise)-(adv,rise+size) — Ts
+                # lifts the baseline in unscaled text space (§9.3.7)
+                # without entering the line-advance — with all FOUR
+                # corners mapped through Tm (pdfminer's apply_matrix
+                # shape), so rotated/sheared text gets its true
+                # axis-aligned envelope instead of a degenerate box
+                if widths is not None and simple:
+                    w_map, miss, wscale = widths
+                    gw = sum(w_map.get(b, miss) for b in all_raw) \
+                        * wscale * size
+                    n_glyphs = len(all_raw)
+                else:
+                    gw = GLYPH_W * size * len(text)
+                    n_glyphs = len(text)
+                # TJ kern stays thousandths even under Type3: pdfminer's
+                # render_string scales TJ numbers by a fixed 0.001
+                # whatever the font class, and this codec follows its
+                # metrics path (§9.4.3 note: the spec says glyph space,
+                # pdfminer does not special-case it)
+                adv = (gw + state[b"Tc"] * n_glyphs
+                       + state[b"Tw"] * n_spaces
+                       - kern / 1000.0 * size) * (state[b"Tz"] / 100.0)
+                rise = state[b"Ts"]
+                xs, ys = [], []
+                for dx, dy in ((0.0, rise), (adv, rise),
+                               (0.0, rise + size), (adv, rise + size)):
+                    xs.append(tm[4] + dx * tm[0] + dy * tm[2])
+                    ys.append(tm[5] + dx * tm[1] + dy * tm[3])
+                emit("TextBox", text,
+                     bbox=(min(xs), min(ys), max(xs), max(ys)))
+                tm[4] += adv * tm[0]
+                tm[5] += adv * tm[1]
+        elif op == b"Td" or op == b"TD":
+            move = _last_nums(args, 2) if in_bt else None
+            if move is not None:
+                if op == b"TD":
+                    state[b"TL"] = -move[1]
+                _next_line(tm, lm, move[0], move[1])
+        elif op == b"T*":
+            if in_bt:
+                _next_line(tm, lm, 0.0, -state[b"TL"])
+        elif op == b"Tm":
+            mat = _last_nums(args, 6) if in_bt else None
+            if mat is not None:
+                tm[:] = mat
+                lm[:] = mat
+        elif op == b"BT":
+            if in_bt:
+                raise ValueError("BT without ET")
+            in_bt = True
+            tm[:] = _IDENT
+            lm[:] = _IDENT
+        elif op == b"ET":
+            in_bt = False
+        elif op == b"Tf":
+            if (len(args) >= 2 and type(args[-2]) is str
+                    and type(args[-1]) is float):
+                font, size = args[-2].encode("latin-1"), args[-1]
+        elif op in _TEXT_SCALARS:
+            if args and type(args[-1]) is float:
+                state[op] = args[-1]
+        elif op == b"q":
+            saved.append(ctm)
+        elif op == b"Q":
+            ctm = saved.pop() if saved else _IDENT
+        elif op == b"cm":
+            mat = _last_nums(args, 6)
+            if mat is not None:
+                cm_seen = True
                 a1, b1, c1, d1, e1, f1 = mat
                 a2, b2, c2, d2, e2, f2 = ctm
                 ctm = (a1 * a2 + b1 * c2, a1 * b2 + b1 * d2,
                        c1 * a2 + d1 * c2, c1 * b2 + d1 * d2,
                        e1 * a2 + f1 * c2 + e2, e1 * b2 + f1 * d2 + f2)
-            i += 1
-        _gs["i"], _gs["ctm"] = i, ctm
-        if not _gs["any"] and ctm == _ident:
-            return None
-        a2, b2, c2, d2, e2, f2 = ctm
-        xs = [e2, e2 + a2, e2 + c2, e2 + a2 + c2]
-        ys = [f2, f2 + b2, f2 + d2, f2 + b2 + d2]
-        return (min(xs), min(ys), max(xs), max(ys))
-
-    def _show_text(raw_bytes: bytes, cmap) -> str:
-        if cmap is None:
-            return raw_bytes.decode("latin-1")
-        if "enc_map" in cmap:  # simple-font /Encoding table
-            return _decode_simple(raw_bytes, cmap["enc_map"])
-        return _decode_codes(raw_bytes, cmap)
-
-    # BT..ET matched on the STRING-MASKED copy: show operands
-    # containing operator spellings ('(NET income)', '(x ET y)')
-    # must not terminate the text block — offsets line up with the
-    # real stream, whose bytes are sliced per block below
-    bts = [(m.start(), m) for m in _BT_RE.finditer(sscan)]
-    spans_bt = [(m.start(), m.end()) for _p, m in bts]
-    events: list[tuple[int, str, object]] = [
-        (p, "bt", m) for p, m in bts
-    ]
-    for s, _e in inline:
-        events.append((s, "inline", s))
-    for dm in _DO_RE.finditer(sscan):
-        if any(s <= dm.start() < e for s, e in spans_bt):
-            continue
-        events.append((dm.start(), "do", dm))
-    for _pos, tag, m in sorted(events, key=lambda t: t[0]):
-        if tag == "inline":
-            emit("Image", "", media_ref=f"inline://{m}", bbox=_cm_box(m))
-            continue
-        if tag == "do":
-            name = m.group(1)
-            onum = xobjs.get(name)
-            xbody = objs.get(onum) if onum is not None else None
-            if xbody is None:
-                raise ValueError(
-                    f"unresolvable XObject /{name.decode('latin-1')}")
-            head = (xbody[:xbody.find(b"stream")]
-                    if b"stream" in xbody else xbody)
-            if _SUBTYPE_IMG_RE.search(head):
-                emit("Image", "",
-                     media_ref=f"xobj://{onum}/{name.decode('latin-1')}",
-                     bbox=_cm_box(m.start()))
-            elif _SUBTYPE_FORM_RE.search(head):
-                if onum in active:
-                    raise ValueError("form XObject cycle")
-                # forms carry indirect '/Resources N 0 R' too —
-                # append the referenced body so the dict scans below
-                # see the form's own fonts/xobjects
-                rrm = _RES_REF_RE.search(head)
-                if rrm is not None:
-                    rref = objs.get(int(rrm.group(1)))
-                    if rref is None:
-                        raise ValueError("missing /Resources object")
-                    head = head + b"\n" + rref
-                fx = dict(xobjs)
-                fm = _XOBJ_DICT_RE.search(head)
-                if fm is not None:
-                    fx.update({m2.group(1): int(m2.group(2))
-                               for m2 in _XOBJ_NAME_RE.finditer(
-                                   fm.group(1))})
-                ff = dict(fonts)  # form /Font layers over inherited
-                ffm = _FONT_DICT_RE.search(head)
-                if ffm is not None:
-                    ff.update({m2.group(1): int(m2.group(2))
-                               for m2 in _XOBJ_NAME_RE.finditer(
-                                   ffm.group(1))})
-                _walk_content(objs, _content_stream(xbody), fx, emit,
-                              active | {onum},
-                              fonts=ff, cmap_cache=cmap_cache)
-            else:
-                raise ValueError("unsupported XObject subtype paint")
-            continue
-        # the match ran on sscan; take the REAL bytes (string
-        # contents intact) from the same offsets
-        base = m.start(1)
-        body = cdata[base:m.end(1)]
-        sbody = sscan[base:base + len(body)]
-        # text-state machine (§9.4.2): BT resets Tm = Tlm = identity;
-        # Td premultiplies a translation onto Tlm; TD also sets
-        # leading; Tm sets both; T* is Td(0, -TL); ' and " imply T*
-        # before their show. Size/leading enter from the stream-level
-        # state at the BT position (they persist across BT blocks).
-        tm = [1.0, 0.0, 0.0, 1.0, 0.0, 0.0]
-        lm = list(tm)
-        size, lead, tc, tw, tz, rise = _state_at(m.start())
-
-        def _td(tx: float, ty: float) -> None:
-            lm[4] = tx * lm[0] + ty * lm[2] + lm[4]
-            lm[5] = tx * lm[1] + ty * lm[3] + lm[5]
-            tm[:] = lm
-
-        inbody: list[tuple[int, str, object]] = [
-            (t.start(), "show", t) for t in _SHOW_RE.finditer(body)
-        ]
-        inbody += [(t.start(), "td", t) for t in _TD_RE.finditer(sbody)]
-        inbody += [(t.start(), "tm", t) for t in _TM_RE.finditer(sbody)]
-        inbody += [(t.start(), "t*", t) for t in _TSTAR_RE.finditer(sbody)]
-        inbody += [(t.start(), "tl", t) for t in _TL_RE.finditer(sbody)]
-        inbody += [(t.start(), "tf", t) for t in _TF_RE.finditer(sbody)]
-        inbody += [(t.start(), "tc", t) for t in _TC_RE.finditer(sbody)]
-        inbody += [(t.start(), "tw", t) for t in _TW_RE.finditer(sbody)]
-        inbody += [(t.start(), "tz", t) for t in _TZ_RE.finditer(sbody)]
-        inbody += [(t.start(), "ts", t) for t in _TS_RE.finditer(sbody)]
-        consumed: list[tuple[int, int]] = []
-        for _p, knd, t in sorted(inbody, key=lambda ev: ev[0]):
-            if knd == "td":
-                if t.group(3) == b"TD":
-                    lead = -float(t.group(2))
-                _td(float(t.group(1)), float(t.group(2)))
-                continue
-            if knd == "tm":
-                tm[:] = [float(t.group(i)) for i in range(1, 7)]
-                lm[:] = tm
-                continue
-            if knd == "t*":
-                _td(0.0, -lead)
-                continue
-            if knd == "tl":
-                lead = float(t.group(1))
-                continue
-            if knd == "tf":
-                size = float(t.group(2))
-                continue
-            if knd == "tc":
-                tc = float(t.group(1))
-                continue
-            if knd == "tw":
-                tw = float(t.group(1))
-                continue
-            if knd == "tz":
-                tz = float(t.group(1))
-                continue
-            if knd == "ts":
-                rise = float(t.group(1))
-                continue
-            show = t
-            consumed.append(show.span())
-            fnum = fonts.get(_font_at(base + show.start()))
-            cmap = _font_cmap(objs, fnum, cmap_cache)
-            widths = _font_widths(objs, fnum, cmap_cache)
-            # word spacing applies per byte-32 of SINGLE-BYTE
-            # encodings only (§9.3.3) — CID multi-byte codes never
-            # trigger it, so spaces are counted on the raw bytes and
-            # only for non-CMap fonts
-            simple = cmap is None or "enc_map" in cmap
-            kern = 0.0  # TJ kerning, thousandths of an em (§9.4.3)
-            n_spaces = 0
-            if show.group(1) is not None:  # (..) Tj / ' / "
-                all_raw = _unescape_bytes(show.group(1))
-                n_spaces = all_raw.count(0x20) if simple else 0
-                text = _show_text(all_raw, cmap)
-            elif show.group(2) is not None:  # <hex> Tj / ' / "
-                all_raw = _hex_bytes(show.group(2))
-                n_spaces = all_raw.count(0x20) if simple else 0
-                text = _show_text(all_raw, cmap)
-            else:  # [..] TJ: strings concatenate, numbers kern
-                parts = []
-                raws = []
-                for m2 in _TJ_ELEM_RE.finditer(show.group(3)):
-                    if m2.group(3) is not None:
-                        kern += float(m2.group(3))
-                        continue
-                    raw = (_unescape_bytes(m2.group(1))
-                           if m2.group(1) is not None
-                           else _hex_bytes(m2.group(2)))
-                    n_spaces += raw.count(0x20) if simple else 0
-                    raws.append(raw)
-                    parts.append(_show_text(raw, cmap))
-                all_raw = b"".join(raws)
-                text = "".join(parts)
-            # ' and " move to the next line BEFORE showing; " also
-            # SETS word/char spacing from its aw ac operands (§9.4.3)
-            if show.group(0)[-1:] == b'"':
-                dq = _DQ_OPS_RE.search(sbody[:show.start()])
-                if dq is not None:
-                    tw = float(dq.group(1))
-                    tc = float(dq.group(2))
-                _td(0.0, -lead)
-            elif show.group(0)[-1:] == b"'":
-                _td(0.0, -lead)
-            # text-space advance per §9.4.4 — (w0*Tfs + Tc +
-            # Tw_if_space) * Tz% per glyph. w0 comes from the simple
-            # font's declared /Widths table when one is present
-            # (pdfminer's real-metrics path, per CODE byte; glyph
-            # units scale by 1/1000, or by the /FontMatrix x-scale
-            # for Type3 — pdfminer PDFType3Font hscale), else
-            # from the deterministic GLYPH_W model; the box is the
-            # text-space rect (0,rise)-(adv,rise+size) — Ts lifts the
-            # baseline in unscaled text space (§9.3.7) without
-            # entering the line-advance — with all FOUR corners
-            # mapped through Tm (pdfminer's apply_matrix shape), so
-            # rotated/sheared text gets its true axis-aligned
-            # envelope instead of a degenerate zero-area box
-            if widths is not None and simple:
-                w_map, miss, wscale = widths
-                gw = sum(w_map.get(b, miss) for b in all_raw) \
-                    * wscale * size
-                n_glyphs = len(all_raw)
-            else:
-                gw = GLYPH_W * size * len(text)
-                n_glyphs = len(text)
-            # TJ kern stays thousandths even under Type3: pdfminer's
-            # render_string scales TJ numbers by a fixed 0.001
-            # whatever the font class, and this codec follows its
-            # metrics path (§9.4.3 note: the spec says glyph space,
-            # pdfminer does not special-case it)
-            adv = (gw + tc * n_glyphs
-                   + tw * n_spaces
-                   - kern / 1000.0 * size) * (tz / 100.0)
-            xs, ys = [], []
-            for dx, dy in ((0.0, rise), (adv, rise),
-                           (0.0, rise + size), (adv, rise + size)):
-                xs.append(tm[4] + dx * tm[0] + dy * tm[2])
-                ys.append(tm[5] + dx * tm[1] + dy * tm[3])
-            emit("TextBox", text,
-                 bbox=(min(xs), min(ys), max(xs), max(ys)))
-            tm[4] += adv * tm[0]
-            tm[5] += adv * tm[1]
-        # wrong-parse guard: a string token the show scan did not
-        # consume means a text operator this codec doesn't understand
-        # (an exotic show form, a BDC property list carrying
-        # /ActualText, ...) — parsing on would silently drop text,
-        # so the document quarantines instead
-        for st in _STR_TOKEN_RE.finditer(body):
-            if not any(s <= st.start() < e for s, e in consumed):
+        elif op == b"Do":
+            if args and type(args[-1]) is str:
+                _paint_xobject(objs, args[-1], xobjs, fonts, emit, active,
+                               cmap_cache, ctm if cm_seen else None)
+        elif op == b"BI":
+            nest.append((op, [], m.start()))
+        if n_str:
+            if was_bt and op != b"BDC" and op != b"DP":
                 raise ValueError("unconsumed string in text object")
+            n_str = 0
+        args = []
+    if nest:
+        # an unclosed operand swallowed every operator after it
+        raise ValueError("unclosed array, dictionary or inline image")
+    if in_bt:
+        raise ValueError("BT without ET")

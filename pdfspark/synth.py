@@ -593,8 +593,8 @@ def write_pdf_payloads(out_dir: str) -> None:
     rows.append((frm_id, "ok", len(decoded["spans"]), len(payload),
                  geom_digest(decoded["spans"])))
     # inline images (BI..ID..EI) whose raw sample bytes spell
-    # operators — the excision pass keeps them out of the text scan
-    # while emitting Image spans at the paint sites
+    # operators — the content tokenizer skips them unread while
+    # emitting Image spans at the paint sites
     inl_id = "pdfdoc-00020"
     payload = build_tiny_pdf(
         inl_id, [["8. Inline", "Text around an inline image."]],

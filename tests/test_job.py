@@ -819,14 +819,14 @@ def test_job_html_mode_blocks_resume_and_metrics(spark, tmp_path):
 
     out = str(tmp_path / "blocks_out")
     met = str(tmp_path / "blocks_metrics")
-    # 5 Spark jobs: the stem-collision check (its groupBy's two
-    # stages), the page kernel with the commit's rebalance, the data
-    # write and the lineage write
+    # 3 Spark jobs: the page kernel with the commit's rebalance, the
+    # data write and the lineage write (the stem-collision check reads
+    # the driver's file listing)
     rc, n_jobs = _run_counting_jobs(
         spark, f"{tmp_path.name}-html",
         ["--html", hdir, "--output", out, "--metrics", met])
     assert rc == 0
-    assert n_jobs == 5
+    assert n_jobs == 3
 
     got = {}
     for r in _read_out(spark, out).collect():
@@ -1444,6 +1444,19 @@ def test_job_html_mode_rejects_stem_collisions(spark, tmp_path):
         with open(os.path.join(d, name), "w") as fh:
             fh.write("<html><body><p>text words here</p></body></html>")
     with pytest.raises(ValueError, match="duplicate doc_ids"):
+        main(["--html", d, "--output", str(tmp_path / "out")])
+
+
+def test_job_html_mode_names_collisions_by_unquoted_stem(spark, tmp_path):
+    """The collision check reads stems from the file listing, whose URIs
+    percent-encode `a b.html` as `a%20b.html`: the stems are compared
+    and reported as the doc_id the path column gives (`a b`)."""
+    d = str(tmp_path / "pages")
+    os.makedirs(d)
+    for name in ("a b.html", "a b.htm", "a%20b.html"):
+        with open(os.path.join(d, name), "w") as fh:
+            fh.write("<html><body><p>text words here</p></body></html>")
+    with pytest.raises(ValueError, match=r"duplicate doc_ids.*\['a b'\]"):
         main(["--html", d, "--output", str(tmp_path / "out")])
 
 

@@ -1746,8 +1746,9 @@ def test_tiff_predictor2_unpredict():
 
 def test_mutation_sweep_never_hangs_or_escapes():
     """Poison-input sweep: deterministic truncations, bit flips and
-    chunk deletions over four real payload shapes (plain, Flate,
-    PDF 1.5 objstm+xref-stream, layout/geometry). Every mutant must
+    chunk deletions over seven real payload shapes (plain, Flate,
+    PDF 1.5 objstm+xref-stream, layout/geometry, tagged, CID, inline
+    images). Every mutant must
     COMPLETE quickly — parse or raise — because at corpus scale the
     decode seam sees arbitrary garbage and the executor-side contract
     is 'quarantine, never hang, never kill the task'. Any exception
@@ -1766,6 +1767,11 @@ def test_mutation_sweep_never_hangs_or_escapes():
         build_tiny_pdf("fz2", pages, compress=True),
         build_tiny_pdf_15("fz3", pages, outlines=[("Intro", [])]),
         build_layout_pdf("fz4", [[("Cell A", 72, 700), ("Cell B", 200, 700)]]),
+        # the content tokenizer's dict, hex-string and BI..ID..EI
+        # branches, on garbage
+        build_tiny_pdf("fz5", pages, tagged=True),
+        build_tiny_pdf("fz6", pages, cid=True),
+        build_tiny_pdf("fz7", pages, inline_images=[1, 1]),
     ]
     rng = random.Random(0xF02205)
     ran = 0
@@ -1796,7 +1802,7 @@ def test_mutation_sweep_never_hangs_or_escapes():
             except Exception:
                 pass  # quarantine path — the contract
             ran += 1
-    assert ran == 4 * (6 + 24 + 12 + 6)
+    assert ran == 7 * (6 + 24 + 12 + 6)
 
 
 def test_type0_without_tounicode_quarantines():
@@ -1824,3 +1830,99 @@ def test_type0_without_tounicode_quarantines():
     assert bare != stripped
     with pytest.raises(ValueError, match="Type0 font without /ToUnicode"):
         decode_tiny_pdf(bare)
+
+
+def _walk(stream: bytes, objs=None, xobjs=None) -> list[tuple]:
+    """(kind, text, media_ref, bbox) of every span one content stream
+    emits through the walker."""
+    from pdfspark.sources.pdf_mini import _walk_content
+
+    spans = []
+
+    def emit(kind, text, media_ref=None, bbox=None):
+        spans.append((kind, text, media_ref, bbox))
+
+    _walk_content(objs or {}, stream, xobjs or {}, emit, frozenset())
+    return spans
+
+
+def test_walk_balanced_parentheses_in_literal_string():
+    """§7.3.4.2: balanced parentheses inside a literal string need no
+    escape — `(a (b) c) Tj` shows `a (b) c`, it is not a stray string
+    operand to quarantine."""
+    spans = _walk(b"BT /F1 12 Tf (a (b) c) Tj ET")
+    assert [(k, t) for k, t, _r, _b in spans] == [("TextBox", "a (b) c")]
+
+
+def test_walk_td_leading_and_quote_spacing_persist_across_bt():
+    """TD sets the leading and " sets word/char spacing as TEXT STATE
+    (§9.3.1, §9.4.2-3), which persists into the next BT block: T*
+    there moves by TD's 20, and the " spacing widens the next Tj."""
+    spans = _walk(b"BT 0 -20 TD ET BT T* (x) Tj ET")
+    assert spans[0][3] == (0.0, -20.0, 6.0, -8.0)
+    # 'a b': 3 glyphs * 6pt + Tc 1 per glyph + Tw 5 per space = 26
+    spans = _walk(b'BT 5 1 (a b) " ET BT (a b) Tj ET')
+    assert [b[2] for _k, _t, _r, b in spans] == [26.0, 26.0]
+
+
+def test_walk_bt_without_et_quarantines():
+    """A text object never closed by ET must quarantine, not return ok
+    with the block's text silently gone."""
+    with pytest.raises(ValueError, match="BT without ET"):
+        _walk(b"BT /F1 12 Tf 72 720 Td (lost) Tj")
+    with pytest.raises(ValueError, match="BT without ET"):
+        _walk(b"BT (one) Tj BT (two) Tj ET")
+
+
+def test_walk_comment_hides_the_rest_of_the_line():
+    """§7.2.4: `%` starts a comment that runs to the end of the line —
+    a show written after it is not in the stream."""
+    spans = _walk(b"BT (x) Tj % (y) Tj\n(z) Tj ET")
+    assert [t for _k, t, _r, _b in spans] == ["x", "z"]
+
+
+def test_walk_image_paint_inside_text_object():
+    """A `/Im1 Do` between BT and ET paints its image in stream order,
+    as pdfminer's do_Do does, instead of being dropped silently."""
+    objs = {5: (b"<< /Type /XObject /Subtype /Image /Width 1 /Height 1 "
+                b"/Length 1 >>\nstream\n\x00\nendstream")}
+    spans = _walk(b"BT (x) Tj 10 0 0 10 5 5 cm /Im1 Do (y) Tj ET",
+                  objs=objs, xobjs={b"Im1": 5})
+    assert [(k, t, r) for k, t, r, _b in spans] == [
+        ("TextBox", "x", None), ("Image", "", "xobj://5/Im1"),
+        ("TextBox", "y", None)]
+    assert spans[1][3] == (5.0, 5.0, 15.0, 15.0)
+
+
+def test_fixture_pdfs_match_their_recorded_decode():
+    """Every fixtures/<sf>/payloads_pdf/*.pdf decodes, Spark-free, to
+    the status, span count and geom_digest that the directory's
+    payloads_pdf_expected.parquet records (the rows the driver's
+    DuckDB oracle hash-checks through Spark)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from pdfspark.sources.binary_decode import geom_digest
+
+    fixtures = os.path.join(os.path.dirname(__file__), "..", "fixtures")
+    dirs = sorted(glob.glob(os.path.join(fixtures, "*", "payloads_pdf")))
+    assert dirs
+    for d in dirs:
+        want = {r["doc_id"]: r for r in pq.read_table(os.path.join(
+            os.path.dirname(d), "payloads_pdf_expected.parquet")).to_pylist()}
+        paths = sorted(glob.glob(os.path.join(d, "*.pdf")))
+        assert len(paths) == len(want), d
+        for path in paths:
+            with open(path, "rb") as fh:
+                payload = fh.read()
+            try:
+                out = decode_tiny_pdf(payload)
+            except Exception:  # the decode stage's quarantine
+                out = None
+            stem = os.path.splitext(os.path.basename(path))[0]
+            exp = want[out["doc_id"] if out else stem]
+            got = (("ok", len(out["spans"]), geom_digest(out["spans"]))
+                   if out else ("decode_error", 0, ""))
+            assert got == (exp["status"], exp["n_spans"],
+                           exp["geom_digest"]), path
