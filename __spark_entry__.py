@@ -361,20 +361,18 @@ def _q_sections(spark, sf_dir):
 
 def _q_extract_spans(spark, sf_dir):
     """North-rule flagship: exact extraction fold (mapInPandas), one
-    row per output span, behind the adaptive skew route (same shape as
-    the sections query): a max-span-count probe engages the
-    exploded-rows skew splitter only when a doc crosses the straggler
-    threshold. Unlike sections (where routing won ~1 s), local sf0.1
-    A/B is a wash (interleaved mins 3.4 vs 3.4 s) — the win here is
-    the scale shape: the unskewed route scans the doc table once
-    instead of three filtered times, and on Iceberg the probe is
+    row per output span, behind the adaptive skew route: a
+    max-span-count probe engages the exploded-rows skew splitter only
+    when a doc crosses the straggler threshold. Local sf0.1 A/B is a
+    wash (interleaved mins 3.4 vs 3.4 s) — the win here is the scale
+    shape: the unskewed route scans the doc table once instead of
+    three filtered times, and on Iceberg the probe is
     manifest-statistics-only while the deleted branches are real
     scans of a 100 TB table. Chunking a merely-large doc (20k spans
     folds in ~0.2 s in one task) measured as a net loss, hence the
-    straggler-only config.SKEW_SPAN_THRESHOLD default, shared with
-    the sections query. The skew path itself
-    (extract_spans_split_rows) is pinned equal to this route by the
-    forced-threshold tests; its array-collecting sibling
+    straggler-only config.SKEW_SPAN_THRESHOLD default. The skew path
+    itself (extract_spans_split_rows) is pinned equal to this route by
+    the forced-threshold tests; its array-collecting sibling
     extract_spans_split is what the bench scaling job drives. The
     DuckDB oracle replicates the quirk-mode semantics relationally
     (labels are state-free, see pdfspark/fold.py). The fold's
@@ -395,24 +393,15 @@ def _q_extract_spans_sql(spark, sf_dir):
 
 
 def _q_extract_sections(spark, sf_dir):
-    """Sections side output of the exact fold, via the SKEW-SAFE
-    sections-only path (chunk-parallel classification, then one
-    ordered replay of the heading/paragraph/wipe events with no span
-    text in it; this query never reads spans, so the nested
-    (spans, sections) row is never built) — oracle = materialized
-    output of the independent reference transliteration; parity is
-    additionally pytest-gated (tests/test_extract_parity). As in
-    ep1_extract_spans, the fold reads no geometry."""
-    from pdfspark.operators.extract import extract_sections_auto
+    """Sections side output of the exact fold: the plain salted fold,
+    one task per document (extract.extract_sections), with no skew
+    probe. Oracle = materialized output of the independent reference
+    transliteration; parity is additionally pytest-gated
+    (tests/test_extract_parity). As in ep1_extract_spans, the fold
+    reads no geometry."""
+    from pdfspark.operators.extract import extract_sections
 
-    # the default threshold targets genuine stragglers (docs whose
-    # sequential fold time rivals a whole partition); round-3 A/B
-    # showed chunking a 20k-span doc LOSES ~1 s to the chunk
-    # machinery, and the auto route drops the split subtree's fixed
-    # cost entirely when the corpus max is below threshold. The
-    # chunked branch is equality-pinned by tests at a forced low
-    # threshold.
-    out = extract_sections_auto(_docs_in(spark, sf_dir))
+    out = extract_sections(_docs_in(spark, sf_dir))
     return out.select(
         "doc_id", "status", F.posexplode("sections").alias("section_id", "sec")
     ).select(

@@ -32,14 +32,16 @@ PATTERNS_TO_STRIP = [r"\\u20ac", r"\\n", "€"]
 
 # Skew splitter: documents whose span count exceeds this are chunked
 # before the extraction UDF and reassembled afterwards. The one value
-# every skew route and the driver's *_auto routers use. It targets true
-# stragglers only: a 20k-span doc folds in ~0.2 s in one task, and
-# routing the planted 20k-span sf0.1 doc onto the chunk machinery at
-# 4096 measured 4.16 s for ep1_extract_spans against 2.94 s on the
-# sequential fold (BASELINE.md, round 3). That crossover is for the
-# row-shaped driver paths. extract_job does not read it: for its nested
-# output the plain fold beat both chunked routes up to 1M spans
-# (BASELINE.md, "Job route A/B"), so the job folds every doc.
+# every skew route and the driver's span-row router (extract_spans_auto)
+# use. It targets true stragglers only: a 20k-span doc folds in ~0.2 s
+# in one task, and routing the planted 20k-span sf0.1 doc onto the
+# chunk machinery at 4096 measured 4.16 s for ep1_extract_spans against
+# 2.94 s on the sequential fold (BASELINE.md, round 3). That crossover
+# is for the span-row output only. Nothing that emits sections reads
+# it: the plain fold beat the chunked routes for the job's nested
+# output up to 1M spans (BASELINE.md, "Job route A/B") and for the
+# driver's sections (BASELINE.md, "Sections route A/B"), so both fold
+# every doc in one task.
 SKEW_SPAN_THRESHOLD = 50_000
 
 

@@ -9,23 +9,27 @@ wall_ms), which ``lineage_frame`` turns into the LINEAGE rows the job
 commits: no second read of the fold, no cache, no aggregation.
 
 ``_fold_salted``       — the same kernel after a salted repartition on
-xxhash64(doc_id): the plain fold of the driver routes (the ``*_auto``
-routers, the split routes' small docs, the driver's lineage query).
+xxhash64(doc_id): the plain fold of the driver routes
+(``extract_sections``, ``extract_spans_auto``'s unskewed route, the
+split routes' small docs, the driver's lineage query).
 
 Every route folds ``documents_in`` alone: the fold reproduces the
 reference's dict-membership header/footer strip, which reads no
 per-doc header/footer strings, so no route takes a geometry frame.
 
-Skew routes (``*_split``, picked by the ``*_auto`` probes): docs above
-``skew_threshold`` spans (default config.SKEW_SPAN_THRESHOLD) are
-chunk-folded in parallel and reassembled — safe because span labels
-depend only on each span's own text (see fold.py) — and their
-order-stateful sections are rebuilt by one ordered replay of the chunk
-folds' events, into which no span text crosses. They give spans, span
-rows or sections only. ``extract_documents_split``
-gives the full extract_documents output but has no caller: extract_job
-folds every doc with ``extract_documents``, which beat it up to 1M
-spans.
+``extract_sections``   — the driver's sections output: the plain salted
+fold, with no probe and no skew route.
+
+Skew routes (``*_split``; ``extract_spans_auto``'s probe picks
+``extract_spans_split_rows``): docs above ``skew_threshold`` spans
+(default config.SKEW_SPAN_THRESHOLD) are chunk-folded in parallel and
+reassembled — safe because span labels depend only on each span's own
+text (see fold.py). They give spans or span rows.
+``extract_documents_split`` also rebuilds the big docs' order-stateful
+sections by one ordered replay of the chunk folds' events, into which
+no span text crosses, and gives the full extract_documents output; it
+has no product caller (extract_job folds every doc with
+``extract_documents``, which beat it up to 1M spans).
 
 ``resume_filter``      — anti-join against already-committed doc_ids
 (resume from the last committed snapshot).
@@ -210,8 +214,8 @@ CHUNKED_SPANS = T.StructType(
 
 
 def _max_span_count(documents_in: DataFrame) -> int:
-    """Corpus-wide max spans-per-doc — the probe both *_auto routers
-    share. One aggregate locally; on a production Iceberg table this
+    """Corpus-wide max spans-per-doc — extract_spans_auto's probe. One
+    aggregate locally; on a production Iceberg table this
     reads per-file element-count bounds from manifest statistics
     instead of scanning."""
     return (
@@ -250,7 +254,7 @@ def _split_inputs(df, skew_threshold):
     layout, not plan: partition the Iceberg table by a size-class
     column at ingest (the lineage job already computes spans_in), so
     each branch prunes to its own partitions and the probe in
-    extract_sections_auto becomes a manifest-statistics lookup.
+    extract_spans_auto becomes a manifest-statistics lookup.
     Persisting the flagged frame instead would pin the whole fat
     table in executor memory — wrong trade at that scale."""
     # size(NULL) is NULL under ANSI: without the coalesce a NULL-spans
@@ -373,9 +377,8 @@ def extract_spans_split(
     fold each chunk independently, reassemble ordered and renumber
     offsets. No per-doc global window anywhere in the pre-split (a
     10M-span doc must not serialize into one task before it is even
-    split; see _fold_big_chunks). For sections on the skew path see
-    extract_sections_split; for the nested-array-free row shape see
-    extract_spans_split_rows.
+    split; see _fold_big_chunks). For the nested-array-free row shape
+    see extract_spans_split_rows.
     """
     small, big, bad = _split_inputs(documents_in, skew_threshold)
     big_bad = bad.select(
@@ -439,8 +442,7 @@ def _big_doc_sections(big: DataFrame, folded: DataFrame,
     """Sections of the chunk-folded big docs (``folded`` from
     _fold_big_chunks(collect_events=True)) by one ordered replay of
     the fold's own event stream, into which no span text crosses. The
-    big-doc branch of extract_sections_split, shared with
-    extract_documents_split.
+    sections of extract_documents_split's big docs.
 
     1. chunk folds (parallel) emit the H/P/W events;
     2. a chunk-local enrichment pass (parallel) turns them into
@@ -593,34 +595,6 @@ def _big_doc_sections(big: DataFrame, folded: DataFrame,
     )
 
 
-def extract_sections_split(
-    documents_in: DataFrame,
-    skew_threshold: int = SKEW_SPAN_THRESHOLD,
-    spans_per_chunk: int = 1024,
-) -> DataFrame:
-    """Sections-only skew path: docs above ``skew_threshold`` spans go
-    through the chunk folds and the event replay of _big_doc_sections;
-    the rest through the ordinary fold.
-
-    Output: (doc_id, status, sections).
-    """
-    small, big, bad = _split_inputs(documents_in, skew_threshold)
-    folded = _fold_big_chunks(big, spans_per_chunk, collect_events=True)
-    big_out = (
-        big.select("doc_id", F.lit("ok").alias("status"))
-        .join(_big_doc_sections(big, folded, []),
-              "doc_id", "left")
-        .unionByName(bad.select("doc_id", F.lit("quarantined")
-                                .alias("status")),
-                     allowMissingColumns=True)
-        .select("doc_id", "status", F.coalesce(
-            "sections", F.array().cast(T.ArrayType(SECTION_STRUCT))
-        ).alias("sections"))
-    )
-    return _fold_salted(small).select(
-        "doc_id", "status", "sections").unionByName(big_out)
-
-
 def extract_documents_split(
     documents_in: DataFrame,
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
@@ -629,18 +603,18 @@ def extract_documents_split(
 ) -> DataFrame:
     """extract_documents' output (EXTRACT_FULL) with the docs above
     ``skew_threshold`` spans chunk-folded once and fed to the span
-    reassembly and the sections event replay the other skew paths
-    share. No product code calls it: extract_job's plain fold beat it
-    at every size up to 1M spans (BASELINE.md, "Job route A/B"). It is
-    kept only because the traced benchmark wraps it by name, and goes
-    with that wrap. Each big doc is one row left-joined from ``big``.
+    reassembly extract_spans_split shares and to the sections event
+    replay of _big_doc_sections. No product code calls it:
+    extract_job's plain fold beat it at every size up to 1M spans
+    (BASELINE.md, "Job route A/B"). It is kept only because the traced
+    benchmark wraps it by name, and goes with that wrap. Each big doc
+    is one row left-joined from ``big``.
     Its lineage is input-derived like the fold's; wall_ms and
     partition_id are NULL (no one task folds it). At 1M spans the
     nested row itself dominates on any path that builds it; consumers
-    that can take rows use extract_spans_split_rows and
-    extract_sections_split instead. The cached big-doc intermediates
-    are appended to ``persisted`` for the caller to unpersist once the
-    result is materialised."""
+    that can take rows use extract_spans_split_rows instead. The
+    cached big-doc intermediates are appended to ``persisted`` for the
+    caller to unpersist once the result is materialised."""
     small, big, bad = _split_inputs(documents_in, skew_threshold)
 
     def input_lineage(df, status):
@@ -686,36 +660,18 @@ def extract_documents_split(
     return _fold_salted(small).unionByName(big_out)
 
 
-def extract_sections_auto(
-    documents_in: DataFrame,
-    skew_threshold: int = SKEW_SPAN_THRESHOLD,
-    spans_per_chunk: int = 1024,
-) -> DataFrame:
-    """Driver-side adaptive routing for the sections output: a cheap
-    max-span-count probe picks the plain sequential fold when NO doc
-    crosses the skew threshold, else extract_sections_split.
-
-    Why: the split plan's fixed cost is ~1 s even when its big branch
-    is EMPTY (measured interleaved A/B at sf0.1, 5 cycles min:
-    sequential 1.6-1.7 s vs split 2.5-2.8 s at thresholds both above
-    and below the corpus max) — three scans of the doc table
-    (small/big/bad filter branches) plus empty-stage scheduling. The
-    probe is one aggregate; on a production Iceberg table it reads
-    column statistics from the manifest instead of scanning (the
-    element-count upper bound per file), making the route metadata-
-    only. Both routes emit identical rows (the split path's small-doc
-    branch IS the sequential fold; equality of the chunked branch is
-    pinned by the forced-threshold tests)."""
-    mx = _max_span_count(documents_in)
-    if mx <= skew_threshold:
-        return _fold_salted(
-            documents_in,
-            num_partitions=documents_in.sparkSession.sparkContext
-            .defaultParallelism,
-        ).select("doc_id", "status", "sections")
-    return extract_sections_split(documents_in,
-                                  skew_threshold=skew_threshold,
-                                  spans_per_chunk=spans_per_chunk)
+def extract_sections(documents_in: DataFrame) -> DataFrame:
+    """Sections output (doc_id, status, sections) of the plain salted
+    fold, every doc in one task however large. No probe and no skew
+    route: the fold beat the chunk-fold + event-replay route at every
+    size measured, 100k to 1M spans (BASELINE.md, "Sections route
+    A/B"), because the sections of a big doc still come from one
+    sequential task on that route too."""
+    return _fold_salted(
+        documents_in,
+        num_partitions=documents_in.sparkSession.sparkContext
+        .defaultParallelism,
+    ).select("doc_id", "status", "sections")
 
 
 def extract_spans_auto(
@@ -723,19 +679,17 @@ def extract_spans_auto(
     skew_threshold: int = SKEW_SPAN_THRESHOLD,
     spans_per_chunk: int = 1024,
 ) -> DataFrame:
-    """Driver-side adaptive routing for the exploded-row span output —
-    the same probe-then-route shape as extract_sections_auto: when NO
-    doc crosses the skew threshold, the split subtree (three filtered
-    scans of the doc table, a persisted chunk-rows diamond, the
-    prefix-sum join) buys nothing, so run the plain salted fold and
-    posexplode it. Locally this is a wash (sf0.1 interleaved mins
-    within noise of each other — the exploded-row split never had the
-    sections path's empty-branch penalty); the point is the scale
-    shape: one scan instead of three on the unskewed route, and on a
-    production Iceberg table the probe reads per-file element-count
-    bounds from manifest statistics instead of scanning at all. Both
-    routes emit identical rows: the split path's small-doc branch IS
-    this fold (pinned by the forced-threshold test).
+    """Driver-side adaptive routing for the exploded-row span output:
+    a max-span-count probe; when NO doc crosses the skew threshold, the
+    split subtree (three filtered scans of the doc table, a persisted
+    chunk-rows diamond, the prefix-sum join) buys nothing, so run the
+    plain salted fold and posexplode it. Locally this is a wash (sf0.1
+    interleaved mins within noise of each other); the point is the
+    scale shape: one scan instead of three on the unskewed route, and
+    on a production Iceberg table the probe reads per-file
+    element-count bounds from manifest statistics instead of scanning
+    at all. Both routes emit identical rows: the split path's small-doc
+    branch IS this fold (pinned by the forced-threshold test).
     """
     mx = _max_span_count(documents_in)
     if mx > skew_threshold:
@@ -757,17 +711,18 @@ def extract_spans_split_rows(
     """Exploded-row skew path: (doc_id, offset, kind, text, media_ref)
     with NO nested-array reassembly anywhere.
 
-    Measured motivation: on a 1M-span pathological doc, BOTH the
-    sequential fold and the array-reassembling split path spend ~95%
-    of their ~80 s in materializing the one-row million-element span
-    array (collect_list + Arrow transfer of a single fat row), not in
-    fold compute (~5 s). This variant keeps spans as ROWS end to end:
-    chunk folds yield one output row per span, and global offsets come
-    from a per-(doc, chunk) size aggregation (tiny) prefix-summed over
-    #chunks rows and joined back — no giant row ever exists after the
-    initial input explode. This is the shape a 10^12-doc table uses
-    anyway (the driver contract's nested arrays are re-exploded by
-    every consumer).
+    Measured motivation: with one 1M-span doc beside the sf0.01
+    documents, this route returns the span rows in 4.43 s against the
+    plain fold's 6.54 s (local[4], min of 3 interleaved warm calls);
+    at 300k spans the two are within noise (1.98 against 2.04 s). The
+    fold builds one million-element span array row, ships it through
+    Arrow and explodes it again; this variant keeps spans as ROWS end
+    to end: chunk folds yield one output row per span, and global
+    offsets come from a per-(doc, chunk) size aggregation (tiny)
+    prefix-summed over #chunks rows and joined back — no giant row
+    ever exists after the initial input explode. This is the shape a
+    10^12-doc table uses anyway (the driver contract's nested arrays
+    are re-exploded by every consumer).
     """
     small, big, _bad = _split_inputs(documents_in, skew_threshold)
     # big+bad docs: quarantined, no span rows at all (exploded shape

@@ -211,25 +211,6 @@ def test_skew_giant_doc_parallel_presplit(spark):
     assert n_chunks > 20, n_chunks
 
 
-def test_sections_auto_routes_equal(spark, documents_in):
-    """The adaptive route must emit identical rows whichever plan the
-    probe picks (high threshold -> sequential, forced low -> split)."""
-    from pdfspark.operators.extract import extract_sections_auto
-
-    def key(df):
-        rows = df.select("doc_id", "status", "sections").collect()
-        return {
-            r.doc_id: (r.status, [(s.heading, list(s.paragraphs),
-                                   list(s.figures)) for s in r.sections])
-            for r in rows
-        }
-
-    hi = key(extract_sections_auto(documents_in, skew_threshold=10**9))
-    lo = key(extract_sections_auto(documents_in, skew_threshold=500,
-                                   spans_per_chunk=200))
-    assert hi == lo
-
-
 def test_spans_auto_routes_equal(spark, documents_in):
     """The flagship's adaptive route must emit identical span rows
     whichever plan the probe picks (high threshold -> plain fold +
@@ -493,19 +474,6 @@ def test_exploded_rows_split_equals_sequential(spark, documents_in):
     assert "skew-00000" in got  # the chunked branch ran
 
 
-def test_sections_split_rows_equals_sequential(spark, documents_in):
-    """extract_sections_split (chunk-row applyInPandas replay, no
-    doc-sized arrays) must equal the sequential fold's sections."""
-    from pdfspark.operators.extract import extract_sections_split
-
-    got = {r.doc_id: (r.status, [t.asDict() for t in r.sections])
-           for r in extract_sections_split(documents_in, skew_threshold=500,
-                                           spans_per_chunk=200).collect()}
-    want = {r.doc_id: (r.status, [t.asDict() for t in r.sections])
-            for r in extract_documents(documents_in).collect()}
-    assert got == want
-
-
 def test_split_path_null_spans_and_null_toc_text_parity(spark):
     """Two ANSI NULL edges the skew path used to diverge on: a doc
     with spans=NULL (size(NULL) is NULL -> fell out of all three
@@ -636,14 +604,12 @@ def _mixed_docs(n_docs, seed, lo=30, hi=400):
             for i in range(n_docs)}
 
 
-def test_sections_split_equals_fold_on_mixed_events(spark):
+def test_documents_split_equals_fold_on_mixed_events(spark):
     """On documents whose fold events mix headings, paragraphs and
-    wipes across 7-span chunks, both skew routes equal the sequential
-    fold, and the fold equals the reference transliteration."""
-    from pdfspark.operators.extract import (
-        extract_documents_split,
-        extract_sections_split,
-    )
+    wipes across 7-span chunks, the full skew route equals the
+    sequential fold, and the fold equals the reference
+    transliteration."""
+    from pdfspark.operators.extract import extract_documents_split
 
     docs = _mixed_docs(40, "42|mixed")
     want = {d: fold_document(sp) for d, sp in docs.items()}
@@ -664,11 +630,6 @@ def test_sections_split_equals_fold_on_mixed_events(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    secs = {r.doc_id: (r.status, [t.asDict() for t in r.sections])
-            for r in extract_sections_split(
-                df, skew_threshold=10, spans_per_chunk=7).collect()}
-    assert secs == {d: (w["status"], w["sections"])
-                    for d, w in want.items()}
     full = {r.doc_id: (r.status, [t.asDict() for t in r.spans],
                        [t.asDict() for t in r.sections],
                        r.spans_in, r.spans_out, r.bytes_in)

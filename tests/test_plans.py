@@ -183,6 +183,44 @@ def test_exchange_counts_bounded(plans):
     assert not unknown, f"new queries missing an exchange ceiling: {unknown}"
 
 
+def test_sections_query_runs_one_action(spark, monkeypatch):
+    """ep1_extract_sections is the plain fold and nothing else: the
+    jobs of a job group around the query and its collect() come from
+    the input's schema read and that collect() alone, with no
+    max-span-count probe and no frame left cached. The jobs are told
+    apart by their stages' call sites, because AQE runs the salted
+    shuffle's map side as a job of its own (3 jobs here, 5 with the
+    probe)."""
+    import pdfspark.operators.extract as X
+    from __spark_entry__ import _q_extract_sections
+
+    probes = []
+    probe = X._max_span_count
+
+    def counting(df):
+        probes.append(df)
+        return probe(df)
+
+    monkeypatch.setattr(X, "_max_span_count", counting)
+    sc = spark.sparkContext
+    cached = set(sc._jsc.getPersistentRDDs().keys())
+    group = "test-ep1-extract-sections"
+    sc.setJobGroup(group, "ep1_extract_sections")
+    try:
+        rows = _q_extract_sections(spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    st = sc.statusTracker()
+    sites = {st.getStageInfo(s).name
+             for j in st.getJobIdsForGroup(group)
+             for s in st.getJobInfo(j).stageIds}
+    assert sorted(s.split(" at ")[0] for s in sites) == [
+        "collect", "parquet"], sites
+    assert probes == []
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= cached
+
+
 def test_bytes_in_is_one_python_stage(spark):
     """Batch --payloads and the stream decode and fold each payload in
     one Python stage: no Exchange and exactly one MapInPandas above the
@@ -273,28 +311,3 @@ def test_job_commit_plans(spark, fixture_dir, tmp_path, monkeypatch, mode):
         assert s["pyarrow"] == py and s["bhj"] == bhj, (table, plan)
         assert s["exch"] <= max_exch, (table, plan)
         assert s["scans"] == scans, (table, plan)
-
-
-def test_sections_split_plan(spark, documents_in):
-    """The skew sections route, forced onto the fixture's skew doc,
-    replays the fold's events in one grouped Python stage after the
-    chunk folds: no cross-chunk prefix window and no join of events
-    to segment targets. The ceilings are the executed plan's audited
-    counts."""
-    from pdfspark.operators.extract import extract_sections_split
-    from tools.explain_audit import plan_summary
-
-    # a frame an earlier test left cached would stand in for its
-    # subtree here (CacheManager reuse): audit a cold catalog
-    spark.catalog.clearCache()
-    df = extract_sections_split(documents_in, skew_threshold=500,
-                                spans_per_chunk=200)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    spark.catalog.clearCache()
-    s = plan_summary(plan)
-    # (exchanges, broadcast joins, Python stages): 13, 3 and 8 with
-    # the prefix window and the segment-target join
-    got = (s["exch"], s["bhj"], s["pyarrow"])
-    assert all(g <= cap for g, cap in zip(got, (10, 2, 6))), got
-    assert "Window" not in plan, plan
