@@ -29,6 +29,7 @@ if REPO not in sys.path:
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdfspark.schema import DOCUMENTS_IN, SPANS_GEOM
 from pdfspark.synth import ensure_fixtures
 
 # fixture parquet paths for the DuckDB oracle (driver runs at sf0.01)
@@ -51,14 +52,15 @@ def _fixture_dir(sf_dir: str) -> str:
     return ensure_fixtures(name)
 
 
+# declared schemas (the files' own): inference is a Spark job per read
 def _geom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(
+    return spark.read.schema(SPANS_GEOM).parquet(
         os.path.join(_fixture_dir(sf_dir), "spans_geom.parquet")
     )
 
 
 def _docs_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(
+    return spark.read.schema(DOCUMENTS_IN).parquet(
         os.path.join(_fixture_dir(sf_dir), "documents_in.parquet")
     )
 
@@ -264,11 +266,11 @@ def _q_tables_merged(spark, sf_dir):
 
 
 def _q_tables_exact(spark, sf_dir):
-    """Exact-parity fold (applyInPandas). Fully hash-compared by the
-    driver: oracle_sql() serves the materialized pure-Python fold
-    output (the oracle_tables_exact.parquet sidecar synth writes at
-    fixture-gen time), so schema/column changes here must be mirrored
-    in that sidecar."""
+    """Exact-parity fold (many pages per Arrow batch). Fully
+    hash-compared by the driver: oracle_sql() serves the materialized
+    pure-Python fold output (the oracle_tables_exact.parquet sidecar
+    synth writes at fixture-gen time), so schema/column changes here
+    must be mirrored in that sidecar."""
     from pdfspark.operators.tables import extract_tables_exact
 
     t = extract_tables_exact(_geom(spark, sf_dir))

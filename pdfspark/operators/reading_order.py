@@ -57,9 +57,9 @@ def xy_cut_order(x0, y0, x1, y1, offset) -> list:
     sort (parse_util.py:454, offset tie-break = Python stable sort).
 
     Pure Python over one page (pages are tens-to-hundreds of boxes;
-    the distributed form batches pages per Arrow group via
-    ``with_xy_cut_order``). Inputs are parallel sequences; returns
-    input INDICES in reading order.
+    ``with_xy_cut_order`` runs it on many pages per Arrow batch).
+    Inputs are parallel sequences; returns input INDICES in reading
+    order.
 
     The reference itself has no multi-column handling — its flat
     ``(-y1, x1)`` sort interleaves aligned two-column lines — so this
@@ -89,45 +89,66 @@ def xy_cut_order(x0, y0, x1, y1, offset) -> list:
     return rec(list(range(len(offset))), 0)
 
 
+def map_sorted_groups(df: DataFrame, keys, order, kernel,
+                      schema: T.StructType) -> DataFrame:
+    """Runs ``kernel(pdf, bounds)`` over the ``keys`` groups of ``df``,
+    many groups per Python call: ``pdf`` holds whole groups sorted by
+    ``keys`` then ``order``, ``bounds`` their start rows then
+    ``len(pdf)``; the kernel returns a pandas frame of ``schema``.
+
+    One shuffle on ``keys`` and a partition-local sort, then ONE
+    mapInPandas that cuts each Arrow batch at numpy change-points over
+    the keys. A grouped-map pandas UDF makes every group its own Arrow
+    group and Python call: W1's first cut had that shape, ~60k
+    single-page groups at sf0.1 took 37 s against 0.35 s for the flat
+    window sort, and about 1 s in this shape (measured, round 5). A
+    group can straddle two Arrow batches of one partition, so each
+    batch's trailing group is held back and prepended to the next
+    (flushed at iterator end) — the sort made groups contiguous."""
+    import numpy as np
+    import pandas as pd
+
+    part = df.repartition(*keys).sortWithinPartitions(*keys, *order)
+
+    def bounds_of(pdf: pd.DataFrame):
+        change = np.zeros(len(pdf) - 1, dtype=bool)
+        for k in keys:
+            a = pdf[k].to_numpy()
+            change |= a[1:] != a[:-1]
+        return np.concatenate(([0], np.flatnonzero(change) + 1, [len(pdf)]))
+
+    def run(batches):
+        pending = None
+        for pdf in batches:
+            if pending is not None:
+                pdf = pd.concat([pending, pdf], ignore_index=True)
+            elif len(pdf) == 0:
+                continue
+            bounds = bounds_of(pdf)
+            tail = int(bounds[-2])
+            pending = pdf.iloc[tail:]
+            if tail:
+                yield kernel(pdf.iloc[:tail], bounds[:-1])
+        if pending is not None:
+            yield kernel(pending, np.array([0, len(pending)]))
+
+    return part.mapInPandas(run, schema)
+
+
 def with_xy_cut_order(spans_geom: DataFrame) -> DataFrame:
     """Distributed XY-cut: 1-based reading-order rank ``rord`` among the
-    TextBox spans of every page.
-
-    One shuffle on (doc_id, page_id) — the same exchange the W1
-    window pays — as an explicit repartition + partition-local sort,
-    then ONE mapInPandas whose batches carry MANY pages: page-group
-    boundaries are numpy change-points over the sorted keys, sliced
-    in-process. The first cut of this op (groupBy.applyInPandas) made
-    every page its own Arrow group — ~60k single-page groups at
-    sf0.1, each paying per-group Arrow + invocation overhead, 37 s vs
-    0.35 s for the flat sort (measured, round 5). Batching pages per
-    Arrow batch removes that overhead class entirely (37 s -> ~1 s)
-    and is the shape that scales: cost tracks page COUNT, not group
-    count. A page group can straddle two Arrow batches of one
-    partition, so the trailing group of every batch is buffered and
-    prepended to the next (flushed at iterator end) — never split,
-    because the partition-local sort made groups contiguous."""
+    TextBox spans of every page, through ``map_sorted_groups`` keyed on
+    (doc_id, page_id) — the same one exchange the W1 window pays."""
     import numpy as np
     import pandas as pd
 
     tb = spans_geom.filter(F.col("kind") == "TextBox").select(
         "doc_id", "page_id", "offset", "x0", "y0", "x1", "y1")
-    part = tb.repartition("doc_id", "page_id").sortWithinPartitions(
-        "doc_id", "page_id")
 
-    def _rank_pages(pdf: pd.DataFrame) -> pd.DataFrame:
-        d = pdf["doc_id"].to_numpy()
-        p = pdf["page_id"].to_numpy()
-        change = np.flatnonzero((d[1:] != d[:-1]) | (p[1:] != p[:-1])) + 1
-        bounds = np.concatenate(([0], change, [len(pdf)]))
-        x0 = pdf["x0"].to_numpy()
-        y0 = pdf["y0"].to_numpy()
-        x1 = pdf["x1"].to_numpy()
-        y1 = pdf["y1"].to_numpy()
-        off = pdf["offset"].to_numpy()
+    def rank_pages(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+        d, p, off, x0, y0, x1, y1 = (pdf[c].to_numpy() for c in pdf.columns)
         take: list[int] = []
         rord = np.empty(len(pdf), dtype=np.int32)
-        pos = 0
         for lo, hi in zip(bounds[:-1], bounds[1:]):
             # .tolist() once per page: the kernel indexes elements in
             # Python loops, and plain-list indexing avoids the ~100 ns
@@ -136,33 +157,9 @@ def with_xy_cut_order(spans_geom: DataFrame) -> DataFrame:
                                  x1[lo:hi].tolist(), y1[lo:hi].tolist(),
                                  off[lo:hi].tolist())
             take.extend(lo + j for j in order)
-            rord[pos:pos + (hi - lo)] = np.arange(1, hi - lo + 1)
-            pos += hi - lo
-        out = pd.DataFrame(
-            {"doc_id": d[take], "page_id": p[take], "offset": off[take],
-             "rord": rord}
-        )
-        return out
-
-    def run(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            last_d = pdf["doc_id"].iloc[-1]
-            last_p = pdf["page_id"].iloc[-1]
-            tail = (pdf["doc_id"].to_numpy() == last_d) & (
-                pdf["page_id"].to_numpy() == last_p)
-            n_tail = int(tail[::-1].argmin()) if not tail.all() else len(pdf)
-            pending = pdf.iloc[len(pdf) - n_tail:].reset_index(drop=True)
-            head = pdf.iloc[: len(pdf) - n_tail]
-            if len(head):
-                yield _rank_pages(head)
-        if pending is not None and len(pending):
-            yield _rank_pages(pending)
+            rord[lo:hi] = np.arange(1, hi - lo + 1)
+        return pd.DataFrame({"doc_id": d[take], "page_id": p[take],
+                             "offset": off[take], "rord": rord})
 
     # key-column types come from the INPUT frame (bigint doc_ids,
     # long offsets, ...) — a hardcoded string/int schema would fail
@@ -171,4 +168,5 @@ def with_xy_cut_order(spans_geom: DataFrame) -> DataFrame:
         [T.StructField(n, spans_geom.schema[n].dataType)
          for n in ("doc_id", "page_id", "offset")]
         + [T.StructField("rord", T.IntegerType())])
-    return part.mapInPandas(run, out_schema)
+    return map_sorted_groups(tb, ("doc_id", "page_id"), ("offset",),
+                             rank_pages, out_schema)

@@ -3,10 +3,11 @@
 
 Two implementations:
 
-* ``extract_tables_exact`` — ``applyInPandas`` per (doc_id, page_id)
-  reproducing the reference fold *verbatim*, including its quirks
-  (stale row anchor after titles, pre-title row leaking into the first
-  table, empty-row emission): ref src/table_extractor.py:185-222
+* ``extract_tables_exact`` — one pandas fold per (doc_id, page_id),
+  many pages per Arrow batch (``map_sorted_groups``), reproducing the
+  reference fold *verbatim*, including its quirks (stale row anchor
+  after titles, pre-title row leaking into the first table, empty-row
+  emission): ref src/table_extractor.py:185-222
   (extract_table_content) then :9-117 (textboxes_to_tabular_json).
   This is the parity path, checked span-for-span by pytest against the
   pure-Python oracle.
@@ -16,8 +17,8 @@ Two implementations:
   no leaks). 100% Catalyst: window + groupBy, zero Python. This is
   the path the DuckDB oracle checks and the one benchmarked at scale.
 
-Shuffle story: both paths shuffle once on (doc_id) — the window /
-applyInPandas grouping key prefix — then aggregate map-side.
+Shuffle story: both paths shuffle on (doc_id, page_id) — the reading-
+order window's key, which the exact path's page grouping reuses.
 """
 
 from __future__ import annotations
@@ -32,7 +33,10 @@ from pyspark.sql import types as T
 from pdfspark.config import Y_TOLERANCE
 from pdfspark.functions import patterns as P
 from pdfspark.operators.boilerplate import with_header_footer
-from pdfspark.operators.reading_order import with_reading_order
+from pdfspark.operators.reading_order import (
+    map_sorted_groups,
+    with_reading_order,
+)
 
 TABLE_ROWS_SCHEMA = T.StructType(
     [
@@ -140,31 +144,26 @@ def fold_tables_page(textboxes: list[dict], header: str,
 
 
 def extract_tables_exact(spans_geom: DataFrame) -> DataFrame:
-    """Parity path: applyInPandas fold per (doc_id, page_id)."""
+    """Parity path: ``fold_tables_page`` per (doc_id, page_id) in
+    reading order, many pages per Python call (``map_sorted_groups``)."""
     tb = with_reading_order(spans_geom).select(
         "doc_id", "page_id", "text", "x0", "y0", "x1", "y1", "rord"
     )
     joined = with_header_footer(tb, spans_geom)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rord")
-        header = pdf["header"].iloc[0] or ""
-        footer = pdf["footer"].iloc[0] or ""
+    def fold_pages(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
         boxes = pdf[["text", "x0", "y0", "x1", "y1"]].to_dict("records")
-        rows = fold_tables_page(boxes, header, footer)
-        return pd.DataFrame(
-            [
-                dict(
-                    doc_id=pdf["doc_id"].iloc[0],
-                    page_id=int(pdf["page_id"].iloc[0]),
-                    **r,
-                )
-                for r in rows
-            ],
-            columns=[f.name for f in TABLE_ROWS_SCHEMA.fields],
-        )
+        doc, page, head, foot = (
+            pdf[c].tolist() for c in ("doc_id", "page_id", "header", "footer"))
+        return pd.DataFrame([
+            dict(doc_id=doc[lo], page_id=int(page[lo]), **r)
+            for lo, hi in zip(bounds[:-1], bounds[1:])
+            for r in fold_tables_page(boxes[lo:hi], head[lo] or "",
+                                      foot[lo] or "")
+        ], columns=TABLE_ROWS_SCHEMA.fieldNames())
 
-    return joined.groupBy("doc_id", "page_id").applyInPandas(run, TABLE_ROWS_SCHEMA)
+    return map_sorted_groups(joined, ("doc_id", "page_id"), ("rord",),
+                             fold_pages, TABLE_ROWS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

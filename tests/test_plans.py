@@ -88,8 +88,8 @@ MAX_EXCHANGES = {
     "s1_stream_extract": 0, "ep1_extract_spans": 1,
     "ep1_extract_spans_sql": 3, "ep1_extract_sections": 1,
     # w1 1 -> 2 (round 5): the dual-variant row unions the ref window
-    # (one exchange) with the XY-cut applyInPandas grouping (one
-    # exchange on the same (doc_id, page_id) keys)
+    # (one exchange) with the XY-cut page grouping (one exchange on
+    # the same (doc_id, page_id) keys)
     "lineage_metrics": 1, "w1_reading_order": 2, "a1_header_footer": 5,
     "f10_f12_margins": 4, "a5_table_stats": 5, "ep3_tables_sql": 5,
     "ep3_tables_doc_scope": 6, "j3_tables_merged": 14,
@@ -183,14 +183,23 @@ def test_exchange_counts_bounded(plans):
     assert not unknown, f"new queries missing an exchange ceiling: {unknown}"
 
 
+def test_no_per_group_python_stages(plans):
+    """Per-page-group kernels run many groups per Arrow batch
+    (reading_order.map_sorted_groups): no driver plan makes every key
+    group its own Arrow group through groupBy(...).applyInPandas."""
+    bad = {n: s["grouped_py"] for n, s in plans.items()
+           if not isinstance(s, str) and s["grouped_py"]}
+    assert not bad, f"FlatMapGroupsInPandas in plan: {bad}"
+
+
 def test_sections_query_runs_one_action(spark, monkeypatch):
     """ep1_extract_sections is the plain fold and nothing else: the
     jobs of a job group around the query and its collect() come from
-    the input's schema read and that collect() alone, with no
-    max-span-count probe and no frame left cached. The jobs are told
-    apart by their stages' call sites, because AQE runs the salted
-    shuffle's map side as a job of its own (3 jobs here, 5 with the
-    probe)."""
+    that collect() alone: the input is read with its declared schema
+    (no schema-inference job), with no max-span-count probe and no
+    frame left cached. The jobs are told apart by their stages' call
+    sites, because AQE runs the salted shuffle's map side as a job of
+    its own (2 jobs here, 4 with the probe)."""
     import pdfspark.operators.extract as X
     from __spark_entry__ import _q_extract_sections
 
@@ -216,7 +225,7 @@ def test_sections_query_runs_one_action(spark, monkeypatch):
              for j in st.getJobIdsForGroup(group)
              for s in st.getJobInfo(j).stageIds}
     assert sorted(s.split(" at ")[0] for s in sites) == [
-        "collect", "parquet"], sites
+        "collect"], sites
     assert probes == []
     assert set(sc._jsc.getPersistentRDDs().keys()) <= cached
 

@@ -7,6 +7,7 @@ lines — so the XY-cut order is the value-add path the north-star
 names, shipped ALONGSIDE the parity sort, never replacing it."""
 
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -91,7 +92,7 @@ def test_xycut_gapfree_page_falls_back_to_reference_sort():
 
 def test_distributed_xycut_matches_kernel_and_sidecar(
         spark, spans_geom, fixture_dir):
-    """The applyInPandas form must reproduce the pure-Python kernel
+    """The batched mapInPandas form must reproduce the pure-Python kernel
     page-for-page (the sidecar the DuckDB oracle reads), and must
     genuinely disagree with the ref sort on the multi-column family."""
     got = with_xy_cut_order(spans_geom).toPandas()
@@ -133,3 +134,30 @@ def test_xycut_output_schema_follows_input_types(spark):
         "offset": "bigint", "rord": "int"}
     ref = with_reading_order(geom)
     assert got.count() == ref.count() == 6
+
+
+def test_sorted_groups_straddling_arrow_batches(spark, spans_geom,
+                                                fixture_dir):
+    """With 3-row Arrow batches nearly every page spans several batches
+    of its partition, so map_sorted_groups must carry each page's rows
+    across batches into one kernel call: both of its users still equal
+    their Spark-free sidecars over the whole fixture."""
+    from pdfspark.operators.tables import extract_tables_exact
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        xy = rows(with_xy_cut_order(spans_geom))
+        tables = rows(extract_tables_exact(spans_geom).select(
+            "doc_id", "page_id", "table_id", "title", "row_id",
+            F.array_join("cells", "|").alias("cells")))
+    finally:
+        spark.conf.set(key, old)
+    for got, name in ((xy, "xycut_expected.parquet"),
+                      (tables, "oracle_tables_exact.parquet")):
+        assert got == rows(spark.read.parquet(
+            os.path.join(fixture_dir, name))), name

@@ -37,8 +37,8 @@ def test_exact_simple_table(spark, spans_geom):
 
 
 def test_exact_matches_local_fold(spark, spans_geom):
-    """Distributed applyInPandas == driver-side fold on every fixture
-    page (determinism under partitioning)."""
+    """Distributed fold (many pages per Arrow batch) == driver-side
+    fold on every fixture page (determinism under partitioning)."""
     sub = spans_geom.filter(
         F.col("doc_id").startswith("simple-table")
         | F.col("doc_id").startswith("continued-table")

@@ -47,9 +47,11 @@ def _drop_initial_plans(plan: str) -> str:
 
 def plan_summary(plan: str) -> dict:
     """Counts of the plan's joins, exchanges, Python stages and scans
-    with pushed filters, plus ``scans``: the sorted file names (last
-    path component) of every location the plan scans. Each operator
-    counts once, also under a cached frame already executed."""
+    with pushed filters, plus ``grouped_py``: the Python stages that
+    make every key group its own Arrow group (applyInPandas), and
+    ``scans``: the sorted file names (last path component) of every
+    location the plan scans. Each operator counts once, also under a
+    cached frame already executed."""
     plan = _drop_initial_plans(plan)
     return {
         "bhj": plan.count("BroadcastHashJoin"),
@@ -58,6 +60,7 @@ def plan_summary(plan: str) -> dict:
         "exch": plan.count("Exchange"),
         "pyarrow": plan.count("MapInPandas")
         + plan.count("FlatMapGroupsInPandas"),
+        "grouped_py": plan.count("FlatMapGroupsInPandas"),
         "pushed": sum(
             1
             for ln in plan.splitlines()
